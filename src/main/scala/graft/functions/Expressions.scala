@@ -711,6 +711,162 @@ case class JaroWinklerBoundaryGapPpb(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** The reference tokenizer (`src/app/wc.rs:7-12`: delete every char
+  * outside `[\w\s]`, split on whitespace runs, no empty tokens) as one
+  * pass over the UTF-8 code points of a string — the single tokenizer
+  * behind [[Tokens]] (`TextFunctions.tokens`) and
+  * `MapReduceJob.wordCountMap`.
+  *
+  * The classes are not re-derived: a BMP lookup table is filled once per
+  * JVM from the same `(?U)\w`/`(?U)\s` patterns the two-regex form
+  * `whitespaceSplit(stripPunct(_))` uses, and a supplementary code point
+  * asks the patterns themselves, so the kernel equals that form by
+  * construction. A byte that does not start a well-formed UTF-8 sequence
+  * decodes to U+FFFD on the regex path — in neither class — so it is
+  * deleted like any other punctuation. Word bytes are copied into one
+  * array per row, which every returned token views.
+  */
+object TokenizerKernel {
+  private val word = java.util.regex.Pattern.compile("(?U)\\w")
+  private val space = java.util.regex.Pattern.compile("(?U)\\s")
+
+  private final val Delete = 0
+  private final val Word = 1
+  private final val Space = 2
+
+  private def patternClass(s: String): Int =
+    if (word.matcher(s).matches()) Word
+    else if (space.matcher(s).matches()) Space
+    else Delete
+
+  /** The class of every BMP code point, filled once from the patterns. */
+  private val bmpClass: Array[Byte] =
+    Array.tabulate(0x10000)(c => patternClass(String.valueOf(c.toChar)).toByte)
+
+  private def classOf(cp: Int): Int =
+    if (cp < 0x10000) bmpClass(cp) else patternClass(new String(Character.toChars(cp)))
+
+  /** Length of the well-formed multi-byte UTF-8 sequence at `i`, or 0 for a
+    * byte that starts none (overlong, surrogate, > U+10FFFF, truncated). */
+  private def seqLen(src: Array[Byte], i: Int, n: Int): Int = {
+    val b0 = src(i) & 0xFF
+    if (b0 < 0xC2 || b0 > 0xF4) return 0
+    val len = if (b0 < 0xE0) 2 else if (b0 < 0xF0) 3 else 4
+    if (i + len > n) return 0
+    val b1 = src(i + 1) & 0xFF
+    val lo = if (b0 == 0xE0) 0xA0 else if (b0 == 0xF0) 0x90 else 0x80
+    val hi = if (b0 == 0xED) 0x9F else if (b0 == 0xF4) 0x8F else 0xBF
+    if (b1 < lo || b1 > hi) return 0
+    var k = 2
+    while (k < len) { if ((src(i + k) & 0xC0) != 0x80) return 0; k += 1 }
+    len
+  }
+
+  private def decode(src: Array[Byte], i: Int, len: Int): Int = {
+    var cp = src(i) & (0x7F >> len)
+    var k = 1
+    while (k < len) { cp = (cp << 6) | (src(i + k) & 0x3F); k += 1 }
+    cp
+  }
+
+  /** Compacts the word bytes of the UTF-8 text `src` into `out` (same
+    * length) and returns the end offset in `out` of every token. */
+  private def scan(src: Array[Byte], out: Array[Byte]): Array[Int] = {
+    val n = src.length
+    var ends = new Array[Int](16)
+    var count = 0
+    var o = 0 // word bytes written to out
+    var start = 0 // out offset of the open token
+    var i = 0
+    while (i < n) {
+      val b = src(i)
+      var len = 1
+      val cls =
+        if (b >= 0) bmpClass(b).toInt
+        else {
+          len = seqLen(src, i, n)
+          if (len == 0) { len = 1; Delete } else classOf(decode(src, i, len))
+        }
+      if (cls == Word) {
+        var k = 0
+        while (k < len) { out(o + k) = src(i + k); k += 1 }
+        o += len
+      } else if (cls == Space && o > start) {
+        if (count == ends.length) ends = java.util.Arrays.copyOf(ends, count * 2)
+        ends(count) = o; count += 1; start = o
+      }
+      i += len
+    }
+    if (o > start) {
+      if (count == ends.length) ends = java.util.Arrays.copyOf(ends, count + 1)
+      ends(count) = o; count += 1
+    }
+    java.util.Arrays.copyOf(ends, count)
+  }
+
+  /** Tokens as views over one compacted copy of the word bytes. */
+  def tokens(s: org.apache.spark.unsafe.types.UTF8String)
+      : Array[org.apache.spark.unsafe.types.UTF8String] = {
+    val src = s.getBytes
+    val out = new Array[Byte](src.length)
+    val ends = scan(src, out)
+    val toks = new Array[org.apache.spark.unsafe.types.UTF8String](ends.length)
+    var from = 0
+    var t = 0
+    while (t < ends.length) {
+      toks(t) = org.apache.spark.unsafe.types.UTF8String.fromBytes(out, from, ends(t) - from)
+      from = ends(t); t += 1
+    }
+    toks
+  }
+
+  /** The same tokens of a Java string (encoded as `UTF8String.fromString`
+    * encodes it), decoded straight from the compacted bytes. */
+  def tokens(s: String): Array[String] = {
+    val src = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val out = new Array[Byte](src.length)
+    val ends = scan(src, out)
+    val toks = new Array[String](ends.length)
+    var from = 0
+    var t = 0
+    while (t < ends.length) {
+      toks(t) = new String(out, from, ends(t) - from, java.nio.charset.StandardCharsets.UTF_8)
+      from = ends(t); t += 1
+    }
+    toks
+  }
+}
+
+/** The reference token stream of a string column, `array<string>` with no
+  * empty tokens, as a codegen-native expression over [[TokenizerKernel]]
+  * (one static call per row inside whole-stage codegen). Non-string
+  * inputs are cast to string, as `regexp_replace` casts them.
+  */
+case class Tokens(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+  override def inputTypes = Seq(org.apache.spark.sql.types.StringType)
+  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
+    org.apache.spark.sql.types.StringType, containsNull = false)
+  override def prettyName: String = "graft_tokens"
+
+  override def nullSafeEval(t: Any): Any =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      TokenizerKernel.tokens(t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+        .asInstanceOf[Array[Any]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, t => {
+      s"""
+         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+         |  graft.functions.TokenizerKernel.tokens($t));
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(c: Expression): Tokens =
+    copy(child = c)
+}
+
 /** Session-scoped registration + Column-level accessors. */
 object GraftExpressions {
   private def register(s: SparkSession): Unit = {

@@ -2,11 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 
 /** Column-level text helpers shared by word count, dedup and text-analysis
-  * packs. All are built from codegen'd `org.apache.spark.sql.functions`
-  * (no Scala UDFs) so they stay inside whole-stage codegen and are portable
-  * to the DuckDB oracle SQL.
+  * packs. No Scala UDFs: [[tokens]] is the codegen-native [[Tokens]]
+  * expression over the one tokenizer kernel ([[TokenizerKernel]]), the
+  * rest are built from codegen'd `org.apache.spark.sql.functions`, so all
+  * stay inside whole-stage codegen and are portable to the DuckDB oracle
+  * SQL.
   */
 object TextFunctions {
 
@@ -28,11 +31,14 @@ object TextFunctions {
   def whitespaceSplit(c: Column): Column =
     filter(split(c, "(?U)\\s+"), w => length(w) > 0)
 
-  /** Full reference token stream: strip punctuation then whitespace-split.
-    * No case folding — `The` and `the` stay distinct keys, as in the
-    * reference.
+  /** Full reference token stream — `whitespaceSplit(stripPunct(c))` in one
+    * pass: the [[Tokens]] expression over [[TokenizerKernel]], whose
+    * classes are built from the same `(?U)` patterns, so the two agree on
+    * every input (`TokenizerSpec`). No case folding — `The` and `the` stay
+    * distinct keys, as in the reference.
     */
-  def tokens(c: Column): Column = whitespaceSplit(stripPunct(c))
+  def tokens(c: Column): Column =
+    GraftSqlBridge.column(Tokens(GraftSqlBridge.expression(c)))
 
   /** Distinct token set (for Jaccard / MinHash over unigram sets). */
   def tokenSet(c: Column): Column = array_distinct(tokens(c))

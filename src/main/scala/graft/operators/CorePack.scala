@@ -40,12 +40,14 @@ object CorePack extends QueryPack {
 
     // The non-ASCII lane of the gate, closing QueryPack's documented
     // ASCII-corpus assumption with a driver-visible query: the SAME
-    // production tokenizer (O3 `(?U)[^\w\s]` strip + O4 whitespace split,
-    // the reference-fidelity path) runs over a deterministically accented
-    // copy of the corpus — `translate` maps a/e/o/u to à/é/ö/ü (letters
-    // that must SURVIVE the punctuation strip, reference src/app/wc.rs:7-8
-    // Unicode `\w`) and ' to ’ (multibyte punctuation that must be
-    // DELETED, the gut corpus's ~7,000 curly apostrophes). The oracle
+    // production tokenizer (the native kernel behind
+    // `TextFunctions.tokens`: O3 `(?U)[^\w\s]` strip + O4 whitespace
+    // split in one pass, the reference-fidelity path) runs over a
+    // deterministically accented copy of the corpus — `translate` maps
+    // a/e/o/u to à/é/ö/ü (letters that must SURVIVE the punctuation
+    // strip, reference src/app/wc.rs:7-8 Unicode `\w`) and ' to ’
+    // (multibyte punctuation that must be DELETED, the gut corpus's
+    // ~7,000 curly apostrophes). The oracle
     // can't use RE2's ASCII `\w`; it mirrors with explicit Unicode
     // classes `[^\p{L}\p{N}_\s]` — equivalent to Java's `(?U)\w` on any
     // corpus free of combining marks and exotic numerics (true here by

@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.functions.TokenizerKernel
 
 /** Generic MapReduce programming-model facade — the Spark-native equivalent
   * of the reference's entire user API (`map: &str -> Vec<KeyValue>`,
@@ -10,8 +13,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * The reference's runtime (coordinator RPC, file shuffle, leases,
   * phase barriers — SURVEY.md §2 C1–C5) is replaced wholesale by Spark's
   * DAGScheduler + shuffle service + lineage recovery: `flatMap` is the map
-  * phase, the `groupByKey` shuffle is the `mr-{m}-{r}.txt` hash-partition
-  * exchange, and `reduceGroups`/`mapGroups` is the reduce phase.
+  * phase, the one hash repartition on the key column is the
+  * `mr-{m}-{r}.txt` exchange (`numPartitions` = the reference's
+  * `reduce_n`), and `mapGroups` on that same column is the reduce phase —
+  * grouped on the partitioning column, so no second exchange is planned.
   *
   * Unlike the reference (which has no combiner — every `(word,"1")` pair
   * crosses the shuffle, `src/app/wc.rs:11`), callers that have an
@@ -26,9 +31,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object MapReduceJob {
 
   /** Faithful general form: arbitrary reduce over the full value list per
-    * key. One shuffle, no combiner (matches the reference contract exactly;
-    * values arrive in unspecified order, like the reference's post-sort
-    * grouping which only ordered keys, not values).
+    * key. One shuffle into `numPartitions` reduce partitions, no combiner
+    * (matches the reference contract exactly; values arrive in unspecified
+    * order, like the reference's post-sort grouping which only ordered
+    * keys, not values).
     */
   def run(spark: SparkSession,
           input: Dataset[String],
@@ -39,7 +45,7 @@ object MapReduceJob {
     input
       .flatMap(map)
       .repartition(numPartitions, $"_1")
-      .groupByKey(_._1)
+      .groupBy($"_1").as[String, (String, String)]
       .mapGroups((k, it) => (k, reduce(k, it.map(_._2).toSeq)))
   }
 
@@ -60,13 +66,11 @@ object MapReduceJob {
   }
 
   /** The reference's only application: word count (`src/app/wc.rs`).
-    * Emits `(token, "1")` per token, reduce = count of values.
+    * Emits `(token, "1")` per token of the shared tokenizer kernel (the
+    * one behind `TextFunctions.tokens`), reduce = count of values.
     */
   def wordCountMap(line: String): Seq[(String, String)] =
-    line.replaceAll("(?U)[^\\w\\s]", "")
-      .split("(?U)\\s+").toSeq
-      .filter(_.nonEmpty)
-      .map(w => (w, "1"))
+    ArraySeq.unsafeWrapArray(TokenizerKernel.tokens(line)).map(w => (w, "1"))
 
   def wordCountReduce(key: String, values: Seq[String]): String =
     values.size.toString

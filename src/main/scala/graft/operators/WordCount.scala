@@ -8,8 +8,9 @@ import graft.functions.TextFunctions._
 /** Word count — the reference's one and only query (reference
   * `src/app/wc.rs`), as a declarative DataFrame pipeline:
   *
-  *   scan → strip punct (O3) → split+explode (O4) → groupBy.count (O5–O10)
-  *        → orderBy (O12) — SURVEY.md §2 operator numbering.
+  *   scan → tokens (O3 strip punct + O4 whitespace split, one native
+  *          kernel pass) → explode → groupBy.count (O5–O10) → orderBy (O12)
+  *   — SURVEY.md §2 operator numbering.
   *
   * Catalyst/Tungsten give what the reference lacks: partial (map-side)
   * aggregation before the shuffle, hash aggregation with spill, range-

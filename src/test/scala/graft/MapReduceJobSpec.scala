@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -7,12 +9,13 @@ import graft.operators.MapReduceJob
 
 /** Property tests for the generic MapReduce facade: the distributed result
   * must equal a sequential groupBy model for any map/reduce pair, and be
-  * invariant under partition count (the reference's `reduce_n`).
+  * invariant under partition count (the reference's `reduce_n`), which is
+  * the width of the one planned exchange.
   *
   * (scalatestplus isn't on the offline classpath, so generators are sampled
   * manually with fixed seeds — deterministic across runs.)
   */
-class MapReduceJobSpec extends AnyFunSuite {
+class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private def samples[T](gen: Gen[T], n: Int): Seq[T] =
@@ -35,10 +38,13 @@ class MapReduceJobSpec extends AnyFunSuite {
     import spark.implicits._
     forAll(linesGen, 4) { lines =>
       for (parts <- Seq(1, 2, 7, 32)) {
-        val got = MapReduceJob.run(spark, lines.toDS(),
+        val ds = MapReduceJob.run(spark, lines.toDS(),
           MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, parts)
-          .collect().toMap
-        assert(got == model(lines), s"parts=$parts")
+        assert(ds.collect().toMap == model(lines), s"parts=$parts")
+        // one exchange, and it is the reduce's: numPartitions wide
+        val plan = ds.queryExecution.executedPlan
+        assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, s"parts=$parts: $plan")
+        assert(ds.rdd.getNumPartitions == parts, s"parts=$parts")
       }
     }
   }

@@ -16,16 +16,8 @@ import graft.functions.TextFunctions
   * of the reference semantics (Rust `[^\w\s]` strip + whitespace split).
   */
 class UnicodeFixtureSpec extends AnyFunSuite {
+  import UnicodeFixtureSpec.texts
   private lazy val spark = SparkTestSession.spark
-
-  private val texts = Seq(
-    1L -> "Café déjà vu — the naïve approach№ works",
-    2L -> "Alice’s adventures, Alice’s again",
-    3L -> "中文 文本 处理 中文",
-    4L -> "résumé RÉSUMÉ resume", // case + accent distinctions all preserved
-    5L -> "zwnj: دوست‌دارم combining: éé", // ZWNJ join control + combining acute
-    6L -> "Alice’s adventures, Alice’s again", // exact dup of doc 2
-    7L -> "")
 
   /** Fixture dir shaped like a driver sf dir (documents.parquet only). */
   private lazy val fixtureDir: String = {
@@ -103,4 +95,15 @@ class UnicodeFixtureSpec extends AnyFunSuite {
       assert(got(id) == modelTokens(t).size, s"doc $id token count")
     }
   }
+}
+
+object UnicodeFixtureSpec {
+  val texts: Seq[(Long, String)] = Seq(
+    1L -> "Café déjà vu — the naïve approach№ works",
+    2L -> "Alice’s adventures, Alice’s again",
+    3L -> "中文 文本 处理 中文",
+    4L -> "résumé RÉSUMÉ resume", // case + accent distinctions all preserved
+    5L -> "zwnj: دوست‌دارم combining: éé", // ZWNJ join control + combining acute
+    6L -> "Alice’s adventures, Alice’s again", // exact dup of doc 2
+    7L -> "")
 }
