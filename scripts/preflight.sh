@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Unskippable pre-snapshot gate: compile (main + test), the benchmark's
-# smoke test, full ScalaTest suite, then a sf0.001 Verify + oracle smoke.
+# Unskippable pre-snapshot gate: the one-session-builder grep, compile
+# (main + test), the benchmark's smoke test, full ScalaTest suite, then a
+# sf0.001 Verify + oracle smoke.
 # Run this before EVERY end-of-round (or milestone) commit — round 5
 # shipped a non-compiling snapshot precisely because nothing forced this.
 #
@@ -8,6 +9,15 @@
 #   --fast : skip the ScalaTest suite (compile + smoke tests only)
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# One session contract: every session in main starts in
+# graft/core/Session.scala, so hand-copied builders cannot grow back.
+echo "== preflight: one SparkSession builder =="
+if grep -rn 'SparkSession\.builder' src/main --include='*.scala' \
+    | grep -v '^src/main/scala/graft/core/Session\.scala:'; then
+  echo "preflight: SparkSession.builder outside graft/core/Session.scala; use graft.core.Session" >&2
+  exit 1
+fi
 
 echo "== preflight: Test/compile =="
 sbt -batch "Test/compile" 2>&1 | tail -3

@@ -1,9 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** Times one query's `count()` on `spark`: the seconds, and the
+    * exception when it failed. Cleanup after the timed region is untimed. */
+  private[graft] def timeOne(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val failure = try { fn(spark, sfDir).count(); None }
+                  catch { case e: Throwable => Some(e) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    // queries persist() intermediates they scan multiply and unpersist
+    // them on exit; this harness-level sweep is a backstop so one
+    // query's leftover cache never competes with the next query's
+    // working set. Runs AFTER `sec` is captured — cleanup is untimed.
+    spark.catalog.clearCache()
+    // MEASUREMENT FIX (r14, documented in OPTIMIZATION_r14.md):
+    // localCheckpoint blocks and shuffle state are only reclaimed when
+    // the driver GCs their weak references (ContextCleaner); in a
+    // rapid-fire 478-query session that backlog lands on LATER
+    // queries' timed regions (measured: q54 alone degrades 10 → 84 s
+    // over 5 back-to-back passes without this, flat ~8 s with it).
+    // The GC runs in the untimed region so each query is measured on
+    // its own plan, not the previous queries' cleanup debt.
+    System.gc()
+    // drain scales with the observed cleanup need (r14 VERDICT #8):
+    // sub-second queries leave near-zero ContextCleaner backlog, so the
+    // flat 1 s drain cost ~8 min of untimed wall per full bench; only
+    // queries that ran >2 s (checkpoint/shuffle-heavy lanes) get the
+    // full drain. Timed regions unchanged.
+    Thread.sleep(if (sec > 2.0) 1000 else 200)
+    (sec, failure)
+  }
+
+  /** `<class>: <message>`, the failure format Bench, Verify and Profile print. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // --cold clears the artifact store up front so every build-once
     // intermediate (pair tables, ANN index, event-log splits) is charged
     // to this run; the emitted JSON records which mode actually ran —
@@ -11,52 +45,18 @@ object Bench {
     if (args.contains("--cold")) graft.core.Artifacts.clearAll()
     val artifactsState =
       if (graft.core.Artifacts.rootNonEmpty) "warm" else "cold"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE runtime re-planning, pinned as part of the engine contract:
-      // a viral duplicate makes one LSH band key quadratic, and the
-      // skew-join rule splits that partition at runtime (both sides of
-      // the band self-join — proven in AqeSkewJoinSpec)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     // warm up codegen/session so the first measured query isn't charged
     // for JVM/session startup
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // queries persist() intermediates they scan multiply and unpersist
-      // them on exit; this harness-level sweep is a backstop so one
-      // query's leftover cache never competes with the next query's
-      // working set. Runs AFTER `sec` is captured — cleanup is untimed.
-      spark.catalog.clearCache()
-      // MEASUREMENT FIX (r14, documented in OPTIMIZATION_r14.md):
-      // localCheckpoint blocks and shuffle state are only reclaimed when
-      // the driver GCs their weak references (ContextCleaner); in a
-      // rapid-fire 478-query session that backlog lands on LATER
-      // queries' timed regions (measured: q54 alone degrades 10 → 84 s
-      // over 5 back-to-back passes without this, flat ~8 s with it).
-      // The GC runs in the untimed region so each query is measured on
-      // its own plan, not the previous queries' cleanup debt.
-      System.gc()
-      // drain scales with the observed cleanup need (r14 VERDICT #8):
-      // sub-second queries leave near-zero ContextCleaner backlog, so the
-      // flat 1 s drain cost ~8 min of untimed wall per full bench; only
-      // queries that ran >2 s (checkpoint/shuffle-heavy lanes) get the
-      // full drain. Timed regions unchanged.
-      Thread.sleep(if (sec > 2.0) 1000 else 200)
-      (sec, ok)
+    def timed(name: String, fn: (SparkSession, String) => DataFrame): (Double, Boolean) = {
+      val (sec, failure) = timeOne(spark, sfDir, fn)
+      failure.foreach(e => System.err.println(s"[bench] $name failed: ${describe(e)}"))
+      (sec, failure.isEmpty)
     }
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (sec, ok) = timeOne(name, fn)
+      val (sec, ok) = timed(name, fn)
       (name, sec, ok)
     }
     // CONTENTION DEFENSE: a bench sharing its host with another heavy
@@ -80,7 +80,7 @@ object Bench {
         // still slow means the query is genuinely priced that way —
         // keeping `first` lets a real cold-path regression surface in
         // the headline total instead of being masked by best-of-2
-        val (second, ok2) = timeOne(name, byName(name))
+        val (second, ok2) = timed(name, byName(name))
         val steady =
           if (ok2 && second <= retryThreshold) math.min(first, second) else first
         (name, steady, ok, Some((first, 1, steady)))

@@ -917,9 +917,6 @@ object GraftExpressions {
   def longArrayDot(a: Column, b: Column): Column =
     call_function("graft_long_array_dot", a, b)
 
-  def arrayEqCount(a: Column, b: Column): Column =
-    call_function("graft_array_eq_count", a, b)
-
   def sortedIntersectCount(a: Column, b: Column): Column =
     call_function("graft_sorted_intersect_count", a, b)
 

@@ -835,9 +835,9 @@ object EventsPack extends QueryPack {
       // projection is result-identical (CAST of a date to DATE is a
       // no-op; DISTINCT is idempotent) and makes each round read stored
       // blocks instead of re-running the scan. Runs inside the timed
-      // region — nothing is precomputed. (Measured, ProfileQ415 3-run:
-      // base 7.6-8.9 s, this 6.0-6.9 s; raising
-      // cteRecursionAnchorRowsLimitToConvertToLocalRelation was also
+      // region — nothing is precomputed. (OPTIMIZATION_r15.md VERDICT #4,
+      // plans/r15/q415_variants_run1.log: base 7.6-8.9 s, this 6.0-6.9 s;
+      // raising cteRecursionAnchorRowsLimitToConvertToLocalRelation was also
       // tried and REGRESSED to 10-12 s — converting a large early
       // frontier to a LocalRelation pays a driver collect + a literal-
       // heavy re-plan per round — so the default 100-row limit stays.)
@@ -855,13 +855,13 @@ object EventsPack extends QueryPack {
       // per-round `days` DISTINCT inside the recursion AND the anchor's
       // days⋈days self-join run exchange-free — one shuffle of the
       // user-day table saved per recursion round at any scale (guide
-      // §2.1). Measured (ProfileQ415Decomp, alternating 3-run grids,
-      // JIT-warm): 6.05-6.97 s → 4.74-5.07 s (−20%); taskRun sum
-      // 5.6-6.8 → 3.9-4.3 s. Result-identical: physical partitioning
-      // only, SQL text (shared verbatim with the DuckDB oracle)
-      // unchanged. The same tool pins the driver-anomaly mechanism:
-      // first-in-JVM executions of this 288-job chain pay a 10-58 s JIT
-      // compile storm (jit=57.7 s run1 vs 3.5 s warmed at IDENTICAL
+      // §2.1). Measured in round 15 with a SparkListener decomposition,
+      // alternating 3-run grids, JIT-warm: 6.05-6.97 s → 4.74-5.07 s
+      // (−20%); taskRun sum 5.6-6.8 → 3.9-4.3 s. Result-identical:
+      // physical partitioning only, SQL text (shared verbatim with the
+      // DuckDB oracle) unchanged. The same decomposition pins the driver
+      // anomaly: first-in-JVM runs of this 288-job chain pay a 10-58 s
+      // JIT compile storm (jit=57.7 s run1 vs 3.5 s warm at IDENTICAL
       // config) — that, not plan cost, is the r14 driver's 17.45 s.
       val days = Tables.events(s, d)
         .select(col("user_id"), col("ts").cast("date").as("ts"))

@@ -330,10 +330,10 @@ object RetrievalPack extends QueryPack {
       // r15 note: the PPJoin length filter (Bayardo 2007 §3.1 — J >= 1/2
       // forces max(n_i,n_j) <= 2·min, provably output-neutral) was tried
       // INSIDE this join and REVERTED: it regressed 1.65 -> 2.9 s at
-      // sf0.1 and 4.9 vs 5.2 s at the ×10 synthetic corpus (TimeQueries
-      // 4-pass, two sessions) — this corpus's doc lengths are too uniform
-      // for the filter to prune anything, so it only paid the wider
-      // prefix exchange (n on both sides) and the extra join predicate.
+      // sf0.1 and 4.9 vs 5.2 s at ×10 (OPTIMIZATION_r15.md VERDICT #5) —
+      // this corpus's doc lengths are too uniform for the filter to
+      // prune anything, so it only paid the wider prefix exchange (n on
+      // both sides) and the extra join predicate.
       val prefixes = docsArr
         .withColumn("l", expr("n - (n + 1) div 2 + 1"))
         .select(col("doc_id"),

@@ -207,8 +207,6 @@ object SimilarityPack extends QueryPack {
   // ---- method bodies over a shared vector table (q54 composes them
   // without rebuilding it per method) ----
 
-  private[graft] def bruteTopKHook(vecs: DataFrame): DataFrame = bruteTopK(vecs)
-
   private def bruteTopK(vecs: DataFrame): DataFrame = {
     val queriesDf = vecs.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("norm").as("qnorm"))
@@ -246,10 +244,11 @@ object SimilarityPack extends QueryPack {
   // two-level relational re-expression: a constant-size seed set plays
   // the hierarchy's upper layers, the bounded-degree graph is layer 0).
 
-  /** Graph degree bound (HNSW's M). Chosen by ProfileHnsw's sweep at
-    * sf0.1: degree 16 stalls at recall 0.80 (the greedy local optimum a
-    * too-sparse graph can't escape on this near-orthogonal corpus);
-    * 32 clears the q53-lane floor with margin. */
+  /** Graph degree bound (HNSW's M). Chosen by a recall sweep at sf0.1
+    * (recorded in SURVEY.md's q452 entry): degree 16 stalls at recall
+    * 0.80 (the greedy local optimum a too-sparse graph can't escape on
+    * this near-orthogonal corpus); 32 clears the q53-lane floor with
+    * margin. */
   private[graft] val hnswM = 32
   /** Beam width (HNSW's ef). */
   private[graft] val hnswBeam = 24
@@ -275,13 +274,12 @@ object SimilarityPack extends QueryPack {
     * stays bucket-local, the per-node top-M is one window over the
     * pooled candidates, and the stored adjacency is repartitioned by
     * src so a frontier expansion is a co-located join. */
-  private[graft] def hnswGraph(s: SparkSession, d: String,
-                               m: Int = hnswM): DataFrame = {
+  private[graft] def hnswGraph(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftExpressions.ensure(s)
     val key = graft.core.Artifacts.corpusKey(d, "embeddings.parquet")
     val b = bucketBits(s, d)
     val path = graft.core.Artifacts.materialize(
-      s"hnsw_graph_v1_M${m}_$key") { tmp =>
+      s"hnsw_graph_v1_M${hnswM}_$key") { tmp =>
       val vecs = persistedVecs(s, d)
       val lsh = nearDupPairs(vecs, b, minCosine = -2.0)
       val ranked = ivfRanked(s, d, vecs, ivfCellsFor(corpusCount(s, d)))
@@ -304,7 +302,7 @@ object SimilarityPack extends QueryPack {
         .distinct()
       val wN = Window.partitionBy("src").orderBy(desc("cosine"), asc("dst"))
       sym.withColumn("nrk", row_number().over(wN))
-        .filter(col("nrk") <= m)
+        .filter(col("nrk") <= hnswM)
         .select("src", "dst")
         .repartition(col("src"))
         .write.mode("overwrite").parquet(tmp)
@@ -620,17 +618,13 @@ object SimilarityPack extends QueryPack {
     * visit fraction a real clustered embedding space would not need;
     * the STRUCTURE (constant-size frontier joins against a stored
     * bounded-degree adjacency) is what scales. */
-  private def hnswTopK(s: SparkSession, d: String, vecs: DataFrame): DataFrame =
-    hnswTopK(s, d, vecs, hnswM, hnswBeam, hnswRounds)
-
-  private[graft] def hnswTopK(s: SparkSession, d: String, vecs: DataFrame,
-                              m: Int, beam: Int, nRounds: Int): DataFrame = {
-    val graph = warmed(hnswGraph(s, d, m))
+  private def hnswTopK(s: SparkSession, d: String, vecs: DataFrame): DataFrame = {
+    val graph = warmed(hnswGraph(s, d))
     val corpus = vecs.select(col("vec_id"), col("q"), col("norm"))
     val queriesDf = vecs.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("norm").as("qnorm"))
     val out = beamSearch(graph, corpus, queriesDf,
-      hnswSeedMod(corpusCount(s, d)), beam, nRounds)
+      hnswSeedMod(corpusCount(s, d)), hnswBeam, hnswRounds)
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))))
@@ -769,17 +763,6 @@ object SimilarityPack extends QueryPack {
     val hits = out.join(truth, Seq("q_id", "vec_id")).count()
     graph.unpersist(); vecs.unpersist()
     (n, nSeeds, hits.toDouble / nTruth)
-  }
-
-  /** Test/tooling hook (ProfileHnsw, Wave13Spec): recall of a beam
-    * config vs the q50 brute truth. */
-  private[graft] def hnswRecallProbe(s: SparkSession, d: String,
-                                     m: Int, beam: Int, nRounds: Int): Double = {
-    val vecs = persistedVecs(s, d)
-    val out = hnswTopK(s, d, vecs, m, beam, nRounds)
-    val truth = bruteTopK(vecs).select("q_id", "vec_id")
-    val hits = out.select("q_id", "vec_id").join(truth, Seq("q_id", "vec_id")).count()
-    hits.toDouble / truth.count()
   }
 
   /** Plan REQUIRE shared by q45/q51 (r7 verdict item 5): the ANN index
@@ -2870,11 +2853,10 @@ object SimilarityPack extends QueryPack {
   )
 
   /** q54's method panel — the 8 approximate searches over ONE shared
-    * vector table, each restricted to the truth query set. Exposed
-    * private[graft] so ProfileQ54 can time the arms individually.
-    * Returns (method → top-k frame, the shared ranked artifact for the
-    * caller to release). */
-  private[graft] def q54Methods(s: SparkSession, d: String, vecs: DataFrame)
+    * vector table, each restricted to the truth query set. Returns
+    * (method → top-k frame, the shared ranked artifact for the caller to
+    * release). */
+  private def q54Methods(s: SparkSession, d: String, vecs: DataFrame)
       : (Seq[(String, DataFrame)], DataFrame) = {
     // hoist the memoized corpus params so the parallel arms never race
     // the first count

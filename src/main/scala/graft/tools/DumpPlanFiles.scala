@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool (r14 optimization evidence): dump `.explain("formatted")` of
@@ -18,13 +17,7 @@ object DumpPlanFiles {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(4)
     graft.core.QueryPack.planDumpMode = true
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

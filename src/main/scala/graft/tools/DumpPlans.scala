@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump the formatted physical plans of the headline queries to
@@ -132,14 +131,9 @@ object DumpPlans {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outPath = if (args.length > 1) args(1) else "PLANS.md"
     val wh = Files.createTempDirectory("graft-plans-wh").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.core.Session.builder(4)
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // keep checkpoint-materializing queries fully explainable
     graft.core.QueryPack.planDumpMode = true
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: print schema + formatted physical plan (and optionally rows)
@@ -15,13 +14,7 @@ object Explain {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val show = args.contains("show")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     val df =
       if (name.startsWith("sql:")) {
         graft.functions.GraftExpressions.ensure(spark)

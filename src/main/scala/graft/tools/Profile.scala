@@ -2,16 +2,25 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Bench
+import graft.core.Session
 
-/** Dev tool (r14 VERDICT #1): measure parallel scaling of the cost-tail
-  * queries at a ×N data scale, 8 vs 32 cores.
+/** Dev tool: times registered queries through `Bench.timeOne` (the
+  * bench's session, timed region and untimed cleanup) and prints seconds
+  * per pass. The per-layer split of a run is `perfbench/run.py --trace 1`.
   *
-  * At sf0.1 (~17 MB total) every multi-second query is bound by per-query
-  * fixed cost (codegen, sequential job chains, AQE stage commits), so the
-  * full suite runs FASTER at 8 cores than 32. This tool builds a ×N corpus
-  * whose per-copy structure is IDENTICAL to sf0.1 while copies stay
-  * disjoint (no cross-copy near-duplicate mass, so candidate volumes and
-  * join outputs scale LINEARLY in N, not quadratically):
+  * Usage: runMain graft.tools.Profile <sfDir> [queriesCsv] [mult]
+  *   env SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_TIME_PASSES (2).
+  * The default query list is the sf0.1 cost tail.
+  *
+  * At `mult` 1 (the default) the queries run on `sfDir`. Above 1 they run
+  * on a ×mult corpus built once from `sfDir` and append one JSON line per
+  * query to PROFILE_SCALE.json: parallel scaling (r14 VERDICT #1), since
+  * at sf0.1 (~17 MB) every multi-second query is bound by per-query fixed
+  * cost and the suite runs FASTER at 8 cores than 32. Each copy keeps
+  * sf0.1's structure while copies stay disjoint (no cross-copy
+  * near-duplicate mass, so candidate volumes and join outputs scale
+  * LINEARLY in N):
   *
   *   - documents: copy c>0 gets doc_id += c·nDocs and every
   *     whitespace-token suffixed with an alnum marker ("q<c>") — token
@@ -25,14 +34,11 @@ import org.apache.spark.sql.functions._
   *     streak structure preserved, user count ×N;
   *   - all other tables copied verbatim.
   *
-  * Usage: runMain graft.tools.ProfileScale [sfDir] [mult] [queriesCsv]
-  *   env SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_TIME_PASSES (2).
-  * Artifacts for the scaled corpus are keyed on its own fingerprint:
-  * the first pass at the first core count builds them (reported as
-  * pass1), later passes are warm — compare pass2 numbers across core
-  * counts. Appends one JSON line per run to PROFILE_SCALE.json.
+  * Artifacts for the scaled corpus are keyed on its own fingerprint, so
+  * pass1 at the first core count builds them — compare pass2 numbers
+  * across core counts.
   */
-object ProfileScale {
+object Profile {
   private val defaultQueries = Seq(
     "q415_streak_recursive", "q376_nb_cv_kfold", "q230_banding_sweep",
     "q414_dbscan", "q150_dsir_importance", "q54_ann_recall",
@@ -42,59 +48,47 @@ object ProfileScale {
     "q168_ppjoin_exact")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val names = args.lift(2).map(_.split(",").toSeq).getOrElse(defaultQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = args(0)
+    val names = args.lift(1).map(_.split(",").toSeq).getOrElse(defaultQueries)
+    val mult = args.lift(2).map(_.toInt).getOrElse(1)
+    val cpus = Session.defaultCpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_TIME_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    val out = s"${sys.props("java.io.tmpdir")}/graft_scale/x$mult"
-    val marker = java.nio.file.Paths.get(s"$out/_SCALE_DONE")
-    if (!java.nio.file.Files.exists(marker)) {
-      buildScaled(spark, sfDir, out, mult)
-      java.nio.file.Files.createFile(marker)
+    val dir = if (mult == 1) sfDir else {
+      val out = s"${sys.props("java.io.tmpdir")}/graft_scale/x$mult"
+      val marker = java.nio.file.Paths.get(s"$out/_SCALE_DONE")
+      if (!java.nio.file.Files.exists(marker)) {
+        buildScaled(spark, sfDir, out, mult)
+        java.nio.file.Files.createFile(marker)
+      }
+      out
     }
 
     val qs = graft.SparkEntry.queries
     names.foreach { name =>
       val secs = (1 to passes).map { pass =>
-        val t0 = System.nanoTime()
         // a query whose in-query semantics REQUIRE is calibrated to the
         // real corpus (e.g. an HNSW recall floor) may legitimately fail
         // on the synthetic ×N data; record it and keep sweeping
-        val res =
-          try Right(qs(name)(spark, out).count())
-          catch { case e: Throwable => Left(e.getMessage.take(120)) }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        System.gc(); Thread.sleep(1000)
-        res match {
-          case Right(n) =>
-            println(f"[scale x$mult c$cpus] $name pass$pass ${sec}%7.2f s rows=$n")
-            Some(sec)
-          case Left(msg) =>
-            println(f"[scale x$mult c$cpus] $name pass$pass FAILED: $msg")
-            None
+        val (sec, failure) = Bench.timeOne(spark, dir, qs(name))
+        val tag = s"[profile x$mult c$cpus] $name pass$pass"
+        failure match {
+          case None => println(f"$tag $sec%7.2f s"); Some(sec)
+          case Some(e) => println(s"$tag FAILED: ${Bench.describe(e)}"); None
         }
       }
-      val cell =
-        if (secs.forall(_.isEmpty)) "\"gate_failed\""
-        else s"[${secs.flatten.map(s => f"$s%.3f").mkString(",")}]"
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("PROFILE_SCALE.json"),
-        s"""{"mult":$mult,"cpus":$cpus,"q":"$name","secs":$cell}""" + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      if (mult > 1) {
+        val cell =
+          if (secs.forall(_.isEmpty)) "\"gate_failed\""
+          else s"[${secs.flatten.map(s => f"$s%.3f").mkString(",")}]"
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get("PROFILE_SCALE.json"),
+          s"""{"mult":$mult,"cpus":$cpus,"q":"$name","secs":$cell}""" + "\n",
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.APPEND)
+      }
     }
     spark.stop()
   }

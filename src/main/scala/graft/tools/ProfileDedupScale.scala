@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (r13 VERDICT #7): the measured curve behind the "banded,
@@ -27,13 +26,7 @@ object ProfileDedupScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mults = args.lift(1).map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 4, 16))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
 
     /** ×mult corpus dir: copy 0 is the original; copy c > 0 gets
       * doc_id += c·(max+1) and its FIRST token replaced by a

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool answering the r12-verdict question about the q452 graph-ANN
@@ -27,13 +26,7 @@ object ProfileHnswSeeds {
     val mults = args.lift(1).map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 4, 16))
     val seedsLog2s = Seq(3, 5, 7)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(32)
 
     /** ×mult corpus dir: copy 0 is the original (queries vec_id < 5
       * stay put); copy c > 0 gets vec_id += c·(max+1) and per-element

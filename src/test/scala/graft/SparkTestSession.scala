@@ -1,19 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One shared local SparkSession for the whole test JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark = graft.core.Session.local(4)
   val sfDir = "/root/testdata/sf0.001"
 }
