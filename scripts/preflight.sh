@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# Unskippable pre-snapshot gate: the one-session-builder grep, compile
-# (main + test), the benchmark's smoke test, full ScalaTest suite, then a
-# sf0.001 Verify + oracle smoke.
+# Unskippable pre-snapshot gate: the one-session-builder and
+# one-stream-runner greps, compile (main + test), the benchmark's smoke
+# test, full ScalaTest suite, then a sf0.001 Verify + oracle smoke.
 # Run this before EVERY end-of-round (or milestone) commit — round 5
 # shipped a non-compiling snapshot precisely because nothing forced this.
 #
@@ -16,6 +16,16 @@ echo "== preflight: one SparkSession builder =="
 if grep -rn 'SparkSession\.builder' src/main --include='*.scala' \
     | grep -v '^src/main/scala/graft/core/Session\.scala:'; then
   echo "preflight: SparkSession.builder outside graft/core/Session.scala; use graft.core.Session" >&2
+  exit 1
+fi
+
+# One stream runner: every gate stream runs to completion in
+# graft/streaming/StreamRunner.scala, so hand-copied memory sinks cannot
+# grow back.
+echo "== preflight: one stream runner =="
+if grep -rnE 'format\("memory"\)|processAllAvailable' src/main --include='*.scala' \
+    | grep -v '^src/main/scala/graft/streaming/StreamRunner\.scala:'; then
+  echo "preflight: memory sink or processAllAvailable outside graft/streaming/StreamRunner.scala; use StreamRunner.drain" >&2
   exit 1
 fi
 

@@ -14,6 +14,11 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Registers each table in `names` as a temp view of the same name, for
+    * queries written as SQL text. */
+  def views(s: SparkSession, d: String, names: String*): Unit =
+    names.foreach(t => table(s, d, t).createOrReplaceTempView(t))
+
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")

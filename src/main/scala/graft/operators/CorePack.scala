@@ -402,18 +402,13 @@ object CorePack extends QueryPack {
       s.conf.set("spark.sql.catalog.graftmem",
         classOf[graft.sources.GraftMemCatalog].getName)
       val tbl = s"upsert_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
-      def digest(docs: DataFrame): DataFrame =
-        docs.groupBy("lang", "source")
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum("n_chars").cast("bigint").as("sum_chars"),
-            sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
-      digest(Tables.documents(s, dir))
+      docDigest(Tables.documents(s, dir))
         .write.format("graft-mem").option("table", tbl).mode("append").save()
       val nEnBefore = graft.sources.GraftMemStore.rowsOf(tbl).count { r =>
         r.getUTF8String(0).toString == "en"
       }
       import s.implicits._
-      val delta = digest(Tables.documents(s, dir).filter(col("lang") === "en")
+      val delta = docDigest(Tables.documents(s, dir).filter(col("lang") === "en")
           .withColumn("text", upper(col("text"))))
         .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
           .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
@@ -897,16 +892,11 @@ object CorePack extends QueryPack {
       s.conf.set("spark.sql.catalog.graftmem",
         classOf[graft.sources.GraftMemCatalog].getName)
       val tbl = s"merge_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
-      def digest(docs: DataFrame): DataFrame =
-        docs.groupBy("lang", "source")
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum("n_chars").cast("bigint").as("sum_chars"),
-            sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
-      digest(Tables.documents(s, dir))
+      docDigest(Tables.documents(s, dir))
         .write.format("graft-mem").option("table", tbl).mode("append").save()
       val nBefore = graft.sources.GraftMemStore.rowsOf(tbl).length
       import s.implicits._
-      val delta = digest(Tables.documents(s, dir).filter(col("lang") === "en")
+      val delta = docDigest(Tables.documents(s, dir).filter(col("lang") === "en")
           .withColumn("text", upper(col("text"))))
         .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
           .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
@@ -987,18 +977,13 @@ object CorePack extends QueryPack {
       s.conf.set("spark.sql.catalog.graftmem",
         classOf[graft.sources.GraftMemCatalog].getName)
       val tbl = s"tt_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
-      def digest(docs: DataFrame): DataFrame =
-        docs.groupBy("lang", "source")
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum("n_chars").cast("bigint").as("sum_chars"),
-            sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
       // commit 1: baseline per-(lang, source) digests
-      digest(Tables.documents(s, dir))
+      docDigest(Tables.documents(s, dir))
         .write.format("graft-mem").option("table", tbl).mode("append").save()
       // commit 2: keyed upsert — 'en' digests recomputed over
       // upper-cased text (the UPDATE), one ('zz','synthetic') INSERT
       import s.implicits._
-      digest(Tables.documents(s, dir).filter(col("lang") === "en")
+      docDigest(Tables.documents(s, dir).filter(col("lang") === "en")
           .withColumn("text", upper(col("text"))))
         .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
           .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
@@ -1078,15 +1063,10 @@ object CorePack extends QueryPack {
       s.conf.set("spark.sql.catalog.graftmem",
         classOf[graft.sources.GraftMemCatalog].getName)
       val tbl = s"cdc_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
-      def digest(docs: DataFrame): DataFrame =
-        docs.groupBy("lang", "source")
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum("n_chars").cast("bigint").as("sum_chars"),
-            sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
-      digest(Tables.documents(s, dir))
+      docDigest(Tables.documents(s, dir))
         .write.format("graft-mem").option("table", tbl).mode("append").save()
       import s.implicits._
-      digest(Tables.documents(s, dir).filter(col("lang") === "en")
+      docDigest(Tables.documents(s, dir).filter(col("lang") === "en")
           .withColumn("text", upper(col("text"))))
         .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
           .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
@@ -1204,6 +1184,15 @@ object CorePack extends QueryPack {
            sum("n_chars").cast("bigint").as("sum_chars"),
            sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
       .orderBy("lang")
+
+  /** Per-(lang, source) row/byte/text-checksum digest of a documents
+    * frame: the rows the graft-mem table-format queries (q450, q466,
+    * q472, q474, q475, q478) commit, mutate and read back. */
+  private[graft] def docDigest(docs: DataFrame): DataFrame =
+    docs.groupBy("lang", "source")
+      .agg(count(lit(1)).cast("bigint").as("n_docs"),
+        sum("n_chars").cast("bigint").as("sum_chars"),
+        sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
 
   override def oracle: Map[String, String] = Map(
     "q00_wordcount" -> wcOracle,

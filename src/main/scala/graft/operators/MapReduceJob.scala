@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.annotation.unused
 import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -72,6 +73,6 @@ object MapReduceJob {
   def wordCountMap(line: String): Seq[(String, String)] =
     ArraySeq.unsafeWrapArray(TokenizerKernel.tokens(line)).map(w => (w, "1"))
 
-  def wordCountReduce(key: String, values: Seq[String]): String =
+  def wordCountReduce(@unused key: String, values: Seq[String]): String =
     values.size.toString
 }

@@ -3,15 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Tables.views
 
 /** Second relational wave: grouping sets, pivot, nested subqueries, exact
   * median, string-function spread, full-outer join, conditional
   * aggregation. Same determinism rules as RelationalPack.
   */
 object RelationalPack2 extends QueryPack {
-
-  private def views(s: SparkSession, d: String, ts: String*): Unit =
-    ts.foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

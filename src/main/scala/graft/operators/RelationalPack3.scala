@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Tables.views
 import graft.functions.VectorFunctions
 
 /** Third relational wave: correlated EXISTS/NOT EXISTS, vector explode
@@ -12,9 +13,6 @@ import graft.functions.VectorFunctions
   * rules as RelationalPack (see QueryPack scaladoc).
   */
 object RelationalPack3 extends QueryPack {
-
-  private def views(s: SparkSession, d: String, ts: String*): Unit =
-    ts.foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
 
   /** q228's sketch size. k-1 appears as the literal 255 and the exact
     * threshold as 256 in BOTH engines' formula text. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Tables.views
 
 /** Fourth relational wave: the remaining TPC-H classics expressible on
   * the driver schema — Q2 (argmin cheapest supplier), Q4 (EXISTS late
@@ -41,9 +42,6 @@ import graft.core.{QueryPack, Tables}
   */
 object RelationalPack4 extends QueryPack {
 
-  private def views(s: SparkSession, d: String, ts: String*): Unit =
-    ts.foreach(t => Tables.table(s, d, t).createOrReplaceTempView(t))
-
   /** Exact line revenue: decimal before arithmetic (see RelationalPack). */
   private val revDec =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * (1.00 - CAST(l_discount AS DECIMAL(4,2)))"
@@ -59,7 +57,7 @@ object RelationalPack4 extends QueryPack {
   // direction and ship year. Reference semantics: revenue of lineitems
   // whose supplier sits in one nation and ordering customer in the
   // other, either direction, over a two-year ship window. ----
-  private def q7Sql(div: String) =
+  private def q7Sql =
     s"""SELECT supp_nation, cust_nation, l_year,
        |       CAST(SUM(rev) AS DOUBLE) AS revenue,
        |       CAST(COUNT(*) AS BIGINT) AS n_lines
@@ -111,7 +109,7 @@ object RelationalPack4 extends QueryPack {
   // quarter-pair — the classic "which customers returned the most"
   // top-20. DESC order on an exact-decimal-summed double is
   // cross-engine-stable; c_custkey breaks ties. ----
-  private def q10Sql(div: String) =
+  private def q10Sql =
     s"""SELECT c.c_custkey, c.c_name,
        |       CAST(SUM($revDec) AS DOUBLE) AS revenue,
        |       n.n_name,
@@ -185,7 +183,7 @@ object RelationalPack4 extends QueryPack {
   // both scans; no new lineitem column needed on this schema (commitdate/
   // receiptdate are absent — ship-lag vs order date carries the same
   // "late fulfilment" semantics). ----
-  private def q4Sql(div: String) =
+  private def q4Sql =
     s"""SELECT o.o_orderpriority,
        |       CAST(COUNT(*) AS BIGINT) AS n_orders
        |FROM orders o
@@ -204,7 +202,7 @@ object RelationalPack4 extends QueryPack {
   // parquet scan as a pushed filter, and the aggregate is a two-phase
   // partial → final over whatever survives. Exact decimal product
   // l_extendedprice × l_discount per the repo-wide discipline. ----
-  private def q6Sql(div: String) =
+  private def q6Sql =
     s"""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
        |               * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue_delta,
        |       CAST(COUNT(*) AS BIGINT) AS n_lines
@@ -221,7 +219,7 @@ object RelationalPack4 extends QueryPack {
   // arithmetic in exact integer cents off decimal casts; orders with no
   // lines surface as their own counter instead of vanishing into an
   // inner join. One aggregate per table + one equi-join on orderkey. ----
-  private def reconSql(div: String) =
+  private def reconSql =
     s"""WITH lines AS (
        |  SELECT l_orderkey,
        |         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS line_cents
@@ -302,7 +300,7 @@ object RelationalPack4 extends QueryPack {
   // quantity exceeds 250, with their customers — HAVING over a fact-
   // grain aggregate, then dim joins on the (small) surviving set. The
   // quantity sum is decimal-exact; the top-100 order is value-stable. ----
-  private def q18Sql(div: String) =
+  private def q18Sql =
     s"""WITH big AS (
        |  SELECT l_orderkey,
        |         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
@@ -324,7 +322,7 @@ object RelationalPack4 extends QueryPack {
   // correlated subquery). avg enters as the single exact-decimal-sum /
   // count double division, so the 0.2·avg threshold is bit-identical
   // in both engines. ----
-  private def q17Sql(div: String) =
+  private def q17SmallQtySql =
     s"""WITH pa AS (
        |  SELECT l_partkey,
        |         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty
@@ -338,7 +336,7 @@ object RelationalPack4 extends QueryPack {
   // ---- TPC-H Q13 (customer order-count distribution): LEFT join so
   // zero-order customers keep their c_count = 0 bucket, then the
   // distribution-of-counts second aggregate. ----
-  private def q13Sql(div: String) =
+  private def q13Sql =
     s"""WITH co AS (
        |  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
        |  FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
@@ -352,7 +350,7 @@ object RelationalPack4 extends QueryPack {
   // quarter; emit every supplier achieving the maximum (the spec's
   // view + WHERE total = MAX shape, decorrelated to a broadcast scalar).
   // Exact integer 10⁻⁴-dollar units make the MAX equality portable. ----
-  private def q15Sql(div: String) =
+  private def q15Sql =
     s"""WITH sr AS (
        |  SELECT l_suppkey, ${cents(s"SUM($revDec)")} AS rev_c4
        |  FROM lineitem
@@ -372,7 +370,7 @@ object RelationalPack4 extends QueryPack {
   // keeps the identical scalar-correlated-average + NOT EXISTS shape
   // with a populated answer). The average is one exact-decimal sum /
   // count double; the anti-join decorrelates to a left-anti. ----
-  private def q22Sql(div: String) =
+  private def q22Sql =
     s"""WITH avgbal AS (
        |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS a
        |  FROM customer WHERE c_acctbal > 0.0),
@@ -400,7 +398,7 @@ object RelationalPack4 extends QueryPack {
   // left-semi and a left-anti join on l_orderkey. Ship-lag stands in
   // for the spec's receipt-vs-commit lateness (columns absent here);
   // the subquery topology is the spec's. ----
-  private def q21Sql(div: String) =
+  private def q21Sql =
     s"""WITH lx AS (
        |  SELECT l.l_orderkey, l.l_suppkey,
        |         CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 45 DAY
@@ -429,7 +427,7 @@ object RelationalPack4 extends QueryPack {
   // part-side and line-side conjuncts push independently) and the join
   // stays a broadcast. Size/brand/quantity bands stand in for the
   // spec's container/shipmode literals (absent columns). ----
-  private def q19Sql(div: String) =
+  private def q19Sql =
     s"""SELECT CAST(SUM($revDec) AS DOUBLE) AS revenue,
        |       CAST(COUNT(*) AS BIGINT) AS n_lines
        |FROM lineitem l
@@ -460,7 +458,7 @@ object RelationalPack4 extends QueryPack {
   // suppliers — negative account balance standing in for the spec's
   // comment-LIKE filter. The NOT IN decorrelates to a broadcast
   // left-anti join; count(DISTINCT) is the two-phase expand+agg. ----
-  private def q16Sql(div: String) =
+  private def q16Sql =
     s"""SELECT p.p_brand, p.p_type, CAST(p.p_size AS INT) AS p_size,
        |       CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
        |FROM lineitem l
@@ -511,7 +509,7 @@ object RelationalPack4 extends QueryPack {
   // line counts over one ship year. Interval comparisons (not datediff
   // — its argument order differs across engines) keep the predicate
   // engine-portable. ----
-  private def q12Sql(div: String) =
+  private def q12Sql =
     s"""SELECT lag_mode,
        |       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -536,7 +534,7 @@ object RelationalPack4 extends QueryPack {
   // partsupp availqty excess). The spec's nested IN-subquery chain
   // becomes two stacked aggregates + a DISTINCT semi-join into the
   // supplier dim; quantities are exact int64. ----
-  private def q20Sql(div: String) =
+  private def q20Sql =
     s"""WITH pq AS (
        |  SELECT l.l_partkey, l.l_suppkey,
        |         CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sq
@@ -707,7 +705,7 @@ object RelationalPack4 extends QueryPack {
     },
     "q316_sql_q21_waiting" -> { (s, d) =>
       views(s, d, "lineitem", "orders", "supplier")
-      val result = s.sql(q21Sql("div"))
+      val result = s.sql(q21Sql)
       // the whole point of the Q21 shape: both correlated subqueries
       // must DECORRELATE (a per-row re-execution would be quadratic at
       // scale) — pin the semi/anti join pair at plan time
@@ -718,7 +716,7 @@ object RelationalPack4 extends QueryPack {
     },
     "q317_sql_q19_disjunct" -> { (s, d) =>
       views(s, d, "lineitem", "part")
-      s.sql(q19Sql("div"))
+      s.sql(q19Sql)
     },
 
     // ---- TPC-H Q17 shape (small-quantity-order revenue): the
@@ -743,7 +741,7 @@ object RelationalPack4 extends QueryPack {
     },
     "q318_sql_q16_suppcnt" -> { (s, d) =>
       views(s, d, "lineitem", "part", "supplier")
-      s.sql(q16Sql("div"))
+      s.sql(q16Sql)
     },
     "q319_sql_q9_margin" -> { (s, d) =>
       views(s, d, "lineitem", "part", "supplier", "nation")
@@ -759,31 +757,31 @@ object RelationalPack4 extends QueryPack {
     },
     "q320_sql_q12_lagmode" -> { (s, d) =>
       views(s, d, "lineitem", "orders")
-      s.sql(q12Sql("div"))
+      s.sql(q12Sql)
     },
     "q321_sql_q20_dominant" -> { (s, d) =>
       views(s, d, "lineitem", "part", "supplier")
-      s.sql(q20Sql("div"))
+      s.sql(q20Sql)
     },
     "q308_sql_q13_custdist" -> { (s, d) =>
       views(s, d, "customer", "orders")
-      s.sql(q13Sql("div"))
+      s.sql(q13Sql)
     },
     "q309_sql_q15_topsupp" -> { (s, d) =>
       views(s, d, "lineitem", "supplier")
-      s.sql(q15Sql("div"))
+      s.sql(q15Sql)
     },
     "q310_sql_q22_opportunity" -> { (s, d) =>
       views(s, d, "customer", "orders", "nation")
-      s.sql(q22Sql("div"))
+      s.sql(q22Sql)
     },
     "q306_sql_q18_bigorders" -> { (s, d) =>
       views(s, d, "lineitem", "orders", "customer")
-      s.sql(q18Sql("div"))
+      s.sql(q18Sql)
     },
     "q307_sql_q17_smallqty" -> { (s, d) =>
       views(s, d, "lineitem")
-      s.sql(q17Sql("div"))
+      s.sql(q17SmallQtySql)
     },
     "q302_sql_q11_share" -> { (s, d) =>
       views(s, d, "lineitem", "supplier", "nation")
@@ -795,7 +793,7 @@ object RelationalPack4 extends QueryPack {
     },
     "q293_order_total_recon" -> { (s, d) =>
       views(s, d, "orders", "lineitem")
-      s.sql(reconSql("div"))
+      s.sql(reconSql)
     },
 
     // ---- ORDER-BACKLOG AGING CURVE: for every month-start snapshot,
@@ -818,11 +816,11 @@ object RelationalPack4 extends QueryPack {
     },
     "q291_sql_q6" -> { (s, d) =>
       views(s, d, "lineitem")
-      s.sql(q6Sql("div"))
+      s.sql(q6Sql)
     },
     "q289_sql_q4_exists" -> { (s, d) =>
       views(s, d, "orders", "lineitem")
-      s.sql(q4Sql("div"))
+      s.sql(q4Sql)
     },
     "q284_sql_q2_argmin" -> { (s, d) =>
       views(s, d, "lineitem", "part", "supplier")
@@ -830,7 +828,7 @@ object RelationalPack4 extends QueryPack {
     },
     "q273_sql_q7" -> { (s, d) =>
       views(s, d, "supplier", "lineitem", "orders", "customer", "nation")
-      s.sql(q7Sql("div"))
+      s.sql(q7Sql)
     },
     "q274_sql_q8" -> { (s, d) =>
       views(s, d, "part", "supplier", "lineitem", "orders", "customer", "nation", "region")
@@ -838,7 +836,7 @@ object RelationalPack4 extends QueryPack {
     },
     "q275_sql_q10" -> { (s, d) =>
       views(s, d, "customer", "orders", "lineitem", "nation")
-      s.sql(q10Sql("div"))
+      s.sql(q10Sql)
     },
     "q276_sql_q14" -> { (s, d) =>
       views(s, d, "lineitem", "part")
@@ -994,28 +992,28 @@ object RelationalPack4 extends QueryPack {
         |FROM hhi h CROSS JOIN tot t CROSS JOIN t10 x""".stripMargin,
     "q329_zonemap_skip"     -> zonemapSql("//"),
     "q322_benford_audit"    -> benfordSql("//"),
-    "q316_sql_q21_waiting"  -> q21Sql("//"),
+    "q316_sql_q21_waiting"  -> q21Sql,
     "q445_sql_q17"          -> q17Sql,
-    "q317_sql_q19_disjunct" -> q19Sql("//"),
-    "q318_sql_q16_suppcnt"  -> q16Sql("//"),
+    "q317_sql_q19_disjunct" -> q19Sql,
+    "q318_sql_q16_suppcnt"  -> q16Sql,
     "q319_sql_q9_margin"    -> q9Sql("//"),
-    "q320_sql_q12_lagmode"  -> q12Sql("//"),
-    "q321_sql_q20_dominant" -> q20Sql("//"),
-    "q308_sql_q13_custdist" -> q13Sql("//"),
-    "q309_sql_q15_topsupp" -> q15Sql("//"),
-    "q310_sql_q22_opportunity" -> q22Sql("//"),
-    "q306_sql_q18_bigorders" -> q18Sql("//"),
-    "q307_sql_q17_smallqty" -> q17Sql("//"),
+    "q320_sql_q12_lagmode"  -> q12Sql,
+    "q321_sql_q20_dominant" -> q20Sql,
+    "q308_sql_q13_custdist" -> q13Sql,
+    "q309_sql_q15_topsupp" -> q15Sql,
+    "q310_sql_q22_opportunity" -> q22Sql,
+    "q306_sql_q18_bigorders" -> q18Sql,
+    "q307_sql_q17_smallqty" -> q17SmallQtySql,
     "q302_sql_q11_share" -> q11Sql("//"),
     "q298_basket_lift" -> basketSql("//"),
-    "q293_order_total_recon" -> reconSql("//"),
+    "q293_order_total_recon" -> reconSql,
     "q387_backlog_aging" -> backlogSql("//", c => s"epoch_us(CAST($c AS TIMESTAMP))"),
-    "q291_sql_q6" -> q6Sql("//"),
-    "q289_sql_q4_exists" -> q4Sql("//"),
+    "q291_sql_q6" -> q6Sql,
+    "q289_sql_q4_exists" -> q4Sql,
     "q284_sql_q2_argmin" -> q2Sql("//"),
-    "q273_sql_q7"  -> q7Sql("//"),
+    "q273_sql_q7"  -> q7Sql,
     "q274_sql_q8"  -> q8Sql("//"),
-    "q275_sql_q10" -> q10Sql("//"),
+    "q275_sql_q10" -> q10Sql,
     "q276_sql_q14" -> q14Sql("//"),
 
     // same per-price max + exclusive running max over cheaper prices;

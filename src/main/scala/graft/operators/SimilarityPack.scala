@@ -666,7 +666,7 @@ object SimilarityPack extends QueryPack {
         .select("q_id", "vec_id", "cosine")
     val wB = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
     var visited = scoreOf(seedPairs.select("q_id", "vec_id")).localCheckpoint()
-    for (r <- 1 to nRounds) {
+    for (_ <- 1 to nRounds) {
       val frontier = visited.withColumn("brk", row_number().over(wB))
         .filter(col("brk") <= beam).select("q_id", "vec_id")
       val expand = frontier.join(graph, col("vec_id") === col("src"))
@@ -3217,11 +3217,19 @@ object SimilarityPack extends QueryPack {
        |FROM r WHERE rn = 1
        |ORDER BY cell""".stripMargin
 
+  /** A [[baseOracle]] query's SQL as a parenthesized subquery, for the
+    * oracles that compose another query's oracle. */
+  private def baseSub(name: String): String = s"(${baseOracle(name)})"
+
+  /** DuckDB: the raw int64 squared L2 distance between two `dim`-long
+    * quantized vectors `a` and `b`, as a scalar subquery. */
+  private def rl2(a: String, b: String): String =
+    s"(SELECT SUM(($a[g.i] - $b[g.i]) * ($a[g.i] - $b[g.i])) FROM UNNEST(generate_series(1, $dim)) AS g(i))"
+
   /** q237's oracle composes q50's oracle (the ndcgOracle pattern):
     * identical first-hit argmin and micro-reciprocal. */
   private def mrrOracle: String = {
-    def sub(name: String) = s"(${baseOracle(name)})"
-    s"""WITH top AS (SELECT q_id, rk, vec_id FROM ${sub("q50_ann_brute")} t),
+    s"""WITH top AS (SELECT q_id, rk, vec_id FROM ${baseSub("q50_ann_brute")} t),
        |lbl AS (SELECT vec_id, label FROM embeddings),
        |per AS (SELECT t.q_id, q.label AS q_label,
        |               MIN(CASE WHEN c.label = q.label THEN t.rk END) AS fh
@@ -3291,9 +3299,8 @@ object SimilarityPack extends QueryPack {
     * features — token sets via the shared DuckDB tokenizer text, length
     * ratio from n_chars, label agreement from embeddings. */
   private def ceRerankOracle: String = {
-    def sub(name: String) = s"(${baseOracle(name)})"
     s"""WITH sl AS MATERIALIZED (SELECT q_id, vec_id, CAST(rk AS INT) AS rk_ann
-       |            FROM ${sub("q103_ann_ivfpq")} t),
+       |            FROM ${baseSub("q103_ann_ivfpq")} t),
        |tok AS (SELECT doc_id,
        |               unnest(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> ''))) AS w
        |        FROM documents
@@ -3332,8 +3339,7 @@ object SimilarityPack extends QueryPack {
     * pattern): both engines score the SAME ranking; the DCG weight and
     * prefix-sum literals are the identical VALUES rows. */
   private def ndcgOracle: String = {
-    def sub(name: String) = s"(${baseOracle(name)})"
-    s"""WITH top AS (SELECT q_id, rk, vec_id FROM ${sub("q50_ann_brute")} t),
+    s"""WITH top AS (SELECT q_id, rk, vec_id FROM ${baseSub("q50_ann_brute")} t),
        |lbl AS (SELECT vec_id, label FROM embeddings),
        |wt(rk, wgt) AS (VALUES (1, 1000000), (2, 630929), (3, 500000), (4, 430676), (5, 386852)),
        |pf(r, acc) AS (VALUES (1, 1000000), (2, 1630929), (3, 2130929), (4, 2561605), (5, 2948457)),
@@ -3368,13 +3374,13 @@ object SimilarityPack extends QueryPack {
       "q151_ann_sq8_rerank", "q452_ann_hnsw", "q51_ann_lsh",
       "q52_ann_multiprobe", "q53_ann_ivf")
     val methodCtes = methods.zipWithIndex.map { case (m, i) =>
-      s"m$i AS MATERIALIZED (SELECT q_id, vec_id FROM (${baseOracle(m)}) t WHERE q_id < 5)"
+      s"m$i AS MATERIALIZED (SELECT q_id, vec_id FROM ${baseSub(m)} t WHERE q_id < 5)"
     }.mkString(",\n")
     val cand = methods.zipWithIndex.map { case (m, i) =>
       s"SELECT '$m' AS method, q_id, vec_id FROM m$i"
     }.mkString("\n  UNION ALL ")
     s"""WITH truth AS MATERIALIZED (
-       |  SELECT q_id, vec_id FROM (${baseOracle("q50_ann_brute")}) t),
+       |  SELECT q_id, vec_id FROM ${baseSub("q50_ann_brute")} t),
        |$methodCtes,
        |cand AS (
        |  $cand),
@@ -3881,8 +3887,6 @@ object SimilarityPack extends QueryPack {
     // same md5-minimal per-source panels, the same floor(sqrt(int64
     // squared-L2)) micro-distances, one common-denominator division
     "q430_energy_distance" -> {
-      def rl2(a: String, b: String) =
-        s"(SELECT SUM(($a[g.i] - $b[g.i]) * ($a[g.i] - $b[g.i])) FROM UNNEST(generate_series(1, $dim)) AS g(i))"
       val dmic = (a: String, b: String) =>
         s"CAST(floor(sqrt(CAST(${rl2(a, b)} AS DOUBLE))) AS BIGINT)"
       s"""WITH qv AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM embeddings),
@@ -3966,8 +3970,6 @@ object SimilarityPack extends QueryPack {
     // the same recomputed centroids (q315's updx), raw int64 squared-L2
     // scatter and separation, identical ×1000 floor-divided ratio
     "q323_davies_bouldin" -> {
-      def rl2(a: String, b: String) =
-        s"(SELECT SUM(($a[g.i] - $b[g.i]) * ($a[g.i] - $b[g.i])) FROM UNNEST(generate_series(1, $dim)) AS g(i))"
       s"""WITH $ivfTrainCtes,
          |updx AS (SELECT cell, g.i AS i,
          |                CAST(SUM(q[g.i]) // CAST(count(*) AS BIGINT) AS BIGINT) AS v
@@ -3996,8 +3998,6 @@ object SimilarityPack extends QueryPack {
     // matched 10⁻⁶ scale-downs and ×1000 floor-divided ratio
     "q324_jl_distortion" -> {
       val r = 16
-      def rl2(a: String, b: String) =
-        s"(SELECT SUM(($a[g.i] - $b[g.i]) * ($a[g.i] - $b[g.i])) FROM UNNEST(generate_series(1, $dim)) AS g(i))"
       s"""WITH vecs AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM embeddings),
          |hashed AS (SELECT vec_id, q,
          |                  CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
@@ -4331,7 +4331,7 @@ object SimilarityPack extends QueryPack {
     * references v{r-1} twice per round with `edges` re-read every
     * round — inlining would re-run the candidate subtree 2^R times. */
   private def hnswOracleCore(baseCond: String, queryCond: String,
-                             kOut: Int, excludeSelf: Boolean,
+                             excludeSelf: Boolean,
                              finalSelect: String): String = {
     val selfGuard = if (excludeSelf) "WHERE vec_id <> q_id" else ""
     s"""WITH ${hnswGraphCtes(baseCond, queryCond)},
@@ -4453,7 +4453,7 @@ object SimilarityPack extends QueryPack {
 
   /** q452's oracle: full-corpus graph, queries vec_id < 5, top-k. */
   private def hnswOracle: String =
-    hnswOracleCore("TRUE", "vec_id < 5", topK, excludeSelf = true,
+    hnswOracleCore("TRUE", "vec_id < 5", excludeSelf = true,
       s"""SELECT q_id, rk, vec_id, cosine FROM ranked_out
          |WHERE rk <= $topK
          |ORDER BY q_id, rk""".stripMargin)
@@ -4530,7 +4530,7 @@ object SimilarityPack extends QueryPack {
   /** q455's oracle: base-split graph (vec_id % 10 <> 7), the delta
     * rows as queries, each emitting its M insertion links. */
   private def hnswDeltaOracle: String =
-    hnswOracleCore("vec_id % 10 <> 7", "vec_id % 10 = 7", hnswM,
+    hnswOracleCore("vec_id % 10 <> 7", "vec_id % 10 = 7",
       excludeSelf = false,
       s"""SELECT q_id, rk AS nrk, vec_id AS dst, cosine FROM ranked_out
          |WHERE rk <= $hnswM

@@ -423,7 +423,7 @@ class GraftMemTable(tableName: String, tableSchema: StructType,
       val i = tableSchema.fieldIndex(attr)
       i
     }
-    def catVal(attr: String, v: Any): Any =
+    def catVal(v: Any): Any =
       org.apache.spark.sql.catalyst.CatalystTypeConverters
         .convertToCatalyst(v)
     def get(row: InternalRow, attr: String): Any = {
@@ -434,9 +434,9 @@ class GraftMemTable(tableName: String, tableSchema: StructType,
       case AlwaysTrue() => _ => true
       case AlwaysFalse() => _ => false
       case EqualTo(a, v) =>
-        val cv = catVal(a, v); row => { val x = get(row, a); x != null && x == cv }
+        val cv = catVal(v); row => { val x = get(row, a); x != null && x == cv }
       case In(a, vs) =>
-        val cvs = vs.map(v => catVal(a, v)).toSet
+        val cvs = vs.map(catVal).toSet
         row => { val x = get(row, a); x != null && cvs.contains(x) }
       case And(l, r) =>
         val (pl, pr) = (compileFilter(l), compileFilter(r)); row => pl(row) && pr(row)
@@ -657,7 +657,7 @@ case class GraftMemCommit(rows: Array[InternalRow]) extends WriterCommitMessage
   * catalogs' default namespace. */
 class GraftMemCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog {
-  import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, TableChange}
+  import org.apache.spark.sql.connector.catalog.{Identifier, TableChange}
   private var catalogName: String = "graftmem"
 
   /** FunctionCatalog half (the seventh extension surface — see

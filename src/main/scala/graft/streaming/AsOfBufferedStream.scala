@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core.Tables
+import StreamRunner.{drain, processAvailable}
 
 /** WATERMARK-BUFFERED streaming as-of enrichment — the production
   * variant [[AsOfStream]]'s scaladoc names: q422 emits each purchase
@@ -66,7 +67,6 @@ object AsOfBufferedStream {
   /** Watermark delay: signups may arrive up to this much (event time)
     * after a purchase they should enrich. */
   val watermarkDelay = "30 minutes"
-  private val delayMs = 30L * 60L * 1000L
 
   private def floorOf(xs: List[Long], x: Long): Option[Long] = {
     var best = Option.empty[Long]
@@ -181,7 +181,6 @@ object AsOfBufferedStream {
     * store-independent. */
   def run(s: SparkSession, dir: String, rocksDb: Boolean): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val (src, mkSentinel) = stageSource(s, dir)
     mkSentinel(1)
     val raw = s.readStream
@@ -198,48 +197,40 @@ object AsOfBufferedStream {
     val enriched = ev.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
-    val name = s"graft_stream_asof_buf_${StreamingPack.counter.incrementAndGet()}"
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val rocksProvider =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     val prevProvider = s.conf.getOption(providerKey)
     if (rocksDb) s.conf.set(providerKey, rocksProvider)
-    try StreamingPack.withStatePartitions(s, 8) {
-      val q = enriched.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try {
-        // batch 1: all data + sentinel 1 under watermark 0 — everything
-        // buffers. The SECOND sentinel then runs as a data batch under
-        // the advanced watermark (sentinel 1 − delay, past every real
-        // purchase), firing the event-time timeouts that drain every
-        // group — a deterministic end-of-stream flush, not a race with
-        // the no-data-batch heuristic.
-        q.processAllAvailable()
-        mkSentinel(2)
-        q.processAllAvailable()
-        if (rocksDb) {
-          // proof from the run itself, not the conf: RocksDB's provider
-          // publishes its own custom metrics (rocksdbGet/Put/commit...)
-          // on every stateful operator's progress; their presence means
-          // the state rows really lived in RocksDB for this execution
-          import scala.jdk.CollectionConverters._
-          val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-          require(ops.nonEmpty, "q448: no stateful operator in progress")
-          val keys = ops.flatMap(_.customMetrics.keySet().asScala)
-          require(keys.exists(_.toLowerCase.startsWith("rocksdb")),
-            s"q448: state did not run on RocksDB; metrics=${keys.distinct.sorted.mkString(",")}")
-        }
-      } finally q.stop()
+    val out = try drain(enriched, "append", "asof_buf") { q =>
+      // batch 1: all data + sentinel 1 under watermark 0 — everything
+      // buffers. The SECOND sentinel then runs as a data batch under
+      // the advanced watermark (sentinel 1 − delay, past every real
+      // purchase), firing the event-time timeouts that drain every
+      // group — a deterministic end-of-stream flush, not a race with
+      // the no-data-batch heuristic.
+      processAvailable(q)
+      mkSentinel(2)
+      processAvailable(q)
+      if (rocksDb) {
+        // proof from the run itself, not the conf: RocksDB's provider
+        // publishes its own custom metrics (rocksdbGet/Put/commit...)
+        // on every stateful operator's progress; their presence means
+        // the state rows really lived in RocksDB for this execution
+        import scala.jdk.CollectionConverters._
+        val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
+        require(ops.nonEmpty, "q448: no stateful operator in progress")
+        val keys = ops.flatMap(_.customMetrics.keySet().asScala)
+        require(keys.exists(_.toLowerCase.startsWith("rocksdb")),
+          s"q448: state did not run on RocksDB; metrics=${keys.distinct.sorted.mkString(",")}")
+      }
     } finally if (rocksDb) {
       prevProvider match {
         case Some(v) => s.conf.set(providerKey, v)
         case None => s.conf.unset(providerKey)
       }
     }
-    s.table(name)
+    out
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("event_id"), col("purchase_us"),
         col("signup_us"), col("latency_us"))

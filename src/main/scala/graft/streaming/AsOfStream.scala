@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.Tables
+import StreamRunner.{drain, eventStream}
 
 /** Streaming AS-OF ENRICHMENT — the live twin of the batch q03 native
   * as-of join (reference behavior: `/root/reference/src/mr/worker.rs`
@@ -78,28 +78,14 @@ object AsOfStream {
 
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = Tables.normalizeEventTs(s.readStream
-        .schema(Tables.eventsRawNanos(s, dir).schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val ev = eventStream(s, dir)
       .filter(col("event_type").isin("signup", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .as[Ev]
     val enriched = ev.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    val name = s"graft_stream_asof_${StreamingPack.counter.incrementAndGet()}"
-    StreamingPack.withStatePartitions(s, 8) {
-      val q = enriched.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(enriched, "append", "asof")()
       .select(col("user_id"), col("event_id"), col("purchase_us"),
         col("signup_us"), col("latency_us"))
       .orderBy("user_id", "event_id")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.Tables
+import StreamRunner.{drain, eventStream}
 
 /** Custom stateful streaming operator #3 (next to [[SessionizeStream]] and
   * [[TransitionStream]]): an ordered FUNNEL state machine per user —
@@ -73,28 +73,14 @@ object FunnelStream {
     * run as a stream. */
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.normalizeEventTs(s.readStream
-      .schema(Tables.eventsRawNanos(s, dir).schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val raw = eventStream(s, dir)
       .withWatermark("ts", "0 seconds")
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("ts"))
     val reached = raw.as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
-    val name = s"graft_stream_funnel_${System.identityHashCode(s).toHexString}"
-    StreamingPack.withStatePartitions(s, 8) {
-      val q = reached.toDF().writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(reached, "update", "funnel")()
       .groupBy("user_id").agg(max("stage").as("stage"))
       .groupBy("stage").agg(count(lit(1)).cast("bigint").as("n_users"))
       .select(col("stage").cast("int").as("stage"), col("n_users"))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.Tables
+import StreamRunner.{drain, eventStream}
 
 /** Custom stateful streaming operator: event-time sessionization with a
   * 30-minute inactivity gap, via `flatMapGroupsWithState` + event-time
@@ -51,28 +51,13 @@ object SessionizeStream {
     */
   def run(s: SparkSession, dir: String): Dataset[Session] = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.normalizeEventTs(s.readStream
-      .schema(Tables.eventsRawNanos(s, dir).schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val raw = eventStream(s, dir)
       .withWatermark("ts", "0 seconds")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"), col("ts"))
     val sessions = raw
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-    val name = s"graft_stream_sessions_${System.identityHashCode(s).toHexString}"
-    // state stores sized to the bounded run — see StreamingPack.withStatePartitions
-    StreamingPack.withStatePartitions(s, 8) {
-      val q = sessions.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name).as[Session]
+    drain(sessions, "append", "sessions")().as[Session]
   }
 }

@@ -1,9 +1,12 @@
 package graft.streaming
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core.Tables
+import StreamRunner.{drain, fileStream}
 
 /** Streaming incremental SKYLINE — the live twin of the batch q399
   * Pareto frontier (minimize price, maximize size), the "maintain the
@@ -34,8 +37,8 @@ object SkylineStream {
   private def dominates(ac: Long, as_ : Long, bc: Long, bs: Long): Boolean =
     ac <= bc && as_ >= bs && (ac < bc || as_ > bs)
 
-  private[graft] def update(band: Long, it: Iterator[Pt],
-                                state: GroupState[Frontier]): Iterator[Pt] = {
+  private[graft] def update(@unused band: Long, it: Iterator[Pt],
+                            state: GroupState[Frontier]): Iterator[Pt] = {
     var f = state.getOption.map(_.pts).getOrElse(Nil)
     val out = scala.collection.mutable.ListBuffer.empty[Pt]
     // deterministic in-batch order: a batch is folded the same way on
@@ -55,30 +58,17 @@ object SkylineStream {
 
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = s.readStream
-      .schema(Tables.part(s, dir).schema)
-      .option("pathGlobFilter", "part.parquet")
-      .parquet(dir)
+    val pts = fileStream(s, dir, "part.parquet", Tables.part(s, dir).schema)
       .selectExpr("p_partkey",
         "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
         "CAST(p_size AS BIGINT) AS size")
       .as[Pt]
     val cand = pts.groupByKey(_.cents / 100000L)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    val name = s"graft_stream_skyline_${StreamingPack.counter.incrementAndGet()}"
-    StreamingPack.withStatePartitions(s, 8) {
-      val q = cand.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // batch finisher = q399's merge over the emitted candidates
     // (localCheckpoint: the candidate set is frontier-bounded and the
     // memory-sink view otherwise feeds two plan branches)
-    val p = s.table(name).localCheckpoint()
+    val p = drain(cand, "append", "skyline")().localCheckpoint()
     val g = p.groupBy("cents").agg(max("size").as("gmax"))
     val scanned = graft.functions.PrefixSum.exclusiveMax(
       g, Seq(col("cents")), col("gmax"), "prevmax", -1L)

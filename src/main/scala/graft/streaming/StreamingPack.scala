@@ -5,45 +5,28 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.QueryPack
+import graft.operators.CorePack.docDigest
+import StreamRunner.{drain, eventStream, fileStream}
 
 /** Structured Streaming surface. The reference is strictly batch, so this
   * is part of the engine's extended surface: the same event-time analytics
   * as [[graft.operators.EventsPack]], expressed as streaming jobs
   * (`readStream` → event-time window agg → `writeStream`).
   *
-  * For the driver's batch-shaped correctness gate we run the stream to
-  * completion over the static parquet (memory sink + processAllAvailable)
-  * and hand back the final result table — the point being that the
-  * *streaming* plan (StateStore-backed windowed agg) computes the same
-  * answer the batch plan does, which is exactly what a user migrating a
-  * batch pipeline to a live stream needs to hold. At scale the same code
-  * runs against a file/Kafka source with watermark-bounded state.
+  * For the batch-shaped correctness gate each query runs its
+  * stream to completion over the static parquet through
+  * [[StreamRunner.drain]] (memory sink, run, stop, read back) and hands
+  * back the final result table — the point being that the *streaming*
+  * plan (StateStore-backed windowed agg) computes the same answer the
+  * batch plan does, which is exactly what a user migrating a batch
+  * pipeline to a live stream needs to hold. At scale the same code runs
+  * against a file/Kafka source with watermark-bounded state.
   */
 object StreamingPack extends QueryPack {
 
-  /** Explicit read schema for the file stream — derived from the actual
-    * parquet footer (ts encoding varies across testdata generations; see
-    * Tables.normalizeEventTs), so the streamed rows match the file and
-    * the normalizer handles the ts shape. */
-  private def rawSchema(s: SparkSession, d: String): StructType =
-    graft.core.Tables.eventsRawNanos(s, d).schema
-
+  /** Run number for memory-sink names and per-run paths: unique per JVM,
+    * so repeated runs in one session never collide. */
   private[streaming] val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Run `f` (which must START its streaming query inside) with the
-    * shuffle-partition count — which for streaming is also the number of
-    * state-store instances per stateful operator — sized to the load.
-    * The bounded gate runs carry tiny state, where per-partition state
-    * store setup/maintenance dominates: q98 measured 2.5 s at 8
-    * partitions vs 6–9.5 s at 32. At production rates the same knob is
-    * sized UP, per state volume, not down. Restored afterwards so the
-    * batch parts of the plan keep the session's parallelism.
-    */
-  private[streaming] def withStatePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   /** Streaming twin of q278's diurnal heatmap: complete-mode aggregation
     * on derived CALENDAR keys (day-of-week × hour) rather than event-time
@@ -54,11 +37,7 @@ object StreamingPack extends QueryPack {
     * composition) — the twin gates events and exact decimal value.
     */
   def streamHeatmap(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
     val agg = ev
       .select((dayofweek(col("ts")) - 1).cast("int").as("dow"),
         hour(col("ts")).cast("int").as("hod"),
@@ -66,17 +45,7 @@ object StreamingPack extends QueryPack {
       .groupBy("dow", "hod")
       .agg(count(lit(1)).cast("bigint").as("n_events"),
         sum(col("v")).as("sv"))
-    val name = s"graft_stream_heatmap_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "heatmap")()
       .select(col("dow"), col("hod"), col("n_events"),
         col("sv").cast("double").as("total_value"))
       .orderBy("dow", "hod")
@@ -84,27 +53,11 @@ object StreamingPack extends QueryPack {
 
   /** Streaming tumbling 1-hour count per event type over the events table. */
   def streamTumbling(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // FileStreamSource requires a directory: stream the sf dir, glob-
-    // filtered to the events table file(s).
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
     val agg = ev
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val name = s"graft_stream_tumbling_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "tumbling")()
       .select(col("window.start").as("w_start"), col("event_type"), col("n"))
       .orderBy("w_start", "event_type")
   }
@@ -117,25 +70,11 @@ object StreamingPack extends QueryPack {
     * need watermark plumbing that the bounded gate doesn't exercise).
     */
   def streamDedupDau(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
       .withColumn("day", date_trunc("day", col("ts")))
       .select("user_id", "day")
       .dropDuplicates("user_id", "day")
-    val name = s"graft_stream_dedup_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = ev.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(ev, "append", "dedup")()
       .groupBy("day")
       .agg(count(lit(1)).as("dau"))
       .orderBy("day")
@@ -152,11 +91,7 @@ object StreamingPack extends QueryPack {
     * engine-portable.
     */
   def streamStaticEnrich(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
       .select(col("ts"), col("user_id"), col("value"))
     val dim = graft.core.Tables.customer(s, d)
       .select(col("c_custkey"), col("c_nationkey"))
@@ -164,17 +99,7 @@ object StreamingPack extends QueryPack {
       .groupBy(window(col("ts"), "1 day"), col("c_nationkey"))
       .agg(count(lit(1)).as("n_events"),
         sum(floor(col("value") * lit(1e6)).cast("bigint")).as("sum_value_q"))
-    val name = s"graft_stream_enrich_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "enrich")()
       .select(col("window.start").as("w_start"), col("c_nationkey"),
         col("n_events"), col("sum_value_q"))
       .orderBy("w_start", "c_nationkey")
@@ -233,6 +158,22 @@ object StreamingPack extends QueryPack {
       }
     }
 
+  /** The q98/q449/q457 stream plan: the signup and purchase streams of
+    * [[splitEventsPath]], each watermarked 1 h, joined as `joinType` on
+    * the same user with the purchase within 7 days of the signup. */
+  private def signupPurchaseJoin(s: SparkSession, d: String, joinType: String): DataFrame = {
+    val root = splitEventsPath(s, d)
+    def side(eventType: String, alias: String): DataFrame =
+      s.readStream.schema(splitEventSchema)
+        .parquet(s"$root/event_type=$eventType")
+        .select(col("user_id").as(s"${alias}_user"),
+                col("event_id").as(s"${alias}_id"),
+                col("ts").as(s"${alias}_ts"))
+        .withWatermark(s"${alias}_ts", "1 hour")
+    side("signup", "s").join(side("purchase", "p"),
+      expr("s_user = p_user AND p_ts >= s_ts AND p_ts <= s_ts + INTERVAL 7 DAYS"), joinType)
+  }
+
   /** Stream-stream interval join: signups ⋈ purchases by user within 7
     * days, BOTH sides watermarked (1 h) — the watermark + time bound are
     * what let Spark evict join state, the property that keeps state
@@ -242,24 +183,7 @@ object StreamingPack extends QueryPack {
     * asserted by StreamStreamJoinSpec).
     */
   def streamIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val root = splitEventsPath(s, d)
-    def side(eventType: String, alias: String): DataFrame =
-      s.readStream.schema(splitEventSchema)
-        .parquet(s"$root/event_type=$eventType")
-        .select(col("user_id").as(s"${alias}_user"),
-                col("event_id").as(s"${alias}_id"),
-                col("ts").as(s"${alias}_ts"))
-        .withWatermark(s"${alias}_ts", "1 hour")
-    val joined = side("signup", "s").join(side("purchase", "p"),
-      expr("s_user = p_user AND p_ts >= s_ts AND p_ts <= s_ts + INTERVAL 7 DAYS"))
-    val name = s"graft_stream_ssjoin_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(signupPurchaseJoin(s, d, "inner"), "append", "ssjoin")()
       .select(col("s_id"), col("p_id"), col("s_user").as("user_id"))
       .orderBy("s_id", "p_id")
   }
@@ -285,25 +209,7 @@ object StreamingPack extends QueryPack {
     * argument; unmatched rows because every purchase that could match
     * is itself behind the watermark and thus arrived). */
   def streamOuterIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val root = splitEventsPath(s, d)
-    def side(eventType: String, alias: String): DataFrame =
-      s.readStream.schema(splitEventSchema)
-        .parquet(s"$root/event_type=$eventType")
-        .select(col("user_id").as(s"${alias}_user"),
-                col("event_id").as(s"${alias}_id"),
-                col("ts").as(s"${alias}_ts"))
-        .withWatermark(s"${alias}_ts", "1 hour")
-    val joined = side("signup", "s").join(side("purchase", "p"),
-      expr("s_user = p_user AND p_ts >= s_ts AND p_ts <= s_ts + INTERVAL 7 DAYS"),
-      "left_outer")
-    val name = s"graft_stream_ssojoin_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(signupPurchaseJoin(s, d, "left_outer"), "append", "ssojoin")()
       // 7 d window + 1 h watermark delay + 2 s margin — the same
       // closed-horizon arithmetic the oracle applies; anchored to the
       // stream's ACTUAL final watermark base [[joinWatermarkBaseUs]]
@@ -349,29 +255,11 @@ object StreamingPack extends QueryPack {
     * with a signup keep q449's signup-closed bound; signup-less rows
     * keep the purchase-closed bound (p_us + 1 h + 2 s < max_us). */
   def streamFullOuterIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val root = splitEventsPath(s, d)
-    def side(eventType: String, alias: String): DataFrame =
-      s.readStream.schema(splitEventSchema)
-        .parquet(s"$root/event_type=$eventType")
-        .select(col("user_id").as(s"${alias}_user"),
-                col("event_id").as(s"${alias}_id"),
-                col("ts").as(s"${alias}_ts"))
-        .withWatermark(s"${alias}_ts", "1 hour")
-    val joined = side("signup", "s").join(side("purchase", "p"),
-      expr("s_user = p_user AND p_ts >= s_ts AND p_ts <= s_ts + INTERVAL 7 DAYS"),
-      "full_outer")
-    val name = s"graft_stream_ssfojoin_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // per-side horizons, both anchored to the join's true watermark
     // base (min of the two sides' max event times — see
     // [[joinWatermarkBaseUs]])
     val maxUs = joinWatermarkBaseUs(s, d)
-    s.table(name)
+    drain(signupPurchaseJoin(s, d, "full_outer"), "append", "ssfojoin")()
       .filter(
         (col("s_id").isNotNull &&
           unix_micros(col("s_ts")) + lit(604800000000L + 3600000000L + 2000000L) < lit(maxUs)) ||
@@ -397,7 +285,6 @@ object StreamingPack extends QueryPack {
     * must equal the batch digest of the original events table. */
   def streamDedupWithinWatermark(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = graft.core.Artifacts.perRunSinkPath(s,
       s"dedup_wm_src_${counter.incrementAndGet()}")
     Files.createDirectories(Paths.get(src))
@@ -424,14 +311,7 @@ object StreamingPack extends QueryPack {
       .withWatermark("ts", "1 hour")
       .select(col("event_id"), col("ts"), col("event_type"))
       .dropDuplicatesWithinWatermark("event_id")
-    val name = s"graft_stream_dwm_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = dedup.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(dedup, "append", "dwm")()
       .groupBy("event_type")
       .agg(count(lit(1)).cast("bigint").as("n"),
         min("event_id").cast("bigint").as("min_id"),
@@ -461,25 +341,12 @@ object StreamingPack extends QueryPack {
   def streamCountMin(s: SparkSession, d: String): DataFrame = {
     import graft.operators.TextPack.{cmDepth, cmWidth, probeSketch}
     graft.functions.GraftExpressions.ensure(s)
-    val docs = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val docs = fileStream(s, d, "documents.parquet", docSchema)
     val tok = docs.select(
       explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
     val agg = tok.agg(
       graft.functions.GraftExpressions.countMin(col("w"), cmDepth, cmWidth).as("cm"))
-    val name = s"graft_stream_cms_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    val sketch = s.table(name)
+    val sketch = drain(agg, "complete", "cms")()
     // batch probe over the streamed matrix: q104's probe code, shared
     val tokB = warmed(graft.core.Tables.documents(s, d)
       .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("w")))
@@ -498,25 +365,12 @@ object StreamingPack extends QueryPack {
     * regime's bounds stay spec-tested in SpaceSavingSpec). */
   def streamTopKSketch(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftExpressions.ensure(s)
-    val docs = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val docs = fileStream(s, d, "documents.parquet", docSchema)
     val tok = docs.select(col("lang"),
       explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
     val agg = tok.groupBy("lang").agg(
       graft.functions.GraftExpressions.spaceSavingTopK(col("w"), 3, 64).as("top_arr"))
-    val name = s"graft_stream_sstopk_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "sstopk")()
       .select(col("lang"), posexplode(col("top_arr")))
       .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
         expr("split_part(col, ':', 1)").as("token"),
@@ -574,11 +428,8 @@ object StreamingPack extends QueryPack {
   def streamIvfAssign(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftExpressions.ensure(s)
     val cents = graft.operators.SimilarityPack.baseCentroidRow(s, d)
-    val embSchema = graft.core.Tables.embeddings(s, d).schema
-    val delta = s.readStream
-      .schema(embSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(d)
+    val delta = fileStream(s, d, "embeddings.parquet",
+        graft.core.Tables.embeddings(s, d).schema)
       .filter(pmod(col("vec_id"), lit(10L)) === lit(7L))
       .withColumn("q", graft.functions.VectorFunctions.quantize(col("embedding")))
       .withColumn("norm", sqrt(graft.functions.VectorFunctions.normSqQ(col("q"))))
@@ -587,17 +438,7 @@ object StreamingPack extends QueryPack {
       .withColumn("best", ivfArgmaxCol)
       .select(col("vec_id"), col("best.cell").as("cell"),
         col("best.cos").as("cosine"))
-    val name = s"graft_stream_ivf_assign_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = assigned.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name).orderBy("vec_id")
+    drain(assigned, "append", "ivf_assign")().orderBy("vec_id")
   }
 
   /** STREAMING BM25 INDEX-STATS MAINTENANCE — the live twin of q424
@@ -620,10 +461,7 @@ object StreamingPack extends QueryPack {
     * needed at any stream length). */
   def streamBm25Delta(s: SparkSession, d: String): DataFrame = {
     import graft.operators.DedupPack
-    val delta = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val delta = fileStream(s, d, "documents.parquet", docSchema)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) === lit(DedupPack.deltaRem))
     // Single-pass run-length fold over the SORTED token array. The fold
     // lambdas reference ONLY their own (acc, x) arguments — never an
@@ -657,17 +495,7 @@ object StreamingPack extends QueryPack {
       .select(col("p.w").as("w"), col("p.cnt").as("cnt"))
     val agg = pairs.groupBy("w")
       .agg(count(lit(1)).as("dfd"), sum("cnt").as("cfd"))
-    val name = s"graft_stream_bm25_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    val t = s.table(name).localCheckpoint()
+    val t = drain(agg, "complete", "bm25")().localCheckpoint()
     val dTerms = t.filter(col("w") =!= "")
       .select(col("w"), col("dfd").as("df_delta"), col("cfd").as("cf_delta"))
     val dMeta = t.filter(col("w") === "")
@@ -707,23 +535,14 @@ object StreamingPack extends QueryPack {
     val agg = src.groupBy("bucket")
       .agg(count(lit(1)).as("n"), sum("sq").as("sum_sq"),
         min("id").as("min_id"), max("id").as("max_id"))
-    val name = s"graft_stream_dsv2_${counter.incrementAndGet()}"
-    val progressRows = withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try {
-        q.processAllAvailable()
-        q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
-      } finally q.stop()
+    drain(agg, "complete", "dsv2") { q =>
+      StreamRunner.processAvailable(q)
+      val progressRows = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
+      require(progressRows.length >= 2,
+        s"graft-range stream collapsed to one micro-batch: $progressRows")
+      require(progressRows.sum == 200000L,
+        s"offset ranges lost/duplicated rows: ${progressRows.sum} != 200000")
     }
-    require(progressRows.length >= 2,
-      s"graft-range stream collapsed to one micro-batch: $progressRows")
-    require(progressRows.sum == 200000L,
-      s"offset ranges lost/duplicated rows: ${progressRows.sum} != 200000")
-    s.table(name)
       .select(col("bucket").cast("int").as("bucket"),
         col("n").cast("bigint").as("n"),
         col("sum_sq").cast("bigint").as("sum_sq"),
@@ -838,16 +657,10 @@ object StreamingPack extends QueryPack {
     val n = counter.incrementAndGet()
     val tbl = s"cdctail_src_${n}_${System.identityHashCode(s)}"
     val outTbl = s"cdctail_out_${n}_${System.identityHashCode(s)}"
-    import graft.functions.TextFunctions.hex64
-    def digest(docs: DataFrame): DataFrame =
-      docs.groupBy("lang", "source")
-        .agg(count(lit(1)).cast("bigint").as("n_docs"),
-          sum("n_chars").cast("bigint").as("sum_chars"),
-          sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
     val docs = graft.core.Tables.documents(s, dir)
-    digest(docs).write.format("graft-mem").option("table", tbl).mode("append").save()
+    docDigest(docs).write.format("graft-mem").option("table", tbl).mode("append").save()
     import s.implicits._
-    digest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
+    docDigest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
       .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
         .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
       .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
@@ -909,15 +722,9 @@ object StreamingPack extends QueryPack {
     val n = counter.incrementAndGet()
     val tbl = s"mv_src_${n}_${System.identityHashCode(s)}"
     val mv = s"mv_agg_${n}_${System.identityHashCode(s)}"
-    import graft.functions.TextFunctions.hex64
-    def digest(docs: DataFrame): DataFrame =
-      docs.groupBy("lang", "source")
-        .agg(count(lit(1)).cast("bigint").as("n_docs"),
-          sum("n_chars").cast("bigint").as("sum_chars"),
-          sum(hex64(md5(col("text"))) % lit(1000000007L)).cast("bigint").as("text_cksum"))
     val docs = graft.core.Tables.documents(s, dir)
     // upstream commit 1, then the MV bootstrap from EXACTLY version 1
-    digest(docs).write.format("graft-mem").option("table", tbl).mode("append").save()
+    docDigest(docs).write.format("graft-mem").option("table", tbl).mode("append").save()
     s.sql(s"SELECT lang, CAST(sum(n_docs) AS BIGINT) AS n_docs, " +
         s"CAST(sum(sum_chars) AS BIGINT) AS sum_chars, " +
         s"CAST(sum(text_cksum) AS BIGINT) AS cksum " +
@@ -925,7 +732,7 @@ object StreamingPack extends QueryPack {
       .write.format("graft-mem").option("table", mv).mode("append").save()
     // upstream commits 2 (keyed upsert) and 3 (metadata delete)
     import s.implicits._
-    digest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
+    docDigest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
       .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
         .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
       .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
@@ -1075,23 +882,10 @@ object StreamingPack extends QueryPack {
 
   def streamKsDrift(s: SparkSession, d: String): DataFrame = {
     import graft.operators.DedupPack
-    val deltaCounts = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val deltaCounts = fileStream(s, d, "documents.parquet", docSchema)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) === lit(DedupPack.deltaRem))
       .groupBy("n_chars").agg(count(lit(1)).as("cd"))
-    val name = s"graft_stream_ksdrift_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = deltaCounts.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    val dCnt = s.table(name).localCheckpoint()
+    val dCnt = drain(deltaCounts, "complete", "ksdrift")().localCheckpoint()
     val bCnt = graft.core.Tables.documents(s, d)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) =!= lit(DedupPack.deltaRem))
       .groupBy("n_chars").agg(count(lit(1)).as("cb"))
@@ -1130,10 +924,7 @@ object StreamingPack extends QueryPack {
     val baseSigs = DedupPack.baseSigStore(s, d)
       .select(col("doc_id").as("base_id"), col("sigs").as("sig_b"),
         col("tid").as("tid_b"), col("n_toks").as("n_b"))
-    val delta = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val delta = fileStream(s, d, "documents.parquet", docSchema)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) === lit(DedupPack.deltaRem))
     val probe = DedupPack.minhashBandsWithState(DedupPack.minhashDocs(delta))
     val scored = probe
@@ -1154,17 +945,7 @@ object StreamingPack extends QueryPack {
       .select(least(col("doc_id"), col("base_id")).as("doc_i"),
         greatest(col("doc_id"), col("base_id")).as("doc_j"),
         col("est_matches"), col("n_common"), col("jaccard"))
-    val name = s"graft_stream_neardup_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = scored.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name).orderBy("doc_i", "doc_j")
+    drain(scored, "append", "neardup")().orderBy("doc_i", "doc_j")
   }
 
   /** Built-in `session_window` gap-based sessionization — the native
@@ -1175,25 +956,11 @@ object StreamingPack extends QueryPack {
     * previous [ts, ts+30min) window, so an exactly-30-minute gap starts
     * a new session; session end = last event + gap. */
   def streamSessionWindow(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
     val agg = ev
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).cast("bigint").as("n_events"))
-    val name = s"graft_stream_session_window_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "session_window")()
       .select(col("session_window.start").as("s_start"),
         col("session_window.end").as("s_end"),
         col("user_id"), col("n_events"))
@@ -1212,27 +979,14 @@ object StreamingPack extends QueryPack {
     */
   def streamQuantiles(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftExpressions.ensure(s)
-    val docs = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val docs = fileStream(s, d, "documents.parquet", docSchema)
     val agg = docs
       .select(col("source"),
         org.apache.spark.sql.functions.size(
           graft.functions.TextFunctions.tokens(col("text"))).cast("bigint").as("n"))
       .groupBy("source")
       .agg(graft.functions.GraftExpressions.quantileSketch(col("n"), 8192).as("qs"))
-    val name = s"graft_stream_quant_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "quant")()
       .select(col("source"),
         element_at(col("qs"), 1).cast("bigint").as("q250"),
         element_at(col("qs"), 2).cast("bigint").as("q500"),
@@ -1254,27 +1008,14 @@ object StreamingPack extends QueryPack {
     * batch side). State per source: one count + one DECIMAL — constant
     * however much text streams past (q106's contract). */
   def streamChecksum(s: SparkSession, d: String): DataFrame = {
-    val docs = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val docs = fileStream(s, d, "documents.parquet", docSchema)
     val agg = docs
       .select(col("source"),
         graft.functions.TextFunctions.hex64(md5(col("text"))).as("h"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(expr("cast(h as decimal(38,0))")).as("s_all"))
-    val name = s"graft_stream_checksum_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "checksum")()
       .select(col("source"), col("n_docs").cast("bigint").as("n_docs"),
         expr("cast(s_all % 1152921504606846976 as bigint)").as("checksum"))
       .orderBy("source")
@@ -1292,26 +1033,12 @@ object StreamingPack extends QueryPack {
     * frequency. */
   def streamHll(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftExpressions.ensure(s)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(graft.core.Tables.eventsRawNanos(s, d).schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val raw = eventStream(s, d)
     val agg = raw
       .select(col("event_type").as("grp"), col("user_id").cast("string").as("key"))
       .groupBy("grp")
       .agg(graft.functions.GraftExpressions.hll(col("key"), 8).as("regs"))
-    val name = s"graft_stream_hll_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "hll")()
       .select(col("grp"), posexplode(col("regs")).as(Seq("idx", "reg")))
       .select(col("grp"), col("idx").cast("bigint").as("idx"), col("reg"))
       .orderBy("grp", "idx")
@@ -1332,10 +1059,7 @@ object StreamingPack extends QueryPack {
     import graft.functions.GraftExpressions.{bloom, bloomMightContain}
     val basePids = DedupPack.baseParagraphIds(s, d)
     val bf = basePids.agg(bloom(col("pid"), 1 << 20, 7).as("bf"))
-    val delta = s.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(d)
+    val delta = fileStream(s, d, "documents.parquet", docSchema)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) === lit(DedupPack.deltaRem))
     val probed = DedupPack.paragraphIds(delta)
       .crossJoin(broadcast(bf))
@@ -1349,17 +1073,7 @@ object StreamingPack extends QueryPack {
     val agg = verified.groupBy("doc_id")
       .agg(count(lit(1)).cast("bigint").as("n_paras"),
         sum(col("hit")).cast("bigint").as("n_dup"))
-    val name = s"graft_stream_parabloom_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table(name)
+    drain(agg, "complete", "parabloom")()
       .select(col("doc_id"), col("n_paras"), col("n_dup"),
         expr("n_dup * 1000000 div n_paras").cast("bigint").as("dup_frac_ppm"))
       .withColumn("keep", col("dup_frac_ppm") <= 300000)
@@ -1376,29 +1090,15 @@ object StreamingPack extends QueryPack {
     * the gate drains the static corpus and must reproduce the batch
     * q199 answer bit-for-bit on the shared oracle. */
   def streamCusum(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
     val agg = ev
       .select(col("event_type"), expr("unix_micros(ts) div 3600000000").as("hr"))
       .groupBy("event_type", "hr")
       .agg(count(lit(1)).as("c"))
-    val name = s"graft_stream_cusum_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // the memory-sink MemoryPlan can't self-join (conflicting attribute
     // refs on the tot/cumsum branches); pin the drained state — bounded
     // by types × hours — as an RDD-backed frame first
-    val hourly = s.table(name).localCheckpoint()
+    val hourly = drain(agg, "complete", "cusum")().localCheckpoint()
     val tot = hourly.groupBy("event_type")
       .agg(sum("c").as("total"), count(lit(1)).as("n_hours"))
     val wc = Window.partitionBy("event_type").orderBy("hr")
@@ -1428,28 +1128,14 @@ object StreamingPack extends QueryPack {
     * (the q332 shape). Shares q384's oracle VERBATIM — the gate IS the
     * stream-equals-batch proof. */
   def streamSprt(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = graft.core.Tables.normalizeEventTs(s.readStream
-      .schema(rawSchema(s, d))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d))
+    val ev = eventStream(s, d)
     val agg = ev
       .select(expr("cast(floor(cast(unix_micros(ts) as double) / 86400000000.0) as bigint)").as("day"),
         expr("CASE WHEN CAST(conv(substring(md5(concat('sprt:', CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 2 = 1 THEN 1 ELSE 0 END").as("in_b"))
       .groupBy("day")
       .agg(count(lit(1)).as("n"), sum("in_b").as("k"))
-    val name = s"graft_stream_sprt_${counter.incrementAndGet()}"
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // bounded finishing pass over the drained day-vocabulary frame
-    val daily = s.table(name).localCheckpoint()
+    val daily = drain(agg, "complete", "sprt")().localCheckpoint()
     val wc = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dec = daily

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.Tables
+import StreamRunner.{drain, eventStream}
 
 /** Streaming first-order Markov transition mining — the live twin of the
   * batch q203: per-user adjacent event pairs under the canonical
@@ -29,7 +31,7 @@ object TransitionStream {
   case class LastEv(us: Long, event_id: Long, event_type: String)
   case class Trans(cur: String, nxt: String)
 
-  private[streaming] def update(userId: Long, events: Iterator[Ev],
+  private[streaming] def update(@unused userId: Long, events: Iterator[Ev],
                                 state: GroupState[LastEv]): Iterator[Trans] = {
     val out = scala.collection.mutable.ListBuffer.empty[Trans]
     var last = state.getOption.orNull
@@ -44,35 +46,17 @@ object TransitionStream {
   /** Emitted transitions aggregated to q203's exact output shape. */
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.normalizeEventTs(s.readStream
-      .schema(Tables.eventsRawNanos(s, dir).schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val raw = eventStream(s, dir)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"), col("event_type"))
     val trans = raw.as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    // Monotonic counter (StreamingPack's convention): every run gets a
-    // fresh memory-sink view name, so concurrent/repeated runs in one
-    // session can never collide (r6 advice — identityHashCode reused
-    // one name per session).
-    val name = s"graft_stream_trans_${StreamingPack.counter.incrementAndGet()}"
-    StreamingPack.withStatePartitions(s, 8) {
-      val q = trans.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // localCheckpoint: the transition matrix is |types|²-bounded, and
     // the memory-sink view otherwise carries the same attribute ids
     // into both sides of the tr⋈tot self-join (conflicting-reference
     // resolution failure)
-    val tr = s.table(name)
+    val tr = drain(trans, "append", "trans")()
       .groupBy(col("cur"), col("nxt")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
     val tot = tr.groupBy("cur").agg(sum("cnt").as("tot"))
