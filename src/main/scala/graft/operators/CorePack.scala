@@ -24,8 +24,9 @@ object CorePack extends QueryPack {
     "q00_wordcount" -> ((s, dir) => WordCount.documentsWordCount(s, dir)),
 
     // Same computation driven through the generic MapReduce facade
-    // (flatMap → shuffle → mapGroups), i.e. the reference's programming
-    // model verbatim. Result cast to the same schema as q00.
+    // (map → value-list combiner → shuffle → merge + reduce), i.e. the
+    // reference's programming model verbatim. Result cast to the same
+    // schema as q00.
     "q01_mapreduce_wc" -> { (s, dir) =>
       import s.implicits._
       val lines = Tables.documents(s, dir).select("text").as[String]

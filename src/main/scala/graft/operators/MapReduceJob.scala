@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.annotation.unused
 import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.functions.TokenizerKernel
@@ -13,17 +14,21 @@ import graft.functions.TokenizerKernel
   *
   * The reference's runtime (coordinator RPC, file shuffle, leases,
   * phase barriers — SURVEY.md §2 C1–C5) is replaced wholesale by Spark's
-  * DAGScheduler + shuffle service + lineage recovery: `flatMap` is the map
-  * phase, the one hash repartition on the key column is the
-  * `mr-{m}-{r}.txt` exchange (`numPartitions` = the reference's
-  * `reduce_n`), and `mapGroups` on that same column is the reduce phase —
-  * grouped on the partitioning column, so no second exchange is planned.
+  * DAGScheduler + shuffle service + lineage recovery. The plan of [[run]]
+  * is map → value-list combiner → one shuffle → merge + reduce: `map`
+  * runs inside a `mapPartitions` that gathers each task's values per key
+  * into one `(key, values)` row, the one hash repartition on the key
+  * column is the `mr-{m}-{r}.txt` exchange (`numPartitions` = the
+  * reference's `reduce_n`), and `mapGroups` on that same column is the
+  * reduce phase — grouped on the partitioning column, so no second
+  * exchange is planned.
   *
-  * Unlike the reference (which has no combiner — every `(word,"1")` pair
-  * crosses the shuffle, `src/app/wc.rs:11`), callers that have an
-  * associative reduce should use [[runAssociative]] which gets map-side
-  * partial aggregation — same semantics, strictly less shuffle I/O; this is
-  * what makes the model survive 100 TB inputs.
+  * The reference has no combiner: every `(word,"1")` pair crosses its
+  * shuffle (`src/app/wc.rs:11`). The value-list combiner groups values
+  * without reducing them, so it is exact for any reduce, yet sends one row
+  * per (map task, key) instead of one per pair. Callers that have an
+  * associative reduce can use [[runAssociative]], which pre-reduces the
+  * values as well.
   *
   * Note: the reference loses the lexicographically-last group of every
   * reduce partition (`src/mr/worker.rs:169-184` never flushes the final
@@ -31,11 +36,16 @@ import graft.functions.TokenizerKernel
   */
 object MapReduceJob {
 
+  /** Most values one map task's combiner holds before it flushes its rows
+    * and starts again; bounds its memory whatever the key skew. */
+  private[graft] val CombinerValues = 1 << 20
+
   /** Faithful general form: arbitrary reduce over the full value list per
-    * key. One shuffle into `numPartitions` reduce partitions, no combiner
-    * (matches the reference contract exactly; values arrive in unspecified
-    * order, like the reference's post-sort grouping which only ordered
-    * keys, not values).
+    * key. Each map task sends one `(key, values)` row per key (per flush)
+    * through one shuffle into `numPartitions` reduce partitions, where the
+    * lists are merged. `reduce` sees every value exactly once, in
+    * unspecified order, like the reference's post-sort grouping, which
+    * ordered keys but not values.
     */
   def run(spark: SparkSession,
           input: Dataset[String],
@@ -44,11 +54,26 @@ object MapReduceJob {
           numPartitions: Int): Dataset[(String, String)] = {
     import spark.implicits._
     input
-      .flatMap(map)
+      .mapPartitions(lines => combine(lines.flatMap(map)))
       .repartition(numPartitions, $"_1")
-      .groupBy($"_1").as[String, (String, String)]
-      .mapGroups((k, it) => (k, reduce(k, it.map(_._2).toSeq)))
+      .groupBy($"_1").as[String, (String, Array[String])]
+      .mapGroups((k, lists) => (k, reduce(k, ArraySeq.from(lists.flatMap(_._2)))))
   }
+
+  /** Hadoop's combiner contract (it may run 0..n times per key): values
+    * are gathered per key until [[CombinerValues]] are held, then every
+    * gathered list is emitted and gathering starts again. */
+  private def combine(pairs: Iterator[(String, String)]): Iterator[(String, Array[String])] =
+    Iterator.continually {
+      val lists = mutable.HashMap.empty[String, mutable.ArrayBuffer[String]]
+      var held = 0
+      while (held < CombinerValues && pairs.hasNext) {
+        val (k, v) = pairs.next()
+        lists.getOrElseUpdate(k, new mutable.ArrayBuffer[String](1)) += v
+        held += 1
+      }
+      lists
+    }.takeWhile(_.nonEmpty).flatMap(_.iterator.map { case (k, vs) => (k, vs.toArray) })
 
   /** Combiner-enabled form for associative+commutative reduces: Spark plans
     * partial aggregation before the shuffle, so only one pre-reduced pair

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,10 +30,18 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .map(_.mkString(" "))
   private val linesGen: Gen[List[String]] = Gen.listOfN(30, lineGen)
 
-  private def model(lines: Seq[String]): Map[String, String] =
-    lines.flatMap(MapReduceJob.wordCountMap)
+  private def model(lines: Seq[String],
+                    map: String => Seq[(String, String)] = MapReduceJob.wordCountMap,
+                    reduce: (String, Seq[String]) => String = MapReduceJob.wordCountReduce)
+      : Map[String, String] =
+    lines.flatMap(map)
       .groupBy(_._1)
-      .map { case (k, kvs) => k -> MapReduceJob.wordCountReduce(k, kvs.map(_._2)) }
+      .map { case (k, kvs) => k -> reduce(k, kvs.map(_._2)) }
+
+  /** Rows the one exchange of an executed `run` wrote. */
+  private def shuffleRecords(ds: Dataset[_]): Long =
+    collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      .map(_.metrics("shuffleRecordsWritten").value).sum
 
   test("facade == sequential model, invariant under partition count") {
     import spark.implicits._
@@ -68,6 +77,58 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(!got.exists(_._1.exists(Character.isWhitespace)))
       assert(got.map(_._2.toLong).sum ==
         lines.flatMap(MapReduceJob.wordCountMap).size)
+    }
+  }
+
+  test("general reduce: every distinct value reaches reduce exactly once") {
+    import spark.implicits._
+    // values carry their line and position, and the reduce is
+    // order-insensitive but not a count, so a dropped or duplicated value
+    // changes the result
+    val tagged: String => Seq[(String, String)] = line =>
+      MapReduceJob.wordCountMap(line).zipWithIndex.map { case ((w, _), i) => (w, s"$line:$i") }
+    val sorted: (String, Seq[String]) => String = (_, vs) => vs.sorted.mkString(",")
+    forAll(linesGen, 4) { lines =>
+      for (parts <- Seq(1, 2, 7, 32)) {
+        val got = MapReduceJob.run(spark, lines.toDS(), tagged, sorted, parts).collect().toMap
+        assert(got == model(lines, tagged, sorted), s"parts=$parts")
+      }
+    }
+  }
+
+  test("combiner flushes: a hot key spanning several flushes is counted exactly") {
+    import spark.implicits._
+    // one input partition with ~2.5 combiner bounds of pairs; "hot" is in
+    // every line, so it is gathered, flushed and gathered again
+    val perLine = 200
+    val n = MapReduceJob.CombinerValues * 5 / 2 / (perLine + 1)
+    val lines = (0 until n).map(i => ("hot " * perLine) + s"k${i % 5}")
+    val pairs = n.toLong * (perLine + 1)
+    assert(pairs > 2L * MapReduceJob.CombinerValues)
+    val ds = MapReduceJob.run(spark, spark.sparkContext.parallelize(lines, 1).toDS(),
+      MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 3)
+    val got = ds.collect().toMap
+    val expected = Map("hot" -> (n.toLong * perLine).toString) ++
+      (0 until 5).map(j => s"k$j" -> (0 until n).count(_ % 5 == j).toString)
+    assert(got == expected)
+    // each of the 3 flushes sends one row per key it gathered
+    val flushes = ((pairs + MapReduceJob.CombinerValues - 1) / MapReduceJob.CombinerValues).toInt
+    assert(flushes == 3)
+    assert(shuffleRecords(ds) == flushes * 6L)
+  }
+
+  test("the shuffle carries one row per (input partition, key), not one per pair") {
+    import spark.implicits._
+    forAll(linesGen, 4) { lines =>
+      val input = spark.sparkContext.parallelize(lines, 3).toDS()
+      val ds = MapReduceJob.run(spark, input,
+        MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 4)
+      assert(ds.collect().toMap == model(lines))
+      val partitionKeys = input.mapPartitions { it =>
+        Iterator(it.flatMap(MapReduceJob.wordCountMap).map(_._1).toSet.size.toLong)
+      }.collect().sum
+      assert(partitionKeys < lines.flatMap(MapReduceJob.wordCountMap).size)
+      assert(shuffleRecords(ds) == partitionKeys)
     }
   }
 }
