@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# Unskippable pre-snapshot gate: the one-session-builder and
-# one-stream-runner greps, compile (main + test), the benchmark's smoke
+# Unskippable pre-snapshot gate: the one-session-builder, one-stream-runner
+# and one-pin-module greps, compile (main + test), the benchmark's smoke
 # test, full ScalaTest suite, then a sf0.001 Verify + oracle smoke.
 # Run this before EVERY end-of-round (or milestone) commit — round 5
 # shipped a non-compiling snapshot precisely because nothing forced this.
@@ -26,6 +26,17 @@ echo "== preflight: one stream runner =="
 if grep -rnE 'format\("memory"\)|processAllAvailable' src/main --include='*.scala' \
     | grep -v '^src/main/scala/graft/streaming/StreamRunner\.scala:'; then
   echo "preflight: memory sink or processAllAvailable outside graft/streaming/StreamRunner.scala; use StreamRunner.drain" >&2
+  exit 1
+fi
+
+# One pin module: every persist, warm and lineage cut in main goes
+# through graft/core/Pin.scala, so the local-vs-reliable and plan-dump
+# decisions cannot be hand-copied again. Comment lines are skipped.
+echo "== preflight: one pin module =="
+if grep -rnE 'localCheckpoint\(|\.checkpoint\(|\.persist\(' src/main --include='*.scala' \
+    | grep -v '^src/main/scala/graft/core/Pin\.scala:' \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)'; then
+  echo "preflight: persist/checkpoint/localCheckpoint outside graft/core/Pin.scala; use graft.core.Pin" >&2
   exit 1
 fi
 

@@ -26,47 +26,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every driver-generated `documents.parquet` (0 non-ASCII rows at sf0.001/
   * 0.01/0.1). On a non-ASCII corpus the Spark side remains the intended
   * (reference-faithful) semantics; only the DuckDB mirror would diverge.
+  *
+  * Queries pin their intermediates through [[Pin]] (`warmed`,
+  * `materialized`, `checkpointed`), imported by each pack.
   */
 trait QueryPack {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracle: Map[String, String]
-
-  /** Query-owned cache lifecycle: eagerly materialize the result
-    * (`localCheckpoint` computes it and truncates the plan to the stored
-    * blocks), then unpersist the intermediates the plan no longer
-    * references. A query that returns `materialized(result, hot1, hot2)
-    * .orderBy(...)` hands the harness a DataFrame with no
-    * CacheManager-tracked blocks — the harness-side `clearCache()` stays
-    * a backstop instead of a requirement. (The checkpoint's own storage
-    * blocks are outside the CacheManager; the ContextCleaner reclaims
-    * them once the frame is unreferenced.) Results here are small (gate
-    * outputs), so the extra materialization is noise next to the
-    * released cache.
-    *
-    * IMPORTANT: pass the UNSORTED result and apply the final total
-    * `orderBy` on the returned frame. A global sort executes its child
-    * twice (range-partitioner sampling pass + sort pass); checkpointing
-    * below the sort makes both passes read the stored blocks, while
-    * checkpointing a sorted plan makes them re-run the full upstream
-    * pipeline (measured 17 s vs 0.8 s on the IVF search at sf0.1).
-    */
-  protected def materialized(result: DataFrame, release: DataFrame*): DataFrame = {
-    if (QueryPack.planDumpMode) return result // keep full lineage explainable
-    val out = result.localCheckpoint()
-    release.foreach(_.unpersist())
-    out
-  }
-
-  /** Persist + eagerly warm a hot intermediate that multiple plan
-    * branches will scan: without the eager count, branch stages race the
-    * cold cache and each recomputes the full build (measured 32 s vs
-    * ~4 s on round 2's q47). Pair with [[materialized]] to release it.
-    */
-  protected def warmed(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
-  }
 }
 
 object QueryPack {

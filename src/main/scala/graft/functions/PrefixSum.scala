@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin.materialized
 
 /** Distributed inclusive prefix sum — the classic two-phase parallel
   * scan (Blelloch, "Prefix sums and their applications", CMU-CS-90-190)
@@ -24,24 +25,21 @@ import org.apache.spark.sql.functions._
   * Order keys MUST be a total order (include a unique tiebreak column)
   * — ties spanning a rows-frame make any running sum nondeterministic,
   * here and in the single-partition window alike.
+  *
+  * Every scan freezes its pid-stamped range-partitioned frame with an
+  * EAGER [[graft.core.Pin.materialized]] before anything consumes it.
+  * The phase-1 window and the phase-3 offset join both read the `__pid` column; if
+  * the range exchange is ever materialized twice (exchange reuse can
+  * fail across plan branches, and AQE may coalesce post-shuffle
+  * partitions per stage), the two materializations can SAMPLE
+  * DIFFERENT range boundaries — the offsets then describe a pid layout
+  * the window rows don't have, silently corrupting the running sums
+  * (caught by q264's sf0.1 gate; plain reruns pass, so the corruption is
+  * plan-shape-dependent). Checkpointing stamps the pids once and every
+  * consumer reads the same stored blocks; planDumpMode keeps the dump
+  * tool's lineage view.
   */
 object PrefixSum {
-
-  /** Freeze the pid-stamped range-partitioned frame with an EAGER
-    * localCheckpoint before anything consumes it. The scan's phase-1
-    * window and phase-3 offset join both read the `__pid` column; if
-    * the range exchange is ever materialized twice (exchange reuse can
-    * fail across plan branches, and AQE may coalesce post-shuffle
-    * partitions per stage), the two materializations can SAMPLE
-    * DIFFERENT range boundaries — the offsets then describe a pid
-    * layout the window rows don't have, silently corrupting the
-    * running sums (caught by q264's sf0.1 gate; plain reruns pass, so
-    * the corruption is plan-shape-dependent). Checkpointing stamps the
-    * pids once and every consumer reads the same stored blocks.
-    * Respecting planDumpMode keeps the dump tool's lineage view.
-    */
-  private def pinned(df: DataFrame): DataFrame =
-    if (graft.core.QueryPack.planDumpMode) df else df.localCheckpoint()
 
   /** Appends one inclusive-running-sum column per `(value, outName)`
     * pair, ordered by `order`. Values should be integral types —
@@ -51,7 +49,7 @@ object PrefixSum {
   def inclusive(df: DataFrame, order: Seq[Column],
                 values: Seq[(Column, String)]): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = pinned(df.repartitionByRange(n, order: _*)
+    val ranged = materialized(df.repartitionByRange(n, order: _*)
       .withColumn("__pid", spark_partition_id()))
     val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -118,7 +116,7 @@ object PrefixSum {
   def exclusiveMax(df: DataFrame, order: Seq[Column], value: Column,
                    outName: String, neutral: Long): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = pinned(df.repartitionByRange(n, order: _*)
+    val ranged = materialized(df.repartitionByRange(n, order: _*)
       .withColumn("__pid", spark_partition_id()))
     val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -166,7 +164,7 @@ object PrefixSum {
     // values to one partition index, so no key group ever straddles a
     // boundary — including the tiebreak here would split groups by
     // tiebreak and double-count their partition-first rows
-    val ranged = pinned(df.repartitionByRange(n, keys: _*)
+    val ranged = materialized(df.repartitionByRange(n, keys: _*)
       .withColumn("__pid", spark_partition_id()))
     val keyStruct = struct(keys: _*)
     val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
@@ -190,7 +188,7 @@ object PrefixSum {
   def inclusivePerKey(df: DataFrame, keys: Seq[String], order: Seq[Column],
                       values: Seq[(Column, String)]): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = pinned(df.repartitionByRange(n, keys.map(col) ++ order: _*)
+    val ranged = materialized(df.repartitionByRange(n, keys.map(col) ++ order: _*)
       .withColumn("__pid", spark_partition_id()))
     val w = Window.partitionBy(col("__pid") +: keys.map(col): _*).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

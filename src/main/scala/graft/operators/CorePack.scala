@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.checkpointed
 import graft.functions.TextFunctions.hex64
 
 /** Reference-parity queries: word count both as the declarative DataFrame
@@ -1001,10 +1002,9 @@ object CorePack extends QueryPack {
       def asOf(v: Int): DataFrame =
         s.sql(s"SELECT lang, source, n_docs, sum_chars, text_cksum " +
           s"FROM graftmem.$tbl VERSION AS OF $v")
-      val v1 = asOf(1).localCheckpoint()
-      val v2 = asOf(2).localCheckpoint()
-      val cur = s.read.format("graft-mem").option("table", tbl).load()
-        .localCheckpoint()
+      val v1 = checkpointed(asOf(1))
+      val v2 = checkpointed(asOf(2))
+      val cur = checkpointed(s.read.format("graft-mem").option("table", tbl).load())
       // retention: keep the newest 2 snapshots (versions 2 and 3) —
       // versions 0 (empty) and 1 expire
       // (the implicit create-on-first-append records no version-0
@@ -1080,8 +1080,8 @@ object CorePack extends QueryPack {
         s.read.format("graft-mem").option("table", tbl)
           .option("changesFrom", from.toString)
           .option("changesTo", to.toString).load()
-      val ch12 = changes(1, 2).localCheckpoint()
-      val ch23 = changes(2, 3).localCheckpoint()
+      val ch12 = checkpointed(changes(1, 2))
+      val ch23 = checkpointed(changes(2, 3))
       // journal cross-check: every row the upsert commit moved must
       // appear in the feed with the matching change type (the 'en'
       // digests all change value under the upper-cased re-digest, so
@@ -1155,8 +1155,8 @@ object CorePack extends QueryPack {
         }
       require(renameRefused, "q476: RENAME COLUMN must refuse")
       // pre-evolution snapshot, read under the evolved schema
-      val v1 = s.sql(s"SELECT lang, source, n_docs, sum_chars, quality " +
-        s"FROM graftmem.$tbl VERSION AS OF 1").localCheckpoint()
+      val v1 = checkpointed(s.sql(s"SELECT lang, source, n_docs, sum_chars, quality " +
+        s"FROM graftmem.$tbl VERSION AS OF 1"))
       require(v1.filter(col("quality").isNotNull).count() == 0,
         "q476: the added column must read NULL in pre-evolution snapshots")
       val cur = s.read.format("graft-mem").option("table", tbl).load()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{materialized, warmed}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 
@@ -780,8 +781,6 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // truncated rank. ----
     "q453_suffix_dedup" -> { (s, d) =>
       import graft.functions.PrefixSum
-      def pin(df: DataFrame): DataFrame =
-        if (graft.core.QueryPack.planDumpMode) df else df.localCheckpoint()
       val K = saRounds
       val docs = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(saSliceMod)) === lit(saSliceRem))
@@ -801,7 +800,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
         .select(col("doc_id"), (col("i") + 1).cast("bigint").as("p"), col("w"))
       // ranks(k) = (doc_id, p, r): rank of the substring of length 2^k at p
       val ranks = new Array[DataFrame](K + 1)
-      ranks(0) = pin(denseRank(pos, Seq("w")).select("doc_id", "p", "r"))
+      ranks(0) = materialized(denseRank(pos, Seq("w")).select("doc_id", "p", "r"))
       // per-doc positions are dense 1..len, so the rank-pair build is a
       // lead(h) window over each doc (parallel across docs, ≤ maxLen
       // rows per partition) — one shuffle by doc_id, replacing the
@@ -812,11 +811,11 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
         val paired = ranks(k - 1)
           .select(col("doc_id"), col("p"), col("r").as("r1"))
           .withColumn("r2", coalesce(lead(col("r1"), h).over(wDoc), lit(0L)))
-        ranks(k) = pin(denseRank(paired, Seq("r1", "r2")).select("doc_id", "p", "r"))
+        ranks(k) = materialized(denseRank(paired, Seq("r1", "r2")).select("doc_id", "p", "r"))
       }
       // SA order = (suffix rank, doc_id, p); adjacency via a prefix-sum
       // sequence number + shifted self-join (no global lead() window)
-      val sa = pin(PrefixSum.inclusive(ranks(K),
+      val sa = materialized(PrefixSum.inclusive(ranks(K),
         Seq(col("r"), col("doc_id"), col("p")), Seq((lit(1L), "seq"))))
       var adj = sa.select(col("seq"), col("doc_id").as("d1"), col("p").as("p1"))
         .join(sa.select((col("seq") - 1).as("seq"),

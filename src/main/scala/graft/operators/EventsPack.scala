@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{checkpointed, materialized, warmed}
 
 /** Time-series analytics over the static `events` table: tumbling and
   * sliding windows, sessionization. The reference is strictly batch
@@ -867,8 +868,7 @@ object EventsPack extends QueryPack {
         .select(col("user_id"), col("ts").cast("date").as("ts"))
         .distinct()
         .repartition(col("user_id"))
-      (if (graft.core.QueryPack.planDumpMode) days else days.localCheckpoint())
-        .createOrReplaceTempView("events")
+      materialized(days).createOrReplaceTempView("events")
       s.sql(streakSql("datediff(CAST(ts AS DATE), DATE '1970-01-01')"))
     },
 
@@ -1675,20 +1675,20 @@ object EventsPack extends QueryPack {
       val tr = seq0.groupBy("cur", "nxt").agg(count(lit(1)).as("cnt"))
       val rowTot = tr.groupBy("cur").agg(sum("cnt").as("tot"))
       // tiny types² frame feeding every round — pin it (q175 rule)
-      val trp = tr.join(rowTot, "cur").localCheckpoint()
-      val states = trp.select(col("cur").as("state"))
-        .union(trp.select(col("nxt").as("state"))).distinct().localCheckpoint()
+      val trp = checkpointed(tr.join(rowTot, "cur"))
+      val states = checkpointed(trp.select(col("cur").as("state"))
+        .union(trp.select(col("nxt").as("state"))).distinct())
       var pi = states.select(col("state"), lit(1000000L).as("pi"))
       for (_ <- 1 to 6) {
         val raw = trp.join(pi, col("cur") === col("state"))
           .select(col("nxt"), expr("(pi * cnt) div tot").as("t"))
           .groupBy("nxt").agg(sum("t").as("raw"))
         val sr = raw.agg(sum("raw").as("sr"))
-        pi = states.join(raw.withColumnRenamed("nxt", "state"), Seq("state"), "left")
+        pi = checkpointed(states
+          .join(raw.withColumnRenamed("nxt", "state"), Seq("state"), "left")
           .na.fill(0L, Seq("raw"))
           .crossJoin(broadcast(sr))
-          .select(col("state"), expr("(raw * 1000000) div sr").as("pi"))
-          .localCheckpoint()
+          .select(col("state"), expr("(raw * 1000000) div sr").as("pi")))
       }
       val emp = Tables.events(s, d).groupBy("event_type").agg(count(lit(1)).as("n"))
       val et = emp.agg(sum("n").as("nt"))

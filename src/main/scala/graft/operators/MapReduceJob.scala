@@ -26,9 +26,7 @@ import graft.functions.TokenizerKernel
   * The reference has no combiner: every `(word,"1")` pair crosses its
   * shuffle (`src/app/wc.rs:11`). The value-list combiner groups values
   * without reducing them, so it is exact for any reduce, yet sends one row
-  * per (map task, key) instead of one per pair. Callers that have an
-  * associative reduce can use [[runAssociative]], which pre-reduces the
-  * values as well.
+  * per (map task, key) instead of one per pair.
   *
   * Note: the reference loses the lexicographically-last group of every
   * reduce partition (`src/mr/worker.rs:169-184` never flushes the final
@@ -74,22 +72,6 @@ object MapReduceJob {
       }
       lists
     }.takeWhile(_.nonEmpty).flatMap(_.iterator.map { case (k, vs) => (k, vs.toArray) })
-
-  /** Combiner-enabled form for associative+commutative reduces: Spark plans
-    * partial aggregation before the shuffle, so only one pre-reduced pair
-    * per (partition, key) crosses the wire.
-    */
-  def runAssociative(spark: SparkSession,
-                     input: Dataset[String],
-                     map: String => Seq[(String, String)],
-                     combine: (String, String) => String): Dataset[(String, String)] = {
-    import spark.implicits._
-    input
-      .flatMap(map)
-      .groupByKey(_._1)
-      .reduceGroups((a, b) => (a._1, combine(a._2, b._2)))
-      .map { case (k, (_, v)) => (k, v) }
-  }
 
   /** The reference's only application: word count (`src/app/wc.rs`).
     * Emits `(token, "1")` per token of the shared tokenizer kernel (the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{materialized, warmed}
 
 /** Multimodal-column plumbing: media payloads as opaque `binary` columns
   * with typed metadata, processed without ever materializing them on the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{checkpointed, materialized, warmed}
 import graft.functions.TextFunctions._
 
 /** Training-data pipeline policies layered ON TOP of the dedup primitives —
@@ -28,47 +29,12 @@ import graft.functions.TextFunctions._
   * aggregations keyed on doc_id over that PAIR table, never over the
   * corpus cross product. Label propagation is the standard BSP
   * connected-components loop (each round one join + one min-aggregate,
-  * hash-partitioned on the node id), checkpointed per round so lineage
-  * stays flat however many rounds the graph's diameter needs.
+  * hash-partitioned on the node id), checkpointed per round
+  * ([[graft.core.Pin.checkpointed]]: executor-local blocks, or reliable
+  * files whenever the context has a checkpoint dir) so lineage stays
+  * flat however many rounds the graph's diameter needs.
   */
 object PipelinePack extends QueryPack {
-
-  /** Where the BSP loops ([[connectedComponents]], [[pageRank]]) park
-    * each round's frame to keep lineage flat:
-    *
-    *   - [[CheckpointMode.Local]] (default): `localCheckpoint` —
-    *     executor-local blocks; fastest, but a lost executor loses blocks
-    *     with no lineage to rebuild them (fine single-JVM; lossy on a
-    *     real cluster).
-    *   - [[CheckpointMode.Reliable]]: `checkpoint` into a durable
-    *     directory (HDFS/object store on a cluster) — each round's state
-    *     survives executor loss; this is the production form for long
-    *     BSP loops on preemptible fleets.
-    */
-  sealed trait CheckpointMode
-  object CheckpointMode {
-    case object Local extends CheckpointMode
-    final case class Reliable(dir: String) extends CheckpointMode
-  }
-
-  /** Eagerly materialize a round's frame under `mode` (both forms run
-    * the round and truncate lineage). */
-  private def roundCheckpoint(df: DataFrame, mode: CheckpointMode): DataFrame =
-    mode match {
-      case CheckpointMode.Local => df.localCheckpoint()
-      case CheckpointMode.Reliable(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // setCheckpointDir stores a fully-qualified dir/<UUID> path, so a
-        // plain equality guard never matches and every round would mint a
-        // fresh subdir (and clobber a user-set dir). Prefix-match the
-        // qualified form of `dir` instead: set once per loop, reuse after.
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val qualified =
-          p.getFileSystem(sc.hadoopConfiguration).makeQualified(p).toUri.toString
-        if (!sc.getCheckpointDir.exists(_.startsWith(qualified)))
-          sc.setCheckpointDir(dir)
-        df.checkpoint()
-    }
 
   /** Deterministic 80/10/10 split bucket of a doc id (md5 residue — the
     * q66 hash-bucket pattern; mirrored literally in the q144/q145
@@ -127,23 +93,21 @@ object PipelinePack extends QueryPack {
     * so labels only decrease and the loop converges in graph-diameter
     * rounds to (node, label = min node id of its component) — for ANY
     * chain length. Each round is one join + one min-aggregate
-    * (hash-partitioned on the node id); a per-round checkpoint
-    * ([[CheckpointMode]] — executor-local by default, durable-store
-    * optional) keeps lineage flat, and the convergence check is an exact
+    * (hash-partitioned on the node id); a per-round
+    * [[graft.core.Pin.checkpointed]] (reliable when a checkpoint dir is
+    * set) keeps lineage flat, and the convergence check is an exact
     * changed-label count. The returned frame is materialized
     * (checkpointed); the only CacheManager-tracked intermediate (adj) is
     * unpersisted before returning, and superseded rounds' checkpoint
     * blocks are reclaimed by the ContextCleaner once unreferenced.
     */
-  def connectedComponents(e: DataFrame,
-                          mode: CheckpointMode = CheckpointMode.Local): DataFrame = {
+  def connectedComponents(e: DataFrame): DataFrame = {
     val nodes = e.select(col("v")).distinct()
-    // self-loop so a round is a single uniform join + min-aggregate
-    val adj = nodes.select(col("v"), col("v").as("u")).union(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adj.count() // warm before the per-round branches fan out
-    var labels = roundCheckpoint(
-      nodes.select(col("v").as("node"), col("v").as("label")), mode)
+    // self-loop so a round is a single uniform join + min-aggregate;
+    // warm before the per-round branches fan out
+    val adj = warmed(nodes.select(col("v"), col("v").as("u")).union(e))
+    var labels = checkpointed(
+      nodes.select(col("v").as("node"), col("v").as("label")))
     var changed = 1L
     while (changed > 0) {
       // the convergence check rides INSIDE the round's aggregate (r14
@@ -152,11 +116,11 @@ object PipelinePack extends QueryPack {
       // and previous-label come out of the same groupBy — the changed
       // count is then a plain scan of the checkpointed blocks instead of
       // a next ⋈ labels shuffle join per round.
-      val next = roundCheckpoint( // eager: runs the round, truncates lineage
+      val next = checkpointed( // eager: runs the round, truncates lineage
         adj.join(labels, col("u") === col("node"))
           .groupBy(col("v")).agg(min(col("label")).as("label"),
             min(when(col("u") === col("v"), col("label"))).as("prev"))
-          .withColumnRenamed("v", "node"), mode)
+          .withColumnRenamed("v", "node"))
       changed = next.filter(col("label") =!= col("prev")).count()
       // superseded rounds' checkpoint blocks are NOT CacheManager-tracked
       // (Dataset.unpersist would be a no-op on them); dropping the
@@ -186,13 +150,11 @@ object PipelinePack extends QueryPack {
     * self-join, both equi-keyed; the parent table is (node, label) —
     * tiny next to the edge cache.
     */
-  def pointerJumpCC(e: DataFrame,
-                    mode: CheckpointMode = CheckpointMode.Local): DataFrame = {
-    val adj = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adj.count() // warm before the per-round branches fan out
-    var p = roundCheckpoint(
+  def pointerJumpCC(e: DataFrame): DataFrame = {
+    val adj = warmed(e) // warm before the per-round branches fan out
+    var p = checkpointed(
       adj.groupBy(col("v")).agg(min(col("u")).as("mu"))
-        .select(col("v").as("node"), least(col("v"), col("mu")).as("label")), mode)
+        .select(col("v").as("node"), least(col("v"), col("mu")).as("label")))
     var changed = 1L
     while (changed > 0) {
       // HOOK: parent ← min over {own parent} ∪ {neighbors' parents}
@@ -208,12 +170,12 @@ object PipelinePack extends QueryPack {
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
           col("label").as("prev"))
       // COMPRESS: one pointer jump, p ← p(p)
-      val next = roundCheckpoint(
+      val next = checkpointed(
         hooked.as("c")
           .join(hooked.select(col("node").as("pn"), col("label").as("plbl")).as("g"),
             col("c.label") === col("pn"))
           .select(col("c.node").as("node"), col("plbl").as("label"),
-            col("c.prev").as("prev")), mode)
+            col("c.prev").as("prev")))
       changed = next.filter(col("label") =!= col("prev")).count()
       p = next.select(col("node"), col("label"))
     }
@@ -230,23 +192,21 @@ object PipelinePack extends QueryPack {
     * no float-aggregation-order concerns ([[graft.PageRankModelSpec]]
     * checks the loop against an independent in-memory model). Each round
     * is one join + one sum-aggregate keyed on the node id; a per-round
-    * checkpoint ([[CheckpointMode]]) keeps lineage flat. Every node of a
+    * [[graft.core.Pin.checkpointed]] (reliable when a checkpoint dir is
+    * set) keeps lineage flat. Every node of a
     * symmetric graph has degree >= 1, so there is no dangling mass.
     */
-  def pageRank(e: DataFrame, rounds: Int,
-               mode: CheckpointMode = CheckpointMode.Local): DataFrame = {
+  def pageRank(e: DataFrame, rounds: Int): DataFrame = {
     val deg = e.groupBy("v").agg(count(lit(1)).as("deg"))
-    val adj = e.join(deg, "v")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adj.count() // warm before the per-round branches fan out
+    val adj = warmed(e.join(deg, "v")) // warm before the per-round branches fan out
     var rank = deg.select(col("v").as("node"), lit(1000000L).as("score_q"))
     for (_ <- 1 to rounds) {
-      rank = roundCheckpoint(
+      rank = checkpointed(
         adj.join(rank, col("v") === col("node"))
           .select(col("u"), expr("score_q div deg").as("c"))
           .groupBy(col("u"))
           .agg((lit(150000L) + expr("(85 * sum(c)) div 100")).as("score_q"))
-          .withColumnRenamed("u", "node"), mode)
+          .withColumnRenamed("u", "node"))
     }
     adj.unpersist()
     rank
@@ -262,21 +222,20 @@ object PipelinePack extends QueryPack {
     * engine-portable). Each round is one equi-join + a (node, label)
     * count + a per-node argmax as `min(struct(-count, label))` —
     * partial-aggregated end to end, no windows, so a hub node's
-    * neighbor multiset collapses map-side before either shuffle.
+    * neighbor multiset collapses map-side before either shuffle. A
+    * per-round [[graft.core.Pin.checkpointed]] keeps lineage flat.
     */
-  def labelProp(e: DataFrame, rounds: Int,
-                mode: CheckpointMode = CheckpointMode.Local): DataFrame = {
-    val adj = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adj.count() // warm before the per-round branches fan out
+  def labelProp(e: DataFrame, rounds: Int): DataFrame = {
+    val adj = warmed(e) // warm before the per-round branches fan out
     var lab = adj.select(col("v").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to rounds) {
-      lab = roundCheckpoint(
+      lab = checkpointed(
         adj.join(lab, col("v") === col("node"))
           .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
           .groupBy(col("u"))
           .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
-          .select(col("u").as("node"), col("m.l").as("lbl")), mode)
+          .select(col("u").as("node"), col("m.l").as("lbl")))
     }
     adj.unpersist()
     lab
@@ -486,14 +445,13 @@ object PipelinePack extends QueryPack {
       var rank = deg.select(col("v").as("node"),
         when(col("v") % 7 === 0, lit(1000000L)).otherwise(lit(0L)).as("score_q"))
       for (_ <- 1 to 4) {
-        rank = adj.join(rank, col("v") === col("node"))
+        rank = checkpointed(adj.join(rank, col("v") === col("node"))
           .select(col("u"), expr("score_q div deg").as("c"))
           .groupBy(col("u"))
           .agg(expr("(85 * sum(c)) div 100").as("m"))
           .select(col("u").as("node"),
             (col("m") + when(col("u") % 7 === 0, lit(150000L))
-              .otherwise(lit(0L))).as("score_q"))
-          .localCheckpoint()
+              .otherwise(lit(0L))).as("score_q")))
       }
       val result = rank.select(col("node").cast("bigint").as("doc_id"),
         col("score_q").cast("bigint").as("score_q"),
@@ -534,10 +492,9 @@ object PipelinePack extends QueryPack {
       for (_ <- 1 to rounds) {
         val keep = edges.groupBy("v").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select("v")
-        edges = edges
+        edges = checkpointed(edges
           .join(keep, "v")
-          .join(keep.withColumnRenamed("v", "u"), "u")
-          .localCheckpoint()
+          .join(keep.withColumnRenamed("v", "u"), "u"))
       }
       edges.groupBy("v").agg(count(lit(1)).cast("bigint").as("deg_in_core"))
         .select(col("v").cast("bigint").as("doc_id"), col("deg_in_core"))
@@ -565,12 +522,11 @@ object PipelinePack extends QueryPack {
           .join(dist.select(col("v").as("u"), col("hops").as("nh")), "u")
           .filter(col("nh").isNotNull)
           .groupBy("v").agg(min(col("nh") + 1).as("cand"))
-        dist = dist.join(msgs, Seq("v"), "left")
+        dist = checkpointed(dist.join(msgs, Seq("v"), "left")
           .select(col("v"),
             when(col("hops").isNull, col("cand"))
               .when(col("cand").isNull, col("hops"))
-              .otherwise(least(col("hops"), col("cand"))).as("hops"))
-          .localCheckpoint()
+              .otherwise(least(col("hops"), col("cand"))).as("hops")))
       }
       dist.select(col("v").cast("bigint").as("doc_id"),
                   col("hops").cast("bigint").as("hops"),
@@ -611,13 +567,11 @@ object PipelinePack extends QueryPack {
       // stored blocks: 4 edge joins per query instead of 8, scores
       // unchanged (identical integer math).
       for (_ <- 1 to 2) {
-        val ar = e.join(h, "c").groupBy("p").agg(sum("h").as("raw"))
-          .localCheckpoint()
+        val ar = checkpointed(e.join(h, "c").groupBy("p").agg(sum("h").as("raw")))
         val amax = ar.agg(max("raw").as("mx"))
         a = ar.crossJoin(broadcast(amax))
           .select(col("p"), expr("(1000000 * raw) div mx").as("a"))
-        val hr = e.join(a, "p").groupBy("c").agg(sum("a").as("raw"))
-          .localCheckpoint()
+        val hr = checkpointed(e.join(a, "p").groupBy("c").agg(sum("a").as("raw")))
         val hmax = hr.agg(max("raw").as("mx"))
         h = hr.crossJoin(broadcast(hmax))
           .select(col("c"), expr("(1000000 * raw) div mx").as("h"))
@@ -1313,10 +1267,9 @@ object PipelinePack extends QueryPack {
       val base = warmed(cooccurEdges(s, d))
       var edges = base
       for (_ <- 1 to 3) {
-        edges = edges
+        edges = checkpointed(edges
           .join(support(edges).filter(col("support") >= k - 2),
-            Seq("a", "b"), "left_semi")
-          .localCheckpoint()
+            Seq("a", "b"), "left_semi"))
       }
       val result = edges.join(support(edges), Seq("a", "b"), "left")
         .select(col("a"), col("b"),
@@ -1760,11 +1713,9 @@ object PipelinePack extends QueryPack {
       // round (measured 17–21 s; this form ~6 s at sf0.1, identical
       // output). The picked doc's own sid list collects to the driver:
       // bounded by one document's shingle count, the same scale class
-      // as the oracle's literal replay. corr is localCheckpoint-ed per
+      // as the oracle's literal replay. corr is checkpointed per
       // round so lineage stays flat (the q175 power-iteration rule).
-      val totals = docSh.groupBy("doc_id").agg(count(lit(1)).as("total"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      totals.count()
+      val totals = warmed(docSh.groupBy("doc_id").agg(count(lit(1)).as("total")))
       var corr = s.emptyDataset[(Long, Long)].toDF("doc_id", "corr")
       val coveredSids = scala.collection.mutable.HashSet[Long]()
       val picks = scala.collection.mutable.ListBuffer[(Int, Long, Long, Long)]()
@@ -1798,11 +1749,10 @@ object PipelinePack extends QueryPack {
             val inc = docSh
               .join(broadcast(newSids.toSeq.toDF("sid")), "sid")
               .groupBy("doc_id").agg(count(lit(1)).as("inc"))
-            corr = corr.join(inc, Seq("doc_id"), "full_outer")
+            corr = checkpointed(corr.join(inc, Seq("doc_id"), "full_outer")
               .select(col("doc_id"),
                 (coalesce(col("corr"), lit(0L)) + coalesce(col("inc"), lit(0L)))
-                  .as("corr"))
-              .localCheckpoint()
+                  .as("corr")))
           }
           r += 1
         }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{materialized, warmed}
 import graft.functions.TextFunctions._
 
 /** Retrieval-side text operators: BM25 ranked retrieval and winnowing

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{checkpointed, materialized, warmed}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -352,13 +353,12 @@ object SimilarityPack extends QueryPack {
       hierL1Beam, hierL1Rounds))
     // layer 0: q452's graph and budget, entered from layer 1
     val g0 = warmed(hnswGraph(s, d))
-    val out = beamSearchFrom(g0, corpus, queriesDf, l1top, hnswBeam, hnswRounds)
+    val out = checkpointed(beamSearchFrom(g0, corpus, queriesDf, l1top, hnswBeam, hnswRounds)
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))))
       .filter(col("rk") <= topK)
-      .select(col("q_id"), col("rk"), col("vec_id"), col("cosine"))
-      .localCheckpoint()
+      .select(col("q_id"), col("rk"), col("vec_id"), col("cosine")))
     g1.unpersist(); g0.unpersist()
     out
   }
@@ -442,13 +442,12 @@ object SimilarityPack extends QueryPack {
       col("q").as("qa"), col("norm").as("na"))
     val b = cells.select(col("cell"), col("vec_id").as("vj"),
       col("q").as("qb"), col("norm").as("nb"))
-    val out = a.join(b, "cell")
+    val out = checkpointed(a.join(b, "cell")
       .filter(col("vj") < col("vi"))
       .withColumn("cosine", cosineQ(col("qa"), col("qb"), col("na"), col("nb")))
       .filter(col("cosine") >= semDedupTau)
       .groupBy(col("vi").as("vec_id"))
-      .agg(min("vj").as("rep_id"))
-      .localCheckpoint()
+      .agg(min("vj").as("rep_id")))
     ranked.unpersist()
     out
   }
@@ -665,7 +664,7 @@ object SimilarityPack extends QueryPack {
         .withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
         .select("q_id", "vec_id", "cosine")
     val wB = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    var visited = scoreOf(seedPairs.select("q_id", "vec_id")).localCheckpoint()
+    var visited = checkpointed(scoreOf(seedPairs.select("q_id", "vec_id")))
     for (_ <- 1 to nRounds) {
       val frontier = visited.withColumn("brk", row_number().over(wB))
         .filter(col("brk") <= beam).select("q_id", "vec_id")
@@ -682,7 +681,7 @@ object SimilarityPack extends QueryPack {
       // single-partition checkpoints trade the window exchange for an
       // extra shuffle (3.3 s, a wash): the arm's floor is the 5
       // sequential round JOBS, intrinsic to iterative beam search
-      visited = visited.unionByName(scoreOf(fresh)).localCheckpoint()
+      visited = checkpointed(visited.unionByName(scoreOf(fresh)))
     }
     visited
   }
@@ -713,10 +712,9 @@ object SimilarityPack extends QueryPack {
       .withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
       .select("q_id", "vec_id", "cosine")
     val wB = Window.partitionBy("beam", "q_id").orderBy(desc("cosine"), asc("vec_id"))
-    var visited = beams.map(b => seed0.withColumn("beam", lit(b)))
+    var visited = checkpointed(beams.map(b => seed0.withColumn("beam", lit(b)))
       .reduce(_ unionByName _)
-      .select("beam", "q_id", "vec_id", "cosine")
-      .localCheckpoint()
+      .select("beam", "q_id", "vec_id", "cosine"))
     for (_ <- 1 to nRounds) {
       val frontier = visited.withColumn("brk", row_number().over(wB))
         .filter(col("brk") <= col("beam")).select("beam", "q_id", "vec_id")
@@ -730,7 +728,7 @@ object SimilarityPack extends QueryPack {
       val fresh = expand.distinct()
         .join(visited.select("beam", "q_id", "vec_id"),
           Seq("beam", "q_id", "vec_id"), "left_anti")
-      visited = visited.unionByName(scoreOf(fresh)).localCheckpoint()
+      visited = checkpointed(visited.unionByName(scoreOf(fresh)))
     }
     visited
   }
@@ -1478,21 +1476,18 @@ object SimilarityPack extends QueryPack {
         .agg(min(struct(col("h"), col("vec_id"), col("q"))).as("m"))
         .select(lit(1).as("sel_order"), col("m.vec_id").as("c_id"),
           lit(0L).as("radius_sq"), col("m.q").as("cq"))
-      var picked = seed.localCheckpoint()
-      var state = vecs.crossJoin(broadcast(picked.select("cq")))
-        .select(col("vec_id"), col("q"), l2Q(col("q"), col("cq")).as("dmin"))
-        .localCheckpoint()
+      var picked = checkpointed(seed)
+      var state = checkpointed(vecs.crossJoin(broadcast(picked.select("cq")))
+        .select(col("vec_id"), col("q"), l2Q(col("q"), col("cq")).as("dmin")))
       for (r <- 2 to 8) {
-        val next = state
+        val next = checkpointed(state
           .agg(max(struct(col("dmin"), (-col("vec_id")).as("nid"), col("q"))).as("m"))
           .select(lit(r).as("sel_order"), (-col("m.nid")).as("c_id"),
-            col("m.dmin").as("radius_sq"), col("m.q").as("cq"))
-          .localCheckpoint()
+            col("m.dmin").as("radius_sq"), col("m.q").as("cq")))
         picked = picked.union(next)
-        state = state.crossJoin(broadcast(next.select(col("cq").as("ncq"))))
+        state = checkpointed(state.crossJoin(broadcast(next.select(col("cq").as("ncq"))))
           .select(col("vec_id"), col("q"),
-            least(col("dmin"), l2Q(col("q"), col("ncq"))).as("dmin"))
-          .localCheckpoint()
+            least(col("dmin"), l2Q(col("q"), col("ncq"))).as("dmin")))
       }
       val result = picked.select(col("sel_order").cast("int").as("sel_order"),
         col("c_id").cast("bigint").as("c_id"),
@@ -2297,15 +2292,14 @@ object SimilarityPack extends QueryPack {
         // round — without cutting lineage each reference re-executes
         // every earlier round (measured 6-7 s; ~2 s checkpointed).
         // Both frames are dim-sized (64 rows), so the checkpoint is free.
-        val sdfC = sdf.localCheckpoint()
+        val sdfC = checkpointed(sdf)
         val n2 = sdfC.agg(sum(col("sd") * col("sd")).as("n2"))
-        v = sdfC.crossJoin(broadcast(n2))
+        v = checkpointed(sdfC.crossJoin(broadcast(n2))
           .select(col("i"),
             when(col("n2") === 0, lit(0L))
               .otherwise(floor(col("sd").cast("double") /
                 sqrt(col("n2").cast("double")) * lit(1e6)).cast("long"))
-              .as("vq"))
-          .localCheckpoint()
+              .as("vq")))
       }
       materialized(v, comp).orderBy("i")
     },
@@ -2698,14 +2692,12 @@ object SimilarityPack extends QueryPack {
       // codebook expressions) — Catalyst re-analyzes that tree per
       // action, so a persist alone left 10+ s of pure PLANNING time
       // (measured: every count over the persisted trees cost 0.4–1.7 s
-      // on 20-row data). localCheckpoint rewrites the plan to a short
+      // on 20-row data). `materialized` rewrites the plan to a short
       // RDD scan; planDumpMode keeps the full tree explainable.
-      def cp(df: org.apache.spark.sql.DataFrame) =
-        if (graft.core.QueryPack.planDumpMode) df else df.localCheckpoint()
-      val ce = cp(queries("q221_crossencoder_rerank")(s, d)
+      val ce = materialized(queries("q221_crossencoder_rerank")(s, d)
         .select(col("q_id"), col("vec_id"), col("score_q")))
       val inPlay = ce.select(col("vec_id").as("doc_id")).distinct()
-      val tok = cp(Tables.documents(s, d)
+      val tok = materialized(Tables.documents(s, d)
         .join(inPlay, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
           explode(array_distinct(graft.functions.TextFunctions.tokens(col("text")))).as("w")))
@@ -2717,7 +2709,7 @@ object SimilarityPack extends QueryPack {
         .join(tok.select(col("doc_id").as("va"), col("w")), "va")
         .join(tok.select(col("doc_id").as("vb"), col("w")), Seq("vb", "w"))
         .groupBy("q_id", "va", "vb").agg(count(lit(1)).as("nc"))
-      val sim = cp(pairsQ
+      val sim = materialized(pairsQ
         .join(common, Seq("q_id", "va", "vb"), "left")
         .withColumn("nc", coalesce(col("nc"), lit(0L)))
         .join(cnt.select(col("doc_id").as("va"), col("n_tok").as("na")), "va")
@@ -2753,7 +2745,7 @@ object SimilarityPack extends QueryPack {
       // one row per query carrying all three picks — checkpointed so the
       // three-branch output union reads stored blocks instead of
       // re-planning and re-executing the nested round chain 3×
-      val s3 = cp(c3.groupBy("q_id", "v1", "v2", "mmr1", "mmr2")
+      val s3 = materialized(c3.groupBy("q_id", "v1", "v2", "mmr1", "mmr2")
         .agg(min(struct((-col("mmr")).as("ns"), col("vec_id").as("v"))).as("m"))
         .select(col("q_id"), col("v1"), col("v2"), col("mmr1"), col("mmr2"),
           col("m.v").as("v3"), (-col("m.ns")).as("mmr3")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.core.Pin.{checkpointed, materialized, persisted, warmed}
 import graft.functions.PrefixSum
 import graft.functions.TextFunctions._
 
@@ -92,35 +93,31 @@ object TextPack extends QueryPack {
       // DP: dp(j) = per-word best total score of a segmentation of the
       // first j chars, + the argmax last-piece length bl
       val dpByJ = scala.collection.mutable.ArrayBuffer[DataFrame](
-        words.select(col("w"), lit(0L).as("best"), lit(0).as("bl"))
-          .localCheckpoint())
+        checkpointed(words.select(col("w"), lit(0L).as("best"), lit(0).as("bl"))))
       for (r <- 1 to maxLen) {
         val arms = (1 to math.min(pieceMax, r)).map { lArm =>
           matches.filter(col("j") === r && col("l") === lArm)
             .join(dpByJ(r - lArm).select(col("w"), col("best").as("pb")), "w")
             .select(col("w"), (col("pb") + col("score_q")).as("cand"), col("l"))
         }.reduce(_ unionByName _)
-        dpByJ += arms.groupBy("w")
+        dpByJ += checkpointed(arms.groupBy("w")
           .agg(max(struct(col("cand"), (-col("l")).as("nl"))).as("m"))
-          .select(col("w"), col("m.cand").as("best"), (-col("m.nl")).as("bl"))
-          .localCheckpoint()
+          .select(col("w"), col("m.cand").as("best"), (-col("m.nl")).as("bl")))
       }
-      val dpAllPos = dpByJ.zipWithIndex.drop(1)
+      val dpAllPos = checkpointed(dpByJ.zipWithIndex.drop(1)
         .map { case (df, j) => df.select(col("w"), lit(j).as("pos"), col("bl")) }
-        .reduce(_ unionByName _).localCheckpoint()
+        .reduce(_ unionByName _))
       // backtrack the stored choices; every reachable pos has a dp row
       // (singles guarantee reachability), so the inner join never drops
-      var frontier = words
-        .select(col("w"), col("cnt"), length(col("w")).as("pos"))
-        .localCheckpoint()
+      var frontier = checkpointed(words
+        .select(col("w"), col("cnt"), length(col("w")).as("pos")))
       var emitted: DataFrame = null
       for (_ <- 1 to maxLen) {
-        val step = frontier.filter(col("pos") > 0)
+        val step = checkpointed(frontier.filter(col("pos") > 0)
           .join(dpAllPos, Seq("w", "pos"))
           .select(col("w"), col("cnt"),
             expr("substring(w, pos - bl + 1, bl)").as("piece"),
-            (col("pos") - col("bl")).as("pos"))
-          .localCheckpoint()
+            (col("pos") - col("bl")).as("pos")))
         val e = step.select("piece", "cnt")
         emitted = if (emitted == null) e else emitted.union(e)
         frontier = step.select("w", "cnt", "pos")
@@ -1221,9 +1218,8 @@ object TextPack extends QueryPack {
       // here is materialized by dbg's warmed() count, and c1's later
       // job reads the cache instead of re-tokenizing the corpus
       // (guide §5 cache-when-reused; A/B grid in OPTIMIZATION_r15.md)
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val docs = persisted(Tables.documents(s, d)
+        .select(col("doc_id"), tokens(col("text")).as("toks")))
       val dbg = warmed(docs
         .select(col("doc_id"), explode(wordShinglesOf(col("toks"), 2)).as("bg"))
         .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")))
@@ -1261,9 +1257,8 @@ object TextPack extends QueryPack {
       // tokenize ONCE (the q117 persist — see its comment): dbg's warmed
       // count materializes the cache, c1 reads it instead of paying the
       // tokenizer a second time over the corpus
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val docs = persisted(Tables.documents(s, d)
+        .select(col("doc_id"), tokens(col("text")).as("toks")))
       val dbg = warmed(docs
         .select(col("doc_id"), explode(wordShinglesOf(col("toks"), 2)).as("bg"))
         .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")))

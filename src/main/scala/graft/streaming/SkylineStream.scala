@@ -5,6 +5,7 @@ import scala.annotation.unused
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Pin.checkpointed
 import graft.core.Tables
 import StreamRunner.{drain, fileStream}
 
@@ -66,9 +67,9 @@ object SkylineStream {
     val cand = pts.groupByKey(_.cents / 100000L)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
     // batch finisher = q399's merge over the emitted candidates
-    // (localCheckpoint: the candidate set is frontier-bounded and the
+    // (checkpointed: the candidate set is frontier-bounded and the
     // memory-sink view otherwise feeds two plan branches)
-    val p = drain(cand, "append", "skyline")().localCheckpoint()
+    val p = checkpointed(drain(cand, "append", "skyline")())
     val g = p.groupBy("cents").agg(max("size").as("gmax"))
     val scanned = graft.functions.PrefixSum.exclusiveMax(
       g, Seq(col("cents")), col("gmax"), "prevmax", -1L)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.QueryPack
+import graft.core.Pin.{checkpointed, warmed}
 import graft.operators.CorePack.docDigest
 import StreamRunner.{drain, eventStream, fileStream}
 
@@ -495,7 +496,7 @@ object StreamingPack extends QueryPack {
       .select(col("p.w").as("w"), col("p.cnt").as("cnt"))
     val agg = pairs.groupBy("w")
       .agg(count(lit(1)).as("dfd"), sum("cnt").as("cfd"))
-    val t = drain(agg, "complete", "bm25")().localCheckpoint()
+    val t = checkpointed(drain(agg, "complete", "bm25")())
     val dTerms = t.filter(col("w") =!= "")
       .select(col("w"), col("dfd").as("df_delta"), col("cfd").as("cf_delta"))
     val dMeta = t.filter(col("w") === "")
@@ -681,8 +682,7 @@ object StreamingPack extends QueryPack {
     val commits = graft.sources.GraftMemStore.commitsOf(tbl)
     require(commits.map(_.kind) == List("append", "overwrite", "delete"),
       s"q475: expected append+overwrite+delete commits, got $commits")
-    val out = s.read.format("graft-mem").option("table", outTbl).load()
-      .localCheckpoint()
+    val out = checkpointed(s.read.format("graft-mem").option("table", outTbl).load())
     val perBatch = out.groupBy("batch_id", "_change_type").count()
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
     require(perBatch.keys.map(_._1).toSet == Set(0L, 1L),
@@ -778,12 +778,11 @@ object StreamingPack extends QueryPack {
       s"q478: expected bootstrap append + 2 MERGE commits on the MV, got $mvCommits")
     // the incremental MV must equal a from-scratch recompute over the
     // upstream's CURRENT state
-    val mvNow = s.read.format("graft-mem").option("table", mv).load()
-      .localCheckpoint()
-    val recompute = s.sql(s"SELECT lang, CAST(sum(n_docs) AS BIGINT) AS n_docs, " +
+    val mvNow = checkpointed(s.read.format("graft-mem").option("table", mv).load())
+    val recompute = checkpointed(s.sql(s"SELECT lang, CAST(sum(n_docs) AS BIGINT) AS n_docs, " +
       s"CAST(sum(sum_chars) AS BIGINT) AS sum_chars, " +
       s"CAST(sum(text_cksum) AS BIGINT) AS cksum " +
-      s"FROM graftmem.$tbl GROUP BY lang").localCheckpoint()
+      s"FROM graftmem.$tbl GROUP BY lang"))
     require(mvNow.exceptAll(recompute).isEmpty && recompute.exceptAll(mvNow).isEmpty,
       "q478: the incrementally maintained MV diverged from the recompute")
     mvNow.orderBy("lang")
@@ -885,7 +884,7 @@ object StreamingPack extends QueryPack {
     val deltaCounts = fileStream(s, d, "documents.parquet", docSchema)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) === lit(DedupPack.deltaRem))
       .groupBy("n_chars").agg(count(lit(1)).as("cd"))
-    val dCnt = drain(deltaCounts, "complete", "ksdrift")().localCheckpoint()
+    val dCnt = checkpointed(drain(deltaCounts, "complete", "ksdrift")())
     val bCnt = graft.core.Tables.documents(s, d)
       .filter(pmod(col("doc_id"), lit(DedupPack.deltaMod)) =!= lit(DedupPack.deltaRem))
       .groupBy("n_chars").agg(count(lit(1)).as("cb"))
@@ -1098,7 +1097,7 @@ object StreamingPack extends QueryPack {
     // the memory-sink MemoryPlan can't self-join (conflicting attribute
     // refs on the tot/cumsum branches); pin the drained state — bounded
     // by types × hours — as an RDD-backed frame first
-    val hourly = drain(agg, "complete", "cusum")().localCheckpoint()
+    val hourly = checkpointed(drain(agg, "complete", "cusum")())
     val tot = hourly.groupBy("event_type")
       .agg(sum("c").as("total"), count(lit(1)).as("n_hours"))
     val wc = Window.partitionBy("event_type").orderBy("hr")
@@ -1135,7 +1134,7 @@ object StreamingPack extends QueryPack {
       .groupBy("day")
       .agg(count(lit(1)).as("n"), sum("in_b").as("k"))
     // bounded finishing pass over the drained day-vocabulary frame
-    val daily = drain(agg, "complete", "sprt")().localCheckpoint()
+    val daily = checkpointed(drain(agg, "complete", "sprt")())
     val wc = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dec = daily

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.Pin.checkpointed
 import StreamRunner.{drain, eventStream}
 
 /** Streaming first-order Markov transition mining — the live twin of the
@@ -52,13 +53,12 @@ object TransitionStream {
     val trans = raw.as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    // localCheckpoint: the transition matrix is |types|²-bounded, and
+    // checkpointed: the transition matrix is |types|²-bounded, and
     // the memory-sink view otherwise carries the same attribute ids
     // into both sides of the tr⋈tot self-join (conflicting-reference
     // resolution failure)
-    val tr = drain(trans, "append", "trans")()
-      .groupBy(col("cur"), col("nxt")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val tr = checkpointed(drain(trans, "append", "trans")()
+      .groupBy(col("cur"), col("nxt")).agg(count(lit(1)).as("cnt")))
     val tot = tr.groupBy("cur").agg(sum("cnt").as("tot"))
     tr.join(tot, "cur")
       .withColumn("p_q", expr("(1000000 * cnt) div tot"))

@@ -56,10 +56,8 @@ object ProfileDedupScale {
       // q41's candidate generator in isolation: band index + emit-once
       // self-join — the pair budget BEFORE any exact verification
       val t0 = System.nanoTime()
-      val bands = graft.operators.DedupPack.minhashBands(
-        graft.operators.DedupPack.minhashDocs(docs))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bands.count()
+      val bands = graft.core.Pin.warmed(graft.operators.DedupPack.minhashBands(
+        graft.operators.DedupPack.minhashDocs(docs)))
       val cand = bands.as("a").join(bands.as("b"),
           col("a.band_id") === col("b.band_id") &&
           col("a.band_val") === col("b.band_val") &&

@@ -58,17 +58,6 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("associative (combiner) form agrees with general form") {
-    import spark.implicits._
-    forAll(linesGen) { lines =>
-      val got = MapReduceJob.runAssociative(spark, lines.toDS(),
-        MapReduceJob.wordCountMap,
-        (a, b) => (a.toLong + b.toLong).toString)
-        .collect().toMap
-      assert(got == model(lines))
-    }
-  }
-
   test("tokens never contain whitespace; counts sum to token total") {
     import spark.implicits._
     forAll(linesGen) { lines =>

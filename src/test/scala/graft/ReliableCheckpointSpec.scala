@@ -3,14 +3,15 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.PipelinePack
-import graft.operators.PipelinePack.CheckpointMode
 
-/** The BSP loops (connected components, PageRank) default to
-  * executor-local round checkpoints — fast, but lossy under executor
-  * failure on a real cluster. CheckpointMode.Reliable is the production
-  * form: each round is parked in a durable directory. This spec runs
-  * both loops in reliable mode and asserts (a) results are identical to
-  * local mode, (b) round state actually landed in the reliable dir.
+/** Every pin ([[graft.core.Pin]]) cuts lineage onto executor-local blocks
+  * by default — fast, but lossy under executor failure on a real
+  * cluster. A checkpoint dir on the context is the production form: each
+  * cut is parked there as reliable files. This spec runs the BSP loops
+  * and one whole registered query with a dir set and asserts (a) results
+  * are identical to the run without one, (b) state actually landed in
+  * the dir, and (c) the dir is cleared again afterwards, so no later
+  * suite checkpoints reliably by accident.
   */
 class ReliableCheckpointSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -24,25 +25,40 @@ class ReliableCheckpointSpec extends AnyFunSuite {
       .toDF("v", "u")
   }
 
+  /** Runs `body` with a fresh checkpoint dir set on the context; returns
+    * its value and the number of files written under the dir. */
+  private def reliably[T](body: => T): (T, Long) = {
+    val dir = Files.createTempDirectory("graft_reliable")
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(dir.toString)
+    val out = try body finally sc.setCheckpointDir(null)
+    assert(sc.getCheckpointDir.isEmpty, "the checkpoint dir must be cleared after the run")
+    (out, Files.walk(dir).filter(Files.isRegularFile(_)).count())
+  }
+
+  private def pairs(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("connectedComponents: reliable mode matches local mode and writes round state") {
-    val dir = Files.createTempDirectory("graft_reliable_cc").toString
-    val local = PipelinePack.connectedComponents(edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val reliable = PipelinePack.connectedComponents(edges, CheckpointMode.Reliable(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = pairs(PipelinePack.connectedComponents(edges).collect())
+    val (reliable, written) = reliably(pairs(PipelinePack.connectedComponents(edges).collect()))
     assert(reliable == local)
     assert(reliable.nonEmpty && reliable.forall { case (n, l) => l <= n })
-    val written = Files.walk(java.nio.file.Paths.get(dir))
-      .filter(Files.isRegularFile(_)).count()
-    assert(written > 0, s"no reliable checkpoint files under $dir")
+    assert(written > 0, "no reliable checkpoint files written")
   }
 
   test("pageRank: reliable mode matches local mode bit-for-bit") {
-    val dir = Files.createTempDirectory("graft_reliable_pr").toString
-    val local = PipelinePack.pageRank(edges, rounds = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val reliable = PipelinePack.pageRank(edges, rounds = 5, CheckpointMode.Reliable(dir))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = pairs(PipelinePack.pageRank(edges, rounds = 5).collect())
+    val (reliable, _) = reliably(pairs(PipelinePack.pageRank(edges, rounds = 5).collect()))
     assert(reliable == local)
+  }
+
+  test("q414_dbscan: a checkpoint dir makes its warms, CC rounds and result reliable") {
+    val q = SparkEntry.queries("q414_dbscan")
+    val local = q(spark, SparkTestSession.sfDir).collect().toSeq
+    val (reliable, written) = reliably(q(spark, SparkTestSession.sfDir).collect().toSeq)
+    assert(reliable == local)
+    assert(local.nonEmpty)
+    assert(written > 0, "q414 wrote no reliable checkpoint files")
   }
 }
