@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# Unskippable pre-snapshot gate: the one-session-builder, one-stream-runner
-# and one-pin-module greps, compile (main + test), the benchmark's smoke
-# test, full ScalaTest suite, then a sf0.001 Verify + oracle smoke.
+# Unskippable pre-snapshot gate: the one-session-builder, one-stream-runner,
+# one-pin-module and one-oracle-tokenizer greps, compile (main + test), the
+# benchmark's smoke test, full ScalaTest suite, then a sf0.001 Verify +
+# oracle smoke.
 # Run this before EVERY end-of-round (or milestone) commit — round 5
 # shipped a non-compiling snapshot precisely because nothing forced this.
 #
@@ -37,6 +38,20 @@ if grep -rnE 'localCheckpoint\(|\.checkpoint\(|\.persist\(' src/main --include='
     | grep -v '^src/main/scala/graft/core/Pin\.scala:' \
     | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)'; then
   echo "preflight: persist/checkpoint/localCheckpoint outside graft/core/Pin.scala; use graft.core.Pin" >&2
+  exit 1
+fi
+
+# One DuckDB mirror per engine function: oracles spell the reference
+# tokenizer's strip regex and the 60-bit md5 id only through the `*Sql`
+# helpers in graft/functions/TextFunctions.scala (tokensSql,
+# stripPunctSql, hex64Sql), so the oracle's ASCII tokenizer assumption
+# lives in one place. Both escapings of the regex are caught. Comment
+# lines are skipped.
+echo "== preflight: one oracle tokenizer and hex64 =="
+if grep -rnF -e "'[^\\w\\s]'" -e "'[^\\\\w\\\\s]'" -e "'0x' || substring(" src/main --include='*.scala' \
+    | grep -v '^src/main/scala/graft/functions/TextFunctions\.scala:' \
+    | grep -vE '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)'; then
+  echo "preflight: inline oracle tokenizer regex or hex64 outside graft/functions/TextFunctions.scala; use tokensSql/stripPunctSql/hex64Sql" >&2
   exit 1
 fi
 

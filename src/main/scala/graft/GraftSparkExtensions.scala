@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{ArrayEqCount, CountMinSketchAgg, LongArrayDot,
-  LongArrayEqCount, QuantileSketchAgg, SortedArrayIntersectCount,
-  SortedLongIntersectCount, SpaceSavingTopK, TopKTokens}
+import graft.functions.GraftExpressions
 
 /** Session-extension wiring for the engine's native functions: users get
   * `graft_long_array_dot` & co. in any session (SQL included) via
@@ -19,41 +17,8 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // whole-plan operators (logical node -> physical exec)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("graft_long_array_dot"),
-      new ExpressionInfo(classOf[LongArrayDot].getName, "graft_long_array_dot"),
-      exprs => LongArrayDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_array_eq_count"),
-      new ExpressionInfo(classOf[ArrayEqCount].getName, "graft_array_eq_count"),
-      exprs => ArrayEqCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedArrayIntersectCount].getName, "graft_sorted_intersect_count"),
-      exprs => SortedArrayIntersectCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_long_array_eq_count"),
-      new ExpressionInfo(classOf[LongArrayEqCount].getName, "graft_long_array_eq_count"),
-      exprs => LongArrayEqCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_sorted_long_intersect_count"),
-      new ExpressionInfo(classOf[SortedLongIntersectCount].getName, "graft_sorted_long_intersect_count"),
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_top_k_tokens"),
-      new ExpressionInfo(classOf[TopKTokens].getName, "graft_top_k_tokens"),
-      TopKTokens.fromExprs))
-    e.injectFunction((
-      FunctionIdentifier("graft_top_k_spacesaving"),
-      new ExpressionInfo(classOf[SpaceSavingTopK].getName, "graft_top_k_spacesaving"),
-      SpaceSavingTopK.fromExprs))
-    e.injectFunction((
-      FunctionIdentifier("graft_countmin"),
-      new ExpressionInfo(classOf[CountMinSketchAgg].getName, "graft_countmin"),
-      CountMinSketchAgg.fromExprs))
-    e.injectFunction((
-      FunctionIdentifier("graft_quantiles"),
-      new ExpressionInfo(classOf[QuantileSketchAgg].getName, "graft_quantiles"),
-      QuantileSketchAgg.fromExprs))
+    GraftExpressions.natives.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -20,7 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Oracle-layer tokenization caveat: Spark-side text queries tokenize with
   * Unicode-aware regex classes (`(?U)\w\s`, matching the reference's Rust
-  * `\w`), while DuckDB's RE2 `\w`/`\s` are ASCII-only, and the multimodal
+  * `\w`), while DuckDB's RE2 `\w`/`\s` are ASCII-only — the one place the
+  * oracles spell that tokenizer is
+  * [[graft.functions.TextFunctions.tokensSql]] — and the multimodal
   * oracles assume byte==char lengths. Oracle hash-parity for the text/dedup/
   * multimodal packs therefore ASSUMES AN ASCII CORPUS — verified true for
   * every driver-generated `documents.parquet` (0 non-ASCII rows at sf0.001/

@@ -25,6 +25,10 @@ object Session {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // with a checkpoint dir set, a superseded reliable checkpoint is
+      // deleted once its RDD is garbage-collected instead of piling up
+      // in the dir (q414 leaves 3 `rdd-*` dirs per run without it)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   /** `local[cpus]` with `cpus` shuffle partitions, log level WARN. */
   def local(cpus: Int = defaultCpus): SparkSession = {

@@ -54,92 +54,6 @@ case class LongArrayDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Count of positions where two `array<string>` columns agree. */
-case class ArrayEqCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  // inputs are always array<string>
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_array_eq_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var c = 0
-    var i = 0
-    while (i < n) {
-      if (x.getUTF8String(i).equals(y.getUTF8String(i))) c += 1
-      i += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getUTF8String($i).equals($b.getUTF8String($i))) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayEqCount =
-    copy(left = l, right = r)
-}
-
-/** Intersection size of two SORTED distinct `array<string>` columns —
-  * two-pointer merge, O(n+m) instead of array_intersect's per-row hash set
-  * build. Callers must sort with `sort_array` (binary collation, matching
-  * UTF8String.compareTo).
-  */
-case class SortedArrayIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    var i = 0
-    var j = 0
-    var c = 0
-    while (i < x.numElements() && j < y.numElements()) {
-      val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-      if (cmp == 0) { c += 1; i += 1; j += 1 }
-      else if (cmp < 0) i += 1
-      else j += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val cmp = ctx.freshName("cmp")
-      s"""
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $a.numElements() && $j < $b.numElements()) {
-         |  int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-         |  if ($cmp == 0) { $c++; $i++; $j++; }
-         |  else if ($cmp < 0) $i++;
-         |  else $j++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedArrayIntersectCount =
-    copy(left = l, right = r)
-}
-
 /** Count of positions where two `array<bigint>` columns agree. */
 case class LongArrayEqCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -180,8 +94,8 @@ case class LongArrayEqCount(left: Expression, right: Expression)
 }
 
 /** Intersection size of two SORTED distinct `array<bigint>` columns —
-  * two-pointer merge over primitive longs; the int64 twin of
-  * [[SortedArrayIntersectCount]] (8-byte compares, no UTF8String).
+  * two-pointer merge over primitive longs (8-byte compares), O(n+m)
+  * instead of array_intersect's per-row hash set build.
   */
 case class SortedLongIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -869,56 +783,42 @@ case class Tokens(child: Expression)
 
 /** Session-scoped registration + Column-level accessors. */
 object GraftExpressions {
-  private def register(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_long_array_dot",
-      exprs => LongArrayDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_array_eq_count",
-      exprs => ArrayEqCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_count",
-      exprs => SortedArrayIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_long_array_eq_count",
-      exprs => LongArrayEqCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_long_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_top_k_tokens",
-      TopKTokens.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_top_k_spacesaving",
-      SpaceSavingTopK.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_countmin",
-      CountMinSketchAgg.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_quantiles",
-      QuantileSketchAgg.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom",
-      BloomFilterAgg.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_hll",
-      HyperLogLogAgg.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_might_contain",
-      BloomMightContain.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_zorder2",
-      exprs => ZOrderInterleave(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hilbert2",
-      exprs => HilbertIndex2(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_boundaries",
-      exprs => CdcChunkBoundaries(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_damerau_levenshtein",
-      exprs => DamerauLevenshtein(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalize(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler_milli",
-      exprs => JaroWinklerMilli(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler_boundary_gap_ppb",
-      exprs => JaroWinklerBoundaryGapPpb(exprs(0), exprs(1)), "built-in")
-  }
+
+  /** Every native function, once: (SQL name, expression class, builder).
+    * [[ensure]] registers these per session and [[graft.GraftSparkExtensions]]
+    * injects the same list into every session it builds.
+    */
+  private[graft] val natives: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_long_array_dot", classOf[LongArrayDot], e => LongArrayDot(e(0), e(1))),
+    ("graft_long_array_eq_count", classOf[LongArrayEqCount], e => LongArrayEqCount(e(0), e(1))),
+    ("graft_sorted_long_intersect_count", classOf[SortedLongIntersectCount],
+      e => SortedLongIntersectCount(e(0), e(1))),
+    ("graft_top_k_tokens", classOf[TopKTokens], TopKTokens.fromExprs),
+    ("graft_top_k_spacesaving", classOf[SpaceSavingTopK], SpaceSavingTopK.fromExprs),
+    ("graft_countmin", classOf[CountMinSketchAgg], CountMinSketchAgg.fromExprs),
+    ("graft_quantiles", classOf[QuantileSketchAgg], QuantileSketchAgg.fromExprs),
+    ("graft_bloom", classOf[BloomFilterAgg], BloomFilterAgg.fromExprs),
+    ("graft_hll", classOf[HyperLogLogAgg], HyperLogLogAgg.fromExprs),
+    ("graft_bloom_might_contain", classOf[BloomMightContain], BloomMightContain.fromExprs),
+    ("graft_zorder2", classOf[ZOrderInterleave], e => ZOrderInterleave(e(0), e(1))),
+    ("graft_hilbert2", classOf[HilbertIndex2], e => HilbertIndex2(e(0), e(1))),
+    ("graft_cdc_boundaries", classOf[CdcChunkBoundaries], e => CdcChunkBoundaries(e(0))),
+    ("graft_damerau_levenshtein", classOf[DamerauLevenshtein], e => DamerauLevenshtein(e(0), e(1))),
+    ("graft_nfc", classOf[NfcNormalize], e => NfcNormalize(e(0))),
+    ("graft_jaro_winkler_milli", classOf[JaroWinklerMilli], e => JaroWinklerMilli(e(0), e(1))),
+    ("graft_jaro_winkler_boundary_gap_ppb", classOf[JaroWinklerBoundaryGapPpb],
+      e => JaroWinklerBoundaryGapPpb(e(0), e(1))))
 
   /** Idempotent; call before building a plan that uses the accessors. */
-  def ensure(s: SparkSession): Unit = register(s)
+  def ensure(s: SparkSession): Unit = {
+    val reg = s.sessionState.functionRegistry
+    natives.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
+  }
 
   def longArrayDot(a: Column, b: Column): Column =
     call_function("graft_long_array_dot", a, b)
-
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    call_function("graft_sorted_intersect_count", a, b)
 
   def longArrayEqCount(a: Column, b: Column): Column =
     call_function("graft_long_array_eq_count", a, b)

@@ -10,6 +10,12 @@ import org.apache.spark.sql.graft.GraftSqlBridge
   * rest are built from codegen'd `org.apache.spark.sql.functions`, so all
   * stay inside whole-stage codegen and are portable to the DuckDB oracle
   * SQL.
+  *
+  * The DuckDB mirrors live here too, one `<fn>Sql` beside each function
+  * an oracle reproduces ([[stripPunctSql]], [[whitespaceSplitSql]],
+  * [[tokensSql]], [[hex64Sql]]): each takes a SQL expression and returns
+  * SQL text. Oracles spell the tokenizer and the 60-bit hash only through
+  * them (`scripts/preflight.sh` fails on an inline copy).
   */
 object TextFunctions {
 
@@ -22,6 +28,9 @@ object TextFunctions {
   def stripPunct(c: Column): Column =
     regexp_replace(c, "(?U)[^\\w\\s]", "")
 
+  /** DuckDB mirror of [[stripPunct]]. */
+  def stripPunctSql(c: String): String = s"regexp_replace($c, '[^\\w\\s]', '', 'g')"
+
   /** Reference tokenization, step 2: split on whitespace runs with no empty
     * tokens (reference `src/app/wc.rs:9-12`, `split_whitespace`).
     * Returns `array<string>` (possibly with one empty string for
@@ -30,6 +39,10 @@ object TextFunctions {
     */
   def whitespaceSplit(c: Column): Column =
     filter(split(c, "(?U)\\s+"), w => length(w) > 0)
+
+  /** DuckDB mirror of [[whitespaceSplit]]. */
+  def whitespaceSplitSql(c: String): String =
+    s"list_filter(string_split_regex($c, '\\s+'), w -> w <> '')"
 
   /** Full reference token stream — `whitespaceSplit(stripPunct(c))` in one
     * pass: the [[Tokens]] expression over [[TokenizerKernel]], whose
@@ -40,18 +53,29 @@ object TextFunctions {
   def tokens(c: Column): Column =
     GraftSqlBridge.column(Tokens(GraftSqlBridge.expression(c)))
 
+  /** DuckDB mirror of [[tokens]]: `array<varchar>` of the reference
+    * tokens. DuckDB's RE2 `\w`/`\s` are ASCII-only where [[tokens]] is
+    * Unicode-aware, so this is the one place the oracles' ASCII-corpus
+    * assumption lives (see [[graft.core.QueryPack]]).
+    */
+  def tokensSql(c: String): String = whitespaceSplitSql(stripPunctSql(c))
+
   /** Distinct token set (for Jaccard / MinHash over unigram sets). */
   def tokenSet(c: Column): Column = array_distinct(tokens(c))
 
   /** First 15 hex chars of an md5-hex column → int64 (60 bits). The
     * engine-portable string→fixed-width-id hash: DuckDB mirrors it as
-    * `CAST('0x' || substring(md5(x), 1, 15) AS BIGINT)`, so derived joins
+    * [[hex64Sql]], so derived joins
     * and counts are identical by construction on both sides (even a
     * collision collides identically). Used to shrink shuffle payloads:
     * joining/intersecting 8-byte ids beats variable-length strings.
     */
   def hex64(md5Hex: Column): Column =
     conv(substring(md5Hex, 1, 15), 16, 10).cast("long")
+
+  /** DuckDB mirror of [[hex64]]. */
+  def hex64Sql(md5Hex: String): String =
+    s"CAST('0x' || substring($md5Hex, 1, 15) AS BIGINT)"
 
   /** Word k-shingles: array of the k-grams of the token stream, joined with
     * a single space. Empty array when the doc has fewer than k tokens.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
+import graft.functions.TextFunctions.{hex64Sql, tokensSql}
 
 /** Round-8 wave-4 analytics: the experimentation / forecasting /
   * link-prediction layer a corpus-curation team runs ON TOP of the
@@ -1310,7 +1311,7 @@ object AnalyticsPack extends QueryPack {
     // mirroring Spark's DECIMAL(38,0) (equal integers → identical
     // doubles), identical single-row θ/ρ²/diff expressions
     "q353_cuped" ->
-      """WITH spend AS (
+      s"""WITH spend AS (
         |  SELECT o_custkey AS c_custkey, CAST(o_orderdate AS TIMESTAMP) AS od,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
         |  FROM orders),
@@ -1322,7 +1323,7 @@ object AnalyticsPack extends QueryPack {
         |  GROUP BY c.c_custkey),
         |pb AS (
         |  SELECT x, y,
-        |         CAST('0x' || substring(md5('cuped:' || CAST(c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS bucket
+        |         ${hex64Sql("md5('cuped:' || CAST(c_custkey AS VARCHAR))")} % 2 AS bucket
         |  FROM pc),
         |gl AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1393,8 +1394,8 @@ object AnalyticsPack extends QueryPack {
     "q357_dp_geometric_release" ->
       s"""WITH cells AS (
         |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST('0x' || substring(md5('dp1:' || lang || ':' || source), 1, 15) AS BIGINT) AS h1,
-        |         CAST('0x' || substring(md5('dp2:' || lang || ':' || source), 1, 15) AS BIGINT) AS h2
+        |         ${hex64Sql("md5('dp1:' || lang || ':' || source)")} AS h1,
+        |         ${hex64Sql("md5('dp2:' || lang || ':' || source)")} AS h2
         |  FROM documents GROUP BY 1, 2),
         |g AS (SELECT lang, source, n_docs,
         |             CAST(${trailingOnesCase("h1")} AS BIGINT) AS g_up,
@@ -1482,10 +1483,10 @@ object AnalyticsPack extends QueryPack {
     // same tokenization (ASCII corpus — the QueryPack oracle-layer
     // note), same per-doc micro quantization before the integer mean
     "q362_root_ttr" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT source,
-        |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS BIGINT) AS n,
-        |         CAST(len(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> ''))) AS BIGINT) AS v
+        |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n,
+        |         CAST(len(list_distinct(${tokensSql("text")})) AS BIGINT) AS v
         |  FROM documents),
         |q AS (SELECT source,
         |             CAST(floor(1000000.0 * cast(v as double) / sqrt(cast(n as double))) AS BIGINT) AS rttr_micro
@@ -1513,7 +1514,7 @@ object AnalyticsPack extends QueryPack {
     // same epoch-mod-7 weekday, same md5 split coin, same per-bin
     // integer reliability/resolution quantization
     "q364_brier_decomposition" ->
-      """WITH ev AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t,
+      s"""WITH ev AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t,
         |                   epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |su AS (SELECT user_id, min(us) AS su_us, min(t) AS su_ts
         |       FROM ev WHERE event_type = 'signup' GROUP BY 1),
@@ -1523,7 +1524,7 @@ object AnalyticsPack extends QueryPack {
         |         (CAST(su.su_ts AS DATE) - DATE '1970-01-01') % 7 AS wd,
         |         COALESCE(max(CASE WHEN pu.pu_us >= su.su_us
         |                            AND pu.pu_us < su.su_us + 604800000000 THEN 1 ELSE 0 END), 0) AS conv,
-        |         CAST('0x' || substring(md5('brier:' || CAST(su.user_id AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS split
+        |         ${hex64Sql("md5('brier:' || CAST(su.user_id AS VARCHAR))")} % 2 AS split
         |  FROM su LEFT JOIN pu ON pu.user_id = su.user_id
         |  GROUP BY 1, 2, 4),
         |tr AS (SELECT wd, CAST(count(*) AS BIGINT) AS n_train,
@@ -1549,11 +1550,11 @@ object AnalyticsPack extends QueryPack {
     // Romano magnitude bands (// and div both truncate toward zero on
     // the signed numerator)
     "q365_cliffs_delta" ->
-      """WITH spend AS (
+      s"""WITH spend AS (
         |  SELECT user_id, CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
         |  FROM events GROUP BY 1),
         |asg AS (
-        |  SELECT CAST('0x' || substring(md5('exp1:' || CAST(c.c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS bucket,
+        |  SELECT ${hex64Sql("md5('exp1:' || CAST(c.c_custkey AS VARCHAR))")} % 2 AS bucket,
         |         COALESCE(s.cents, 0) AS m
         |  FROM customer c LEFT JOIN spend s ON s.user_id = c.c_custkey),
         |vc AS (SELECT m, CAST(count(*) AS BIGINT) AS ct FROM asg GROUP BY m),
@@ -1611,9 +1612,9 @@ object AnalyticsPack extends QueryPack {
     // same tokenization and w-gram construction (ASCII corpus — the
     // QueryPack oracle-layer note), same ppm floor-divisions
     "q367_shingle_uniqueness" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        |         ${tokensSql("text")} AS ts
         |  FROM documents),
         |sh AS (
         |  SELECT 2 AS w, array_to_string(ts[g.i:g.i+1], ' ') AS sgl
@@ -1729,12 +1730,12 @@ object AnalyticsPack extends QueryPack {
 
     // identical template; engine-specific micros extractor + md5 hash
     "q384_sprt_srm" -> sprtSql("epoch_us(CAST(ts AS TIMESTAMP))",
-      "CAST('0x' || substring(md5('sprt:' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT)"),
+      hex64Sql("md5('sprt:' || CAST(user_id AS VARCHAR))")),
 
     // same md5 coin, same pre/post split and exact decile counts; the
     // oracle's row_number replays the distributed prefix-sum rank
     "q397_qini_uplift" ->
-      """WITH spend AS (
+      s"""WITH spend AS (
         |  SELECT o_custkey AS c_custkey,
         |         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
         |         CAST(o_orderdate AS TIMESTAMP) AS od
@@ -1745,7 +1746,7 @@ object AnalyticsPack extends QueryPack {
         |         FROM spend WHERE od >= TIMESTAMP '1998-01-01'),
         |u AS (
         |  SELECT c.c_custkey, COALESCE(p.x, 0) AS x, COALESCE(q.y, 0) AS y,
-        |         CAST('0x' || substring(md5('qini:' || CAST(c.c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS arm
+        |         ${hex64Sql("md5('qini:' || CAST(c.c_custkey AS VARCHAR))")} % 2 AS arm
         |  FROM customer c
         |  LEFT JOIN pre p ON p.c_custkey = c.c_custkey
         |  LEFT JOIN post q ON q.c_custkey = c.c_custkey),
@@ -1815,7 +1816,7 @@ object AnalyticsPack extends QueryPack {
     // same 64 salted md5 coins, same exact cross-multiplied compare
     // (HUGEINT mirrors Spark's DECIMAL products), same add-one p
     "q402_perm_test" ->
-      """WITH conv AS (
+      s"""WITH conv AS (
         |  SELECT DISTINCT user_id AS c_custkey, CAST(1 AS BIGINT) AS y
         |  FROM events WHERE event_type = 'purchase'),
         |users AS (
@@ -1824,7 +1825,7 @@ object AnalyticsPack extends QueryPack {
         |bs AS (SELECT UNNEST(generate_series(0, 63)) AS b),
         |ex AS (
         |  SELECT u.c_custkey, u.y, bs.b,
-        |         CAST('0x' || substring(md5('perm:' || CAST(bs.b AS VARCHAR) || ':' || CAST(u.c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS arm
+        |         ${hex64Sql("md5('perm:' || CAST(bs.b AS VARCHAR) || ':' || CAST(u.c_custkey AS VARCHAR))")} % 2 AS arm
         |  FROM users u CROSS JOIN bs),
         |per AS (
         |  SELECT b,
@@ -1847,12 +1848,12 @@ object AnalyticsPack extends QueryPack {
 
     // same md5 coin, same nation strata, same sign/abs integer ppm
     "q403_ipw_ate" ->
-      """WITH conv AS (
+      s"""WITH conv AS (
         |  SELECT DISTINCT user_id AS c_custkey, CAST(1 AS BIGINT) AS y
         |  FROM events WHERE event_type = 'purchase'),
         |users AS (
         |  SELECT c.c_custkey, CAST(c.c_nationkey AS INT) AS nat, COALESCE(v.y, 0) AS y,
-        |         CAST('0x' || substring(md5('ipw:' || CAST(c.c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS arm
+        |         ${hex64Sql("md5('ipw:' || CAST(c.c_custkey AS VARCHAR))")} % 2 AS arm
         |  FROM customer c LEFT JOIN conv v ON v.c_custkey = c.c_custkey),
         |strata AS (
         |  SELECT nat, CAST(count(*) AS BIGINT) AS n,

@@ -1639,8 +1639,8 @@ object CleanPack extends QueryPack {
 
     // same version simulation, same md5 compare, same status precedence
     "q143_corpus_diff" ->
-      """WITH d0 AS (
-        |  SELECT *, CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10 AS vb
+      s"""WITH d0 AS (
+        |  SELECT *, ${hex64Sql("md5(CAST(doc_id AS VARCHAR))")} % 10 AS vb
         |  FROM documents),
         |v1 AS (
         |  SELECT doc_id, source, md5(text) AS h1 FROM d0 WHERE vb <> 9),
@@ -1718,8 +1718,8 @@ object CleanPack extends QueryPack {
         |ORDER BY source""".stripMargin,
 
     "q112_source_kl" ->
-      """WITH tok AS (
-        |  SELECT source, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+      s"""WITH tok AS (
+        |  SELECT source, unnest(${tokensSql("text")}) AS w
         |  FROM documents),
         |sw AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c_sw FROM tok GROUP BY 1, 2),
         |st AS (SELECT source, CAST(SUM(c_sw) AS BIGINT) AS n_s FROM sw GROUP BY 1),
@@ -1820,9 +1820,9 @@ object CleanPack extends QueryPack {
 
     // identical md5 buckets and integer chi-square
     "q180_ab_srm_check" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT c_custkey, g.e AS exp_id,
-        |         CAST('0x' || substring(md5('exp' || CAST(g.e AS VARCHAR) || ':' || CAST(c_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
+        |         ${hex64Sql("md5('exp' || CAST(g.e AS VARCHAR) || ':' || CAST(c_custkey AS VARCHAR))")} AS h
         |  FROM customer, UNNEST(generate_series(1, 3)) AS g(e)),
         |b AS (
         |  SELECT exp_id,
@@ -2137,9 +2137,9 @@ object CleanPack extends QueryPack {
     // same bucketing, same dense grid, same chained vocab-bounded
     // cumsums and strict-prefix lags, identical sqrt/divide/floor text
     "q409_kendall_tau" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT n_chars // 16 AS x,
-        |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS BIGINT) // 8 AS y
+        |         CAST(len(${tokensSql("text")}) AS BIGINT) // 8 AS y
         |  FROM documents),
         |cells AS (SELECT x, y, CAST(count(*) AS BIGINT) AS nc FROM base GROUP BY 1, 2),
         |xs AS (SELECT DISTINCT x FROM cells),
@@ -2175,9 +2175,9 @@ object CleanPack extends QueryPack {
     // same doubled-midrank vocabularies; HUGEINT mirrors the Spark
     // side's DECIMAL(38,0) products (equal integers → identical doubles)
     "q334_spearman_len_ttr" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
-        |         CAST(len(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> ''))) AS BIGINT) AS y
+        |         CAST(len(list_distinct(${tokensSql("text")})) AS BIGINT) AS y
         |  FROM documents),
         |rx AS (SELECT x, 2 * (CAST(SUM(ct) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - ct) + ct + 1 AS r2_x
         |       FROM (SELECT x, CAST(count(*) AS BIGINT) AS ct FROM base GROUP BY x)),
@@ -2202,12 +2202,12 @@ object CleanPack extends QueryPack {
     // same md5 buckets, same doubled-midrank value-vocabulary scan,
     // identical tie-corrected single-sqrt z
     "q331_mann_whitney" ->
-      """WITH spend AS (
+      s"""WITH spend AS (
         |  SELECT user_id, CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
         |  FROM events GROUP BY user_id),
         |a0 AS (
         |  SELECT c.c_custkey, g.e AS exp_id,
-        |         CAST('0x' || substring(md5('exp' || CAST(g.e AS VARCHAR) || ':' || CAST(c.c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS bucket
+        |         ${hex64Sql("md5('exp' || CAST(g.e AS VARCHAR) || ':' || CAST(c.c_custkey AS VARCHAR))")} % 2 AS bucket
         |  FROM customer c, UNNEST(generate_series(1, 2)) AS g(e)),
         |a AS (
         |  SELECT a0.exp_id, a0.bucket, COALESCE(s.cents, 0) AS m
@@ -2250,7 +2250,7 @@ object CleanPack extends QueryPack {
          |  FROM events GROUP BY user_id),
          |a0 AS (
          |  SELECT c.c_custkey, g.e AS exp_id,
-         |         CAST('0x' || substring(md5('exp' || CAST(g.e AS VARCHAR) || ':' || CAST(c.c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 2 AS bucket
+         |         ${hex64Sql("md5('exp' || CAST(g.e AS VARCHAR) || ':' || CAST(c.c_custkey AS VARCHAR))")} % 2 AS bucket
          |  FROM customer c, UNNEST(generate_series(1, 2)) AS g(e)),
          |a AS (
          |  SELECT a0.exp_id, a0.bucket, COALESCE(s.cents, 0) AS m
@@ -2273,14 +2273,13 @@ object CleanPack extends QueryPack {
 
     // same power sums, same per-group floor quantization before the sum
     "q250_anova_decomposition" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT source,
         |         CAST(count(*) AS BIGINT) AS ng,
         |         CAST(sum(y) AS BIGINT) AS s1g,
         |         CAST(sum(y * y) AS BIGINT) AS s2g
         |  FROM (SELECT source,
-        |               CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |                                    w -> w <> '')) AS BIGINT) AS y
+        |               CAST(len(${tokensSql("text")}) AS BIGINT) AS y
         |        FROM documents) t
         |  GROUP BY source),
         |q AS (SELECT ng, s1g, s2g, (1000000 * s1g * s1g) // ng AS tb_q FROM per),
@@ -2322,15 +2321,15 @@ object CleanPack extends QueryPack {
     // same md5-residue version buckets, full-count ppm per version,
     // and |Δppm| rank with the token tie-break
     "q232_vocab_drift" ->
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT doc_id, text,
-        |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10 AS vb
+        |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR))")} % 10 AS vb
         |  FROM documents),
-        |v1t AS (SELECT unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        |v1t AS (SELECT unnest(${tokensSql("text")}) AS w
         |        FROM docs WHERE vb <> 9),
         |v2d AS (SELECT CASE WHEN vb = 7 THEN text || ' rev2' ELSE text END AS text
         |        FROM docs WHERE vb <> 3),
-        |v2t AS (SELECT unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        |v2t AS (SELECT unnest(${tokensSql("text")}) AS w
         |        FROM v2d),
         |f1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM v1t GROUP BY w),
         |f2 AS (SELECT w, CAST(count(*) AS BIGINT) AS c2 FROM v2t GROUP BY w),
@@ -2354,10 +2353,10 @@ object CleanPack extends QueryPack {
     // same 60-bit content hashes, same DECIMAL accumulation, same
     // ROLLUP total row, same 2^60 fold
     "q226_set_checksum" ->
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT source,
-        |         CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS h,
-        |         CAST('0x' || substring(md5('half:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 0 AS even
+        |         ${hex64Sql("md5(text)")} AS h,
+        |         ${hex64Sql("md5('half:' || CAST(doc_id AS VARCHAR))")} % 2 = 0 AS even
         |  FROM documents),
         |agg AS (
         |  SELECT COALESCE(source, '__ALL__') AS source,
@@ -2486,13 +2485,12 @@ object CleanPack extends QueryPack {
       val t = poissonCdf60
       s"""WITH nt AS (
          |  SELECT doc_id,
-         |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |                              w -> w <> '')) AS BIGINT) AS n_tok
+         |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tok
          |  FROM documents),
          |overall AS (SELECT CAST(sum(n_tok) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS overall_mean FROM nt),
          |rep AS (
          |  SELECT doc_id, n_tok, g.r,
-         |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(g.r AS VARCHAR)), 1, 15) AS BIGINT) AS h
+         |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR) || ':' || CAST(g.r AS VARCHAR))")} AS h
          |  FROM nt, UNNEST(generate_series(0, 31)) AS g(r)),
          |wtd AS (
          |  SELECT r, n_tok,
@@ -2621,7 +2619,7 @@ object CleanPack extends QueryPack {
     // same corruption, same truth join, same salted-hash nonmatch
     // sample, same exact-integer agreement predicates and ppm ratios
     "q401_fellegi_sunter" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT c_custkey AS k, c_name AS name,
         |         CAST(c_nationkey AS INT) AS nat, c_mktsegment AS seg
         |  FROM customer),
@@ -2644,8 +2642,8 @@ object CleanPack extends QueryPack {
         |u AS (SELECT a.name, b.name_d, a.nat, b.nat_d, a.seg, b.seg_d
         |      FROM a, b, nn
         |      WHERE a.k <> b.k
-        |        AND CAST('0x' || substring(md5('fsu:' || CAST(a.k AS VARCHAR)), 1, 15) AS BIGINT) % nn.r
-        |          = CAST('0x' || substring(md5('fsv:' || CAST(b.k AS VARCHAR)), 1, 15) AS BIGINT) % nn.r),
+        |        AND ${hex64Sql("md5('fsu:' || CAST(a.k AS VARCHAR))")} % nn.r
+        |          = ${hex64Sql("md5('fsv:' || CAST(b.k AS VARCHAR))")} % nn.r),
         |ms AS (SELECT CAST(count(*) AS BIGINT) AS n_m,
         |              CAST(SUM(CASE WHEN damerau_levenshtein(name, name_d) <= 2 THEN 1 ELSE 0 END) AS BIGINT) AS m_name,
         |              CAST(SUM(CASE WHEN nat = nat_d THEN 1 ELSE 0 END) AS BIGINT) AS m_nat,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
 import graft.core.Pin.checkpointed
-import graft.functions.TextFunctions.hex64
+import graft.functions.TextFunctions.{hex64, hex64Sql, stripPunctSql}
 
 /** Reference-parity queries: word count both as the declarative DataFrame
   * pipeline and through the generic MapReduce facade (two independent
@@ -14,8 +14,8 @@ import graft.functions.TextFunctions.hex64
 object CorePack extends QueryPack {
 
   private val wcOracle =
-    """SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt
-      |FROM (SELECT unnest(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+')) AS w
+    s"""SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt
+      |FROM (SELECT unnest(string_split_regex(${stripPunctSql("text")}, '\\s+')) AS w
       |      FROM documents)
       |WHERE w <> ''
       |GROUP BY w
@@ -1487,29 +1487,24 @@ object CorePack extends QueryPack {
     * upsert applied + the synthetic insert (version 2); version 3 is
     * `s2 WHERE lang <> 'de'`. */
   private[graft] val snapshotStatesCtes: String =
-    """s1 AS (
+    s"""s1 AS (
       |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
       |         CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-      |         CAST(SUM(CAST('0x' || substring(md5(text), 1, 15)
-      |              AS BIGINT) % 1000000007) AS BIGINT) AS text_cksum
+      |         CAST(SUM(${hex64Sql("md5(text)")} % 1000000007) AS BIGINT) AS text_cksum
       |  FROM documents GROUP BY lang, source),
       |s2 AS (
       |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
       |         CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-      |         CAST(SUM(CAST('0x' || substring(md5(
-      |                CASE WHEN lang = 'en' THEN upper(text) ELSE text END), 1, 15)
-      |              AS BIGINT) % 1000000007) AS BIGINT) AS text_cksum
+      |         CAST(SUM(${hex64Sql("md5( CASE WHEN lang = 'en' THEN upper(text) ELSE text END)")} % 1000000007) AS BIGINT) AS text_cksum
       |  FROM documents GROUP BY lang, source
       |  UNION ALL
       |  SELECT 'zz', 'synthetic', 1, 42, 7)""".stripMargin
 
   private val upsertStateOracle: String =
-    """SELECT lang, source, n_docs, sum_chars, text_cksum FROM (
+    s"""SELECT lang, source, n_docs, sum_chars, text_cksum FROM (
       |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
       |         CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-      |         CAST(SUM(CAST('0x' || substring(md5(
-      |                CASE WHEN lang = 'en' THEN upper(text) ELSE text END), 1, 15)
-      |              AS BIGINT) % 1000000007) AS BIGINT) AS text_cksum
+      |         CAST(SUM(${hex64Sql("md5( CASE WHEN lang = 'en' THEN upper(text) ELSE text END)")} % 1000000007) AS BIGINT) AS text_cksum
       |  FROM documents GROUP BY lang, source
       |  UNION ALL
       |  SELECT 'zz', 'synthetic', 1, 42, 7
@@ -1518,7 +1513,7 @@ object CorePack extends QueryPack {
   private def roundTripDigestSql(textExpr: String) =
     s"""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
       |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-      |       CAST(SUM(CAST('0x' || substring(md5($textExpr), 1, 15) AS BIGINT) % 1000000007) AS BIGINT) AS text_cksum
+      |       CAST(SUM(${hex64Sql(s"md5($textExpr)")} % 1000000007) AS BIGINT) AS text_cksum
       |FROM documents
       |GROUP BY lang
       |ORDER BY lang""".stripMargin

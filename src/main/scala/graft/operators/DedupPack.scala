@@ -160,7 +160,7 @@ object DedupPack extends QueryPack {
       .mkString("\n  UNION ALL\n")
     s"""bands0 AS (
 $arms),
-bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' || CAST(band_val AS VARCHAR)), 1, 15) AS BIGINT) AS bk
+bands AS (SELECT *, ${hex64Sql("md5(CAST(band_id AS VARCHAR) || ':' || CAST(band_val AS VARCHAR))")} AS bk
           FROM bands0),"""
   }
 
@@ -420,6 +420,16 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
         (col("a.band_id") === 0 || col("a.b0") =!= col("b.b0")))
       .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
 
+  /** DuckDB mirror of [[bandCandidates]]: `cand(doc_i, doc_j)` over a
+    * `bands(doc_id, b0, band_id, band_val)` CTE ([[minhashCtes]]), same
+    * emit-once rule. No trailing comma.
+    */
+  private val bandCandidatesCte: String =
+    """cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
+      |         FROM bands a JOIN bands b
+      |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+      |          AND (a.band_id = 0 OR a.b0 <> b.b0))""".stripMargin
+
   /** q252's verified weighted near-dup pairs — the full scored frame
     * (doc_i, doc_j, est_matches, w_common, w_union, wjacc_ppm), est ≥
     * 12 prefiltered and weighted-J ≥ 0.8 verified. Shared by the gated
@@ -538,11 +548,8 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
   }
 
   /** DuckDB reference tokenization (`ts` = token array per doc). */
-  private val duckToks =
-    """SELECT doc_id,
-      |       list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-      |                   w -> w <> '') AS ts
-      |FROM documents""".stripMargin
+  private[operators] val duckToks =
+    s"SELECT doc_id, ${tokensSql("text")} AS ts FROM documents"
 
   /** DuckDB CTE chain ending in `bands(doc_id, b0, band_id, band_val)` —
     * the oracle mirror of [[minhashDocs]]+[[minhashBands]] (perm p =
@@ -557,18 +564,18 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
        |dt AS (SELECT DISTINCT doc_id, unnest(ts) AS w FROM tok),
        |dh AS (SELECT doc_id, md5(w) AS h FROM dt),
        |docs AS (SELECT doc_id,
-       |                list_sort(list(CAST('0x' || substring(h, 1, 15) AS BIGINT))) AS tid,
+       |                list_sort(list(${hex64Sql("h")})) AS tid,
        |                count(*) AS n_toks
        |         FROM dh GROUP BY doc_id),
        |mh AS (SELECT doc_id, p, min($rotSql) AS sighex
        |       FROM dh CROSS JOIN (SELECT unnest(generate_series(0, ${nPerm - 1})) AS p) perms
        |       GROUP BY doc_id, p),
        |sigs AS (SELECT doc_id,
-       |                list(CAST('0x' || substring(sighex, 1, 15) AS BIGINT) ORDER BY p) AS sigs
+       |                list(${hex64Sql("sighex")} ORDER BY p) AS sigs
        |         FROM mh GROUP BY doc_id),
        |keys AS (SELECT doc_id,
-       |                CAST('0x' || substring(md5(array_to_string(sigs[1:$bandRows], ',')), 1, 15) AS BIGINT) AS b0,
-       |                CAST('0x' || substring(md5(array_to_string(sigs[${bandRows + 1}:${2 * bandRows}], ',')), 1, 15) AS BIGINT) AS b1
+       |                ${hex64Sql(s"md5(array_to_string(sigs[1:$bandRows], ','))")} AS b0,
+       |                ${hex64Sql(s"md5(array_to_string(sigs[${bandRows + 1}:${2 * bandRows}], ','))")} AS b1
        |         FROM sigs),
        |bands AS (
        |  SELECT doc_id, b0, 0 AS band_id, b0 AS band_val FROM keys
@@ -598,7 +605,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     s"""WITH tok AS ($duckToks),
        |seg AS (
        |  SELECT doc_id,
-       |         CAST('0x' || substring(md5(array_to_string(ts[(g.i * 16 + 1):((g.i + 1) * 16)], ' ')), 1, 15) AS BIGINT) AS pid
+       |         ${hex64Sql("md5(array_to_string(ts[(g.i * 16 + 1):((g.i + 1) * 16)], ' '))")} AS pid
        |  FROM tok, UNNEST(generate_series(0, CAST(ceil(len(ts) / 16.0) - 1 AS BIGINT))) AS g(i)),
        |basep AS (SELECT DISTINCT pid FROM seg WHERE doc_id % $deltaMod <> $deltaRem),
        |delta AS (SELECT doc_id, pid FROM seg WHERE doc_id % $deltaMod = $deltaRem)
@@ -622,34 +629,31 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     s"""tok AS ($duckToks),
        |wsh0 AS (SELECT DISTINCT doc_id, ts[g.i] || ' ' || ts[g.i + 1] || ' ' || ts[g.i + 2] AS sg
        |        FROM tok, UNNEST(generate_series(1, greatest(len(ts) - 2, 0))) AS g(i)),
-       |wsh AS (SELECT doc_id, CAST('0x' || substring(md5(sg), 1, 15) AS BIGINT) AS sid FROM wsh0),
+       |wsh AS (SELECT doc_id, ${hex64Sql("md5(sg)")} AS sid FROM wsh0),
        |dfw AS (SELECT sid, CASE WHEN count(*) = 1 THEN 4 WHEN count(*) <= 3 THEN 3
        |                         WHEN count(*) <= 9 THEN 2 ELSE 1 END AS w
        |        FROM wsh GROUP BY sid),
        |rep AS (SELECT s.doc_id, md5(CAST(s.sid AS VARCHAR) || '#' || CAST(g.i AS VARCHAR)) AS h
        |        FROM wsh s JOIN dfw USING (sid), UNNEST(generate_series(0, w - 1)) AS g(i)),
        |docs AS (SELECT doc_id,
-       |                list_sort(list(CAST('0x' || substring(h, 1, 15) AS BIGINT))) AS rid,
+       |                list_sort(list(${hex64Sql("h")})) AS rid,
        |                CAST(count(*) AS BIGINT) AS n_reps
        |         FROM rep GROUP BY doc_id),
        |mh AS (SELECT doc_id, p, min($rotSql) AS sighex
        |       FROM rep CROSS JOIN (SELECT unnest(generate_series(0, ${nPerm - 1})) AS p) perms
        |       GROUP BY doc_id, p),
        |sigs AS (SELECT doc_id,
-       |                list(CAST('0x' || substring(sighex, 1, 15) AS BIGINT) ORDER BY p) AS sigs
+       |                list(${hex64Sql("sighex")} ORDER BY p) AS sigs
        |         FROM mh GROUP BY doc_id),
        |keys AS (SELECT doc_id,
-       |                CAST('0x' || substring(md5(array_to_string(sigs[1:$bandRows], ',')), 1, 15) AS BIGINT) AS b0,
-       |                CAST('0x' || substring(md5(array_to_string(sigs[${bandRows + 1}:${2 * bandRows}], ',')), 1, 15) AS BIGINT) AS b1
+       |                ${hex64Sql(s"md5(array_to_string(sigs[1:$bandRows], ','))")} AS b0,
+       |                ${hex64Sql(s"md5(array_to_string(sigs[${bandRows + 1}:${2 * bandRows}], ','))")} AS b1
        |         FROM sigs),
        |bands AS (
        |  SELECT doc_id, b0, 0 AS band_id, b0 AS band_val FROM keys
        |  UNION ALL
        |  SELECT doc_id, b0, 1, b1 FROM keys),
-       |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-       |         FROM bands a JOIN bands b
-       |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-       |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+       |$bandCandidatesCte,
        |wscored AS (
        |  SELECT c.doc_i, c.doc_j,
        |    CAST(length(list_filter(generate_series(1, $nPerm), i -> sa.sigs[i] = sb.sigs[i])) AS INT) AS est_matches,
@@ -667,7 +671,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     s"""tok AS ($duckToks),
        |sh0 AS (SELECT DISTINCT doc_id, ts[g.i] || ' ' || ts[g.i + 1] || ' ' || ts[g.i + 2] AS s
        |        FROM tok, UNNEST(generate_series(1, greatest(len(ts) - 2, 0))) AS g(i)),
-       |sh AS (SELECT doc_id, CAST('0x' || substring(md5(s), 1, 15) AS BIGINT) AS sid FROM sh0),
+       |sh AS (SELECT doc_id, ${hex64Sql("md5(s)")} AS sid FROM sh0),
        |counts AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
        |shared AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j, CAST(count(*) AS BIGINT) AS shared
        |           FROM sh a JOIN sh b ON a.sid = b.sid AND a.doc_id < b.doc_id
@@ -1815,7 +1819,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
       s"""WITH tok AS ($duckToks),
          |seg AS (
          |  SELECT doc_id, CAST(g.i AS BIGINT) AS seg_idx,
-         |         CAST('0x' || substring(md5(array_to_string(ts[(g.i * 4 + 1):((g.i + 1) * 4)], ' ')), 1, 15) AS BIGINT) AS sid
+         |         ${hex64Sql("md5(array_to_string(ts[(g.i * 4 + 1):((g.i + 1) * 4)], ' '))")} AS sid
          |  FROM tok, UNNEST(generate_series(0, CAST(ceil(len(ts) / 4.0) - 1 AS BIGINT))) AS g(i)),
          |r AS (
          |  SELECT doc_id, seg_idx, sid,
@@ -1839,7 +1843,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
          |dl AS (SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_toks FROM tok),
          |sp AS (
          |  SELECT doc_id, CAST(g.i - 1 AS BIGINT) AS pos,
-         |         CAST('0x' || substring(md5(array_to_string(ts[g.i:(g.i + 7)], ' ')), 1, 15) AS BIGINT) AS sid
+         |         ${hex64Sql("md5(array_to_string(ts[g.i:(g.i + 7)], ' '))")} AS sid
          |  FROM tok, UNNEST(generate_series(1, len(ts) - 7)) AS g(i)),
          |r AS (
          |  SELECT doc_id, pos, sid,
@@ -1866,11 +1870,11 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     "q133_span_memorization" ->
       s"""WITH tok AS ($duckToks),
          |tr AS (SELECT DISTINCT
-         |         CAST('0x' || substring(md5(array_to_string(ts[g.i:(g.i + 7)], ' ')), 1, 15) AS BIGINT) AS sid
+         |         ${hex64Sql("md5(array_to_string(ts[g.i:(g.i + 7)], ' '))")} AS sid
          |       FROM tok, UNNEST(generate_series(1, len(ts) - 7)) AS g(i)
          |       WHERE doc_id % 5 <> 0),
          |hs AS (SELECT doc_id,
-         |         CAST('0x' || substring(md5(array_to_string(ts[g.i:(g.i + 7)], ' ')), 1, 15) AS BIGINT) AS sid
+         |         ${hex64Sql("md5(array_to_string(ts[g.i:(g.i + 7)], ' '))")} AS sid
          |       FROM tok, UNNEST(generate_series(1, len(ts) - 7)) AS g(i)
          |       WHERE doc_id % 5 = 0),
          |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
@@ -1902,10 +1906,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
 
     "q41_dedup_minhash" ->
       s"""WITH $minhashCtes
-         |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |         FROM bands a JOIN bands b
-         |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+         |$bandCandidatesCte,
          |$minhashScoredCte
          |SELECT doc_i, doc_j, est_matches, n_common, jaccard
          |FROM scored
@@ -1917,10 +1918,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // CTE names shadow the outer chain's)
     "q129_minhash_pr" ->
       s"""WITH $minhashCtes
-         |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |         FROM bands a JOIN bands b
-         |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+         |$bandCandidatesCte,
          |sp AS (SELECT doc_i, doc_j FROM (WITH $ngramPairsCtes
          |       SELECT doc_i, doc_j FROM pairs) t),
          |allcand AS (SELECT doc_i, doc_j FROM cand UNION SELECT doc_i, doc_j FROM sp),
@@ -1946,10 +1944,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // never enumerated), identical ppm floor-divisions
     "q356_blocking_quality" ->
       s"""WITH $minhashCtes
-         |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |         FROM bands a JOIN bands b
-         |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+         |$bandCandidatesCte,
          |sp AS (SELECT doc_i, doc_j FROM (WITH $ngramPairsCtes
          |       SELECT doc_i, doc_j FROM pairs) t),
          |allcand AS (SELECT doc_i, doc_j FROM cand UNION SELECT doc_i, doc_j FROM sp),
@@ -1995,9 +1990,9 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // n_truth is per-config exactly as on the Spark side
     "q230_banding_sweep" -> {
       def keySql(i: Int, r: Int) =
-        s"CAST('0x' || substring(md5(array_to_string(sigs[${i * r + 1}:${(i + 1) * r}], ',')), 1, 15) AS BIGINT)"
+        hex64Sql(s"md5(array_to_string(sigs[${i * r + 1}:${(i + 1) * r}], ','))")
       def sampSql(idCol: String) =
-        s"CAST('0x' || substring(md5(CAST($idCol AS VARCHAR)), 1, 15) AS BIGINT) % 4 = 0"
+        s"${hex64Sql(s"md5(CAST($idCol AS VARCHAR))")} % 4 = 0"
       val cfg = Seq((2, 8), (4, 4), (8, 2), (16, 1))
       val cfgCtes = cfg.map { case (b, r) =>
         val label = f"b$b%02dr$r%02d"
@@ -2082,7 +2077,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
       s"""WITH tok AS ($duckToks),
          |seg AS (
          |  SELECT doc_id,
-         |         CAST('0x' || substring(md5(array_to_string(ts[(g.i * 16 + 1):((g.i + 1) * 16)], ' ')), 1, 15) AS BIGINT) AS pid
+         |         ${hex64Sql("md5(array_to_string(ts[(g.i * 16 + 1):((g.i + 1) * 16)], ' '))")} AS pid
          |  FROM tok, UNNEST(generate_series(0, CAST(ceil(len(ts) / 16.0) - 1 AS BIGINT))) AS g(i)),
          |boiler AS (
          |  SELECT pid FROM seg GROUP BY pid HAVING count(DISTINCT doc_id) >= 2),
@@ -2124,10 +2119,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // est_matches bucket (integer mean via sum div count)
     "q260_minhash_calibration" ->
       s"""WITH $minhashCtes
-         |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |         FROM bands a JOIN bands b
-         |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+         |$bandCandidatesCte,
          |sc AS (
          |  SELECT c.doc_i, c.doc_j,
          |    CAST(length(list_filter(generate_series(1, $nPerm), i -> sa.sigs[i] = sb.sigs[i])) AS INT) AS est_matches,
@@ -2176,10 +2168,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // on the identical signatures, same clamped 2A/k − 1 estimator
     "q377_bbit_minhash" ->
       s"""WITH $minhashCtes
-         |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |         FROM bands a JOIN bands b
-         |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+         |$bandCandidatesCte,
          |sc AS (
          |  SELECT c.doc_i, c.doc_j,
          |    CAST(length(list_filter(generate_series(1, $nPerm), i -> (sa.sigs[i] & 1) = (sb.sigs[i] & 1))) AS INT) AS a1,
@@ -2202,10 +2191,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     // Jaccard ppm verify and per-source top-3
     "q258_similar_docs_topk" ->
       s"""WITH $minhashCtes
-         |cand AS (SELECT a.doc_id AS doc_i, b.doc_id AS doc_j
-         |         FROM bands a JOIN bands b
-         |           ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-         |          AND (a.band_id = 0 OR a.b0 <> b.b0)),
+         |$bandCandidatesCte,
          |bothd AS (SELECT doc_i AS src, doc_j AS nbr FROM cand
          |          UNION ALL SELECT doc_j, doc_i FROM cand),
          |sc AS (
@@ -2380,8 +2366,7 @@ bands AS (SELECT *, CAST('0x' || substring(md5(CAST(band_id AS VARCHAR) || ':' |
     }.mkString(",\n")
     s"""WITH docs AS MATERIALIZED (
        |  SELECT doc_id,
-       |         list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-       |                     w -> w <> '') AS ts
+       |         ${tokensSql("text")} AS ts
        |  FROM documents WHERE doc_id % $saSliceMod = $saSliceRem),
        |lens AS MATERIALIZED (SELECT doc_id, CAST(len(ts) AS BIGINT) AS len FROM docs),
        |pos AS MATERIALIZED (

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
 import graft.core.Pin.{checkpointed, materialized, warmed}
+import graft.functions.TextFunctions.hex64Sql
 
 /** Time-series analytics over the static `events` table: tumbling and
   * sliding windows, sessionization. The reference is strictly batch
@@ -3221,16 +3222,16 @@ object EventsPack extends QueryPack {
 
     // identical hash-derived delta batches, identical signed delta rule
     "q189_ivm_join" ->
-      """WITH ords AS (
+      s"""WITH ords AS (
         |  SELECT o_custkey,
         |         CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents,
-        |         CAST('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT) % 3 AS ob
+        |         ${hex64Sql("md5(CAST(o_orderkey AS VARCHAR))")} % 3 AS ob
         |  FROM orders),
         |a0 AS (SELECT o_custkey, cents FROM ords WHERE ob = 0),
         |da AS (SELECT o_custkey, cents FROM ords WHERE ob <> 0),
         |cust AS (
         |  SELECT c_custkey, c_nationkey,
-        |         CAST('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 5 AS cb
+        |         ${hex64Sql("md5(CAST(c_custkey AS VARCHAR))")} % 5 AS cb
         |  FROM customer),
         |b0 AS (SELECT c_custkey, c_nationkey FROM cust),
         |db AS (SELECT c_custkey, c_nationkey, -1 AS sgn FROM cust WHERE cb = 4

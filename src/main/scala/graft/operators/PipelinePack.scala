@@ -46,8 +46,8 @@ object PipelinePack extends QueryPack {
 
   /** DuckDB mirror of [[splitOf]] over an id column/expression. */
   private def splitSql(idCol: String = "doc_id") =
-    s"""CASE WHEN CAST('0x' || substring(md5(CAST($idCol AS VARCHAR) || ':split'), 1, 15) AS BIGINT) % 10 < 8 THEN 'train'
-       |     WHEN CAST('0x' || substring(md5(CAST($idCol AS VARCHAR) || ':split'), 1, 15) AS BIGINT) % 10 < 9 THEN 'val'
+    s"""CASE WHEN ${hex64Sql(s"md5(CAST($idCol AS VARCHAR) || ':split')")} % 10 < 8 THEN 'train'
+       |     WHEN ${hex64Sql(s"md5(CAST($idCol AS VARCHAR) || ':split')")} % 10 < 9 THEN 'val'
        |     ELSE 'test' END""".stripMargin
 
   private def symmetricEdges(pairs: DataFrame): DataFrame =
@@ -86,6 +86,22 @@ object PipelinePack extends QueryPack {
     tri.select(explode(array(col("x"), col("y"), col("z"))).as("w"))
       .groupBy("w").agg(count(lit(1)).cast("bigint").as("n_triangles"))
   }
+
+  /** DuckDB mirror of [[connectedComponents]]: the `e`/`n`/`reach`/`lab`
+    * CTEs over an edge CTE with columns `(doc_i, doc_j)` — recursive
+    * transitive closure, then `lab(node, label)` = the min node id each
+    * node reaches, the algorithm-independent converged CC truth. Needs
+    * `WITH RECURSIVE`; no trailing comma.
+    */
+  private def ccLabelCtes(pairs: String): String =
+    s"""e AS (SELECT doc_i AS v, doc_j AS u FROM $pairs
+       |      UNION ALL SELECT doc_j, doc_i FROM $pairs),
+       |n AS (SELECT DISTINCT v FROM e),
+       |reach(v, u) AS (
+       |  SELECT v, v AS u FROM n
+       |  UNION
+       |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
+       |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v)""".stripMargin
 
   /** Connected components over a symmetric edge list `(v, u)` by
     * min-label propagation iterated to FIXPOINT: every round each node
@@ -1774,11 +1790,9 @@ object PipelinePack extends QueryPack {
     * (gain DESC, doc_id) argmax. */
   private val greedyCoverageOracle: String = {
     val sb = new StringBuilder
-    sb ++= "WITH tok AS (SELECT doc_id, " +
-      "list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), " +
-      "w -> w <> '') AS ts FROM documents),\n"
+    sb ++= s"WITH tok AS (SELECT doc_id, ${tokensSql("text")} AS ts FROM documents),\n"
     sb ++= "sh AS (SELECT DISTINCT doc_id, " +
-      "CAST('0x' || substring(md5(ts[g.i] || ' ' || ts[g.i + 1] || ' ' || ts[g.i + 2]), 1, 15) AS BIGINT) AS sid\n" +
+      s"${hex64Sql("md5(ts[g.i] || ' ' || ts[g.i + 1] || ' ' || ts[g.i + 2])")} AS sid\n" +
       "       FROM tok, UNNEST(generate_series(1, greatest(len(ts) - 2, 0))) AS g(i)),\n"
     for (r <- 1 to 5) {
       val prev = r - 1
@@ -1803,14 +1817,7 @@ object PipelinePack extends QueryPack {
     * closure, then min over each reachable set. */
   private lazy val ccClosureOracle: String =
     s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-       |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-       |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-       |n AS (SELECT DISTINCT v FROM e),
-       |reach(v, u) AS (
-       |  SELECT v, v AS u FROM n
-       |  UNION
-       |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-       |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v)
+       |${ccLabelCtes("pairs")}
        |SELECT node AS doc_id, label AS cluster,
        |       CAST(count(*) OVER (PARTITION BY label) AS BIGINT) AS cluster_size
        |FROM lab
@@ -1821,9 +1828,9 @@ object PipelinePack extends QueryPack {
     // same quality proxy, same global quality-ordered running token
     // total (plain window replays the distributed scan), same budget
     "q408_token_budget_select" ->
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT doc_id, source,
-        |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS BIGINT) AS n_tok,
+        |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tok,
         |         n_chars
         |  FROM documents),
         |q AS (SELECT *, (n_chars * 1000) // greatest(n_tok, 1) AS quality_milli FROM docs),
@@ -1903,14 +1910,7 @@ object PipelinePack extends QueryPack {
     // the q47 closure joined to lengths; (n_chars desc, doc) argmax
     "q343_rep_survivorship" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |ld AS (SELECT l.label, l.node, d.n_chars,
          |              row_number() OVER (PARTITION BY l.label
          |                                 ORDER BY d.n_chars DESC, l.node) AS rk
@@ -1927,14 +1927,7 @@ object PipelinePack extends QueryPack {
     // the q47 recursive closure folded to sizes
     "q342_cluster_size_histogram" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |cs AS (SELECT label, CAST(count(*) AS BIGINT) AS sz FROM lab GROUP BY label)
          |SELECT sz AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
          |       CAST(sz * count(*) AS BIGINT) AS n_docs
@@ -1946,8 +1939,8 @@ object PipelinePack extends QueryPack {
     "q107_source_datacard" ->
       s"""WITH docs AS (
          |  SELECT source, lang,
-         |         CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS h,
-         |         CAST(length(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS BIGINT) AS n_toks
+         |         ${hex64Sql("md5(text)")} AS h,
+         |         CAST(length(${tokensSql("text")}) AS BIGINT) AS n_toks
          |  FROM documents),
          |base AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          |                CAST(SUM(n_toks) AS BIGINT) AS total_tokens,
@@ -1956,7 +1949,7 @@ object PipelinePack extends QueryPack {
          |dups AS (SELECT source, CAST(SUM(c) AS BIGINT) AS dup_docs FROM (
          |           SELECT source, h, count(*) AS c FROM docs GROUP BY source, h)
          |         WHERE c >= 2 GROUP BY source),
-         |tok AS (SELECT source, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS w
+         |tok AS (SELECT source, unnest(${tokensSql("text")}) AS w
          |        FROM documents),
          |vocab AS (SELECT source, CAST(count(DISTINCT w) AS BIGINT) AS distinct_tokens
          |          FROM tok GROUP BY source)
@@ -2014,14 +2007,13 @@ object PipelinePack extends QueryPack {
          |  SELECT r0.v, e2.u FROM reach r0 JOIN e e2 ON e2.v = r0.u),
          |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
          |d AS (SELECT doc_id, n_chars,
-         |             CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |                                  w -> w <> '')) AS BIGINT) AS n_toks,
-         |             CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS h
+         |             CAST(len(${tokensSql("text")}) AS BIGINT) AS n_toks,
+         |             ${hex64Sql("md5(text)")} AS h
          |      FROM documents),
          |sp AS MATERIALIZED (
          |  SELECT d.*, COALESCE(l.label, d.doc_id) AS cluster,
-         |         CAST('0x' || substring(md5('split:' || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 10 AS doc_split,
-         |         CAST('0x' || substring(md5('split:' || CAST(COALESCE(l.label, d.doc_id) AS VARCHAR)), 1, 15) AS BIGINT) % 10 AS cl_split
+         |         ${hex64Sql("md5('split:' || CAST(d.doc_id AS VARCHAR))")} % 10 AS doc_split,
+         |         ${hex64Sql("md5('split:' || CAST(COALESCE(l.label, d.doc_id) AS VARCHAR))")} % 10 AS cl_split
          |  FROM d LEFT JOIN lab l ON l.node = d.doc_id),
          |r AS MATERIALIZED (
          |  SELECT *, row_number() OVER (PARTITION BY cluster
@@ -2056,14 +2048,7 @@ object PipelinePack extends QueryPack {
     // same closure, same per-cluster edge count vs clique arithmetic
     "q242_chain_audit" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |sz AS (SELECT label AS cluster, CAST(count(*) AS BIGINT) AS k
          |       FROM lab GROUP BY label),
          |ed AS (SELECT l.label AS cluster, CAST(count(*) AS BIGINT) AS n_direct
@@ -2079,17 +2064,9 @@ object PipelinePack extends QueryPack {
     // same closure, same rep election, same savings arithmetic
     "q235_effective_tokens" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |d AS (SELECT doc_id, source, n_chars,
-         |             CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |                                  w -> w <> '')) AS BIGINT) AS n_toks
+         |             CAST(len(${tokensSql("text")}) AS BIGINT) AS n_toks
          |      FROM documents),
          |cl AS (SELECT d.*, COALESCE(l.label, d.doc_id) AS cluster
          |       FROM d LEFT JOIN lab l ON l.node = d.doc_id),
@@ -2109,17 +2086,9 @@ object PipelinePack extends QueryPack {
       s"""WITH RECURSIVE ${DedupPack.wminhashCtes},
          |wpairs AS (SELECT doc_i, doc_j FROM wscored
          |           WHERE est_matches >= 12 AND w_common * 1000000 // w_union >= 800000),
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM wpairs
-         |      UNION ALL SELECT doc_j, doc_i FROM wpairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("wpairs")},
          |d AS (SELECT doc_id, source, n_chars,
-         |             CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |                                  w -> w <> '')) AS BIGINT) AS n_toks
+         |             CAST(len(${tokensSql("text")}) AS BIGINT) AS n_toks
          |      FROM documents),
          |cl AS (SELECT d.*, COALESCE(l.label, d.doc_id) AS cluster
          |       FROM d LEFT JOIN lab l ON l.node = d.doc_id),
@@ -2171,18 +2140,11 @@ object PipelinePack extends QueryPack {
     // same closure for clusters, then the identical md5-bucket digits
     "q225_cluster_split" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |cl AS (SELECT d.doc_id, COALESCE(l.label, d.doc_id) AS cluster
          |       FROM documents d LEFT JOIN lab l ON l.node = d.doc_id),
          |h AS (SELECT doc_id, cluster,
-         |             CAST('0x' || substring(md5('split:' || CAST(cluster AS VARCHAR)), 1, 15) AS BIGINT) % 10 AS hb
+         |             ${hex64Sql("md5('split:' || CAST(cluster AS VARCHAR))")} % 10 AS hb
          |      FROM cl)
          |SELECT doc_id, cluster,
          |       CASE WHEN hb <= 7 THEN 'train'
@@ -2239,12 +2201,12 @@ object PipelinePack extends QueryPack {
     // identical md5-hash sketches (ties broken by token), identical
     // k-min-of-union membership estimator, identical exact lane
     "q443_kmv_jaccard" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT DISTINCT source,
-        |         unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        |         unnest(${tokensSql("text")}) AS w
         |  FROM documents),
         |v AS MATERIALIZED (
-        |  SELECT source, w, CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) AS h
+        |  SELECT source, w, ${hex64Sql("md5(w)")} AS h
         |  FROM tok),
         |sk AS MATERIALIZED (
         |  SELECT source, h, w FROM (
@@ -2356,14 +2318,7 @@ object PipelinePack extends QueryPack {
     // best-doc window (policy identical to q46's pairwise retention)
     "q48_cluster_reps" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |clustered AS (
          |  SELECT d.doc_id, coalesce(l.label, d.doc_id) AS cluster, d.n_chars
          |  FROM documents d LEFT JOIN lab l ON l.node = d.doc_id)
@@ -2436,21 +2391,12 @@ object PipelinePack extends QueryPack {
     // sorts quality-passers first
     "q58_corpus_manifest" ->
       s"""WITH RECURSIVE ${DedupPack.ngramPairsCtes},
-         |e AS (SELECT doc_i AS v, doc_j AS u FROM pairs
-         |      UNION ALL SELECT doc_j, doc_i FROM pairs),
-         |n AS (SELECT DISTINCT v FROM e),
-         |reach(v, u) AS (
-         |  SELECT v, v AS u FROM n
-         |  UNION
-         |  SELECT r.v, e2.u FROM reach r JOIN e e2 ON e2.v = r.u),
-         |lab AS (SELECT v AS node, min(u) AS label FROM reach GROUP BY v),
+         |${ccLabelCtes("pairs")},
          |q AS (
          |  SELECT doc_id, lang, n_chars,
-         |         len(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |             w -> w <> '')) AS n_tokens,
-         |         len(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |             w -> w <> ''))) AS n_distinct,
-         |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':mix1'), 1, 15) AS BIGINT) % 100 AS bucket
+         |         len(${tokensSql("text")}) AS n_tokens,
+         |         len(list_distinct(${tokensSql("text")})) AS n_distinct,
+         |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR) || ':mix1')")} % 100 AS bucket
          |  FROM documents),
          |base AS (
          |  SELECT q.doc_id, q.lang, q.n_chars,
@@ -2478,8 +2424,7 @@ object PipelinePack extends QueryPack {
     "q144_split_manifest" ->
       s"""SELECT split, CAST(count(*) AS BIGINT) AS n_docs, CAST(SUM(n) AS BIGINT) AS n_tokens
          |FROM (SELECT ${splitSql()} AS split,
-         |             len(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |                             w -> w <> '')) AS n
+         |             len(${tokensSql("text")}) AS n
          |      FROM documents)
          |GROUP BY split
          |ORDER BY split""".stripMargin,
@@ -2499,10 +2444,9 @@ object PipelinePack extends QueryPack {
     // same integer weight rule (1 + srcnum mod 10), budget 3× corpus,
     // floor/ceil division (// is DuckDB integer division)
     "q132_token_budget" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT source,
-        |         CAST(sum(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |                                  w -> w <> ''))) AS BIGINT) AS n_tokens,
+        |         CAST(sum(len(${tokensSql("text")})) AS BIGINT) AS n_tokens,
         |         CAST(substring(source, 4) AS BIGINT) % 10 + 1 AS w
         |  FROM documents GROUP BY source),
         |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
@@ -2536,11 +2480,10 @@ object PipelinePack extends QueryPack {
         |ORDER BY lang""".stripMargin,
 
     "q75_mixture_weights" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT lang,
         |         CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(sum(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |                                  w -> w <> ''))) AS BIGINT) AS n_tokens
+        |         CAST(sum(len(${tokensSql("text")})) AS BIGINT) AS n_tokens
         |  FROM documents GROUP BY lang),
         |tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total_docs FROM per)
         |SELECT lang, n_docs, n_tokens,
@@ -2556,8 +2499,8 @@ object PipelinePack extends QueryPack {
 
     // same ordered edge construction and wedge-close joins
     "q118_triangle_count" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+      s"""WITH toks AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS ts
         |  FROM documents),
         |bgp AS (
         |  SELECT DISTINCT doc_id, least(ts[g.i], ts[g.i + 1]) AS a, greatest(ts[g.i], ts[g.i + 1]) AS b
@@ -2598,7 +2541,7 @@ object PipelinePack extends QueryPack {
            |        WHERE s.support >= 2)""".stripMargin
       }.mkString(",\n")
       s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '') AS ts
+         |  SELECT doc_id, ${tokensSql("text")} AS ts
          |  FROM documents),
          |bgp AS (
          |  SELECT DISTINCT doc_id, least(ts[g.i], ts[g.i + 1]) AS a, greatest(ts[g.i], ts[g.i + 1]) AS b
@@ -2619,7 +2562,7 @@ object PipelinePack extends QueryPack {
     "q383_link_prediction" ->
       s"""WITH ${DedupPack.ngramPairsCtes},
          |tg AS (SELECT doc_i, doc_j,
-         |              CAST('0x' || substring(md5(CAST(doc_i AS VARCHAR) || ':' || CAST(doc_j AS VARCHAR)), 1, 15) AS BIGINT) % 5 AS h
+         |              ${hex64Sql("md5(CAST(doc_i AS VARCHAR) || ':' || CAST(doc_j AS VARCHAR))")} % 5 AS h
          |       FROM pairs),
          |train AS (SELECT doc_i, doc_j FROM tg WHERE h <> 0),
          |probe AS (SELECT doc_i, doc_j FROM tg WHERE h = 0),
@@ -2646,8 +2589,8 @@ object PipelinePack extends QueryPack {
          |ORDER BY t""".stripMargin,
 
     "q328_clustering_coeff" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+      s"""WITH toks AS (
+        |  SELECT doc_id, ${tokensSql("text")} AS ts
         |  FROM documents),
         |bgp AS (
         |  SELECT DISTINCT doc_id, least(ts[g.i], ts[g.i + 1]) AS a, greatest(ts[g.i], ts[g.i + 1]) AS b
@@ -2693,10 +2636,9 @@ object PipelinePack extends QueryPack {
     // same per-source prefix sum, chunk-range unnest, and clipped
     // overlap arithmetic — all integral
     "q116_seq_pack" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT source, doc_id,
-        |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |                              w -> w <> '')) AS BIGINT) AS n
+        |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n
         |  FROM documents),
         |cum AS (
         |  SELECT source, doc_id, n,
@@ -2718,9 +2660,9 @@ object PipelinePack extends QueryPack {
 
     // same hash-derived uniform, same double arithmetic order
     "q124_priority_sample" ->
-      """WITH h AS (
+      s"""WITH h AS (
         |  SELECT source, doc_id, n_chars,
-        |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':ps1'), 1, 15) AS BIGINT) + 1 AS hv
+        |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR) || ':ps1')")} + 1 AS hv
         |  FROM documents),
         |p AS (
         |  SELECT source, doc_id, n_chars,
@@ -2734,9 +2676,9 @@ object PipelinePack extends QueryPack {
         |ORDER BY source, rk""".stripMargin,
 
     "q66_sample_stratified" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, lang,
-        |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':mix1'), 1, 15) AS BIGINT) % 100 AS bucket
+        |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR) || ':mix1')")} % 100 AS bucket
         |  FROM documents)
         |SELECT doc_id, lang, bucket
         |FROM t
@@ -2786,9 +2728,9 @@ object PipelinePack extends QueryPack {
 
     // same hash text, same max-then-min-shard argmax
     "q300_rendezvous_shards" ->
-      """WITH ex AS (
+      s"""WITH ex AS (
         |  SELECT doc_id, g.sh AS sh,
-        |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':shard:' || CAST(g.sh AS VARCHAR)), 1, 15) AS BIGINT) AS h
+        |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR) || ':shard:' || CAST(g.sh AS VARCHAR))")} AS h
         |  FROM documents, UNNEST(generate_series(0, 19)) AS g(sh)),
         |m16 AS (SELECT doc_id, max(h) AS m FROM ex WHERE sh < 16 GROUP BY doc_id),
         |a16 AS (SELECT e.doc_id, min(e.sh) AS s16
@@ -2808,12 +2750,10 @@ object PipelinePack extends QueryPack {
     // same gate predicates (q65), same survivor-only keeper set, same
     // 5-row suffix-sum funnel
     "q287_filter_funnel" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, n_chars, md5(text) AS h,
-        |         len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |             w -> w <> '')) AS n_tokens,
-        |         len(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |             w -> w <> ''))) AS n_distinct
+        |         len(${tokensSql("text")}) AS n_tokens,
+        |         len(list_distinct(${tokensSql("text")})) AS n_distinct
         |  FROM documents),
         |f AS (
         |  SELECT doc_id, h, n_tokens,
@@ -2848,12 +2788,10 @@ object PipelinePack extends QueryPack {
         |ORDER BY stage""".stripMargin,
 
     "q65_quality_gate" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, n_chars,
-        |         len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |             w -> w <> '')) AS n_tokens,
-        |         len(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |             w -> w <> ''))) AS n_distinct
+        |         len(${tokensSql("text")}) AS n_tokens,
+        |         len(list_distinct(${tokensSql("text")})) AS n_distinct
         |  FROM documents)
         |SELECT doc_id,
         |       CAST(n_tokens AS BIGINT) AS n_tokens,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
 import graft.core.Pin.{materialized, warmed}
 import graft.core.Tables.views
+import graft.functions.TextFunctions.hex64Sql
 import graft.functions.VectorFunctions
 
 /** Third relational wave: correlated EXISTS/NOT EXISTS, vector explode
@@ -1139,7 +1140,7 @@ object RelationalPack3 extends QueryPack {
   private def kmvEdgeSql(edge: String, tableA: String, keyA: String,
                          tableB: String, keyB: String): String = {
     def hcte(t: String, k: String) =
-      s"SELECT DISTINCT CAST('0x' || substring(md5('jk:' || CAST($k AS VARCHAR)), 1, 15) AS BIGINT) AS h FROM $t"
+      s"SELECT DISTINCT ${hex64Sql(s"md5('jk:' || CAST($k AS VARCHAR))")} AS h FROM $t"
     def est(tail: String) =
       s"CAST(floor((255.0 * 1152921504606846976.0) / CAST(($tail) AS DOUBLE)) AS BIGINT)"
     s"""(WITH ha AS MATERIALIZED (${hcte(tableA, keyA)}),
@@ -1203,7 +1204,7 @@ object RelationalPack3 extends QueryPack {
            |                   CAST(SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero
            |            FROM $regsCte GROUP BY $keyCols) s0) e0""".stripMargin
       s"""WITH vals AS (SELECT DISTINCT event_type AS grp, CAST(user_id AS VARCHAR) AS key FROM events),
-         |hashed AS (SELECT DISTINCT grp, CAST('0x' || substring(md5(key), 1, 15) AS BIGINT) AS h FROM vals),
+         |hashed AS (SELECT DISTINCT grp, ${hex64Sql("md5(key)")} AS h FROM vals),
          |rhos AS (SELECT grp, h % 256 AS idx,
          |                CASE WHEN (h >> 8) = 0 THEN 53 ELSE 53 - length(bin(h >> 8)) END AS rho
          |         FROM hashed),
@@ -1409,10 +1410,10 @@ object RelationalPack3 extends QueryPack {
     // '0', so the rest=0 case is explicit), then the identical int64
     // fixed-point estimate chain
     "q149_hll_registers" ->
-      """WITH vals AS (
+      s"""WITH vals AS (
         |  SELECT l_returnflag AS grp, CAST(l_orderkey AS VARCHAR) AS key FROM lineitem),
         |hashed AS (
-        |  SELECT DISTINCT grp, CAST('0x' || substring(md5(key), 1, 15) AS BIGINT) AS h
+        |  SELECT DISTINCT grp, ${hex64Sql("md5(key)")} AS h
         |  FROM vals),
         |rhos AS (
         |  SELECT grp, h % 256 AS idx,
@@ -1616,13 +1617,13 @@ object RelationalPack3 extends QueryPack {
     // the max-merge identity, which is exactly what the Spark side's
     // merge_exact column asserts
     "q153_hll_rollup" ->
-      """WITH vals AS (
+      s"""WITH vals AS (
         |  SELECT event_type AS grp,
         |         epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day_id,
         |         CAST(user_id AS VARCHAR) AS key
         |  FROM events),
         |hashed AS (
-        |  SELECT DISTINCT grp, CAST('0x' || substring(md5(key), 1, 15) AS BIGINT) AS h
+        |  SELECT DISTINCT grp, ${hex64Sql("md5(key)")} AS h
         |  FROM vals),
         |rhos AS (
         |  SELECT grp, h % 256 AS idx,

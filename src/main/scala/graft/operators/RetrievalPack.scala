@@ -527,15 +527,9 @@ object RetrievalPack extends QueryPack {
       .filter(col("doc_rank") <= 10)
   }
 
-  private val duckToks =
-    """SELECT doc_id,
-      |       list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-      |                   w -> w <> '') AS ts
-      |FROM documents""".stripMargin
-
   /** Shared oracle CTE prefix mirroring [[retrievalBase]]. */
   private def retrievalBaseCtes: String =
-    s"""tok AS ($duckToks),
+    s"""tok AS (${DedupPack.duckToks}),
        |tf0 AS (SELECT doc_id, unnest(ts) AS w FROM tok),
        |tf AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cnt FROM tf0 GROUP BY doc_id, w),
        |dl AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
@@ -591,10 +585,9 @@ object RetrievalPack extends QueryPack {
     // Spark side's map-only array transform) — agreement is evidence the
     // adjacency semantics match, not just the arithmetic
     "q185_phrase_search" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id,
-        |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-        |                     w -> w <> '') AS t
+        |         ${tokensSql("text")} AS t
         |  FROM documents),
         |pos AS (
         |  SELECT doc_id, unnest(t) AS w, unnest(generate_series(1, len(t))) AS p
@@ -638,8 +631,7 @@ object RetrievalPack extends QueryPack {
           s"(CAST($df AS DOUBLE) + 0.5) + 1.0) * 1e6) AS BIGINT)"
       s"""WITH tok AS (
          |  SELECT doc_id, doc_id % $dm = $dr AS is_delta,
-         |         list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'),
-         |                     w -> w <> '') AS ts
+         |         ${tokensSql("text")} AS ts
          |  FROM documents),
          |tf AS (SELECT doc_id, is_delta, w, CAST(count(*) AS BIGINT) AS cnt
          |       FROM (SELECT doc_id, is_delta, unnest(ts) AS w FROM tok)
@@ -707,12 +699,12 @@ object RetrievalPack extends QueryPack {
          |ORDER BY q_rank""".stripMargin,
 
     "q164_winnow_fingerprint" ->
-      s"""WITH tok AS ($duckToks),
+      s"""WITH tok AS (${DedupPack.duckToks}),
          |g0 AS (SELECT doc_id, CAST(g.i AS INT) AS p,
          |              ts[g.i] || ' ' || ts[g.i + 1] || ' ' || ts[g.i + 2] || ' ' || ts[g.i + 3] AS s
          |       FROM tok, UNNEST(generate_series(1, len(ts) - 3)) AS g(i)
          |       WHERE len(ts) >= 4),
-         |grams AS (SELECT doc_id, p, CAST('0x' || substring(md5(s), 1, 15) AS BIGINT) AS h FROM g0),
+         |grams AS (SELECT doc_id, p, ${hex64Sql("md5(s)")} AS h FROM g0),
          |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams FROM grams GROUP BY doc_id),
          |win AS (SELECT doc_id, p, h,
          |               min(h) OVER (PARTITION BY doc_id ORDER BY p

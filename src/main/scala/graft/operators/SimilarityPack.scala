@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
 import graft.core.Pin.{checkpointed, materialized, warmed}
+import graft.functions.TextFunctions.{hex64Sql, tokensSql}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -3245,7 +3246,7 @@ object SimilarityPack extends QueryPack {
   private def mmrOracle: String = {
     s"""WITH ce AS MATERIALIZED (SELECT q_id, vec_id, score_q FROM ($ceRerankOracle) t),
        |tok AS (SELECT doc_id,
-       |               unnest(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> ''))) AS w
+       |               unnest(list_distinct(${tokensSql("text")})) AS w
        |        FROM documents
        |        WHERE doc_id IN (SELECT vec_id FROM ce)),
        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok FROM tok GROUP BY doc_id),
@@ -3294,7 +3295,7 @@ object SimilarityPack extends QueryPack {
     s"""WITH sl AS MATERIALIZED (SELECT q_id, vec_id, CAST(rk AS INT) AS rk_ann
        |            FROM ${baseSub("q103_ann_ivfpq")} t),
        |tok AS (SELECT doc_id,
-       |               unnest(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> ''))) AS w
+       |               unnest(list_distinct(${tokensSql("text")})) AS w
        |        FROM documents
        |        WHERE doc_id IN (SELECT q_id FROM sl UNION SELECT vec_id FROM sl)),
        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok FROM tok GROUP BY doc_id),
@@ -3459,7 +3460,7 @@ object SimilarityPack extends QueryPack {
        |${pfx}kp AS (SELECT 1 << (($ladder + 1) // 2) AS k),
        |${pfx}np AS (SELECT GREATEST(2, k // 2) AS nprobe FROM ${pfx}kp),
        |${pfx}hashed AS (SELECT vec_id, q,
-       |                  CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+       |                  ${hex64Sql("md5(CAST(vec_id AS VARCHAR))")} AS h
        |           FROM ${pfx}scored),
        |${pfx}seeds AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) AS INT) AS cell, q AS cq
        |          FROM ${pfx}hashed
@@ -3503,7 +3504,7 @@ object SimilarityPack extends QueryPack {
          |sub AS (SELECT vec_id, CAST(g.m AS INT) AS m,
          |               q[(g.m * $pqSubDim + 1):((g.m + 1) * $pqSubDim)] AS sq
          |        FROM vecs, UNNEST(generate_series(0, ${pqM - 1})) AS g(m)),
-         |hashed AS (SELECT *, CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+         |hashed AS (SELECT *, ${hex64Sql("md5(CAST(vec_id AS VARCHAR))")} AS h
          |           FROM sub),
          |tvec AS (SELECT vec_id FROM (SELECT DISTINCT vec_id, h FROM hashed) hv
          |         QUALIFY row_number() OVER (ORDER BY h, vec_id) <= $pqTrainCap),
@@ -3857,7 +3858,7 @@ object SimilarityPack extends QueryPack {
          |mem AS MATERIALIZED (
          |  SELECT a.vec_id, a.q, a.norm, a.cell_old AS cell
          |  FROM aug a JOIN flags f ON a.cell_old = f.cell),
-         |mh AS (SELECT *, CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+         |mh AS (SELECT *, ${hex64Sql("md5(CAST(vec_id AS VARCHAR))")} AS h
          |       FROM mem),
          |sseed AS (SELECT cell,
          |                 CAST(row_number() OVER (PARTITION BY cell ORDER BY h, vec_id) - 1 AS INT) AS sub,
@@ -3884,7 +3885,7 @@ object SimilarityPack extends QueryPack {
       s"""WITH qv AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM embeddings),
          |lab AS (SELECT e.vec_id, d.source, e.q
          |        FROM qv e JOIN documents d ON e.vec_id = d.doc_id),
-         |hh AS (SELECT *, CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+         |hh AS (SELECT *, ${hex64Sql("md5(CAST(vec_id AS VARCHAR))")} AS h
          |       FROM lab),
          |panel AS MATERIALIZED (
          |  SELECT source, vec_id, q FROM hh
@@ -3927,7 +3928,7 @@ object SimilarityPack extends QueryPack {
       s"""WITH qv AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM embeddings),
          |lab AS (SELECT e.vec_id, d.source, e.q
          |        FROM qv e JOIN documents d ON e.vec_id = d.doc_id),
-         |hh AS (SELECT *, CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+         |hh AS (SELECT *, ${hex64Sql("md5(CAST(vec_id AS VARCHAR))")} AS h
          |       FROM lab),
          |panel AS MATERIALIZED (
          |  SELECT source, vec_id, q FROM hh
@@ -3992,12 +3993,12 @@ object SimilarityPack extends QueryPack {
       val r = 16
       s"""WITH vecs AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM embeddings),
          |hashed AS (SELECT vec_id, q,
-         |                  CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+         |                  ${hex64Sql("md5(CAST(vec_id AS VARCHAR))")} AS h
          |           FROM vecs),
          |panel AS (SELECT vec_id, q FROM hashed
          |          QUALIFY row_number() OVER (ORDER BY h, vec_id) <= 32),
          |signs AS (SELECT CAST(i.i AS INT) AS i, CAST(j.j AS INT) AS j,
-         |                 CASE WHEN CAST('0x' || substring(md5('jl_' || CAST(j.j AS VARCHAR) || '_' || CAST(i.i AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 0
+         |                 CASE WHEN ${hex64Sql("md5('jl_' || CAST(j.j AS VARCHAR) || '_' || CAST(i.i AS VARCHAR))")} % 2 = 0
          |                      THEN 1 ELSE -1 END AS sgn
          |          FROM UNNEST(generate_series(1, $r)) AS j(j),
          |               UNNEST(generate_series(1, $dim)) AS i(i)),
@@ -4171,7 +4172,7 @@ object SimilarityPack extends QueryPack {
         .mkString("\n")
       s"""WITH vecs AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM embeddings),
          |h AS (SELECT vec_id, q,
-         |             CAST('0x' || substring(md5('kc_' || CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS hh
+         |             ${hex64Sql("md5('kc_' || CAST(vec_id AS VARCHAR))")} AS hh
          |      FROM vecs),
          |c1 AS (SELECT vec_id, q FROM h ORDER BY hh, vec_id LIMIT 1),
          |d1 AS (SELECT v.vec_id, v.q, ${dist2("v.q", "c.q")} AS dmin FROM vecs v, c1 c),

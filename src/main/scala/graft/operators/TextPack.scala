@@ -283,8 +283,8 @@ object TextPack extends QueryPack {
     * q128 oracles. No trailing comma.
     */
   private val nbOracleCtes: String =
-    """toks AS (
-      |  SELECT doc_id, lang, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+    s"""toks AS (
+      |  SELECT doc_id, lang, ${tokensSql("text")} AS ts
       |  FROM documents),
       |train AS (SELECT * FROM toks WHERE doc_id % 5 <> 0),
       |held AS (SELECT * FROM toks WHERE doc_id % 5 = 0),
@@ -2235,7 +2235,7 @@ object TextPack extends QueryPack {
          |        FROM $src, b$r b)""".stripMargin
     }.mkString(",\n")
     s"""tok AS (
-       |  SELECT doc_id, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS w
+       |  SELECT doc_id, unnest(${tokensSql("text")}) AS w
        |  FROM documents),
        |words AS (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY w),
        |s0 AS (SELECT w, ' ' || array_to_string(regexp_extract_all(w, '.'), ' ') || ' ' AS symstr, cnt
@@ -2251,7 +2251,7 @@ object TextPack extends QueryPack {
       .mkString(", ")
     s"""WITH toks AS (
        |  SELECT doc_id, lang,
-       |         list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS tset
+       |         list_distinct(${tokensSql("text")}) AS tset
        |  FROM documents),
        |profiles(cand_lang, profile) AS (VALUES $profileValues),
        |scored AS (
@@ -2295,8 +2295,8 @@ object TextPack extends QueryPack {
 
       // same (doc, term) counts and exact-integer VMR, same support floor
       "q313_term_burstiness" ->
-        """WITH tok AS (
-          |  SELECT doc_id, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT doc_id, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |nd AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents),
           |dc AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
@@ -2313,8 +2313,8 @@ object TextPack extends QueryPack {
 
       // same per-term-quantized KL-contribution scoring, same top-3 rank
       "q314_source_keywords" ->
-        """WITH tok AS (
-          |  SELECT source, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT source, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |sw AS (SELECT source, w, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
           |st AS (SELECT source, CAST(sum(tf) AS BIGINT) AS n_s FROM sw GROUP BY 1),
@@ -2337,8 +2337,8 @@ object TextPack extends QueryPack {
 
       // same (source, token) counts, hapax = count-1 vocabulary slice
       "q311_hapax_ratio" ->
-        """WITH tok AS (
-          |  SELECT source, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT source, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |wc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2)
           |SELECT source,
@@ -2352,8 +2352,8 @@ object TextPack extends QueryPack {
       // same trigram-shingle vocabulary (the q367 w=3 construction),
       // same roll-up, same exact milli floor-division r*
       "q372_good_turing" ->
-        """WITH tok AS (
-          |  SELECT source, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH tok AS (
+          |  SELECT source, ${tokensSql("text")} AS ts
           |  FROM documents),
           |sh AS (
           |  SELECT source, array_to_string(ts[g.i:g.i+2], ' ') AS w
@@ -2379,8 +2379,8 @@ object TextPack extends QueryPack {
       // same (source, token) counts, same exact power sums and the
       // identical single-division K text
       "q398_yules_k" ->
-        """WITH tok AS (
-          |  SELECT source, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT source, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |wc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
           |agg AS (
@@ -2419,9 +2419,9 @@ object TextPack extends QueryPack {
       // (class, token, fold) cube; same Laplace qln scoring and
       // (score desc, lang) argmax as the q120 oracle
       "q376_nb_cv_kfold" ->
-        """WITH toks AS (
+        s"""WITH toks AS (
           |  SELECT doc_id, doc_id % 5 AS fold, lang,
-          |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+          |         ${tokensSql("text")} AS ts
           |  FROM documents),
           |tw AS (SELECT fold, lang, unnest(ts) AS w FROM toks),
           |clwa AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS c_all FROM tw GROUP BY 1, 2),
@@ -2493,8 +2493,8 @@ object TextPack extends QueryPack {
       // same double-sqrt c^0.75 micro weights; the oracle's vocabulary
       // window replays the distributed prefix scan
       "q373_neg_sampling" ->
-        """WITH tok AS (
-          |  SELECT unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |wc AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1),
           |wg AS (SELECT w, c,
@@ -2516,7 +2516,7 @@ object TextPack extends QueryPack {
       // quantization and least-squares text as q210
       "q312_heaps_fit" ->
         s"""WITH tok AS (
-           |  SELECT source, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS w
+           |  SELECT source, unnest(${tokensSql("text")}) AS w
            |  FROM documents),
            |wc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2),
            |per AS (SELECT source, CAST(sum(c) AS BIGINT) AS nt, CAST(count(*) AS BIGINT) AS nv
@@ -2533,8 +2533,8 @@ object TextPack extends QueryPack {
 
       // same bigram counts, context roll-up and per-term ln quantization
       "q281_bigram_entropy_rate" ->
-        """WITH tok AS (
-          |  SELECT source, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH tok AS (
+          |  SELECT source, ${tokensSql("text")} AS ts
           |  FROM documents),
           |bg AS (SELECT source, ts[g.i] AS w1, ts[g.i] || ' ' || ts[g.i + 1] AS b
           |       FROM tok, UNNEST(generate_series(1, greatest(len(ts) - 1, 0))) AS g(i)),
@@ -2555,13 +2555,13 @@ object TextPack extends QueryPack {
       // same length-difference counters; RE2 classes match the Java ones
       // on the ASCII corpus (see QueryPack tokenization caveat)
       "q277_charset_profile" ->
-        """WITH c AS (
+        s"""WITH c AS (
           |  SELECT source,
           |         length(text) AS nc,
           |         length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS nd,
           |         length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS nu,
-          |         length(text) - length(regexp_replace(text, '\s', '', 'g')) AS nw,
-          |         length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS np
+          |         length(text) - length(regexp_replace(text, '\\s', '', 'g')) AS nw,
+          |         length(text) - length(${stripPunctSql("text")}) AS np
           |  FROM documents)
           |SELECT source,
           |       CAST(count(*) AS BIGINT) AS n_docs,
@@ -2577,8 +2577,8 @@ object TextPack extends QueryPack {
       // same vowel-group proxy per unnested token, same ≥1 floor and
       // ≥3 polysyllable rule
       "q272_reading_level" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, ${tokensSql("text")} AS ts
           |  FROM documents),
           |w AS (SELECT doc_id, greatest(len(regexp_extract_all(unnest(ts), '[aeiouAEIOU]+')), 1) AS sy
           |      FROM toks WHERE len(ts) > 0)
@@ -2602,7 +2602,7 @@ object TextPack extends QueryPack {
            |            FROM pred),
            |rep AS (
            |  SELECT doc_id, correct, g.r,
-           |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':lb' || CAST(g.r AS VARCHAR)), 1, 15) AS BIGINT) AS h
+           |         ${hex64Sql("md5(CAST(doc_id AS VARCHAR) || ':lb' || CAST(g.r AS VARCHAR))")} AS h
            |  FROM pred, UNNEST(generate_series(0, 31)) AS g(r)),
            |wtd AS (
            |  SELECT r, correct,
@@ -2636,9 +2636,9 @@ object TextPack extends QueryPack {
       // single-node row_number() windows stand in for the distributed
       // PrefixSum ranks; same integer RRF arithmetic
       "q162_rrf_fusion" ->
-        """WITH base AS (
+        s"""WITH base AS (
           |  SELECT doc_id, n_chars,
-          |         CAST(len(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> ''))) AS BIGINT) AS n_distinct
+          |         CAST(len(list_distinct(${tokensSql("text")})) AS BIGINT) AS n_distinct
           |  FROM documents),
           |r AS (
           |  SELECT doc_id, n_chars, n_distinct,
@@ -2654,10 +2654,10 @@ object TextPack extends QueryPack {
       // same directed scaled numerators, same per-term qln, assembled
       // per unordered pair
       "q347_js_divergence" ->
-        """WITH sw AS (
+        s"""WITH sw AS (
           |  SELECT source, w, CAST(count(*) AS BIGINT) AS c
           |  FROM (SELECT source,
-          |               unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), x -> x <> '')) AS w
+          |               unnest(list_filter(string_split_regex(${stripPunctSql("text")}, '\\s+'), x -> x <> '')) AS w
           |        FROM documents)
           |  GROUP BY 1, 2),
           |ns AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM sw GROUP BY 1),
@@ -2686,10 +2686,10 @@ object TextPack extends QueryPack {
       // same top-200 (cf desc, word) vocabulary, exact integer dot and
       // norms, identical sqrt·sqrt divide
       "q336_source_term_cosine" ->
-        """WITH sw AS (
+        s"""WITH sw AS (
           |  SELECT source, w, CAST(count(*) AS BIGINT) AS c
           |  FROM (SELECT source,
-          |               unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), x -> x <> '')) AS w
+          |               unnest(list_filter(string_split_regex(${stripPunctSql("text")}, '\\s+'), x -> x <> '')) AS w
           |        FROM documents)
           |  GROUP BY 1, 2),
           |top AS (
@@ -2710,10 +2710,10 @@ object TextPack extends QueryPack {
           |ORDER BY source_a, source_b""".stripMargin,
 
       "q61_quality_score" ->
-        """WITH base AS (
+        s"""WITH base AS (
           |  SELECT doc_id, text,
-          |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS toks,
-          |         list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS tset
+          |         ${tokensSql("text")} AS toks,
+          |         list_distinct(${tokensSql("text")}) AS tset
           |  FROM documents),
           |m AS (
           |  SELECT doc_id,
@@ -2721,9 +2721,9 @@ object TextPack extends QueryPack {
           |    CAST(length(toks) AS BIGINT) AS n_tokens,
           |    CAST(length(tset) AS BIGINT) AS n_distinct,
           |    CAST(length(tset) AS DOUBLE) / CAST(length(toks) AS DOUBLE) AS ttr,
-          |    CAST(length(regexp_replace(regexp_replace(text, '[^\w\s]', '', 'g'), '\s', '', 'g')) AS DOUBLE) /
+          |    CAST(length(regexp_replace(${stripPunctSql("text")}, '\\s', '', 'g')) AS DOUBLE) /
           |      CAST(length(toks) AS DOUBLE) AS avg_token_len,
-          |    CAST(length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS DOUBLE) /
+          |    CAST(length(text) - length(${stripPunctSql("text")}) AS DOUBLE) /
           |      CAST(length(text) AS DOUBLE) AS punct_ratio,
           |    CAST(length(list_intersect(tset, ['the','a'])) AS DOUBLE) /
           |      CAST(length(tset) AS DOUBLE) AS stopword_hit_ratio
@@ -2736,9 +2736,9 @@ object TextPack extends QueryPack {
       // plain windowed cumsum here — the oracle runs single-node anyway;
       // HUGEINT sums cast back to BIGINT
       "q126_vocab_coverage" ->
-        """WITH tok AS (
+        s"""WITH tok AS (
           |  SELECT doc_id,
-          |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+          |         ${tokensSql("text")} AS ts
           |  FROM documents),
           |c AS (SELECT w, CAST(count(*) AS BIGINT) AS c
           |      FROM (SELECT unnest(ts) AS w FROM tok) GROUP BY w),
@@ -2759,9 +2759,9 @@ object TextPack extends QueryPack {
 
       // same step-sequence starts, 1-based inclusive slice, tail filter
       "q125_chunk_overlap" ->
-        """WITH tok AS (
+        s"""WITH tok AS (
           |  SELECT doc_id,
-          |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+          |         ${tokensSql("text")} AS ts
           |  FROM documents),
           |st AS (
           |  SELECT doc_id, ts, g.st
@@ -2774,22 +2774,22 @@ object TextPack extends QueryPack {
           |  FROM st)
           |SELECT doc_id, chunk_idx, start_pos,
           |       CAST(len(chunk) AS BIGINT) AS n_chunk_toks,
-          |       CAST('0x' || substring(md5(array_to_string(chunk, ' ')), 1, 15) AS BIGINT) AS chunk_hash
+          |       ${hex64Sql("md5(array_to_string(chunk, ' '))")} AS chunk_hash
           |FROM ch WHERE len(chunk) >= 16
           |ORDER BY doc_id, chunk_idx""".stripMargin,
 
       "q62_token_stats" ->
-        """SELECT doc_id, n_chars,
-          |  CAST(length(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS BIGINT) AS n_tokens,
-          |  CAST(length(list_distinct(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> ''))) AS BIGINT) AS n_distinct,
-          |  CAST(length(list_filter(string_split_regex(text, '\s+'), w -> w <> '')) AS BIGINT) AS n_ws_tokens,
+        s"""SELECT doc_id, n_chars,
+          |  CAST(length(${tokensSql("text")}) AS BIGINT) AS n_tokens,
+          |  CAST(length(list_distinct(${tokensSql("text")})) AS BIGINT) AS n_distinct,
+          |  CAST(length(${whitespaceSplitSql("text")}) AS BIGINT) AS n_ws_tokens,
           |  CAST(length(regexp_extract_all(text, '[bcdfghjklmnpqrstvwxyz]*[aeiou]+')) AS BIGINT) AS n_subwords
           |FROM documents
           |ORDER BY doc_id""".stripMargin,
 
       "q67_top_tokens_native" ->
-        """WITH tok AS (
-          |  SELECT lang, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT lang, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |counts AS (SELECT lang, w, count(*) AS cnt FROM tok GROUP BY lang, w),
           |ranked AS (SELECT lang, w, cnt,
@@ -2800,8 +2800,8 @@ object TextPack extends QueryPack {
           |ORDER BY lang, rk""".stripMargin,
 
       "q64_top_tokens" ->
-        """WITH tok AS (
-          |  SELECT lang, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT lang, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |counts AS (SELECT lang, w, count(*) AS cnt FROM tok GROUP BY lang, w),
           |ranked AS (SELECT lang, w, cnt,
@@ -2813,8 +2813,8 @@ object TextPack extends QueryPack {
 
       // exact-regime sketch == exact top-k, so the oracle is q67's
       "q69_top_tokens_sketch" ->
-        """WITH tok AS (
-          |  SELECT lang, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT lang, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |counts AS (SELECT lang, w, count(*) AS cnt FROM tok GROUP BY lang, w),
           |ranked AS (SELECT lang, w, cnt,
@@ -2869,7 +2869,7 @@ object TextPack extends QueryPack {
         val em = (1 to maxLen).map(r => s"SELECT piece, cnt FROM t$r")
           .mkString("\n  UNION ALL ")
         s"""WITH tok AS (
-           |  SELECT unnest(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS w
+           |  SELECT unnest(${tokensSql("text")}) AS w
            |  FROM documents),
            |words AS MATERIALIZED (
            |  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM tok
@@ -2925,14 +2925,14 @@ object TextPack extends QueryPack {
       // identical hashed uni+bigram buckets, identical per-term floors,
       // identical integer ceil-division selection threshold
       "q150_dsir_importance" ->
-        """WITH toks AS (
-          |  SELECT doc_id, source, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, source, ${tokensSql("text")} AS ts
           |  FROM documents),
           |uni AS (SELECT doc_id, source, unnest(ts) AS f FROM toks),
           |bi AS (SELECT doc_id, source, ts[g.i] || ' ' || ts[g.i + 1] AS f
           |       FROM toks, UNNEST(generate_series(1, greatest(len(ts) - 1, 0))) AS g(i)),
           |feats AS (SELECT doc_id, source,
-          |                 CAST('0x' || substring(md5(f), 1, 15) AS BIGINT) % 1024 AS b
+          |                 ${hex64Sql("md5(f)")} % 1024 AS b
           |          FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
           |dbc AS (SELECT doc_id, source, b, CAST(count(*) AS BIGINT) AS c
           |        FROM feats GROUP BY 1, 2, 3),
@@ -2960,8 +2960,8 @@ object TextPack extends QueryPack {
       // identical (doc, bigram) / corpus-count construction, identical
       // per-term floors
       "q117_bigram_lm" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, ${tokensSql("text")} AS ts
           |  FROM documents),
           |bg AS (
           |  SELECT doc_id, ts[g.i] || ' ' || ts[g.i + 1] AS bg
@@ -2986,8 +2986,8 @@ object TextPack extends QueryPack {
       // (numerator of the average is nonnegative, so DuckDB's floor //
       // equals Spark's truncating div)
       "q254_perplexity_filter" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, ${tokensSql("text")} AS ts
           |  FROM documents),
           |bg AS (
           |  SELECT doc_id, ts[g.i] || ' ' || ts[g.i + 1] AS bg
@@ -3027,9 +3027,8 @@ object TextPack extends QueryPack {
 
       // identical distinct-value cumulation and per-side floor division
       "q196_gini_stump" ->
-        """WITH base AS (
-          |  SELECT CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n,
+        s"""WITH base AS (
+          |  SELECT CAST(len(${tokensSql("text")}) AS BIGINT) AS n,
           |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
           |  FROM documents),
           |vals AS (SELECT n, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(pos) AS BIGINT) AS p
@@ -3056,9 +3055,8 @@ object TextPack extends QueryPack {
 
       // identical distinct-value histogram and ×2-integer rank-sum
       "q197_roc_auc" ->
-        """WITH base AS (
-          |  SELECT CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n,
+        s"""WITH base AS (
+          |  SELECT CAST(len(${tokensSql("text")}) AS BIGINT) AS n,
           |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
           |  FROM documents),
           |vals AS (SELECT n, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(pos) AS BIGINT) AS p
@@ -3078,9 +3076,8 @@ object TextPack extends QueryPack {
       // and ppm-composed F1 with the same formula text (window sums
       // cast to BIGINT immediately — the q196 type lesson)
       "q227_pr_curve" ->
-        """WITH base AS (
-          |  SELECT CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n,
+        s"""WITH base AS (
+          |  SELECT CAST(len(${tokensSql("text")}) AS BIGINT) AS n,
           |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
           |  FROM documents),
           |vals AS (SELECT n, CAST(count(*) AS BIGINT) AS cnt, CAST(sum(pos) AS BIGINT) AS p
@@ -3110,13 +3107,12 @@ object TextPack extends QueryPack {
       // ids, same exact distinct counts per n
       "q245_ngram_novelty" -> {
         val tokCte =
-          """SELECT doc_id,
-            |       list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-            |                   w -> w <> '') AS ts
+          s"""SELECT doc_id,
+            |       ${tokensSql("text")} AS ts
             |FROM documents""".stripMargin
         val arms = (1 to 4).map { n =>
           val gram = (1 to n).map(o => s"ts[g.i + ${o - 1}]").mkString(" || ' ' || ")
-          val gid = s"CAST('0x' || substring(md5($gram), 1, 15) AS BIGINT)"
+          val gid = hex64Sql(s"md5($gram)")
           s"""SELECT CAST($n AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_total,
              |       CAST(count(DISTINCT $gid) AS BIGINT) AS n_distinct,
              |       CAST((1000000 * count(DISTINCT $gid)) // count(*) AS BIGINT) AS distinct_ppm
@@ -3129,10 +3125,9 @@ object TextPack extends QueryPack {
       // identical per-source length histogram, token-mass cumulation,
       // and min-CASE threshold picks (window sums cast immediately)
       "q236_weighted_median" ->
-        """WITH t AS (
+        s"""WITH t AS (
           |  SELECT source,
-          |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n
+          |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n
           |  FROM documents),
           |vals AS (SELECT source, n, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY 1, 2),
           |w AS (SELECT source, n, n * cnt AS wt FROM vals),
@@ -3151,10 +3146,9 @@ object TextPack extends QueryPack {
       // ceil(W·p/1000) in the identical integer arithmetic, cumulated
       // over the per-source distinct-length histogram (q171 discipline)
       "q201_quantile_sketch" ->
-        """WITH t AS (
+        s"""WITH t AS (
           |  SELECT source,
-          |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n
+          |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n
           |  FROM documents),
           |vals AS (SELECT source, n, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY 1, 2),
           |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS w FROM vals GROUP BY 1),
@@ -3174,10 +3168,9 @@ object TextPack extends QueryPack {
       // q201's exact nearest-rank cutoffs (the sketch's exact regime)
       // replayed, then the identical <=-cutoff bin assignment
       "q212_quantile_binning" ->
-        """WITH t AS (
+        s"""WITH t AS (
           |  SELECT source,
-          |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n
+          |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n
           |  FROM documents),
           |vals AS (SELECT source, n, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY 1, 2),
           |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS w FROM vals GROUP BY 1),
@@ -3209,7 +3202,7 @@ object TextPack extends QueryPack {
       // SAME regression-ratio expression strings Spark evaluates
       "q210_zipf_fit" ->
         s"""WITH tok AS (
-           |  SELECT unnest(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS w
+           |  SELECT unnest(${tokensSql("text")}) AS w
            |  FROM documents),
            |wc AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY w
            |       ORDER BY c DESC, w LIMIT 1024),
@@ -3227,8 +3220,8 @@ object TextPack extends QueryPack {
       // identical bigram/unigram frames, identical per-term qln PMI
       // factorization, same c12 >= 5 floor and (pmi desc, bg) top-15
       "q208_pmi_collocations" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, ${tokensSql("text")} AS ts
           |  FROM documents),
           |bgs AS (
           |  SELECT ts[g.i] || ' ' || ts[g.i + 1] AS bg
@@ -3259,8 +3252,8 @@ object TextPack extends QueryPack {
       // identical bigram/context/continuation tables and the identical
       // multiplied-through integer KN numerator/denominator
       "q188_kneser_ney" ->
-        """WITH toks AS (
-          |  SELECT doc_id, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, ${tokensSql("text")} AS ts
           |  FROM documents),
           |bgs AS (
           |  SELECT doc_id, ts[g.i] || ' ' || ts[g.i + 1] AS bg
@@ -3293,10 +3286,9 @@ object TextPack extends QueryPack {
       // same tokenization, same bit-length bucket (bin() has no leading
       // zeros, exactly Spark's conv-string length)
       "q148_length_histogram" ->
-        """WITH t AS (
+        s"""WITH t AS (
           |  SELECT source,
-          |         CAST(len(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'),
-          |                              w -> w <> '')) AS BIGINT) AS n
+          |         CAST(len(${tokensSql("text")}) AS BIGINT) AS n
           |  FROM documents)
           |SELECT source, CAST(length(bin(n)) AS BIGINT) AS bucket,
           |       CAST(count(*) AS BIGINT) AS n_docs,
@@ -3309,8 +3301,8 @@ object TextPack extends QueryPack {
       // same held-in split, same per-class counting, same top-10
       // tie-break (cnt desc, word asc)
       "q119_nb_train" ->
-        """WITH toks AS (
-          |  SELECT doc_id, lang, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH toks AS (
+          |  SELECT doc_id, lang, ${tokensSql("text")} AS ts
           |  FROM documents WHERE doc_id % 5 <> 0),
           |clw AS (
           |  SELECT lang, unnest(ts) AS w FROM toks),
@@ -3443,11 +3435,11 @@ object TextPack extends QueryPack {
       // row hashes), then the same min-over-rows probe — exact compare
       "q104_countmin_freq" ->
         s"""WITH tok AS (
-          |  SELECT unnest(list_filter(string_split_regex(regexp_replace(text, '[^\\w\\s]', '', 'g'), '\\s+'), w -> w <> '')) AS w
+          |  SELECT unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |counts AS (SELECT w, count(*) AS cnt FROM tok GROUP BY w),
           |hashed AS (SELECT w, cnt, g.r AS r,
-          |                  CAST('0x' || substring(md5(CAST(g.r AS VARCHAR) || ':' || w), 1, 15) AS BIGINT) % $cmWidth AS c
+          |                  ${hex64Sql("md5(CAST(g.r AS VARCHAR) || ':' || w)")} % $cmWidth AS c
           |           FROM counts, UNNEST(generate_series(0, ${cmDepth - 1})) AS g(r)),
           |cells AS (SELECT r, c, SUM(cnt) AS cell_cnt FROM hashed GROUP BY r, c),
           |est AS (SELECT h.w, MIN(cl.cell_cnt) AS est
@@ -3458,8 +3450,8 @@ object TextPack extends QueryPack {
           |ORDER BY c.w""".stripMargin,
 
       "q68_bigram_stats" ->
-        """WITH tok AS (
-          |  SELECT lang, list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+        s"""WITH tok AS (
+          |  SELECT lang, ${tokensSql("text")} AS ts
           |  FROM documents),
           |bg AS (SELECT lang, ts[g.i] || ' ' || ts[g.i + 1] AS b
           |       FROM tok, UNNEST(generate_series(1, greatest(len(ts) - 1, 0))) AS g(i)),
@@ -3474,8 +3466,8 @@ object TextPack extends QueryPack {
           |ORDER BY r.lang, rk""".stripMargin,
 
       "q76_tfidf" ->
-        """WITH tok AS (
-          |  SELECT doc_id, unnest(list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '')) AS w
+        s"""WITH tok AS (
+          |  SELECT doc_id, unnest(${tokensSql("text")}) AS w
           |  FROM documents),
           |tf AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY doc_id, w),
           |dl AS (SELECT doc_id, w, cnt,
@@ -3505,9 +3497,9 @@ object TextPack extends QueryPack {
       // per-term floor(×1e6) quantization before the integer sum — the
       // only float ops are one ln() (quantized) and one final division
       "q05_unigram_logprob" ->
-        """WITH tok AS (
+        s"""WITH tok AS (
           |  SELECT doc_id,
-          |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+          |         ${tokensSql("text")} AS ts
           |  FROM documents),
           |tf AS (
           |  SELECT doc_id, w, CAST(count(*) AS BIGINT) AS cnt
@@ -3532,9 +3524,9 @@ object TextPack extends QueryPack {
       // generate_series(1, 0) is empty, so short docs get empty n-gram
       // lists on both sides
       "q79_repetition_filter" ->
-        """WITH tok AS (
+        s"""WITH tok AS (
           |  SELECT doc_id,
-          |         list_filter(string_split_regex(regexp_replace(text, '[^\w\s]', '', 'g'), '\s+'), w -> w <> '') AS ts
+          |         ${tokensSql("text")} AS ts
           |  FROM documents),
           |g AS (
           |  SELECT doc_id, len(ts) AS n_tokens,

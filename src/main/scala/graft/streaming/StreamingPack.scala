@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.QueryPack
 import graft.core.Pin.{checkpointed, warmed}
+import graft.functions.TextFunctions.hex64Sql
 import graft.operators.CorePack.docDigest
 import StreamRunner.{drain, eventStream, fileStream}
 
@@ -1397,7 +1398,7 @@ object StreamingPack extends QueryPack {
     // SPRT answer exactly
     "q386_stream_sprt" -> graft.operators.AnalyticsPack.sprtSql(
       "epoch_us(CAST(ts AS TIMESTAMP))",
-      "CAST('0x' || substring(md5('sprt:' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT)"),
+      hex64Sql("md5('sprt:' || CAST(user_id AS VARCHAR))")),
 
     // stream ≡ batch: q199's oracle verbatim — the streamed StateStore
     // aggregate plus bounded tail must land on the batch CUSUM answer
@@ -1466,10 +1467,10 @@ object StreamingPack extends QueryPack {
     // linear register max-merge: stream ≡ batch; the q149/q153 md5/rho
     // register replay, per event type
     "q238_stream_hll" ->
-      """WITH vals AS (
+      s"""WITH vals AS (
         |  SELECT event_type AS grp, CAST(user_id AS VARCHAR) AS key FROM events),
         |hashed AS (
-        |  SELECT DISTINCT grp, CAST('0x' || substring(md5(key), 1, 15) AS BIGINT) AS h
+        |  SELECT DISTINCT grp, ${hex64Sql("md5(key)")} AS h
         |  FROM vals),
         |rhos AS (
         |  SELECT grp, h % 256 AS idx,
@@ -1488,9 +1489,9 @@ object StreamingPack extends QueryPack {
     // linear sums: stream ≡ batch; q226's per-source slice (no ROLLUP
     // row, no even/odd split — those stay on the batch side)
     "q229_stream_checksum" ->
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT source,
-        |         CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS h
+        |         ${hex64Sql("md5(text)")} AS h
         |  FROM documents)
         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |       CAST(CAST(sum(CAST(h AS DECIMAL(38,0))) AS DECIMAL(38,0))

@@ -7,10 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * fresh session — including pure-SQL use — without any ensure() call.
   */
 class GraftSparkExtensionsSpec extends AnyFunSuite {
-  test("spark.sql.extensions registers graft functions for SQL use") {
+  /** Runs `body` in a fresh session built with the extensions class. */
+  private def withExtensionsSession(body: SparkSession => Unit): Unit = {
     // getOrCreate would hand back the shared test session (ignoring the
     // extensions conf), so detach the default session first and restore
-    // it afterwards; the underlying SparkContext is reused.
+    // it afterwards; the underlying SparkContext is reused. Start the
+    // shared session first, so the context is the contract one whichever
+    // suite runs first.
+    SparkTestSession.spark
     val saved = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
@@ -24,19 +28,32 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       .withExtensions(new GraftSparkExtensions)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
+    try body(s)
+    finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      saved.foreach { prev =>
+        SparkSession.setDefaultSession(prev)
+        SparkSession.setActiveSession(prev)
+      }
+    }
+  }
+
+  test("every native function in GraftExpressions' table exists in an extensions session") {
+    val names = graft.functions.GraftExpressions.natives.map(_._1)
+    assert(names.distinct.size == names.size)
+    withExtensionsSession { s =>
+      val missing = names.filterNot(n => s.catalog.functionExists(n))
+      assert(missing.isEmpty, s"not injected by GraftSparkExtensions: ${missing.mkString(", ")}")
+    }
+  }
+
+  test("spark.sql.extensions registers graft functions for SQL use") {
+    withExtensionsSession { s =>
       val dot = s.sql(
         "SELECT graft_long_array_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d")
         .head().getLong(0)
       assert(dot == 32L)
-      val eq = s.sql(
-        "SELECT graft_array_eq_count(array('a','b','c'), array('a','x','c')) AS c")
-        .head().getInt(0)
-      assert(eq == 2)
-      val ic = s.sql(
-        "SELECT graft_sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS c")
-        .head().getInt(0)
-      assert(ic == 2)
       val leq = s.sql(
         "SELECT graft_long_array_eq_count(array(1L,2L,3L), array(1L,9L,3L)) AS c")
         .head().getInt(0)
@@ -60,13 +77,6 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       // whole-plan operator strategy lands in the session's planner too
       assert(s.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy),
         "AsOfJoinStrategy not injected by the extensions class")
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      saved.foreach { prev =>
-        SparkSession.setDefaultSession(prev)
-        SparkSession.setActiveSession(prev)
-      }
     }
   }
 }

@@ -21,6 +21,11 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
   }
 
+  test("superseded reliable checkpoints are cleaned once unreferenced") {
+    assert(spark.sparkContext.getConf
+      .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+  }
+
   test("the Spark UI is disabled") {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
