@@ -1,0 +1,104 @@
+#!/usr/bin/env bash
+# A/B the repo benchmark between two git revisions, each built fresh in place.
+#
+#   scripts/ab_bench.sh <parent-rev> <change-rev> <workload> <pairs> [seed0]
+#
+# Each rev is exported with `git archive` into its own temporary directory,
+# where `perfbench/run.py` builds its own `.bench_build` next to its source.
+# Never A/B against a build dir copied from elsewhere: it keeps its jar paths
+# but loses its class-data-sharing archive (the JVM reports "shared class
+# paths mismatch", which `-Xlog:cds=off` hides), and every start-up is
+# seconds slower.
+#
+# One untimed warm-up run per side builds the engine and fills the input
+# caches. Pair i then runs seed seed0+i (default seed0 = 1) on both sides,
+# `--seconds 25 --trace 0`; even pairs run the parent first, odd pairs the
+# change. Every run's end-to-end metrics are printed as it ends; at the end,
+# per metric, each side's median and interquartile range and the number of
+# pairs the change won. Nothing under perfbench/ is changed. The temporary
+# directories are removed on exit.
+set -euo pipefail
+
+if [[ $# -lt 4 || $# -gt 5 ]]; then
+  echo "usage: $0 <parent-rev> <change-rev> <workload> <pairs> [seed0]" >&2
+  exit 2
+fi
+parent=$1 change=$2 workload=$3 pairs=$4 seed0=${5:-1}
+repo=$(git -C "$(dirname "$0")/.." rev-parse --show-toplevel)
+
+work=$(mktemp -d "${TMPDIR:-/tmp}/ab_bench.XXXXXX")
+trap 'rm -rf "$work"' EXIT
+declare -A dir=([parent]="$work/parent" [change]="$work/change")
+declare -A rev=([parent]="$parent" [change]="$change")
+for side in parent change; do
+  mkdir -p "${dir[$side]}"
+  git -C "$repo" archive "${rev[$side]}" | tar -x -C "${dir[$side]}"
+done
+echo "ab_bench: nproc=$(nproc) workload=$workload pairs=$pairs seed0=$seed0" \
+  "parent=$(git -C "$repo" rev-parse --short "$parent")" \
+  "change=$(git -C "$repo" rev-parse --short "$change")"
+
+# run <side> <seed>: one timed run; its result line goes to results.jsonl
+run() {
+  local out
+  if ! out=$(cd "${dir[$1]}" && env -u CARGO_TARGET_DIR python3 perfbench/run.py \
+      --workload "$workload" --seed "$2" --seconds 25 --trace 0 2>"$work/stderr" | tail -n 1) ||
+      [[ -z $out ]]; then
+    echo "ab_bench: $1 seed=$2 failed" >&2
+    tail -n 20 "$work/stderr" >&2
+    exit 1
+  fi
+  printf '%s\t%s\t%s\n' "$1" "$2" "$out" >>"$work/results.jsonl"
+  python3 - "$1" "$2" "$out" <<'EOF'
+import json, sys
+side, seed, line = sys.argv[1:]
+r = json.loads(line)
+m = " ".join(f"{k}={v['value']:.3f}" for k, v in r["metrics"].items())
+print(f"  {side:6s} seed={seed} correct={r['correct']} failed={r['failed']} {m}", flush=True)
+EOF
+}
+
+for side in parent change; do
+  echo "warm-up $side (build + input caches, untimed)"
+  (cd "${dir[$side]}" && env -u CARGO_TARGET_DIR python3 perfbench/run.py \
+    --workload "$workload" --seed "$((seed0 - 1))" --seconds 5 --trace 0 >/dev/null 2>"$work/stderr") ||
+    { echo "ab_bench: warm-up $side failed" >&2; tail -n 20 "$work/stderr" >&2; exit 1; }
+done
+: >"$work/results.jsonl"
+
+for ((i = 0; i < pairs; i++)); do
+  seed=$((seed0 + i))
+  echo "pair $((i + 1))/$pairs seed=$seed"
+  if ((i % 2 == 0)); then order="parent change"; else order="change parent"; fi
+  for side in $order; do run "$side" "$seed"; done
+done
+
+python3 - "$work/results.jsonl" "${dir[change]}/BENCHMARK.json" <<'EOF'
+import json, statistics, sys
+runs, bench = sys.argv[1:]
+better = {m["name"]: m["better"] for m in json.load(open(bench))["end_to_end"]}
+by = {}
+for line in open(runs):
+    side, seed, out = line.rstrip("\n").split("\t", 2)
+    r = json.loads(out)
+    if not r["correct"] or r["failed"]:
+        print(f"NOTE: {side} seed={seed} correct={r['correct']} failed={r['failed']}")
+    by.setdefault(side, {})[seed] = {k: v["value"] for k, v in r["metrics"].items()}
+seeds = sorted(set(by.get("parent", {})) & set(by.get("change", {})), key=int)
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], statistics.median(xs), q[2]
+
+print(f"summary over {len(seeds)} pairs (median [IQR]; wins = pairs the change was better)")
+for k, b in better.items():
+    p = [by["parent"][s][k] for s in seeds]
+    c = [by["change"][s][k] for s in seeds]
+    wins = sum((y < x) if b == "lower" else (y > x) for x, y in zip(p, c))
+    (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
+    rel = (cm - pm) / pm * 100 if pm else float("nan")
+    print(f"  {k:16s} parent {pm:9.3f} [{p3 - p1:7.3f}]  change {cm:9.3f} [{c3 - c1:7.3f}]"
+          f"  {rel:+6.1f}%  wins {wins}/{len(seeds)}")
+EOF

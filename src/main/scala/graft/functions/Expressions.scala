@@ -639,6 +639,13 @@ case class JaroWinklerBoundaryGapPpb(left: Expression, right: Expression)
   * decodes to U+FFFD on the regex path — in neither class — so it is
   * deleted like any other punctuation. Word bytes are copied into one
   * array per row, which every returned token views.
+  *
+  * A Java `String` (`MapReduceJob.wordCountMap`'s input) takes the char
+  * path, `tokens(String)`: the same classes read straight from its
+  * UTF-16 chars, with no round trip through UTF-8. It equals the byte
+  * path over `UTF8String.fromString(s)` on every input (`TokenizerSpec`).
+  * [[TokenCounter]] runs the byte path's scan and counts the tokens where
+  * they lie, without building a token object per token.
   */
 object TokenizerKernel {
   private val word = java.util.regex.Pattern.compile("(?U)\\w")
@@ -683,9 +690,16 @@ object TokenizerKernel {
     cp
   }
 
-  /** Compacts the word bytes of the UTF-8 text `src` into `out` (same
-    * length) and returns the end offset in `out` of every token. */
-  private def scan(src: Array[Byte], out: Array[Byte]): Array[Int] = {
+  /** Appends `end` to the token ends `ends` holding `count`, growing it. */
+  private def push(ends: Array[Int], count: Int, end: Int): Array[Int] = {
+    val grown = if (count == ends.length) java.util.Arrays.copyOf(ends, count * 2) else ends
+    grown(count) = end
+    grown
+  }
+
+  /** Compacts the word bytes of the UTF-8 text `src` into `out` (at least
+    * as long) and returns the end offset in `out` of every token. */
+  private[graft] def scan(src: Array[Byte], out: Array[Byte]): Array[Int] = {
     val n = src.length
     var ends = new Array[Int](16)
     var count = 0
@@ -706,15 +720,11 @@ object TokenizerKernel {
         while (k < len) { out(o + k) = src(i + k); k += 1 }
         o += len
       } else if (cls == Space && o > start) {
-        if (count == ends.length) ends = java.util.Arrays.copyOf(ends, count * 2)
-        ends(count) = o; count += 1; start = o
+        ends = push(ends, count, o); count += 1; start = o
       }
       i += len
     }
-    if (o > start) {
-      if (count == ends.length) ends = java.util.Arrays.copyOf(ends, count + 1)
-      ends(count) = o; count += 1
-    }
+    if (o > start) { ends = push(ends, count, o); count += 1 }
     java.util.Arrays.copyOf(ends, count)
   }
 
@@ -734,21 +744,170 @@ object TokenizerKernel {
     toks
   }
 
-  /** The same tokens of a Java string (encoded as `UTF8String.fromString`
-    * encodes it), decoded straight from the compacted bytes. */
+  /** The same tokens of a Java string, read straight from its UTF-16
+    * chars: the word chars are compacted in place in one copy of the
+    * string, and each token is a `String` copied from a slice. A surrogate
+    * pair is one supplementary code point; a lone surrogate is deleted,
+    * as on the byte path, where `UTF8String.fromString` encodes it as `?`.
+    */
   def tokens(s: String): Array[String] = {
-    val src = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val out = new Array[Byte](src.length)
-    val ends = scan(src, out)
-    val toks = new Array[String](ends.length)
+    val cs = s.toCharArray
+    val n = cs.length
+    var ends = new Array[Int](16)
+    var count = 0
+    var o = 0 // word chars compacted to the front of cs
+    var start = 0 // offset of the open token
+    var i = 0
+    while (i < n) {
+      val c = cs(i)
+      var len = 1
+      val cls =
+        if (!Character.isSurrogate(c)) bmpClass(c).toInt
+        else if (Character.isHighSurrogate(c) && i + 1 < n && Character.isLowSurrogate(cs(i + 1))) {
+          len = 2; classOf(Character.toCodePoint(c, cs(i + 1)))
+        } else Delete
+      if (cls == Word) {
+        cs(o) = c
+        if (len == 2) cs(o + 1) = cs(i + 1)
+        o += len
+      } else if (cls == Space && o > start) {
+        ends = push(ends, count, o); count += 1; start = o
+      }
+      i += len
+    }
+    if (o > start) { ends = push(ends, count, o); count += 1 }
+    val toks = new Array[String](count)
     var from = 0
     var t = 0
-    while (t < ends.length) {
-      toks(t) = new String(out, from, ends(t) - from, java.nio.charset.StandardCharsets.UTF_8)
+    while (t < count) {
+      toks(t) = new String(cs, from, ends(t) - from)
       from = ends(t); t += 1
     }
     toks
   }
+}
+
+/** Counts of the reference tokens of many UTF-8 strings in one
+  * open-addressing table keyed by the tokens' bytes: the state of
+  * [[TokenCounts]]. A token is hashed and compared where the kernel
+  * compacted it, so only a token new to the table is copied. */
+private[graft] final class TokenCounter {
+  private var buf = new Array[Byte](256) // compacted word bytes of one string
+  private var slots = new Array[Int](1024) // entry index + 1; 0 = empty
+  private var hashes = new Array[Int](512)
+  private var words = new Array[Array[Byte]](512)
+  private var counts = new Array[Long](512)
+  private var held = 0
+
+  /** Distinct tokens held. */
+  def size: Int = held
+
+  def add(s: org.apache.spark.unsafe.types.UTF8String): Unit = {
+    val n = s.numBytes
+    if (buf.length < n) buf = new Array[Byte](math.max(n, buf.length * 2))
+    val ends = TokenizerKernel.scan(s.getBytes, buf)
+    var from = 0
+    var t = 0
+    while (t < ends.length) { count(from, ends(t)); from = ends(t); t += 1 }
+  }
+
+  /** FNV-1a over the bytes, then murmur3's finalizer to spread them. */
+  private def hash(from: Int, to: Int): Int = {
+    var h = 0x811C9DC5
+    var i = from
+    while (i < to) { h = (h ^ (buf(i) & 0xFF)) * 0x01000193; i += 1 }
+    h ^= h >>> 16; h *= 0x85EBCA6B; h ^= h >>> 13; h *= 0xC2B2AE35; h ^ (h >>> 16)
+  }
+
+  private def count(from: Int, to: Int): Unit = {
+    val h = hash(from, to)
+    val mask = slots.length - 1
+    var i = h & mask
+    var e = slots(i) - 1
+    while (e >= 0 && !(hashes(e) == h &&
+        java.util.Arrays.equals(words(e), 0, words(e).length, buf, from, to))) {
+      i = (i + 1) & mask
+      e = slots(i) - 1
+    }
+    if (e >= 0) counts(e) += 1
+    else {
+      if (held == hashes.length) {
+        hashes = java.util.Arrays.copyOf(hashes, held * 2)
+        words = java.util.Arrays.copyOf(words, held * 2)
+        counts = java.util.Arrays.copyOf(counts, held * 2)
+      }
+      hashes(held) = h
+      words(held) = java.util.Arrays.copyOfRange(buf, from, to)
+      counts(held) = 1
+      held += 1
+      slots(i) = held
+      if (2 * held > slots.length) rehash(slots.length * 2)
+    }
+  }
+
+  private def rehash(capacity: Int): Unit = {
+    slots = new Array[Int](capacity)
+    val mask = capacity - 1
+    var e = 0
+    while (e < held) {
+      var i = hashes(e) & mask
+      while (slots(i) != 0) i = (i + 1) & mask
+      slots(i) = e + 1
+      e += 1
+    }
+  }
+
+  /** One `(word, cnt)` row per distinct token held; empties the table. */
+  def drain(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val rows = Array.tabulate[org.apache.spark.sql.catalyst.InternalRow](held) { e =>
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+        org.apache.spark.unsafe.types.UTF8String.fromBytes(words(e)), counts(e)))
+    }
+    java.util.Arrays.fill(slots, 0)
+    java.util.Arrays.fill(words.asInstanceOf[Array[AnyRef]], 0, held, null)
+    held = 0
+    rows
+  }
+}
+
+/** Map-side word count of a string column, as a generator of
+  * `(word: string, cnt: bigint)` rows. Each task counts the reference
+  * tokens ([[TokenizerKernel]]) of all its rows in a [[TokenCounter]] and
+  * emits one row per distinct token when its input ends (`terminate`), or
+  * earlier, whenever it holds `heldKeys` distinct tokens; so a word may
+  * appear in several rows, and the counts must be summed downstream.
+  *
+  * The counter belongs to the task that evaluates this instance and is
+  * emptied by every emit. `CodegenFallback` keeps `GenerateExec` on its
+  * interpreted path, the only one that calls `terminate`. It has no SQL
+  * name: `WordCount.over` is its one caller.
+  */
+case class TokenCounts(child: Expression, heldKeys: Int)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.Generator
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+  override def inputTypes = Seq(org.apache.spark.sql.types.StringType)
+  override def elementSchema: org.apache.spark.sql.types.StructType =
+    new org.apache.spark.sql.types.StructType()
+      .add("word", org.apache.spark.sql.types.StringType, nullable = false)
+      .add("cnt", LongType, nullable = false)
+  override def stateful: Boolean = true
+
+  @transient private lazy val counter = new TokenCounter
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow)
+      : IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
+    val s = child.eval(input)
+    if (s != null) counter.add(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    if (counter.size >= heldKeys) counter.drain() else Nil
+  }
+
+  override def terminate(): IterableOnce[org.apache.spark.sql.catalyst.InternalRow] =
+    counter.drain()
+
+  override protected def withNewChildInternal(c: Expression): TokenCounts =
+    copy(child = c)
 }
 
 /** The reference token stream of a string column, `array<string>` with no

@@ -25,7 +25,7 @@ object CorePack extends QueryPack {
     "q00_wordcount" -> ((s, dir) => WordCount.documentsWordCount(s, dir)),
 
     // Same computation driven through the generic MapReduce facade
-    // (map → value-list combiner → shuffle → merge + reduce), i.e. the
+    // (map → value-run combiner → shuffle → merge + reduce), i.e. the
     // reference's programming model verbatim. Result cast to the same
     // schema as q00.
     "q01_mapreduce_wc" -> { (s, dir) =>

@@ -120,4 +120,52 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(shuffleRecords(ds) == partitionKeys)
     }
   }
+
+  test("interleaved equal values reach reduce with exact multiplicity") {
+    import spark.implicits._
+    // a,b,a,a,b per line: runs of equal neighbours, not distinct values
+    val interleaved: String => Seq[(String, String)] =
+      line => Seq("a", "b", "a", "a", "b").map(v => (line.take(1), v))
+    // size, apply and iterator of the view must all agree
+    val describe: (String, Seq[String]) => String = (_, vs) =>
+      s"${vs.size}|${vs.sorted.mkString(",")}|${vs.indices.map(vs(_)).sorted.mkString(",")}"
+    val lines = Seq("x1", "y1", "x2", "x3", "y2")
+    def expect(nLines: Int): String = {
+      val sorted = (Seq.fill(3 * nLines)("a") ++ Seq.fill(2 * nLines)("b")).mkString(",")
+      s"${5 * nLines}|$sorted|$sorted"
+    }
+    for (parts <- Seq(1, 2, 5)) {
+      val got = MapReduceJob.run(spark, spark.sparkContext.parallelize(lines, parts).toDS(),
+        interleaved, describe, 3).collect().toMap
+      assert(got == Map("x" -> expect(3), "y" -> expect(2)), s"parts=$parts")
+      assert(got == model(lines, interleaved, describe), s"parts=$parts")
+    }
+  }
+
+  test("word count ships one run per shuffled row") {
+    import spark.implicits._
+    val lines = Seq("the cat, the hat.", "The cat sat", "the the the", "", "hat! cat")
+    val expected = Map("the" -> 5L, "cat" -> 3L, "hat" -> 2L, "The" -> 1L, "sat" -> 1L)
+    val input = spark.sparkContext.parallelize(lines, 3).toDS()
+    // the rows the one exchange carries: one per (map task, key)
+    val shuffled = input.mapPartitions(ls =>
+      MapReduceJob.combine(ls.flatMap(MapReduceJob.wordCountMap))).collect()
+    assert(shuffled.forall { case (_, vs, ns) => vs.toSeq == Seq("1") && ns.length == 1 })
+    assert(shuffled.groupMapReduce(_._1)(_._3.head.toLong)(_ + _) == expected)
+    val ds = MapReduceJob.run(spark, input,
+      MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 2)
+    assert(ds.collect().toMap == expected.map { case (k, n) => k -> n.toString })
+    assert(shuffleRecords(ds) == shuffled.length)
+  }
+
+  test("a key with more than Int.MaxValue values fails loudly, naming the key") {
+    // two runs whose counts sum past the bound; no value is materialized
+    val err = intercept[IllegalArgumentException](
+      MapReduceJob.ValueRuns("hot", Array("1", "2"), Array(Int.MaxValue, 1)))
+    assert(err.getMessage.contains("'hot'") && err.getMessage.contains("Int.MaxValue"))
+    // one below the bound is a view of Int.MaxValue values
+    val vs = MapReduceJob.ValueRuns("hot", Array("1", "2"), Array(Int.MaxValue - 1, 1))
+    assert(vs.size == Int.MaxValue)
+    assert(vs(0) == "1" && vs(Int.MaxValue - 2) == "1" && vs(Int.MaxValue - 1) == "2")
+  }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import graft.functions.TextFunctions.{stripPunct, tokens, whitespaceSplit}
 import graft.functions.TokenizerKernel
 import graft.operators.MapReduceJob
@@ -15,8 +17,9 @@ import graft.operators.MapReduceJob
   * pass: both are run side by side over every BMP code point, sampled
   * supplementary code points, lone surrogates, empty/blank/null input,
   * the Unicode fixture and seeded random strings, once through generated
-  * code and once through the interpreted `eval` path. `wordCountMap`
-  * must tokenize with the same kernel.
+  * code and once through the interpreted `eval` path. The char path over
+  * a Java `String` must equal the byte path over its UTF-8 encoding, and
+  * `wordCountMap` must tokenize with the same kernel.
   */
 class TokenizerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -104,6 +107,27 @@ class TokenizerSpec extends AnyFunSuite {
       val s = UTF8String.fromBytes(bytes)
       val got = TokenizerKernel.tokens(s).map(_.toString).toSeq
       assert(got == viaRegex(s), s"bytes ${bytes.map(b => f"${b & 0xFF}%02X").mkString(" ")}")
+    }
+  }
+
+  test("char path tokens(String) == byte path tokens(UTF8String.fromString)") {
+    val hi = "\uD83D"
+    val lo = "\uDE00"
+    // fragments glued without separators, so punctuation touches words,
+    // surrogates pair up or stay lone, and spaces form runs of every kind
+    val fragment: Gen[String] = Gen.oneOf(
+      Gen.oneOf("a", "Zz", "019", "_", "é", "e\u0301", "中文", "ß", "İ", "٣"),
+      Gen.oneOf(".", ",", "'", "’", "—", "!?", "(", ")", "#@"),
+      Gen.oneOf(" ", "  ", "\t", "\n", "\u00A0", "\u3000", "\u2009", "\u0085"),
+      Gen.oneOf(hi + lo, cp(0x1D400), cp(0x20000), cp(0xE0001), hi, lo, lo + hi, ""))
+    val strings: Gen[String] = Gen.listOf(fragment).map(_.mkString)
+    val generated = (0 until 4000).flatMap(i => strings.apply(Gen.Parameters.default, Seed(i.toLong)))
+    val fixed = Seq("", " ", "\t", "\u00A0", "\u3000", hi, lo, lo + hi, "a" + hi, lo + "b",
+      "a" + hi + lo + "b", "foo,bar", "(foo) bar.", "x\u00A0y\u3000z\tw", "a" + hi + " " + lo + "b")
+    (fixed ++ generated).foreach { s =>
+      assert(TokenizerKernel.tokens(s).toSeq ==
+        TokenizerKernel.tokens(UTF8String.fromString(s)).map(_.toString).toSeq,
+        s"input ${s.map(c => f"U+${c.toInt}%04X").mkString(" ")}")
     }
   }
 

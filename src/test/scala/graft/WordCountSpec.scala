@@ -1,0 +1,87 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.{col, count, explode, lit}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.TextFunctions.tokens
+import graft.functions.TokenCounts
+import graft.operators.WordCount
+
+/** `WordCount.over` counts on the map side (the [[TokenCounts]]
+  * generator); it must equal the explode-and-count plan it replaced,
+  * whatever the input partitioning and however often the counter emits
+  * early, with the same schema and no `explode` left in the plan.
+  */
+class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  private lazy val spark = SparkTestSession.spark
+
+  private val lines: Seq[String] = {
+    val word = Gen.oneOf("foo", "bar", "baz", "The", "the", "é", "naïve", "中文", "a_b", "x1")
+    val glue = Gen.oneOf(" ", "  ", "\t", ", ", ". ", "'", " ", "　", "")
+    val line = Gen.listOf(Gen.zip(word, glue)).map(_.map { case (w, g) => w + g }.mkString)
+    (0 until 200).flatMap(i => line.apply(Gen.Parameters.default, Seed(i.toLong))) ++
+      Seq("", "   ", "!!!", null)
+  }
+
+  private def input(parts: Int): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(lines, parts).toDF("value")
+  }
+
+  /** The plan `over` had before it counted on the map side. */
+  private def model(df: DataFrame): DataFrame =
+    df.select(explode(tokens(col("value"))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("cnt")).orderBy("word")
+
+  private def rowsOf(df: DataFrame): Seq[(String, Long)] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+
+  private def generates(df: DataFrame): Seq[GenerateExec] =
+    collect(df.queryExecution.executedPlan) { case g: GenerateExec => g }
+
+  test("equals the explode-and-count model at 1, 3 and 7 input partitions") {
+    val expected = rowsOf(model(input(1)))
+    assert(expected.nonEmpty)
+    for (parts <- Seq(1, 3, 7))
+      assert(rowsOf(WordCount.over(input(parts), "value")) == expected, s"parts=$parts")
+  }
+
+  test("equals the model when three input partitions are coalesced into one task") {
+    val coalesced = input(3).coalesce(1)
+    assert(coalesced.rdd.getNumPartitions == 1)
+    assert(rowsOf(WordCount.over(coalesced, "value")) == rowsOf(model(input(1))))
+  }
+
+  test("equals the model when a small bound forces early emits") {
+    val expected = rowsOf(model(input(1)))
+    for (parts <- Seq(1, 3)) {
+      val df = WordCount.over(input(parts), "value", heldKeys = 3)
+      assert(rowsOf(df) == expected, s"parts=$parts")
+      // more generated rows than (task, word) pairs: some words were
+      // emitted by more than one early flush of the same task
+      val emitted = generates(df).map(_.metrics("numOutputRows").value).sum
+      assert(emitted > expected.size, s"parts=$parts")
+    }
+  }
+
+  test("schema is unchanged: non-null word string, non-null bigint cnt") {
+    val df = WordCount.over(input(3), "value")
+    assert(df.schema == StructType(Seq(
+      StructField("word", StringType, nullable = false),
+      StructField("cnt", LongType, nullable = false))))
+    assert(df.schema == model(input(3)).schema)
+  }
+
+  test("the physical plan generates TokenCounts and has no explode") {
+    val df = WordCount.over(input(3), "value")
+    df.collect()
+    val gens = generates(df)
+    assert(gens.nonEmpty && gens.forall(_.generator.isInstanceOf[TokenCounts]))
+    assert(!df.queryExecution.executedPlan.toString.toLowerCase.contains("explode"))
+  }
+}
