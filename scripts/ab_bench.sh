@@ -14,9 +14,16 @@
 # caches. Pair i then runs seed seed0+i (default seed0 = 1) on both sides,
 # `--seconds 25 --trace 0`; even pairs run the parent first, odd pairs the
 # change. Every run's end-to-end metrics are printed as it ends; at the end,
-# per metric, each side's median and interquartile range and the number of
-# pairs the change won. Nothing under perfbench/ is changed. The temporary
-# directories are removed on exit.
+# per metric, each side's median and interquartile range (IQR), the number
+# of pairs the change won, and one verdict against the metric's relative
+# bound in BENCHMARK.json (0.25 = 25%), the first that holds of:
+#   gain              the change won >= 9 in 10 pairs, and its median beats
+#                     the parent's by more than the parent's IQR
+#   unresolved        the parent's IQR / median is wider than the bound
+#   worse than bound  the change's median is worse by more than the bound
+#   within bound      otherwise
+# Nothing under perfbench/ is changed. The temporary directories are
+# removed on exit.
 set -euo pipefail
 
 if [[ $# -lt 4 || $# -gt 5 ]]; then
@@ -76,7 +83,7 @@ done
 python3 - "$work/results.jsonl" "${dir[change]}/BENCHMARK.json" <<'EOF'
 import json, statistics, sys
 runs, bench = sys.argv[1:]
-better = {m["name"]: m["better"] for m in json.load(open(bench))["end_to_end"]}
+metrics = {m["name"]: m for m in json.load(open(bench))["end_to_end"]}
 by = {}
 for line in open(runs):
     side, seed, out = line.rstrip("\n").split("\t", 2)
@@ -92,13 +99,24 @@ def quartiles(xs):
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], statistics.median(xs), q[2]
 
+def verdict(wins, gain, iqr, median, bound):
+    if wins >= 0.9 * len(seeds) and gain > iqr:
+        return "gain"
+    if median and iqr / median > bound:
+        return "unresolved"
+    if median and -gain / median > bound:
+        return "worse than bound"
+    return "within bound"
+
 print(f"summary over {len(seeds)} pairs (median [IQR]; wins = pairs the change was better)")
-for k, b in better.items():
+for k, m in metrics.items():
+    lower = m["better"] == "lower"
     p = [by["parent"][s][k] for s in seeds]
     c = [by["change"][s][k] for s in seeds]
-    wins = sum((y < x) if b == "lower" else (y > x) for x, y in zip(p, c))
+    wins = sum((y < x) if lower else (y > x) for x, y in zip(p, c))
     (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
     rel = (cm - pm) / pm * 100 if pm else float("nan")
+    v = verdict(wins, pm - cm if lower else cm - pm, p3 - p1, pm, m["bound"])
     print(f"  {k:16s} parent {pm:9.3f} [{p3 - p1:7.3f}]  change {cm:9.3f} [{c3 - c1:7.3f}]"
-          f"  {rel:+6.1f}%  wins {wins}/{len(seeds)}")
+          f"  {rel:+6.1f}%  wins {wins}/{len(seeds)}  {v}")
 EOF

@@ -29,6 +29,11 @@ object Session {
       // deleted once its RDD is garbage-collected instead of piling up
       // in the dir (q414 leaves 3 `rdd-*` dirs per run without it)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      // static: the JVM-wide cache of compiled codegen classes. Cycling
+      // through the 15 `registry_sf001` queries, Spark's default of 100
+      // entries recompiled 102-121 classes on every repeat pass; 2,000
+      // recompiled 3
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** `local[cpus]` with `cpus` shuffle partitions, log level WARN. */
   def local(cpus: Int = defaultCpus): SparkSession = {

@@ -27,7 +27,7 @@ object CorePack extends QueryPack {
     // Same computation driven through the generic MapReduce facade
     // (map → value-run combiner → shuffle → merge + reduce), i.e. the
     // reference's programming model verbatim. Result cast to the same
-    // schema as q00.
+    // schema as q00 and sorted as q00 is (`WordCount.sortedByWord`).
     "q01_mapreduce_wc" -> { (s, dir) =>
       import s.implicits._
       val lines = Tables.documents(s, dir).select("text").as[String]
@@ -37,7 +37,7 @@ object CorePack extends QueryPack {
         numPartitions = s.sessionState.conf.numShufflePartitions)
         .toDF("word", "cnt_s")
         .select(col("word"), col("cnt_s").cast("bigint").as("cnt"))
-        .orderBy("word")
+        .transform(WordCount.sortedByWord(_, lines))
     },
 
     // The non-ASCII lane of the gate, closing QueryPack's documented
@@ -67,7 +67,9 @@ object CorePack extends QueryPack {
     // (the reference's mr-out-* shape, reference src/bin/mrworker.rs) and
     // re-scanned; the re-parsed rows ARE the query result, so the gate
     // proves the sink round-trip is lossless. Previously test-only
-    // (SourcesSpec); the write is per-partition parallel — the same
+    // (SourcesSpec). The write is per-partition parallel, one part-file
+    // per partition of the word count's sort: a single file while the
+    // corpus is below the advisory partition size, and above it the same
     // fan-out a 1000-executor job uses.
     "q02_text_sink_roundtrip" -> { (s, dir) =>
       // per-run sink path (shutdown-hook-cleaned, concurrent-run-safe —

@@ -4,7 +4,8 @@ import scala.annotation.unused
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.functions.TokenizerKernel
 
 /** Generic MapReduce programming-model facade — the Spark-native equivalent
@@ -28,7 +29,10 @@ import graft.functions.TokenizerKernel
   * without reducing them, so it is exact for any reduce, yet sends one row
   * per (map task, key) instead of one per pair. Within a row, each run of
   * equal values is stored once with its repeat count, so word count ships
-  * one `("1", n)` run per row instead of n copies of `"1"`.
+  * one `("1", n)` run per row instead of n copies of `"1"`. The combiner
+  * is one flat open-addressing table per map task ([[Combiner]]) holding
+  * each key's last run inline, so a key whose values never change (word
+  * count's `"1"`) costs one table entry and no list.
   *
   * Note: the reference loses the lexicographically-last group of every
   * reduce partition (`src/mr/worker.rs:169-184` never flushes the final
@@ -48,61 +52,156 @@ object MapReduceJob {
     * where the runs are merged. `reduce` sees every value exactly once, in
     * unspecified order, like the reference's post-sort grouping, which
     * ordered keys but not values, through an `IndexedSeq` view of the runs
-    * ([[ValueRuns]]): its `size` costs O(runs), not O(values).
+    * ([[ValueRuns]]): its `size` costs O(runs), not O(values). `spark` is
+    * kept for the signature's sake; the plan needs no session implicits.
     */
-  def run(spark: SparkSession,
+  def run(@unused spark: SparkSession,
           input: Dataset[String],
           map: String => Seq[(String, String)],
           reduce: (String, Seq[String]) => String,
-          numPartitions: Int): Dataset[(String, String)] = {
-    import spark.implicits._
+          numPartitions: Int): Dataset[(String, String)] =
     input
       .mapPartitions(lines => combine(lines.flatMap(map)))
-      .repartition(numPartitions, $"_1")
-      .groupBy($"_1").as[String, (String, Array[String], Array[Int])]
+      .repartition(numPartitions, col("_1"))
+      .groupBy(col("_1")).as[String, (String, Array[String], Array[Int])]
       .mapGroups { (k, rows) =>
         val values = mutable.ArrayBuilder.make[String]
         val counts = mutable.ArrayBuilder.make[Int]
         rows.foreach { case (_, vs, ns) => values ++= vs; counts ++= ns }
         (k, reduce(k, ValueRuns(k, values.result(), counts.result())))
       }
-  }
 
-  /** One key's values as runs: `values(r)` repeated `counts(r)` times. */
-  private final class Runs {
-    var values = new Array[String](1)
-    var counts = new Array[Int](1)
-    var n = 0
-
-    def add(v: String): Unit =
-      if (n > 0 && values(n - 1) == v) counts(n - 1) += 1
-      else {
-        if (n == values.length) {
-          values = java.util.Arrays.copyOf(values, n * 2)
-          counts = java.util.Arrays.copyOf(counts, n * 2)
-        }
-        values(n) = v; counts(n) = 1; n += 1
-      }
-  }
+  // built once, not derived through `spark.implicits._` on every call
+  private implicit val keyEncoder: Encoder[String] = Encoders.STRING
+  private implicit val runRowEncoder: Encoder[(String, Array[String], Array[Int])] =
+    Encoders.product
+  private implicit val resultEncoder: Encoder[(String, String)] = Encoders.product
 
   /** Hadoop's combiner contract (it may run 0..n times per key): values
-    * are gathered per key, equal neighbours as one run, until
-    * [[CombinerValues]] values are held, then every key's runs are
-    * emitted and gathering starts again. */
-  private[graft] def combine(pairs: Iterator[(String, String)])
-      : Iterator[(String, Array[String], Array[Int])] =
+    * are gathered per key in a [[Combiner]] until `heldValues` values are
+    * held, then every key's runs are emitted and gathering starts again. */
+  private[graft] def combine(pairs: Iterator[(String, String)],
+                             heldValues: Int = CombinerValues)
+      : Iterator[(String, Array[String], Array[Int])] = {
+    val table = new Combiner
+    // the flatMap asks for the next batch only once the last batch's rows
+    // are all out, so refilling the one table is safe
     Iterator.continually {
-      val lists = mutable.HashMap.empty[String, Runs]
-      var held = 0
-      while (held < CombinerValues && pairs.hasNext) {
+      table.clear()
+      while (table.values < heldValues && pairs.hasNext) {
         val (k, v) = pairs.next()
-        lists.getOrElseUpdate(k, new Runs).add(v)
-        held += 1
+        table.add(k, v)
       }
-      lists
-    }.takeWhile(_.nonEmpty).flatMap(_.iterator.map { case (k, r) =>
-      (k, java.util.Arrays.copyOf(r.values, r.n), java.util.Arrays.copyOf(r.counts, r.n))
-    })
+      table.size
+    }.takeWhile(_ > 0).flatMap(Iterator.tabulate(_)(table.row))
+  }
+
+  /** One map task's values per key, as runs of equal neighbours, in one
+    * open-addressing table keyed by the key string. An entry holds its
+    * key, the key's hash and its last run (value, repeat count) inline;
+    * only a key whose neighbouring values differ keeps its earlier runs,
+    * in an overflow list. */
+  private final class Combiner {
+    private var slots = new Array[Int](1024) // entry index + 1; 0 = empty
+    private var keys = new Array[String](512)
+    private var hashes = new Array[Int](512)
+    private var lastValues = new Array[String](512)
+    private var lastCounts = new Array[Int](512)
+    private var earlier = new Array[Runs](512) // null while one run
+    private var held = 0
+    private var valuesHeld = 0
+
+    /** Distinct keys held. */
+    def size: Int = held
+
+    /** Values held, over all keys. */
+    def values: Int = valuesHeld
+
+    def add(k: String, v: String): Unit = {
+      var h = k.hashCode // murmur3's finalizer spreads String's hash
+      h ^= h >>> 16; h *= 0x85EBCA6B; h ^= h >>> 13; h *= 0xC2B2AE35; h ^= h >>> 16
+      val mask = slots.length - 1
+      var i = h & mask
+      var e = slots(i) - 1
+      while (e >= 0 && !(hashes(e) == h && keys(e) == k)) {
+        i = (i + 1) & mask
+        e = slots(i) - 1
+      }
+      valuesHeld += 1
+      if (e < 0) {
+        if (held == keys.length) grow()
+        keys(held) = k; hashes(held) = h; lastValues(held) = v; lastCounts(held) = 1
+        held += 1
+        slots(i) = held
+        if (2 * held > slots.length) rehash(slots.length * 2)
+      } else if (lastValues(e) == v) lastCounts(e) += 1
+      else {
+        if (earlier(e) == null) earlier(e) = new Runs
+        earlier(e).add(lastValues(e), lastCounts(e))
+        lastValues(e) = v; lastCounts(e) = 1
+      }
+    }
+
+    private def grow(): Unit = {
+      keys = java.util.Arrays.copyOf(keys, held * 2)
+      hashes = java.util.Arrays.copyOf(hashes, held * 2)
+      lastValues = java.util.Arrays.copyOf(lastValues, held * 2)
+      lastCounts = java.util.Arrays.copyOf(lastCounts, held * 2)
+      earlier = java.util.Arrays.copyOf(earlier, held * 2)
+    }
+
+    private def rehash(capacity: Int): Unit = {
+      slots = new Array[Int](capacity)
+      val mask = capacity - 1
+      var e = 0
+      while (e < held) {
+        var i = hashes(e) & mask
+        while (slots(i) != 0) i = (i + 1) & mask
+        slots(i) = e + 1
+        e += 1
+      }
+    }
+
+    /** Entry `e`'s `(key, values, counts)` row: its earlier runs, then its
+      * last run. */
+    def row(e: Int): (String, Array[String], Array[Int]) = {
+      val r = earlier(e)
+      if (r == null) (keys(e), Array(lastValues(e)), Array(lastCounts(e)))
+      else {
+        val vs = java.util.Arrays.copyOf(r.values, r.n + 1)
+        val ns = java.util.Arrays.copyOf(r.counts, r.n + 1)
+        vs(r.n) = lastValues(e); ns(r.n) = lastCounts(e)
+        (keys(e), vs, ns)
+      }
+    }
+
+    /** Empties the table, keeping its capacity. */
+    def clear(): Unit = {
+      if (held > 0) {
+        java.util.Arrays.fill(slots, 0)
+        java.util.Arrays.fill(keys.asInstanceOf[Array[AnyRef]], 0, held, null)
+        java.util.Arrays.fill(lastValues.asInstanceOf[Array[AnyRef]], 0, held, null)
+        java.util.Arrays.fill(earlier.asInstanceOf[Array[AnyRef]], 0, held, null)
+      }
+      held = 0
+      valuesHeld = 0
+    }
+  }
+
+  /** A key's earlier runs: `values(r)` repeated `counts(r)` times. */
+  private final class Runs {
+    var values = new Array[String](2)
+    var counts = new Array[Int](2)
+    var n = 0
+
+    def add(v: String, count: Int): Unit = {
+      if (n == values.length) {
+        values = java.util.Arrays.copyOf(values, n * 2)
+        counts = java.util.Arrays.copyOf(counts, n * 2)
+      }
+      values(n) = v; counts(n) = count; n += 1
+    }
+  }
 
   /** The values of `key` as one `IndexedSeq`: run `r` is `values(r)`
     * repeated `counts(r)` times. Its length is summed once, so `size` is

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.internal.SQLConf
 import graft.core.Tables
 import graft.functions.TokenCounts
 
@@ -11,7 +12,7 @@ import graft.functions.TokenCounts
   *
   *   scan → token counts (O3 strip punct + O4 whitespace split, one native
   *          kernel pass, combined per map task) → groupBy.sum (O5–O10)
-  *   → orderBy (O12) — SURVEY.md §2 operator numbering.
+  *   → sort by word (O12) — SURVEY.md §2 operator numbering.
   *
   * Map-side combining comes first: the [[TokenCounts]] generator counts
   * each task's tokens in one table keyed by their UTF-8 bytes and emits
@@ -21,6 +22,12 @@ import graft.functions.TokenCounts
   * the reference lacks: hash aggregation with spill, range-partitioned
   * global sort, whole-stage codegen. The per-word cardinality is bounded
   * by vocabulary size, so the agg state is tiny no matter the input size.
+  *
+  * The global sort is one exchange whose width follows the input's bytes
+  * ([[sortedByWord]]): one partition per advisory partition size, at most
+  * the shuffle-partition count. An input below the advisory size is
+  * sorted in one partition, so no range-sample job runs over the final
+  * aggregate before it is shuffled.
   */
 object WordCount {
 
@@ -37,7 +44,21 @@ object WordCount {
       // every group sums at least one row, so the sum is never null; the
       // coalesce only states that in the schema, as count(1) did
       .agg(coalesce(sum("cnt"), lit(0L)).as("cnt"))
-      .orderBy("word")
+      .transform(sortedByWord(_, df))
+
+  /** `result` totally ordered by its `word` column, through one range
+    * exchange of ⌈`input` bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`⌉
+    * partitions, clamped to [1, `spark.sql.shuffle.partitions`]; an input
+    * of unknown size gets the shuffle-partition count. At one partition
+    * Spark plans `SinglePartition`, which samples nothing; at more it
+    * range-partitions as `orderBy` does. */
+  private[operators] def sortedByWord(result: DataFrame, input: Dataset[_]): DataFrame = {
+    val conf = input.sparkSession.sessionState.conf
+    val advisory = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
+    val width = ((bytes + advisory - 1) / advisory).min(conf.numShufflePartitions).max(1).toInt
+    result.repartitionByRange(width, col("word")).sortWithinPartitions("word")
+  }
 
   /** Driver-facing form: over the `documents.text` column. */
   def documentsWordCount(spark: SparkSession, dir: String): DataFrame =

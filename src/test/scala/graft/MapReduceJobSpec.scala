@@ -168,4 +168,50 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(vs.size == Int.MaxValue)
     assert(vs(0) == "1" && vs(Int.MaxValue - 2) == "1" && vs(Int.MaxValue - 1) == "2")
   }
+
+  test("keys with equal String.hashCode keep separate, exact counts") {
+    import spark.implicits._
+    assert("Aa".hashCode == "BB".hashCode && "AaAa".hashCode == "BBBB".hashCode)
+    assert("AaBB".hashCode == "BBAa".hashCode && "AaAa".hashCode == "AaBB".hashCode)
+    val lines = Seq("Aa BB Aa", "AaAa BBBB AaBB BBAa BBBB", "BB AaAa", "BBAa BBBB Aa")
+    val expected = Map("Aa" -> "3", "BB" -> "2", "AaAa" -> "2", "BBBB" -> "3",
+      "AaBB" -> "1", "BBAa" -> "2")
+    assert(model(lines) == expected)
+    val rows = MapReduceJob.combine(lines.iterator.flatMap(MapReduceJob.wordCountMap)).toSeq
+    assert(rows.map(_._1).sorted == expected.keys.toSeq.sorted)
+    assert(rows.map { case (k, _, ns) => k -> ns.sum.toString }.toMap == expected)
+    for (parts <- Seq(1, 2)) {
+      val got = MapReduceJob.run(spark, spark.sparkContext.parallelize(lines, parts).toDS(),
+        MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 2).collect().toMap
+      assert(got == expected, s"parts=$parts")
+    }
+  }
+
+  test("alternating values keep exact multiplicities through runs, overflow and flushes") {
+    // key x: a, b, a, a (the last run inline, the first two in overflow);
+    // key y: c, c (one inline run only)
+    val pairs = Seq("x" -> "a", "y" -> "c", "x" -> "b", "x" -> "a", "y" -> "c", "x" -> "a")
+    def runs(rows: Seq[(String, Array[String], Array[Int])]): Seq[(String, Seq[(String, Int)])] =
+      rows.map { case (k, vs, ns) => k -> vs.toSeq.zip(ns.toSeq) }
+    def multiplicities(rows: Seq[(String, Array[String], Array[Int])]): Map[(String, String), Int] =
+      rows.flatMap { case (k, vs, ns) => vs.zip(ns).map { case (v, n) => (k, v) -> n } }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+    val expected = Map(("x", "a") -> 3, ("x", "b") -> 1, ("y", "c") -> 2)
+
+    val whole = MapReduceJob.combine(pairs.iterator).toSeq
+    assert(runs(whole) == Seq("x" -> Seq("a" -> 1, "b" -> 1, "a" -> 2), "y" -> Seq("c" -> 2)))
+    assert(multiplicities(whole) == expected)
+
+    // a bound of 3 values flushes after x: a, y: c, x: b, then after x: a,
+    // y: c, x: a, so every run is cut at a flush
+    val flushed = MapReduceJob.combine(pairs.iterator, heldValues = 3).toSeq
+    assert(runs(flushed) == Seq(
+      "x" -> Seq("a" -> 1, "b" -> 1), "y" -> Seq("c" -> 1),
+      "x" -> Seq("a" -> 2), "y" -> Seq("c" -> 1)))
+    assert(multiplicities(flushed) == expected)
+    // every bound from 1 up gives the same multiplicities
+    for (bound <- 1 to pairs.size + 1)
+      assert(multiplicities(MapReduceJob.combine(pairs.iterator, bound).toSeq) == expected,
+        s"bound=$bound")
+  }
 }

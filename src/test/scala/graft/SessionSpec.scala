@@ -26,6 +26,12 @@ class SessionSpec extends AnyFunSuite {
       .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
   }
 
+  test("the codegen class cache holds 2000 entries") {
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") == "2000")
+    assert(spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) == 2000)
+  }
+
   test("the Spark UI is disabled") {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)

@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions.{col, count, explode, lit}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalacheck.Gen
@@ -15,7 +19,9 @@ import graft.operators.WordCount
 /** `WordCount.over` counts on the map side (the [[TokenCounts]]
   * generator); it must equal the explode-and-count plan it replaced,
   * whatever the input partitioning and however often the counter emits
-  * early, with the same schema and no `explode` left in the plan.
+  * early, with the same schema and no `explode` left in the plan. Its
+  * final sort is as wide as the input's bytes ask: one unsampled
+  * partition for a small input, a range partitioning for a large one.
   */
 class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
@@ -43,6 +49,15 @@ class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def generates(df: DataFrame): Seq[GenerateExec] =
     collect(df.queryExecution.executedPlan) { case g: GenerateExec => g }
+
+  private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  /** The lines as a local relation, whose size the optimizer knows. */
+  private def sized: DataFrame = {
+    import spark.implicits._
+    lines.toDF("value")
+  }
 
   test("equals the explode-and-count model at 1, 3 and 7 input partitions") {
     val expected = rowsOf(model(input(1)))
@@ -83,5 +98,29 @@ class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val gens = generates(df)
     assert(gens.nonEmpty && gens.forall(_.generator.isInstanceOf[TokenCounts]))
     assert(!df.queryExecution.executedPlan.toString.toLowerCase.contains("explode"))
+  }
+
+  test("a small input is sorted in one unsampled partition above the aggregate") {
+    val df = WordCount.over(sized, "value")
+    assert(rowsOf(df) == rowsOf(model(input(1))))
+    val ex = exchanges(df)
+    assert(!ex.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), ex)
+    val single = ex.filter(_.outputPartitioning == SinglePartition)
+    assert(single.size == 1, ex)
+    assert(collect(single.head.child) { case a: HashAggregateExec => a }.nonEmpty, single.head)
+  }
+
+  test("a tiny advisory partition size range-partitions the sort, still in order") {
+    val key = SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val df = WordCount.over(sized, "value")
+      assert(rowsOf(df) == rowsOf(model(input(1))))
+      val widths = exchanges(df).map(_.outputPartitioning).collect {
+        case r: RangePartitioning => r.numPartitions
+      }
+      assert(widths.size == 1 && widths.head > 1, exchanges(df))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
