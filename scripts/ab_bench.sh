@@ -22,8 +22,10 @@
 #   unresolved        the parent's IQR / median is wider than the bound
 #   worse than bound  the change's median is worse by more than the bound
 #   within bound      otherwise
-# Nothing under perfbench/ is changed. The temporary directories are
-# removed on exit.
+# If a timed run fails, the pairs loop stops, the summary covers the pairs
+# completed before it, and the script names the failed side and seed and
+# exits 1. Nothing under perfbench/ is changed. The temporary directories
+# are removed on exit.
 set -euo pipefail
 
 if [[ $# -lt 4 || $# -gt 5 ]]; then
@@ -45,7 +47,9 @@ echo "ab_bench: nproc=$(nproc) workload=$workload pairs=$pairs seed0=$seed0" \
   "parent=$(git -C "$repo" rev-parse --short "$parent")" \
   "change=$(git -C "$repo" rev-parse --short "$change")"
 
-# run <side> <seed>: one timed run; its result line goes to results.jsonl
+# run <side> <seed>: one timed run; its result line goes to results.jsonl.
+# Returns 1 if the run fails, so that the summary still covers the pairs
+# that completed before it.
 run() {
   local out
   if ! out=$(cd "${dir[$1]}" && env -u CARGO_TARGET_DIR python3 perfbench/run.py \
@@ -53,7 +57,7 @@ run() {
       [[ -z $out ]]; then
     echo "ab_bench: $1 seed=$2 failed" >&2
     tail -n 20 "$work/stderr" >&2
-    exit 1
+    return 1
   fi
   printf '%s\t%s\t%s\n' "$1" "$2" "$out" >>"$work/results.jsonl"
   python3 - "$1" "$2" "$out" <<'EOF'
@@ -73,11 +77,14 @@ for side in parent change; do
 done
 : >"$work/results.jsonl"
 
+failed=
 for ((i = 0; i < pairs; i++)); do
   seed=$((seed0 + i))
   echo "pair $((i + 1))/$pairs seed=$seed"
   if ((i % 2 == 0)); then order="parent change"; else order="change parent"; fi
-  for side in $order; do run "$side" "$seed"; done
+  for side in $order; do
+    if ! run "$side" "$seed"; then failed="$side seed=$seed"; break 2; fi
+  done
 done
 
 python3 - "$work/results.jsonl" "${dir[change]}/BENCHMARK.json" <<'EOF'
@@ -109,6 +116,8 @@ def verdict(wins, gain, iqr, median, bound):
     return "within bound"
 
 print(f"summary over {len(seeds)} pairs (median [IQR]; wins = pairs the change was better)")
+if not seeds:
+    sys.exit(0)
 for k, m in metrics.items():
     lower = m["better"] == "lower"
     p = [by["parent"][s][k] for s in seeds]
@@ -120,3 +129,8 @@ for k, m in metrics.items():
     print(f"  {k:16s} parent {pm:9.3f} [{p3 - p1:7.3f}]  change {cm:9.3f} [{c3 - c1:7.3f}]"
           f"  {rel:+6.1f}%  wins {wins}/{len(seeds)}  {v}")
 EOF
+
+if [[ -n $failed ]]; then
+  echo "ab_bench: stopped at the failed $failed run; the summary above covers only the pairs completed before it" >&2
+  exit 1
+fi

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Unskippable pre-snapshot gate: the one-session-builder, one-stream-runner,
-# one-pin-module and one-oracle-tokenizer greps, compile (main + test), the
+# one-pin-module and one-oracle-tokenizer greps, the repeated-block check
+# (scripts/dup_check.py), compile (main + test), the
 # benchmark's smoke test, full ScalaTest suite, then a sf0.001 Verify +
 # oracle smoke.
 # Run this before EVERY end-of-round (or milestone) commit — round 5
@@ -54,6 +55,12 @@ if grep -rnF -e "'[^\\w\\s]'" -e "'[^\\\\w\\\\s]'" -e "'0x' || substring(" src/m
   echo "preflight: inline oracle tokenizer regex or hex64 outside graft/functions/TextFunctions.scala; use tokensSql/stripPunctSql/hex64Sql" >&2
   exit 1
 fi
+
+# One spelling per repeated block: no run of 7 code lines (blank,
+# comment, import/package lines and triple-quoted oracle SQL dropped)
+# may appear twice under src/main; fold the copy into a shared builder.
+echo "== preflight: no repeated 7-line blocks =="
+python3 scripts/dup_check.py
 
 echo "== preflight: Test/compile =="
 sbt -batch "Test/compile" 2>&1 | tail -3

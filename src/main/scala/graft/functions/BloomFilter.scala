@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -97,22 +95,10 @@ case class BloomFilterAgg(
     new GenericArrayData(words)
   }
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(buf.length * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < buf.length) { out.writeLong(buf(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: Array[Long]): Array[Byte] = SketchBytes.longsToBytes(buf)
 
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](numBits / 64)
-    var i = 0
-    while (i < buf.length) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): Array[Long] =
+    SketchBytes.bytesToLongs(bytes, numBits / 64)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BloomFilterAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -133,25 +119,13 @@ object BloomFilterAgg {
 
   /** SQL-registration builder: `graft_bloom(key, numBits, numHashes)`. */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        "graft_bloom(key, numBits, numHashes): numBits and numHashes " +
-          s"must be foldable non-null positive INT literals, got $got")
-    if (exprs.length != 3) fail(s"${exprs.length} arguments")
-    def intLit(e: Expression, name: String): Int = {
-      if (!e.foldable) fail(s"non-foldable $name ${e.sql}")
-      if (e.dataType != org.apache.spark.sql.types.IntegerType)
-        fail(s"$name of type ${e.dataType.simpleString}")
-      e.eval(null) match {
-        case i: java.lang.Integer if i > 0 => i
-        case null => fail(s"NULL $name")
-        case i    => fail(s"$name=$i")
-      }
-    }
+    val args = new SketchArgs("graft_bloom(key, numBits, numHashes): numBits and " +
+      "numHashes must be foldable non-null positive INT literals")
+    args.arity(exprs, 3)
     if (exprs.head.resolved && exprs.head.dataType != LongType)
-      fail(s"key of type ${exprs.head.dataType.simpleString} (need BIGINT)")
-    BloomFilterAgg(exprs.head, intLit(exprs(1), "numBits"), intLit(exprs(2), "numHashes"))
-      .toAggregateExpression()
+      args.fail(s"key of type ${exprs.head.dataType.simpleString} (need BIGINT)")
+    BloomFilterAgg(exprs.head, args.intLit(exprs(1), "numBits", _ > 0),
+      args.intLit(exprs(2), "numHashes", _ > 0)).toAggregateExpression()
   }
 }
 
@@ -220,20 +194,10 @@ case class BloomMightContain(left: Expression, right: Expression, numHashes: Int
 object BloomMightContain {
   /** SQL-registration builder: `graft_bloom_might_contain(bf, key, k)`. */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        "graft_bloom_might_contain(bf, key, numHashes): numHashes must " +
-          s"be a foldable non-null positive INT literal, got $got")
-    if (exprs.length != 3) fail(s"${exprs.length} arguments")
-    val k = exprs(2)
-    if (!k.foldable) fail(s"non-foldable numHashes ${k.sql}")
-    if (k.dataType != org.apache.spark.sql.types.IntegerType)
-      fail(s"numHashes of type ${k.dataType.simpleString}")
-    k.eval(null) match {
-      case i: java.lang.Integer if i > 0 && i <= 16 =>
-        BloomMightContain(exprs.head, exprs(1), i)
-      case null => fail("NULL numHashes")
-      case i    => fail(s"numHashes=$i")
-    }
+    val args = new SketchArgs("graft_bloom_might_contain(bf, key, numHashes): " +
+      "numHashes must be a foldable non-null positive INT literal")
+    args.arity(exprs, 3)
+    BloomMightContain(exprs.head, exprs(1),
+      args.intLit(exprs(2), "numHashes", i => i > 0 && i <= 16))
   }
 }

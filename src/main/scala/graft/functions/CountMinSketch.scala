@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
@@ -125,22 +124,10 @@ case class CountMinSketchAgg(
     new GenericArrayData(rows)
   }
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(buf.length * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < buf.length) { out.writeLong(buf(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: Array[Long]): Array[Byte] = SketchBytes.longsToBytes(buf)
 
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new Array[Long](depth * width)
-    var i = 0
-    while (i < buf.length) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): Array[Long] =
+    SketchBytes.bytesToLongs(bytes, depth * width)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CountMinSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -155,27 +142,15 @@ object CountMinSketchAgg {
     * the same literal validation discipline as [[SpaceSavingTopK.fromExprs]].
     */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        "graft_countmin(value, depth, width): depth and width must be " +
-          s"foldable non-null positive INT literals, got $got")
-    if (exprs.length != 3) fail(s"${exprs.length} arguments")
-    def intLit(e: Expression, name: String): Int = {
-      if (!e.foldable) fail(s"non-foldable $name ${e.sql}")
-      if (e.dataType != org.apache.spark.sql.types.IntegerType)
-        fail(s"$name of type ${e.dataType.simpleString}")
-      e.eval(null) match {
-        case i: java.lang.Integer if i > 0 => i
-        case null => fail(s"NULL $name")
-        case i    => fail(s"$name=$i")
-      }
-    }
+    val args = new SketchArgs("graft_countmin(value, depth, width): depth and " +
+      "width must be foldable non-null positive INT literals")
+    args.arity(exprs, 3)
     // the value column must be STRING — catch misuse at plan time, not
     // as an executor-side ClassCastException mid-job
     if (exprs.head.resolved &&
         exprs.head.dataType != org.apache.spark.sql.types.StringType)
-      fail(s"value of type ${exprs.head.dataType.simpleString} (need STRING)")
-    CountMinSketchAgg(exprs.head, intLit(exprs(1), "depth"), intLit(exprs(2), "width"))
-      .toAggregateExpression()
+      args.fail(s"value of type ${exprs.head.dataType.simpleString} (need STRING)")
+    CountMinSketchAgg(exprs.head, args.intLit(exprs(1), "depth", _ > 0),
+      args.intLit(exprs(2), "width", _ > 0)).toAggregateExpression()
   }
 }

@@ -715,6 +715,8 @@ object TokenizerKernel {
           len = seqLen(src, i, n)
           if (len == 0) { len = 1; Delete } else classOf(decode(src, i, len))
         }
+      // dup_check: allow 10 the char path below repeats this token-end
+      // tail; a shared helper would sit in the word-count hot loop
       if (cls == Word) {
         var k = 0
         while (k < len) { out(o + k) = src(i + k); k += 1 }
@@ -766,6 +768,7 @@ object TokenizerKernel {
         else if (Character.isHighSurrogate(c) && i + 1 < n && Character.isLowSurrogate(cs(i + 1))) {
           len = 2; classOf(Character.toCodePoint(c, cs(i + 1)))
         } else Delete
+      // dup_check: allow 10 the byte path's token-end tail (see scan)
       if (cls == Word) {
         cs(o) = c
         if (len == 2) cs(o + 1) = cs(i + 1)
@@ -841,19 +844,7 @@ private[graft] final class TokenCounter {
       counts(held) = 1
       held += 1
       slots(i) = held
-      if (2 * held > slots.length) rehash(slots.length * 2)
-    }
-  }
-
-  private def rehash(capacity: Int): Unit = {
-    slots = new Array[Int](capacity)
-    val mask = capacity - 1
-    var e = 0
-    while (e < held) {
-      var i = hashes(e) & mask
-      while (slots(i) != 0) i = (i + 1) & mask
-      slots(i) = e + 1
-      e += 1
+      if (2 * held > slots.length) slots = TokenCounter.slots(hashes, held, slots.length * 2)
     }
   }
 
@@ -867,6 +858,26 @@ private[graft] final class TokenCounter {
     java.util.Arrays.fill(words.asInstanceOf[Array[AnyRef]], 0, held, null)
     held = 0
     rows
+  }
+}
+
+private[graft] object TokenCounter {
+  /** A fresh open-addressing slot table of `capacity` (a power of two)
+    * over the first `held` entries' spread `hashes`, linear probing:
+    * slot = entry index + 1, 0 = empty. The cold rehash of
+    * [[TokenCounter]] and [[graft.operators.MapReduceJob]]'s combiner
+    * table; their probe loops stay inline. */
+  def slots(hashes: Array[Int], held: Int, capacity: Int): Array[Int] = {
+    val slots = new Array[Int](capacity)
+    val mask = capacity - 1
+    var e = 0
+    while (e < held) {
+      var i = hashes(e) & mask
+      while (slots(i) != 0) i = (i + 1) & mask
+      slots(i) = e + 1
+      e += 1
+    }
+    slots
   }
 }
 

@@ -145,25 +145,13 @@ object HyperLogLogAgg {
     * literal validation discipline as [[CountMinSketchAgg.fromExprs]].
     */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        "graft_hll(value, p): p must be a foldable non-null INT literal " +
-          s"in [4, 20], got $got")
-    if (exprs.length != 2) fail(s"${exprs.length} arguments")
-    val p = {
-      val e = exprs(1)
-      if (!e.foldable) fail(s"non-foldable p ${e.sql}")
-      if (e.dataType != org.apache.spark.sql.types.IntegerType)
-        fail(s"p of type ${e.dataType.simpleString}")
-      e.eval(null) match {
-        case i: java.lang.Integer if i >= 4 && i <= 20 => i.intValue()
-        case null => fail("NULL p")
-        case i    => fail(s"p=$i")
-      }
-    }
+    val args = new SketchArgs(
+      "graft_hll(value, p): p must be a foldable non-null INT literal in [4, 20]")
+    args.arity(exprs, 2)
+    val p = args.intLit(exprs(1), "p", i => i >= 4 && i <= 20)
     if (exprs.head.resolved &&
         exprs.head.dataType != org.apache.spark.sql.types.StringType)
-      fail(s"value of type ${exprs.head.dataType.simpleString} (need STRING)")
+      args.fail(s"value of type ${exprs.head.dataType.simpleString} (need STRING)")
     HyperLogLogAgg(exprs.head, p).toAggregateExpression()
   }
 }

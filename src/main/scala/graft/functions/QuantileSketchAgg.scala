@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, DataInputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -137,13 +137,9 @@ case class QuantileSketchAgg(
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  override def serialize(buf: Buf): Array[Byte] = SketchBytes.written() { out =>
     out.writeInt(buf.size())
     buf.forEach { (v, w) => out.writeLong(v); out.writeLong(w) }
-    out.flush()
-    bos.toByteArray
   }
 
   override def deserialize(bytes: Array[Byte]): Buf = {
@@ -170,11 +166,9 @@ object QuantileSketchAgg {
   /** SQL-registration builder: `graft_quantiles(value, capacity)` with
     * the [[SpaceSavingTopK.fromExprs]] literal-validation discipline. */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        "graft_quantiles(value, capacity): capacity must be a foldable " +
-          s"non-null INT literal >= 2, got $got")
-    if (exprs.length != 2) fail(s"${exprs.length} arguments")
+    val args = new SketchArgs("graft_quantiles(value, capacity): capacity must " +
+      "be a foldable non-null INT literal >= 2")
+    args.arity(exprs, 2)
     // Value child must already be BIGINT (update() reads it as Long):
     // reject at analysis time instead of a runtime ClassCastException
     // when user SQL passes an INT/DOUBLE column (r6 advice).
@@ -182,15 +176,7 @@ object QuantileSketchAgg {
       throw new IllegalArgumentException(
         "graft_quantiles(value, capacity): value must be BIGINT " +
           s"(cast explicitly), got ${exprs.head.dataType.simpleString}")
-    val e = exprs(1)
-    if (!e.foldable) fail(s"non-foldable capacity ${e.sql}")
-    if (e.dataType != org.apache.spark.sql.types.IntegerType)
-      fail(s"capacity of type ${e.dataType.simpleString}")
-    val capacity = e.eval(null) match {
-      case i: java.lang.Integer if i >= 2 => i.intValue()
-      case null => fail("NULL capacity")
-      case i    => fail(s"capacity=$i")
-    }
-    QuantileSketchAgg(exprs.head, capacity).toAggregateExpression()
+    QuantileSketchAgg(exprs.head, args.intLit(exprs(1), "capacity", _ >= 2))
+      .toAggregateExpression()
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, DataInputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -155,17 +155,13 @@ case class SpaceSavingTopK(
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  override def serialize(buf: Buf): Array[Byte] = SketchBytes.written() { out =>
     out.writeInt(buf.size())
     buf.forEach { (t, ce) =>
       val b = t.getBytes
       out.writeInt(b.length); out.write(b)
       out.writeLong(ce(0)); out.writeLong(ce(1))
     }
-    out.flush()
-    bos.toByteArray
   }
 
   override def deserialize(bytes: Array[Byte]): Buf = {
@@ -196,24 +192,12 @@ object SpaceSavingTopK {
     * with the same literal validation discipline as [[TopKTokens.fromExprs]].
     */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        "graft_top_k_spacesaving(value, k, capacity): k and capacity must be " +
-          s"foldable non-null positive INT literals with capacity >= k, got $got")
-    if (exprs.length != 3) fail(s"${exprs.length} arguments")
-    def intLit(e: Expression, name: String): Int = {
-      if (!e.foldable) fail(s"non-foldable $name ${e.sql}")
-      if (e.dataType != org.apache.spark.sql.types.IntegerType)
-        fail(s"$name of type ${e.dataType.simpleString}")
-      e.eval(null) match {
-        case i: java.lang.Integer if i > 0 => i
-        case null => fail(s"NULL $name")
-        case i    => fail(s"$name=$i")
-      }
-    }
-    val k = intLit(exprs(1), "k")
-    val capacity = intLit(exprs(2), "capacity")
-    if (capacity < k) fail(s"k=$k capacity=$capacity")
+    val args = new SketchArgs("graft_top_k_spacesaving(value, k, capacity): k and " +
+      "capacity must be foldable non-null positive INT literals with capacity >= k")
+    args.arity(exprs, 3)
+    val k = args.intLit(exprs(1), "k", _ > 0)
+    val capacity = args.intLit(exprs(2), "capacity", _ > 0)
+    if (capacity < k) args.fail(s"k=$k capacity=$capacity")
     SpaceSavingTopK(exprs.head, k, capacity).toAggregateExpression()
   }
 }

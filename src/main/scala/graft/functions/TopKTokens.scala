@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, DataInputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -74,17 +74,14 @@ case class TopKTokens(
     })
   }
 
-  override def serialize(buf: java.util.HashMap[UTF8String, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size())
-    buf.forEach { (t, c) =>
-      val b = t.getBytes
-      out.writeInt(b.length); out.write(b); out.writeLong(c)
+  override def serialize(buf: java.util.HashMap[UTF8String, Long]): Array[Byte] =
+    SketchBytes.written() { out =>
+      out.writeInt(buf.size())
+      buf.forEach { (t, c) =>
+        val b = t.getBytes
+        out.writeInt(b.length); out.write(b); out.writeLong(c)
+      }
     }
-    out.flush()
-    bos.toByteArray
-  }
 
   override def deserialize(bytes: Array[Byte]): java.util.HashMap[UTF8String, Long] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
@@ -116,19 +113,9 @@ object TopKTokens {
     * ClassCastException/NPE at plan time instead of an analysis error.
     */
   def fromExprs(exprs: Seq[Expression]): Expression = {
-    def fail(got: String): Nothing =
-      throw new IllegalArgumentException(
-        s"graft_top_k_tokens(value, k): k must be a foldable non-null positive INT literal, got $got")
-    if (exprs.length != 2) fail(s"${exprs.length} arguments")
-    val kExpr = exprs(1)
-    if (!kExpr.foldable) fail(s"non-foldable expression ${kExpr.sql}")
-    if (kExpr.dataType != org.apache.spark.sql.types.IntegerType)
-      fail(s"type ${kExpr.dataType.simpleString}")
-    kExpr.eval(null) match {
-      case k: java.lang.Integer if k > 0 =>
-        TopKTokens(exprs.head, k).toAggregateExpression()
-      case null => fail("NULL")
-      case k    => fail(s"$k")
-    }
+    val args = new SketchArgs(
+      "graft_top_k_tokens(value, k): k must be a foldable non-null positive INT literal")
+    args.arity(exprs, 2)
+    TopKTokens(exprs.head, args.intLit(exprs(1), "k", _ > 0)).toAggregateExpression()
   }
 }

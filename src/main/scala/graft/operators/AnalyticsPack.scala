@@ -41,6 +41,23 @@ object AnalyticsPack extends QueryPack {
       s"WHEN $h % ${1L << (k + 1)} = ${(1L << k) - 1} THEN $k")
       .mkString(" ") + " ELSE 16 END"
 
+  /** Per customer: pre-period (before 1998) spend in cents `x` (0 if
+    * none) and post-period conversion `y` (1 if any order from 1998 on).
+    * The users frame of q419 and q397. */
+  private def spendConversion(s: SparkSession, d: String): DataFrame = {
+    val spend = Tables.orders(s, d)
+      .select(col("o_custkey").as("c_custkey"),
+        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
+        col("o_orderdate").cast("timestamp").as("od"))
+    val pre = spend.filter(col("od") < lit("1998-01-01").cast("timestamp"))
+      .groupBy("c_custkey").agg(sum("cents").as("x"))
+    val post = spend.filter(col("od") >= lit("1998-01-01").cast("timestamp"))
+      .select("c_custkey").distinct().withColumn("y", lit(1L))
+    Tables.customer(s, d).select(col("c_custkey"))
+      .join(pre, Seq("c_custkey"), "left").na.fill(0L, Seq("x"))
+      .join(post, Seq("c_custkey"), "left").na.fill(0L, Seq("y"))
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- KRUSKAL–WALLIS k-GROUP RANK TEST (Kruskal & Wallis 1952) on
@@ -779,17 +796,7 @@ object AnalyticsPack extends QueryPack {
     // (Σwn)²)/N are exact int64 off the 10-row decile frame; z is one
     // identical divide/sqrt/floor text. ----
     "q419_cochran_armitage" -> { (s, d) =>
-      val spend = Tables.orders(s, d)
-        .select(col("o_custkey").as("c_custkey"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-          col("o_orderdate").cast("timestamp").as("od"))
-      val pre = spend.filter(col("od") < lit("1998-01-01").cast("timestamp"))
-        .groupBy("c_custkey").agg(sum("cents").as("x"))
-      val post = spend.filter(col("od") >= lit("1998-01-01").cast("timestamp"))
-        .select("c_custkey").distinct().withColumn("y", lit(1L))
-      val users = Tables.customer(s, d).select(col("c_custkey"))
-        .join(pre, Seq("c_custkey"), "left").na.fill(0L, Seq("x"))
-        .join(post, Seq("c_custkey"), "left").na.fill(0L, Seq("y"))
+      val users = spendConversion(s, d)
       val ranked = graft.functions.PrefixSum.inclusive(users,
         Seq(col("x").desc, col("c_custkey")), Seq((lit(1L), "rk")))
       val nAll = ranked.agg(count(lit(1)).as("n"))
@@ -851,17 +858,7 @@ object AnalyticsPack extends QueryPack {
     // deciles, arm counts and responder counts are exact int64; the
     // Qini value is one double expression per decile row. ----
     "q397_qini_uplift" -> { (s, d) =>
-      val spend = Tables.orders(s, d)
-        .select(col("o_custkey").as("c_custkey"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-          col("o_orderdate").cast("timestamp").as("od"))
-      val pre = spend.filter(col("od") < lit("1998-01-01").cast("timestamp"))
-        .groupBy("c_custkey").agg(sum("cents").as("x"))
-      val post = spend.filter(col("od") >= lit("1998-01-01").cast("timestamp"))
-        .select("c_custkey").distinct().withColumn("y", lit(1L))
-      val users = Tables.customer(s, d).select(col("c_custkey"))
-        .join(pre, Seq("c_custkey"), "left").na.fill(0L, Seq("x"))
-        .join(post, Seq("c_custkey"), "left").na.fill(0L, Seq("y"))
+      val users = spendConversion(s, d)
         .withColumn("arm", graft.functions.TextFunctions.hex64(
           md5(concat(lit("qini:"), col("c_custkey")))) % 2)
       val ranked = graft.functions.PrefixSum.inclusive(users,

@@ -89,6 +89,37 @@ object CleanPack extends QueryPack {
       .groupBy("source_a", "source_b", "n_a", "n_b")
       .agg(max("dnum").as("dmax"))
 
+  /** [[ksPairStats]] with the KS drift in ppm (`d_ppm`) and the tail
+    * bound's log p-value in micro-units, ln p = ln 2 − 2·dmax²/(n_a·n_b·
+    * (n_a+n_b)) (`ln_p_micro`). The test family of q371 and q407. */
+  private def ksLogP(s: SparkSession, d: String): DataFrame =
+    ksPairStats(s, d)
+      .withColumn("d_ppm",
+        expr("(dmax * 1000000) div (n_a * n_b)").cast("bigint"))
+      .withColumn("ln_p_micro", expr(
+        "cast(floor(1000000.0 * (0.6931471805599453 - " +
+          "2.0 * cast(dmax as double) * cast(dmax as double) / " +
+          "(cast(n_a as double) * cast(n_b as double) * " +
+          "(cast(n_a as double) + cast(n_b as double))))) as bigint)"))
+
+  /** Per (customer, experiment 1..2): the md5 A/B `bucket` and the
+    * user's event spend in cents `m` (0 if none). The assignment of q331
+    * and q211. */
+  private def experimentSpend(s: SparkSession, d: String): DataFrame = {
+    val spend = Tables.events(s, d)
+      .select(col("user_id"),
+        expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("cents"))
+      .groupBy("user_id").agg(sum("cents").as("cents"))
+    Tables.customer(s, d)
+      .select(col("c_custkey"), explode(sequence(lit(1), lit(2))).as("exp_id"))
+      .withColumn("h", hex64(md5(concat(lit("exp"), col("exp_id"),
+        lit(":"), col("c_custkey")))))
+      .withColumn("bucket", pmod(col("h"), lit(2)))
+      .join(spend.withColumnRenamed("user_id", "c_custkey"),
+        Seq("c_custkey"), "left_outer")
+      .withColumn("m", coalesce(col("cents"), lit(0L)))
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- referential-integrity audit: orphan counts across every FK
@@ -838,14 +869,7 @@ object CleanPack extends QueryPack {
     // the sources²-bounded pair frame (q127 rule); reject = rank ≤
     // kmax where kmax is the largest step-up rank that passes. ----
     "q371_ks_fdr" -> { (s, d) =>
-      val lnp = ksPairStats(s, d)
-        .withColumn("d_ppm",
-          expr("(dmax * 1000000) div (n_a * n_b)").cast("bigint"))
-        .withColumn("ln_p_micro", expr(
-          "cast(floor(1000000.0 * (0.6931471805599453 - " +
-            "2.0 * cast(dmax as double) * cast(dmax as double) / " +
-            "(cast(n_a as double) * cast(n_b as double) * " +
-            "(cast(n_a as double) + cast(n_b as double))))) as bigint)"))
+      val lnp = ksLogP(s, d)
       // bounded frame: pairs are sources²-bounded, so the global rank
       // window is a q127-class bounded window, not a row-scale sort
       val ranked = lnp
@@ -879,14 +903,7 @@ object CleanPack extends QueryPack {
     // (Holm ≤ BH pointwise) — the gate corpus pins both sides of that
     // containment. ----
     "q407_holm_fwer" -> { (s, d) =>
-      val lnp = ksPairStats(s, d)
-        .withColumn("d_ppm",
-          expr("(dmax * 1000000) div (n_a * n_b)").cast("bigint"))
-        .withColumn("ln_p_micro", expr(
-          "cast(floor(1000000.0 * (0.6931471805599453 - " +
-            "2.0 * cast(dmax as double) * cast(dmax as double) / " +
-            "(cast(n_a as double) * cast(n_b as double) * " +
-            "(cast(n_a as double) + cast(n_b as double))))) as bigint)"))
+      val lnp = ksLogP(s, d)
       val ranked = lnp
         .withColumn("rk", row_number().over(
           Window.orderBy(col("ln_p_micro"), col("source_a"), col("source_b"))))
@@ -1110,18 +1127,7 @@ object CleanPack extends QueryPack {
     // experiment); never a per-user rank window. int64: Σt³ ≤ n³ —
     // exact through ~2M users/arm, DECIMAL(38) internally past that. ----
     "q331_mann_whitney" -> { (s, d) =>
-      val spend = Tables.events(s, d)
-        .select(col("user_id"),
-          expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("cents"))
-        .groupBy("user_id").agg(sum("cents").as("cents"))
-      val assigned = Tables.customer(s, d)
-        .select(col("c_custkey"), explode(sequence(lit(1), lit(2))).as("exp_id"))
-        .withColumn("h", hex64(md5(concat(lit("exp"), col("exp_id"),
-          lit(":"), col("c_custkey")))))
-        .withColumn("bucket", pmod(col("h"), lit(2)))
-        .join(spend.withColumnRenamed("user_id", "c_custkey"),
-          Seq("c_custkey"), "left_outer")
-        .withColumn("m", coalesce(col("cents"), lit(0L)))
+      val assigned = experimentSpend(s, d)
       val byVal = assigned.groupBy("exp_id", "m")
         .agg(sum(when(col("bucket") === 0, 1L).otherwise(0L)).as("ca"),
           count(lit(1)).as("ct"))
@@ -1150,18 +1156,7 @@ object CleanPack extends QueryPack {
     },
 
     "q211_welch_ab" -> { (s, d) =>
-      val spend = Tables.events(s, d)
-        .select(col("user_id"),
-          expr("cast(cast(value as decimal(18,2)) * 100 as bigint)").as("cents"))
-        .groupBy("user_id").agg(sum("cents").as("cents"))
-      val assigned = Tables.customer(s, d)
-        .select(col("c_custkey"), explode(sequence(lit(1), lit(2))).as("exp_id"))
-        .withColumn("h", hex64(md5(concat(lit("exp"), col("exp_id"),
-          lit(":"), col("c_custkey")))))
-        .withColumn("bucket", pmod(col("h"), lit(2)))
-        .join(spend.withColumnRenamed("user_id", "c_custkey"),
-          Seq("c_custkey"), "left_outer")
-        .withColumn("m", coalesce(col("cents"), lit(0L)))
+      val assigned = experimentSpend(s, d)
       val result = assigned.groupBy("exp_id")
         .agg(
           sum(when(col("bucket") === 0, 1L).otherwise(0L)).as("na"),

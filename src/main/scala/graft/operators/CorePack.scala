@@ -260,14 +260,7 @@ object CorePack extends QueryPack {
       val scan = scans.head.scan.asInstanceOf[graft.sources.GraftRangeScan]
       require(scan.lo == 900000L && scan.hi == 900100L,
         s"id range did not reach the connector: generates [${scan.lo}, ${scan.hi})")
-      df.groupBy("bucket")
-        .agg(count(lit(1)).cast("bigint").as("n"),
-          sum("sq").cast("bigint").as("sum_sq"),
-          min("id").cast("bigint").as("min_id"),
-          max("id").cast("bigint").as("max_id"))
-        .select(col("bucket").cast("int").as("bucket"), col("n"),
-          col("sum_sq"), col("min_id"), col("max_id"))
-        .orderBy("bucket")
+      rangeBucketDigest(df)
     },
 
     // ---- DATASOURCE V2 AGGREGATE PUSHDOWN: the whole GROUP BY is
@@ -459,15 +452,7 @@ object CorePack extends QueryPack {
           .select((col("id") * lit(13441L) + lit(77L)).as("did"))
         val fact = s.read.format("graft-range")
           .option("n", "1000000").option("slices", "8").load()
-        val agg = fact.join(dim, col("id") === col("did"))
-          .groupBy("bucket")
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum("sq").cast("bigint").as("sum_sq"),
-            min("id").cast("bigint").as("min_id"),
-            max("id").cast("bigint").as("max_id"))
-          .select(col("bucket").cast("int").as("bucket"), col("n"),
-            col("sum_sq"), col("min_id"), col("max_id"))
-          .orderBy("bucket")
+        val agg = rangeBucketDigest(fact.join(dim, col("id") === col("did")))
         val rows = agg.collect() // drive execution so the runtime filter fires
         val scans = agg.queryExecution.executedPlan.collect {
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
@@ -507,9 +492,7 @@ object CorePack extends QueryPack {
       val keys = Seq("spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      withConfs(s, keys) {
         def side(n: Long, p: String) = s.read.format("graft-range")
           .option("n", n.toString).option("slices", "8")
           .option("clusterByBucket", "true").load()
@@ -542,9 +525,6 @@ object CorePack extends QueryPack {
           val rows = j.collect()
           s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
         }
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
 
@@ -587,9 +567,7 @@ object CorePack extends QueryPack {
         // co-partition check must accept the subset match — the same
         // conf Iceberg documents for its storage-partitioned joins
         "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-      val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      withConfs(s, keys) {
         def clusteredScan(n: Long) = s.read.format("graft-range")
           .option("n", n.toString).option("slices", "8")
           .option("clusterByBucket", "true").load()
@@ -642,9 +620,6 @@ object CorePack extends QueryPack {
               s"scan with the 64 surviving ids (got $filtered)")
           s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
         }
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
 
@@ -729,14 +704,7 @@ object CorePack extends QueryPack {
       require(sc.pushedLimit.contains(1000) && sc.lo == 500000L && sc.hi == 501000L,
         s"q461: limit did not reach the connector: pushed=${sc.pushedLimit} " +
           s"generates [${sc.lo}, ${sc.hi})")
-      df.groupBy("bucket")
-        .agg(count(lit(1)).cast("bigint").as("n"),
-          sum("sq").cast("bigint").as("sum_sq"),
-          min("id").cast("bigint").as("min_id"),
-          max("id").cast("bigint").as("max_id"))
-        .select(col("bucket").cast("int").as("bucket"), col("n"),
-          col("sum_sq"), col("min_id"), col("max_id"))
-        .orderBy("bucket")
+      rangeBucketDigest(df)
     },
 
     // ---- DSv2 ORDERING REPORT (SupportsReportOrdering): the scan
@@ -978,25 +946,7 @@ object CorePack extends QueryPack {
     // from documents, so a snapshot that leaked a later commit's rows
     // (or lost its own) hash-fails on the asof tag it corrupted. ----
     "q472_dsv2_time_travel" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftmem",
-        classOf[graft.sources.GraftMemCatalog].getName)
-      val tbl = s"tt_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
-      // commit 1: baseline per-(lang, source) digests
-      docDigest(Tables.documents(s, dir))
-        .write.format("graft-mem").option("table", tbl).mode("append").save()
-      // commit 2: keyed upsert — 'en' digests recomputed over
-      // upper-cased text (the UPDATE), one ('zz','synthetic') INSERT
-      import s.implicits._
-      docDigest(Tables.documents(s, dir).filter(col("lang") === "en")
-          .withColumn("text", upper(col("text"))))
-        .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
-          .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
-        .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
-      // commit 3: metadata delete of the 'de' rows
-      s.sql(s"DELETE FROM graftmem.$tbl WHERE lang = 'de'")
-      val commits = graft.sources.GraftMemStore.commitsOf(tbl)
-      require(commits.map(_.kind) == List("append", "overwrite", "delete"),
-        s"q472: expected append+overwrite+delete commits, got $commits")
+      val (tbl, _) = threeCommitHistory(s, dir, "tt", "q472")
       require(graft.sources.GraftMemStore.currentVersion(tbl) == 3,
         s"q472: expected version 3 after three commits")
       // time-travel reads; materialize BEFORE expiry (a pinned scan
@@ -1063,21 +1013,7 @@ object CorePack extends QueryPack {
     // change set recomputed as snapshot-state EXCEPTs from documents.
     // ----
     "q474_dsv2_changes" -> { (s, dir) =>
-      s.conf.set("spark.sql.catalog.graftmem",
-        classOf[graft.sources.GraftMemCatalog].getName)
-      val tbl = s"cdc_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
-      docDigest(Tables.documents(s, dir))
-        .write.format("graft-mem").option("table", tbl).mode("append").save()
-      import s.implicits._
-      docDigest(Tables.documents(s, dir).filter(col("lang") === "en")
-          .withColumn("text", upper(col("text"))))
-        .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
-          .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
-        .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
-      s.sql(s"DELETE FROM graftmem.$tbl WHERE lang = 'de'")
-      val commits = graft.sources.GraftMemStore.commitsOf(tbl)
-      require(commits.map(_.kind) == List("append", "overwrite", "delete"),
-        s"q474: expected append+overwrite+delete commits, got $commits")
+      val (tbl, commits) = threeCommitHistory(s, dir, "cdc", "q474")
       def changes(from: Int, to: Int): DataFrame =
         s.read.format("graft-mem").option("table", tbl)
           .option("changesFrom", from.toString)
@@ -1172,6 +1108,63 @@ object CorePack extends QueryPack {
 
   private val dsv2SinkCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   private val obsCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Runs `body` with the session confs `keys` set, then restores each to
+    * its previous value (or unsets it). Called by q460 and q468. */
+  private def withConfs[T](s: SparkSession, keys: Seq[(String, String)])(body: => T): T = {
+    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
+    keys.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Per-bucket digest of graft-range rows (id, sq, bucket): row count,
+    * Σsq, min and max id, ordered by bucket. Called by q436, q454, q461
+    * and [[graft.streaming.StreamingPack]]'s restart-resume query (q465). */
+  private[graft] def rangeBucketDigest(df: DataFrame): DataFrame =
+    df.groupBy("bucket")
+      .agg(count(lit(1)).cast("bigint").as("n"),
+        sum("sq").cast("bigint").as("sum_sq"),
+        min("id").cast("bigint").as("min_id"),
+        max("id").cast("bigint").as("max_id"))
+      .select(col("bucket").cast("int").as("bucket"), col("n"),
+        col("sum_sq"), col("min_id"), col("max_id"))
+      .orderBy("bucket")
+
+  /** Commits 2 and 3 of the graft-mem table histories on `graftmem.<tbl>`:
+    * a keyed upsert ('en' digests of `docs` recomputed over upper-cased
+    * text, the UPDATE, and one ('zz', 'synthetic') INSERT), then a
+    * metadata delete of the 'de' rows. Called by [[threeCommitHistory]]
+    * (q472, q474) and the streaming q475 and q478. */
+  private[graft] def upsertThenDelete(s: SparkSession, docs: DataFrame, tbl: String): Unit = {
+    import s.implicits._
+    docDigest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
+      .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
+        .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
+      .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
+    s.sql(s"DELETE FROM graftmem.$tbl WHERE lang = 'de'")
+  }
+
+  /** The three-commit DSv2 history of q472 and q474 on a fresh graft-mem
+    * table `<prefix>_<n>_<session>`: commit 1 appends the [[docDigest]]
+    * rows, commits 2 and 3 are [[upsertThenDelete]]. REQUIREs that the
+    * journal holds exactly those three commits (`q` names the query in
+    * the message). Returns the table name and its commits. */
+  private def threeCommitHistory(s: SparkSession, dir: String, prefix: String, q: String)
+      : (String, List[graft.sources.GraftMemStore.CommitRecord]) = {
+    s.conf.set("spark.sql.catalog.graftmem",
+      classOf[graft.sources.GraftMemCatalog].getName)
+    val tbl = s"${prefix}_${dsv2SinkCounter.incrementAndGet()}_${System.identityHashCode(s)}"
+    val docs = Tables.documents(s, dir)
+    docDigest(docs).write.format("graft-mem").option("table", tbl).mode("append").save()
+    upsertThenDelete(s, docs, tbl)
+    val commits = graft.sources.GraftMemStore.commitsOf(tbl)
+    require(commits.map(_.kind) == List("append", "overwrite", "delete"),
+      s"$q: expected append+overwrite+delete commits, got $commits")
+    (tbl, commits)
+  }
 
   /** q454's deterministic 64-key dimension (13441·i + 77, no mod
     * wraparound below 10⁶ so the keys are distinct by construction);

@@ -310,12 +310,7 @@ bands AS (SELECT *, ${hex64Sql("md5(CAST(band_id AS VARCHAR) || ':' || CAST(band
       graft.functions.GraftExpressions.ensure(s)
       val docs = fullSigStore(s, d)
       val bands = fullBandIndex(s, d)
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          (col("a.band_id") === 0 || col("a.b0") =!= col("b.b0")))
-        .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
+      val cand = bandCandidates(bands)
       val sp = ngramPairs(s, d).select("doc_i", "doc_j")
       val da = docs.select(col("doc_id").as("doc_i"),
         col("tid").as("tid_a"), col("n_toks").as("n_a"))
@@ -410,15 +405,33 @@ bands AS (SELECT *, ${hex64Sql("md5(CAST(band_id AS VARCHAR) || ':' || CAST(band
     s.read.parquet(path)
   }
 
-  /** Emit-once band self-join over a [[minhashBands]] frame —
-    * the q41 candidate generator, shared by the weighted path. */
-  private def bandCandidates(bands: DataFrame): DataFrame =
+  /** Emit-once band self-join over a [[minhashBands]] frame — the q41
+    * candidate generator. Called by q41, q129, the q129/q230 truth
+    * artifact ([[jaccardTruthStore]]), the weighted path (q252, q270) and
+    * the `ProfileDedupScale` dev tool; [[bandCandidatesCte]] is its
+    * DuckDB mirror. */
+  private[graft] def bandCandidates(bands: DataFrame): DataFrame =
     bands.as("a").join(bands.as("b"),
         col("a.band_id") === col("b.band_id") &&
         col("a.band_val") === col("b.band_val") &&
         col("a.doc_id") < col("b.doc_id") &&
         (col("a.band_id") === 0 || col("a.b0") =!= col("b.b0")))
       .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
+
+  /** One-row precision/recall of a `(doc_i, doc_j)` candidate set
+    * against a truth set of the same shape: counts and integer ppm
+    * ratios, so both engines agree exactly. Called by q129 and q253. */
+  private def candidatePr(cand: DataFrame, truth: DataFrame): DataFrame = {
+    val candTrue = cand.join(truth, Seq("doc_i", "doc_j"), "left_semi")
+    truth.agg(count(lit(1)).cast("bigint").as("n_truth"))
+      .crossJoin(cand.agg(count(lit(1)).cast("bigint").as("n_cand")))
+      .crossJoin(candTrue.agg(count(lit(1)).cast("bigint").as("n_cand_true")))
+      .select(col("n_truth"), col("n_cand"), col("n_cand_true"),
+        when(col("n_cand") > 0, expr("n_cand_true * 1000000 div n_cand"))
+          .otherwise(lit(0L)).cast("bigint").as("precision_ppm"),
+        when(col("n_truth") > 0, expr("n_cand_true * 1000000 div n_truth"))
+          .otherwise(lit(0L)).cast("bigint").as("recall_ppm"))
+  }
 
   /** DuckDB mirror of [[bandCandidates]]: `cand(doc_i, doc_j)` over a
     * `bands(doc_id, b0, band_id, band_val)` CTE ([[minhashCtes]]), same
@@ -1033,12 +1046,7 @@ bands AS (SELECT *, ${hex64Sql("md5(CAST(band_id AS VARCHAR) || ':' || CAST(band
       // (quadratic) candidate stream disappears. Band keys are hex64 int64s
       // for the same shuffle-width reason as the ids.
       val bands = fullBandIndex(s, d)
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          (col("a.band_id") === 0 || col("a.b0") =!= col("b.b0")))
-        .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
+      val cand = bandCandidates(bands)
       // Plan-shape REQUIRE: the candidate generator must plan as an
       // EQUI-join keyed on (band_id, band_val) — the LSH-banded shape —
       // never a nested-loop/cartesian theta join, which would be
@@ -1086,23 +1094,10 @@ bands AS (SELECT *, ${hex64Sql("md5(CAST(band_id AS VARCHAR) || ':' || CAST(band
     "q129_minhash_pr" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
       val bands = fullBandIndex(s, d)
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          (col("a.band_id") === 0 || col("a.b0") =!= col("b.b0")))
-        .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
+      val cand = bandCandidates(bands)
       // truth from the shared once-per-corpus artifact ([[jaccardTruthStore]])
       val truth = jaccardTruthStore(s, d)
-      val candTrue = cand.join(truth, Seq("doc_i", "doc_j"), "left_semi")
-      val result = truth.agg(count(lit(1)).cast("bigint").as("n_truth"))
-        .crossJoin(cand.agg(count(lit(1)).cast("bigint").as("n_cand")))
-        .crossJoin(candTrue.agg(count(lit(1)).cast("bigint").as("n_cand_true")))
-        .select(col("n_truth"), col("n_cand"), col("n_cand_true"),
-          when(col("n_cand") > 0, expr("n_cand_true * 1000000 div n_cand"))
-            .otherwise(lit(0L)).cast("bigint").as("precision_ppm"),
-          when(col("n_truth") > 0, expr("n_cand_true * 1000000 div n_truth"))
-            .otherwise(lit(0L)).cast("bigint").as("recall_ppm"))
+      val result = candidatePr(cand, truth)
       materialized(result).orderBy("n_truth")
     },
 
@@ -1483,15 +1478,7 @@ bands AS (SELECT *, ${hex64Sql("md5(CAST(band_id AS VARCHAR) || ':' || CAST(band
       graft.functions.GraftExpressions.ensure(s)
       val cand = bandCandidates(minhashBands(weightedSigStore(s, d)))
       val truth = warmed(weightedTruthStore(s, d))
-      val candTrue = cand.join(truth, Seq("doc_i", "doc_j"), "left_semi")
-      val result = truth.agg(count(lit(1)).cast("bigint").as("n_truth"))
-        .crossJoin(cand.agg(count(lit(1)).cast("bigint").as("n_cand")))
-        .crossJoin(candTrue.agg(count(lit(1)).cast("bigint").as("n_cand_true")))
-        .select(col("n_truth"), col("n_cand"), col("n_cand_true"),
-          when(col("n_cand") > 0, expr("n_cand_true * 1000000 div n_cand"))
-            .otherwise(lit(0L)).cast("bigint").as("precision_ppm"),
-          when(col("n_truth") > 0, expr("n_cand_true * 1000000 div n_truth"))
-            .otherwise(lit(0L)).cast("bigint").as("recall_ppm"))
+      val result = candidatePr(cand, truth)
       materialized(result, truth).orderBy("n_truth")
     },
 

@@ -76,6 +76,80 @@ object EventsPack extends QueryPack {
       |         CAST(sum(CASE WHEN converted THEN 1 ELSE 0 END) AS BIGINT) AS d_ev
       |  FROM obs GROUP BY 1),""".stripMargin
 
+  /** The backward as-of inputs of q03, q105 and q09: purchases
+    * (user_id, event_id, us) and the distinct signups (r_user_id,
+    * signup_us), times in epoch micros. Distinct (user, ts), because
+    * right-side ties are unspecified by the operator. */
+  private def purchasesAndSignups(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"), col("us"))
+    val signups = ev.filter(col("event_type") === "signup")
+      .select(col("user_id").as("r_user_id"), col("us").as("signup_us"))
+      .distinct()
+    (purchases, signups)
+  }
+
+  /** The forward as-of inputs of q283 and q345: signups (user_id,
+    * event_id, signup_us, neg_us) and purchases deduped per (user,
+    * instant) to their min event_id (r_user_id, purchase_us,
+    * purchase_event_id, neg_pus); `neg_*` are the negated times of the
+    * forward direction. */
+  private def signupsAndPurchases(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
+    val signups = ev.filter(col("event_type") === "signup")
+      .select(col("user_id"), col("event_id"), col("us").as("signup_us"))
+      .withColumn("neg_us", -col("signup_us"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id").as("r_user_id"), col("us").as("purchase_us"))
+      .agg(min("event_id").as("purchase_event_id"))
+      .withColumn("neg_pus", -col("purchase_us"))
+    (signups, purchases)
+  }
+
+  /** Per event type, the hourly CUSUM changepoint over `hourly`
+    * (event_type, hr, c): the hour maximizing |S_k| (ties to the
+    * earliest), with the series length and total. Called by q199 and the
+    * streaming twin [[graft.streaming.StreamingPack.streamCusum]]. */
+  private[graft] def cusumChangepoints(hourly: DataFrame): DataFrame = {
+    val tot = hourly.groupBy("event_type")
+      .agg(sum("c").as("total"), count(lit(1)).as("n_hours"))
+    val wc = Window.partitionBy("event_type").orderBy("hr")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wi = Window.partitionBy("event_type").orderBy("hr")
+    hourly.join(tot, "event_type")
+      .withColumn("cumc", sum("c").over(wc))
+      .withColumn("k", row_number().over(wi).cast("bigint"))
+      .withColumn("s_k", col("n_hours") * col("cumc") - col("k") * col("total"))
+      .filter(col("k") < col("n_hours"))
+      .groupBy("event_type")
+      .agg(max(struct(abs(col("s_k")).as("a"), (-col("hr")).as("nh"))).as("m"),
+        max(col("n_hours")).as("n_hours"), max(col("total")).as("total"))
+      .select(col("event_type"),
+        (-col("m.nh")).cast("bigint").as("change_hr"),
+        col("m.a").cast("bigint").as("cusum_abs"),
+        col("n_hours").cast("bigint").as("n_hours"),
+        col("total").cast("bigint").as("total"))
+      .orderBy("event_type")
+  }
+
+  /** The top-3 next states per current state of a transition count
+    * matrix `tr` (cur, nxt, cnt), with the row total and the transition
+    * probability in ppm. Called by q203 and the streaming twin
+    * [[graft.streaming.TransitionStream.run]]. */
+  private[graft] def topTransitions(tr: DataFrame): DataFrame = {
+    val tot = tr.groupBy("cur").agg(sum("cnt").as("tot"))
+    tr.join(tot, "cur")
+      .withColumn("p_q", expr("(1000000 * cnt) div tot"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("cur").orderBy(col("cnt").desc, col("nxt"))))
+      .filter(col("rk") <= 3)
+      .select(col("cur"), col("rk").cast("int").as("rk"), col("nxt"),
+        col("cnt").cast("bigint").as("cnt"), col("tot").cast("bigint").as("tot"),
+        col("p_q").cast("bigint").as("p_q"))
+      .orderBy("cur", "rk")
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- DIURNAL ACTIVITY HEATMAP: events, distinct users and exact
@@ -147,13 +221,7 @@ object EventsPack extends QueryPack {
     // equi-join cost, no range blowup). Oracle = DuckDB's native ASOF JOIN,
     // so two independent as-of implementations must agree hash-exactly.
     "q03_asof_join_native" -> { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      // distinct (user, ts): right-side ties are unspecified by the operator
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id").as("r_user_id"), col("us").as("signup_us"))
-        .distinct()
+      val (purchases, signups) = purchasesAndSignups(s, d)
       graft.plans.GraftOps.asofJoin(purchases, signups,
           Seq("user_id"), Seq("r_user_id"), "us", "signup_us")
         .select(col("user_id"), col("event_id"),
@@ -172,12 +240,7 @@ object EventsPack extends QueryPack {
     // exchange + sort per side, forward-only merge; tolerance and
     // outerness are merge-local and change no distribution. ----
     "q105_asof_outer_tolerance" -> { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id").as("r_user_id"), col("us").as("signup_us"))
-        .distinct()
+      val (purchases, signups) = purchasesAndSignups(s, d)
       graft.plans.GraftOps.asofJoin(purchases, signups,
           Seq("user_id"), Seq("r_user_id"), "us", "signup_us",
           allowEqual = true, leftOuter = true, tolerance = Some(asofToleranceUs))
@@ -267,14 +330,7 @@ object EventsPack extends QueryPack {
     // Right side pre-deduped per (user, instant) to min event_id (the
     // operator's tie rule is positional; make ties impossible instead).
     "q283_asof_forward" -> { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("event_id"), col("us").as("signup_us"))
-        .withColumn("neg_us", -col("signup_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id").as("r_user_id"), col("us").as("purchase_us"))
-        .agg(min("event_id").as("purchase_event_id"))
-        .withColumn("neg_pus", -col("purchase_us"))
+      val (signups, purchases) = signupsAndPurchases(s, d)
       graft.plans.GraftOps.asofJoin(signups, purchases,
           Seq("user_id"), Seq("r_user_id"), "neg_us", "neg_pus",
           allowEqual = true, leftOuter = true,
@@ -296,14 +352,7 @@ object EventsPack extends QueryPack {
     // argmin over |Δ| with the same tie rule. ----
     "q345_asof_nearest" -> { (s, d) =>
       val tol = 7L * 86400L * 1000000L
-      val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("event_id"), col("us").as("signup_us"))
-        .withColumn("neg_us", -col("signup_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id").as("r_user_id"), col("us").as("purchase_us"))
-        .agg(min("event_id").as("purchase_event_id"))
-        .withColumn("neg_pus", -col("purchase_us"))
+      val (signups, purchases) = signupsAndPurchases(s, d)
       val back = graft.plans.GraftOps.asofJoin(signups, purchases,
           Seq("user_id"), Seq("r_user_id"), "signup_us", "purchase_us",
           allowEqual = true, leftOuter = true, tolerance = Some(tol))
@@ -486,12 +535,7 @@ object EventsPack extends QueryPack {
     // (same oracle: DuckDB's native ASOF JOIN). On a telemetry store
     // written this way, as-of enrichment is shuffle-free. ----
     "q09_asof_join_bucketed" -> { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("us", unix_micros(col("ts")))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("us"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id").as("r_user_id"), col("us").as("signup_us"))
-        .distinct()
+      val (purchases, signups) = purchasesAndSignups(s, d)
       // per-run path ([[graft.core.Artifacts.perRunSinkPath]]): concurrent
       // runs must not overwrite each other's bucketed table files
       val base = graft.core.Artifacts.perRunSinkPath(s, "bucketed")
@@ -1477,25 +1521,7 @@ object EventsPack extends QueryPack {
       val hourly = Tables.events(s, d)
         .groupBy(col("event_type"), expr(s"unix_micros(ts) div $hourUs").as("hr"))
         .agg(count(lit(1)).as("c"))
-      val tot = hourly.groupBy("event_type")
-        .agg(sum("c").as("total"), count(lit(1)).as("n_hours"))
-      val wc = Window.partitionBy("event_type").orderBy("hr")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wi = Window.partitionBy("event_type").orderBy("hr")
-      val result = hourly.join(tot, "event_type")
-        .withColumn("cumc", sum("c").over(wc))
-        .withColumn("k", row_number().over(wi).cast("bigint"))
-        .withColumn("s_k", col("n_hours") * col("cumc") - col("k") * col("total"))
-        .filter(col("k") < col("n_hours"))
-        .groupBy("event_type")
-        .agg(max(struct(abs(col("s_k")).as("a"), (-col("hr")).as("nh"))).as("m"),
-          max(col("n_hours")).as("n_hours"), max(col("total")).as("total"))
-        .select(col("event_type"),
-          (-col("m.nh")).cast("bigint").as("change_hr"),
-          col("m.a").cast("bigint").as("cusum_abs"),
-          col("n_hours").cast("bigint").as("n_hours"),
-          col("total").cast("bigint").as("total"))
-      result.orderBy("event_type")
+      cusumChangepoints(hourly)
     },
 
     // ---- BINARY-SEGMENTATION CHANGEPOINTS (Scott & Knott 1974; the
@@ -1793,16 +1819,7 @@ object EventsPack extends QueryPack {
         .filter(col("nxt").isNotNull)
         .groupBy(col("event_type").as("cur"), col("nxt"))
         .agg(count(lit(1)).as("cnt"))
-      val tot = tr.groupBy("cur").agg(sum("cnt").as("tot"))
-      val result = tr.join(tot, "cur")
-        .withColumn("p_q", expr("(1000000 * cnt) div tot"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("cur").orderBy(col("cnt").desc, col("nxt"))))
-        .filter(col("rk") <= 3)
-        .select(col("cur"), col("rk").cast("int").as("rk"), col("nxt"),
-          col("cnt").cast("bigint").as("cnt"), col("tot").cast("bigint").as("tot"),
-          col("p_q").cast("bigint").as("p_q"))
-      result.orderBy("cur", "rk")
+      topTransitions(tr)
     },
 
     // ---- seasonal-naive forecast error (the standard baseline every

@@ -133,7 +133,8 @@ object MapReduceJob {
         keys(held) = k; hashes(held) = h; lastValues(held) = v; lastCounts(held) = 1
         held += 1
         slots(i) = held
-        if (2 * held > slots.length) rehash(slots.length * 2)
+        if (2 * held > slots.length)
+          slots = graft.functions.TokenCounter.slots(hashes, held, slots.length * 2)
       } else if (lastValues(e) == v) lastCounts(e) += 1
       else {
         if (earlier(e) == null) earlier(e) = new Runs
@@ -148,18 +149,6 @@ object MapReduceJob {
       lastValues = java.util.Arrays.copyOf(lastValues, held * 2)
       lastCounts = java.util.Arrays.copyOf(lastCounts, held * 2)
       earlier = java.util.Arrays.copyOf(earlier, held * 2)
-    }
-
-    private def rehash(capacity: Int): Unit = {
-      slots = new Array[Int](capacity)
-      val mask = capacity - 1
-      var e = 0
-      while (e < held) {
-        var i = hashes(e) & mask
-        while (slots(i) != 0) i = (i + 1) & mask
-        slots(i) = e + 1
-        e += 1
-      }
     }
 
     /** Entry `e`'s `(key, values, counts)` row: its earlier runs, then its

@@ -257,6 +257,35 @@ object PipelinePack extends QueryPack {
     lab
   }
 
+  /** Effective-token savings per source under a near-dup pair set: CC
+    * clusters over `pairs` (doc_i, doc_j), q48's representative rule (max
+    * n_chars, ties to the smaller doc_id; singletons represent
+    * themselves), raw vs representative-only docs and tokens. Called by
+    * q235 (shingle pairs) and q270 (weighted pairs). */
+  private def effectiveTokens(s: SparkSession, d: String, pairs: DataFrame): DataFrame = {
+    val cc = connectedComponents(symmetricEdges(pairs).toDF("v", "u"))
+      .select(col("node").as("doc_id"), col("label").as("cl"))
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), col("source"), col("n_chars"),
+        size(graft.functions.TextFunctions.tokens(col("text")))
+          .cast("bigint").as("n_toks"))
+    val w = Window.partitionBy(col("cluster"))
+      .orderBy(col("n_chars").desc, col("doc_id"))
+    docs.join(cc, Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("cl"), col("doc_id")))
+      .withColumn("is_rep", row_number().over(w) === 1)
+      .groupBy("source")
+      .agg(count(lit(1)).cast("bigint").as("raw_docs"),
+        sum("n_toks").cast("bigint").as("raw_tokens"),
+        sum(when(col("is_rep"), 1L).otherwise(0L)).cast("bigint").as("eff_docs"),
+        sum(when(col("is_rep"), col("n_toks")).otherwise(0L))
+          .cast("bigint").as("eff_tokens"))
+      .withColumn("savings_ppm",
+        expr("(1000000 * (raw_tokens - eff_tokens)) div raw_tokens")
+          .cast("bigint"))
+      .orderBy("source")
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- dedup retention: drop docs with a strictly better near-dup ----
@@ -763,28 +792,7 @@ object PipelinePack extends QueryPack {
     // One CC pass (shared construction with q47/q48) + a per-cluster
     // rank + a sources-sized aggregate. ----
     "q235_effective_tokens" -> { (s, d) =>
-      val pairs = DedupPack.ngramPairs(s, d).select("doc_i", "doc_j")
-      val cc = connectedComponents(symmetricEdges(pairs).toDF("v", "u"))
-        .select(col("node").as("doc_id"), col("label").as("cl"))
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          size(graft.functions.TextFunctions.tokens(col("text")))
-            .cast("bigint").as("n_toks"))
-      val w = Window.partitionBy(col("cluster"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      docs.join(cc, Seq("doc_id"), "left")
-        .withColumn("cluster", coalesce(col("cl"), col("doc_id")))
-        .withColumn("is_rep", row_number().over(w) === 1)
-        .groupBy("source")
-        .agg(count(lit(1)).cast("bigint").as("raw_docs"),
-          sum("n_toks").cast("bigint").as("raw_tokens"),
-          sum(when(col("is_rep"), 1L).otherwise(0L)).cast("bigint").as("eff_docs"),
-          sum(when(col("is_rep"), col("n_toks")).otherwise(0L))
-            .cast("bigint").as("eff_tokens"))
-        .withColumn("savings_ppm",
-          expr("(1000000 * (raw_tokens - eff_tokens)) div raw_tokens")
-            .cast("bigint"))
-        .orderBy("source")
+      effectiveTokens(s, d, DedupPack.ngramPairs(s, d).select("doc_i", "doc_j"))
     },
 
     // ---- q235 UNDER THE WEIGHTED PAIR SET: effective-token savings
@@ -795,28 +803,7 @@ object PipelinePack extends QueryPack {
     // Same CC pass, same q48 representative rule, same fold; only the
     // edge set differs. ----
     "q270_weighted_effective_tokens" -> { (s, d) =>
-      val pairs = DedupPack.weightedScoredPairs(s, d).select("doc_i", "doc_j")
-      val cc = connectedComponents(symmetricEdges(pairs).toDF("v", "u"))
-        .select(col("node").as("doc_id"), col("label").as("cl"))
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          size(graft.functions.TextFunctions.tokens(col("text")))
-            .cast("bigint").as("n_toks"))
-      val w = Window.partitionBy(col("cluster"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      docs.join(cc, Seq("doc_id"), "left")
-        .withColumn("cluster", coalesce(col("cl"), col("doc_id")))
-        .withColumn("is_rep", row_number().over(w) === 1)
-        .groupBy("source")
-        .agg(count(lit(1)).cast("bigint").as("raw_docs"),
-          sum("n_toks").cast("bigint").as("raw_tokens"),
-          sum(when(col("is_rep"), 1L).otherwise(0L)).cast("bigint").as("eff_docs"),
-          sum(when(col("is_rep"), col("n_toks")).otherwise(0L))
-            .cast("bigint").as("eff_tokens"))
-        .withColumn("savings_ppm",
-          expr("(1000000 * (raw_tokens - eff_tokens)) div raw_tokens")
-            .cast("bigint"))
-        .orderBy("source")
+      effectiveTokens(s, d, DedupPack.weightedScoredPairs(s, d).select("doc_i", "doc_j"))
     },
 
     // ---- benchmark contamination: n-gram overlap between a held-out

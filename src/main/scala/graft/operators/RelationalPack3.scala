@@ -71,6 +71,53 @@ object RelationalPack3 extends QueryPack {
           .cast("bigint").as("est_common"))
   }
 
+  /** The zone-map layout replay of q154 and q444: lineitem's
+    * (orderkey, partkey) scaled to an 8-bit (x8, y8) grid, `curves` adding
+    * each curve's key and file column, the linear layout's `file_lin`
+    * (64 equal-width x bins), then per layout — `layouts` maps each file
+    * column to its name, unioned in order — the min/max zone maps
+    * replayed against a box and a y-only band predicate. */
+  private def layoutReplay(s: SparkSession, d: String, curves: DataFrame => DataFrame,
+                           layouts: Seq[(String, String)]): DataFrame = {
+    val li = Tables.lineitem(s, d)
+      .select(col("l_orderkey").as("xk"), col("l_partkey").as("yk"))
+    val mm = li.agg(min(col("xk")).as("x_min"), max(col("xk")).as("x_max"),
+                    min(col("yk")).as("y_min"), max(col("yk")).as("y_max"))
+    val scaled = warmed(li.crossJoin(broadcast(mm))
+      .select(expr("(xk - x_min) * 256 div (x_max - x_min + 1)").as("x8"),
+              expr("(yk - y_min) * 256 div (y_max - y_min + 1)").as("y8"))
+      .transform(curves)
+      .withColumn("file_lin", expr("x8 div 4")))
+    def zones(fileCol: String, layout: String): DataFrame =
+      scaled.groupBy(col(fileCol).as("file_id"))
+        .agg(count(lit(1)).cast("bigint").as("n_rows"),
+             min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
+             min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"))
+        .withColumn("layout", lit(layout))
+    val zf = layouts.map { case (f, l) => zones(f, l) }.reduce(_ unionByName _)
+    val boxHit = col("x_hi") >= 32 && col("x_lo") <= 63 &&
+                 col("y_hi") >= 64 && col("y_lo") <= 95
+    val yHit = col("y_hi") >= 64 && col("y_lo") <= 95
+    val perLayout = zf.groupBy("layout").agg(
+      count(lit(1)).cast("bigint").as("n_files"),
+      sum(when(boxHit, 1L).otherwise(0L)).as("files_box"),
+      sum(when(boxHit, col("n_rows")).otherwise(0L)).as("rows_box"),
+      sum(when(yHit, 1L).otherwise(0L)).as("files_y"),
+      sum(when(yHit, col("n_rows")).otherwise(0L)).as("rows_y"))
+    val matches = scaled.agg(
+      sum(when(col("x8").between(32, 63) && col("y8").between(64, 95), 1L)
+        .otherwise(0L)).as("m_box"),
+      sum(when(col("y8").between(64, 95), 1L).otherwise(0L)).as("m_y"))
+    val joined = perLayout.crossJoin(broadcast(matches))
+    val out = joined.select(col("layout"), lit("box").as("scenario"),
+        col("n_files"), col("files_box").as("files_read"),
+        col("rows_box").as("rows_read"), col("m_box").as("rows_matched"))
+      .unionByName(joined.select(col("layout"), lit("y_only").as("scenario"),
+        col("n_files"), col("files_y").as("files_read"),
+        col("rows_y").as("rows_read"), col("m_y").as("rows_matched")))
+    materialized(out, scaled).orderBy("layout", "scenario")
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- HLL AUDIENCE OVERLAP: distinct-user intersection estimates
@@ -536,44 +583,10 @@ object RelationalPack3 extends QueryPack {
     // 8-term bit sum. ----
     "q154_zorder_layout" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
-      val li = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("xk"), col("l_partkey").as("yk"))
-      val mm = li.agg(min(col("xk")).as("x_min"), max(col("xk")).as("x_max"),
-                      min(col("yk")).as("y_min"), max(col("yk")).as("y_max"))
-      val scaled = warmed(li.crossJoin(broadcast(mm))
-        .select(expr("(xk - x_min) * 256 div (x_max - x_min + 1)").as("x8"),
-                expr("(yk - y_min) * 256 div (y_max - y_min + 1)").as("y8"))
-        .withColumn("z", graft.functions.GraftExpressions.zorder2(col("x8"), col("y8")))
-        .withColumn("file_z", expr("z div 1024"))
-        .withColumn("file_lin", expr("x8 div 4")))
-      def zones(fileCol: String, layout: String): DataFrame =
-        scaled.groupBy(col(fileCol).as("file_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_rows"),
-               min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-               min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"))
-          .withColumn("layout", lit(layout))
-      val zf = zones("file_z", "zorder").unionByName(zones("file_lin", "linear"))
-      val boxHit = col("x_hi") >= 32 && col("x_lo") <= 63 &&
-                   col("y_hi") >= 64 && col("y_lo") <= 95
-      val yHit = col("y_hi") >= 64 && col("y_lo") <= 95
-      val perLayout = zf.groupBy("layout").agg(
-        count(lit(1)).cast("bigint").as("n_files"),
-        sum(when(boxHit, 1L).otherwise(0L)).as("files_box"),
-        sum(when(boxHit, col("n_rows")).otherwise(0L)).as("rows_box"),
-        sum(when(yHit, 1L).otherwise(0L)).as("files_y"),
-        sum(when(yHit, col("n_rows")).otherwise(0L)).as("rows_y"))
-      val matches = scaled.agg(
-        sum(when(col("x8").between(32, 63) && col("y8").between(64, 95), 1L)
-          .otherwise(0L)).as("m_box"),
-        sum(when(col("y8").between(64, 95), 1L).otherwise(0L)).as("m_y"))
-      val joined = perLayout.crossJoin(broadcast(matches))
-      val out = joined.select(col("layout"), lit("box").as("scenario"),
-          col("n_files"), col("files_box").as("files_read"),
-          col("rows_box").as("rows_read"), col("m_box").as("rows_matched"))
-        .unionByName(joined.select(col("layout"), lit("y_only").as("scenario"),
-          col("n_files"), col("files_y").as("files_read"),
-          col("rows_y").as("rows_read"), col("m_y").as("rows_matched")))
-      materialized(out, scaled).orderBy("layout", "scenario")
+      layoutReplay(s, d,
+        _.withColumn("z", graft.functions.GraftExpressions.zorder2(col("x8"), col("y8")))
+          .withColumn("file_z", expr("z div 1024")),
+        Seq("file_z" -> "zorder", "file_lin" -> "linear"))
     },
 
     // ---- HILBERT vs MORTON vs LINEAR LAYOUT (q154 extended with the
@@ -593,48 +606,12 @@ object RelationalPack3 extends QueryPack {
     // map. ----
     "q444_hilbert_layout" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
-      val li = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("xk"), col("l_partkey").as("yk"))
-      val mm = li.agg(min(col("xk")).as("x_min"), max(col("xk")).as("x_max"),
-                      min(col("yk")).as("y_min"), max(col("yk")).as("y_max"))
-      val scaled = warmed(li.crossJoin(broadcast(mm))
-        .select(expr("(xk - x_min) * 256 div (x_max - x_min + 1)").as("x8"),
-                expr("(yk - y_min) * 256 div (y_max - y_min + 1)").as("y8"))
-        .withColumn("z", graft.functions.GraftExpressions.zorder2(col("x8"), col("y8")))
-        .withColumn("h", graft.functions.GraftExpressions.hilbert2(col("x8"), col("y8")))
-        .withColumn("file_z", expr("z div 1024"))
-        .withColumn("file_h", expr("h div 1024"))
-        .withColumn("file_lin", expr("x8 div 4")))
-      def zones(fileCol: String, layout: String): DataFrame =
-        scaled.groupBy(col(fileCol).as("file_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_rows"),
-               min(col("x8")).as("x_lo"), max(col("x8")).as("x_hi"),
-               min(col("y8")).as("y_lo"), max(col("y8")).as("y_hi"))
-          .withColumn("layout", lit(layout))
-      val zf = zones("file_z", "zorder")
-        .unionByName(zones("file_h", "hilbert"))
-        .unionByName(zones("file_lin", "linear"))
-      val boxHit = col("x_hi") >= 32 && col("x_lo") <= 63 &&
-                   col("y_hi") >= 64 && col("y_lo") <= 95
-      val yHit = col("y_hi") >= 64 && col("y_lo") <= 95
-      val perLayout = zf.groupBy("layout").agg(
-        count(lit(1)).cast("bigint").as("n_files"),
-        sum(when(boxHit, 1L).otherwise(0L)).as("files_box"),
-        sum(when(boxHit, col("n_rows")).otherwise(0L)).as("rows_box"),
-        sum(when(yHit, 1L).otherwise(0L)).as("files_y"),
-        sum(when(yHit, col("n_rows")).otherwise(0L)).as("rows_y"))
-      val matches = scaled.agg(
-        sum(when(col("x8").between(32, 63) && col("y8").between(64, 95), 1L)
-          .otherwise(0L)).as("m_box"),
-        sum(when(col("y8").between(64, 95), 1L).otherwise(0L)).as("m_y"))
-      val joined = perLayout.crossJoin(broadcast(matches))
-      val out = joined.select(col("layout"), lit("box").as("scenario"),
-          col("n_files"), col("files_box").as("files_read"),
-          col("rows_box").as("rows_read"), col("m_box").as("rows_matched"))
-        .unionByName(joined.select(col("layout"), lit("y_only").as("scenario"),
-          col("n_files"), col("files_y").as("files_read"),
-          col("rows_y").as("rows_read"), col("m_y").as("rows_matched")))
-      materialized(out, scaled).orderBy("layout", "scenario")
+      layoutReplay(s, d,
+        _.withColumn("z", graft.functions.GraftExpressions.zorder2(col("x8"), col("y8")))
+          .withColumn("h", graft.functions.GraftExpressions.hilbert2(col("x8"), col("y8")))
+          .withColumn("file_z", expr("z div 1024"))
+          .withColumn("file_h", expr("h div 1024")),
+        Seq("file_z" -> "zorder", "file_h" -> "hilbert", "file_lin" -> "linear"))
     },
 
     // ---- V2 FUNCTION CATALOG (the seventh and last public Catalyst

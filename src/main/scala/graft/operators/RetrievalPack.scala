@@ -392,22 +392,7 @@ object RetrievalPack extends QueryPack {
   private[graft] def bmwIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val key = graft.core.Artifacts.corpusKey(d, "documents.parquet")
     val postingsPath = graft.core.Artifacts.materialize(s"bmw_postings_v1_$key") { tmp =>
-      val (tf, dl, stats, qterms) = retrievalBase(s, d)
-      tf.join(broadcast(qterms), "w")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .withColumn("idf_q",
-          floor(log(
-            (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-              (col("df").cast("double") + lit(0.5)) + lit(1.0)) * lit(1e6))
-            .cast("bigint"))
-        .withColumn("tfnorm",
-          (col("cnt").cast("double") * lit(k1 + 1.0)) /
-            (col("cnt").cast("double") + lit(k1) * (lit(1.0 - b) +
-              lit(b) * (col("dl").cast("double") * col("n_docs").cast("double") /
-                col("sum_dl").cast("double")))))
-        .withColumn("score_q",
-          floor(col("idf_q").cast("double") * col("tfnorm")).cast("bigint"))
+      bm25Scored(s, d)
         .withColumn("blk", (col("doc_id") / lit(16L)).cast("bigint"))
         .select("q_rank", "w", "blk", "doc_id", "cnt", "dl", "df", "score_q")
         .repartition(1)
@@ -424,11 +409,12 @@ object RetrievalPack extends QueryPack {
     (s.read.parquet(postingsPath), s.read.parquet(blockMaxPath))
   }
 
-  /** q163's ranked frame (panel term × top-10 docs, BM25 scores). */
-  private def bm25TopDocs(s: SparkSession, d: String): DataFrame = {
+  /** The panel terms' postings with q163's exact BM25 score `score_q`
+    * (idf and tf-normalization quantized to int64). Called by q163's
+    * [[bm25TopDocs]] and the q451 postings artifact ([[bmwIndex]]). */
+  private def bm25Scored(s: SparkSession, d: String): DataFrame = {
     val (tf, dl, stats, qterms) = retrievalBase(s, d)
-    val scored = tf
-      .join(broadcast(qterms), "w")
+    tf.join(broadcast(qterms), "w")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
       .withColumn("idf_q",
@@ -443,11 +429,14 @@ object RetrievalPack extends QueryPack {
               col("sum_dl").cast("double")))))
       .withColumn("score_q",
         floor(col("idf_q").cast("double") * col("tfnorm")).cast("bigint"))
-    scored
+  }
+
+  /** q163's ranked frame (panel term × top-10 docs, BM25 scores). */
+  private def bm25TopDocs(s: SparkSession, d: String): DataFrame =
+    bm25Scored(s, d)
       .withColumn("doc_rank", row_number().over(
         Window.partitionBy(col("q_rank")).orderBy(col("score_q").desc, col("doc_id"))))
       .filter(col("doc_rank") <= 10)
-  }
 
   /** q424's stored base-corpus index stats, as once-per-corpus ARTIFACTS
     * (the build-once-maintain-forever treatment q101 gives the dedup

@@ -230,6 +230,31 @@ object SimilarityPack extends QueryPack {
       .select(col("q_id"), col("rk"), col("vec_id"), col("cb").as("bucket"), col("cosine"))
   }
 
+  /** Per-query top-[[topK]] of a (q_id, qq, qnorm) × (vec_id, q, norm)
+    * candidate frame by exact cosine, ties by vec_id: (q_id, vec_id).
+    * The truth and the probe arms of q271 and q473. */
+  private def cosineTopK(cand: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), asc("vec_id"))
+    cand.withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= topK)
+      .select("q_id", "vec_id")
+  }
+
+  /** One nprobe recall row (nprobe, n_hits, n_truth, recall_ppm) from a
+    * one-row `n_hits` frame and the (q_id, vec_id) truth. Called by q271
+    * and q473 (through [[nprobeArm]], and q473's exact arm directly). */
+  private def recallRow(p: Int, hits: DataFrame, truth: DataFrame): DataFrame =
+    hits.crossJoin(truth.agg(count(lit(1)).cast("bigint").as("n_truth")))
+      .select(lit(p).cast("int").as("nprobe"), col("n_hits"), col("n_truth"),
+        expr("n_hits * 1000000 div n_truth").cast("bigint").as("recall_ppm"))
+
+  /** An nprobe arm of q271 and q473: the [[cosineTopK]] of the probed
+    * candidates, scored against `truth` as one [[recallRow]]. */
+  private def nprobeArm(p: Int, cand: DataFrame, truth: DataFrame): DataFrame =
+    recallRow(p, cosineTopK(cand).join(truth, Seq("q_id", "vec_id"), "left_semi")
+      .agg(count(lit(1)).cast("bigint").as("n_hits")), truth)
+
   private def multiprobeTopK(vecs: DataFrame, b: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), asc("vec_id"))
     candidates(vecs, col("vec_id") < 20, b, maxHam = 1,
@@ -266,6 +291,36 @@ object SimilarityPack extends QueryPack {
   private[graft] def hnswSeedMod(n: Long): Long =
     1L << math.max(2, ceilLog2(n) - 5)
 
+  /** The top-M rule shared by the four HNSW graph artifacts —
+    * [[hnswGraph]] (q452, q458, q467), [[hnswLayerGraph]] (q467),
+    * [[hnswRepsGraph]] (q470) and [[hnswBaseGraph]] (q455): same-cell
+    * pairs of `cells` (an IVF assignment's `arn = 1` rows) pooled with
+    * the `lsh` pairs, symmetrized and deduped (a pair can surface in both
+    * pools — the cosine arithmetic is identical, so full-row distinct
+    * collapses them), then each node's top-[[hnswM]] by exact cosine,
+    * written to `tmp` repartitioned by src. [[hnswGraphCtes]] is its
+    * DuckDB mirror. */
+  private def writeTopMGraph(lsh: DataFrame, cells: DataFrame, tmp: String): Unit = {
+    val cellsA = cells.select(col("cell"), col("vec_id").as("vec_i"),
+      col("q").as("qa"), col("norm").as("na"))
+    val cellsB = cells.select(col("cell"), col("vec_id").as("vec_j"),
+      col("q").as("qb"), col("norm").as("nb"))
+    val cellPairs = cellsA.join(cellsB, "cell")
+      .filter(col("vec_i") < col("vec_j"))
+      .withColumn("cosine", cosineQ(col("qa"), col("qb"), col("na"), col("nb")))
+      .select("vec_i", "vec_j", "cosine")
+    val pool = lsh.select("vec_i", "vec_j", "cosine").union(cellPairs)
+    val sym = pool.select(col("vec_i").as("src"), col("vec_j").as("dst"), col("cosine"))
+      .union(pool.select(col("vec_j").as("src"), col("vec_i").as("dst"), col("cosine")))
+      .distinct()
+    val wN = Window.partitionBy("src").orderBy(desc("cosine"), asc("dst"))
+    sym.withColumn("nrk", row_number().over(wN))
+      .filter(col("nrk") <= hnswM)
+      .select("src", "dst")
+      .repartition(col("src"))
+      .write.mode("overwrite").parquet(tmp)
+  }
+
   /** The bounded-degree kNN graph as a once-per-corpus ARTIFACT: edge
     * pool = LSH multiprobe candidate pairs (q45's emit-once machinery,
     * no cosine floor) ∪ IVF same-cell pairs (q102's partition-local
@@ -285,29 +340,7 @@ object SimilarityPack extends QueryPack {
       val vecs = persistedVecs(s, d)
       val lsh = nearDupPairs(vecs, b, minCosine = -2.0)
       val ranked = ivfRanked(s, d, vecs, ivfCellsFor(corpusCount(s, d)))
-      val cellsA = ranked.filter(col("arn") === 1)
-        .select(col("cell"), col("vec_id").as("vec_i"),
-          col("q").as("qa"), col("norm").as("na"))
-      val cellsB = ranked.filter(col("arn") === 1)
-        .select(col("cell"), col("vec_id").as("vec_j"),
-          col("q").as("qb"), col("norm").as("nb"))
-      val cellPairs = cellsA.join(cellsB, "cell")
-        .filter(col("vec_i") < col("vec_j"))
-        .withColumn("cosine", cosineQ(col("qa"), col("qb"), col("na"), col("nb")))
-        .select("vec_i", "vec_j", "cosine")
-      val pool = lsh.select("vec_i", "vec_j", "cosine").union(cellPairs)
-      // symmetrize, dedupe (a pair can surface in both pools — the
-      // cosine arithmetic is identical, so full-row distinct collapses
-      // them), then keep each node's top-M
-      val sym = pool.select(col("vec_i").as("src"), col("vec_j").as("dst"), col("cosine"))
-        .union(pool.select(col("vec_j").as("src"), col("vec_i").as("dst"), col("cosine")))
-        .distinct()
-      val wN = Window.partitionBy("src").orderBy(desc("cosine"), asc("dst"))
-      sym.withColumn("nrk", row_number().over(wN))
-        .filter(col("nrk") <= hnswM)
-        .select("src", "dst")
-        .repartition(col("src"))
-        .write.mode("overwrite").parquet(tmp)
+      writeTopMGraph(lsh, ranked.filter(col("arn") === 1), tmp)
       ranked.unpersist(); vecs.unpersist()
     }
     s.read.parquet(path)
@@ -396,25 +429,7 @@ object SimilarityPack extends QueryPack {
       val ranked = ivfRanked(s, d,
         members.select("vec_id", "q", "norm"),
         ivfCellsFor(nMembers), tag = s"_hl$mod")
-      val cells = ranked.filter(col("arn") === 1)
-      val cellsA = cells.select(col("cell"), col("vec_id").as("vec_i"),
-        col("q").as("qa"), col("norm").as("na"))
-      val cellsB = cells.select(col("cell"), col("vec_id").as("vec_j"),
-        col("q").as("qb"), col("norm").as("nb"))
-      val cellPairs = cellsA.join(cellsB, "cell")
-        .filter(col("vec_i") < col("vec_j"))
-        .withColumn("cosine", cosineQ(col("qa"), col("qb"), col("na"), col("nb")))
-        .select("vec_i", "vec_j", "cosine")
-      val pool = lsh.select("vec_i", "vec_j", "cosine").union(cellPairs)
-      val sym = pool.select(col("vec_i").as("src"), col("vec_j").as("dst"), col("cosine"))
-        .union(pool.select(col("vec_j").as("src"), col("vec_i").as("dst"), col("cosine")))
-        .distinct()
-      val wN = Window.partitionBy("src").orderBy(desc("cosine"), asc("dst"))
-      sym.withColumn("nrk", row_number().over(wN))
-        .filter(col("nrk") <= hnswM)
-        .select("src", "dst")
-        .repartition(col("src"))
-        .write.mode("overwrite").parquet(tmp)
+      writeTopMGraph(lsh, ranked.filter(col("arn") === 1), tmp)
       ranked.unpersist(); vecs.unpersist()
     }
     s.read.parquet(path)
@@ -474,25 +489,7 @@ object SimilarityPack extends QueryPack {
       val ranked = ivfRanked(s, d,
         members.select("vec_id", "q", "norm"),
         ivfCellsFor(nMembers), tag = "_reps")
-      val cells = ranked.filter(col("arn") === 1)
-      val cellsA = cells.select(col("cell"), col("vec_id").as("vec_i"),
-        col("q").as("qa"), col("norm").as("na"))
-      val cellsB = cells.select(col("cell"), col("vec_id").as("vec_j"),
-        col("q").as("qb"), col("norm").as("nb"))
-      val cellPairs = cellsA.join(cellsB, "cell")
-        .filter(col("vec_i") < col("vec_j"))
-        .withColumn("cosine", cosineQ(col("qa"), col("qb"), col("na"), col("nb")))
-        .select("vec_i", "vec_j", "cosine")
-      val pool = lsh.select("vec_i", "vec_j", "cosine").union(cellPairs)
-      val sym = pool.select(col("vec_i").as("src"), col("vec_j").as("dst"), col("cosine"))
-        .union(pool.select(col("vec_j").as("src"), col("vec_i").as("dst"), col("cosine")))
-        .distinct()
-      val wN = Window.partitionBy("src").orderBy(desc("cosine"), asc("dst"))
-      sym.withColumn("nrk", row_number().over(wN))
-        .filter(col("nrk") <= hnswM)
-        .select("src", "dst")
-        .repartition(col("src"))
-        .write.mode("overwrite").parquet(tmp)
+      writeTopMGraph(lsh, ranked.filter(col("arn") === 1), tmp)
       ranked.unpersist(); vecs.unpersist()
     }
     s.read.parquet(path)
@@ -579,24 +576,7 @@ object SimilarityPack extends QueryPack {
       val (vecs, ranked, cells, _) = baseModelState(s, d)
       val base = vecs.filter(pmod(col("vec_id"), lit(10L)) =!= lit(7L))
       val lsh = nearDupPairs(base, b, minCosine = -2.0)
-      val cellsA = cells.select(col("cell"), col("vec_id").as("vec_i"),
-        col("q").as("qa"), col("norm").as("na"))
-      val cellsB = cells.select(col("cell"), col("vec_id").as("vec_j"),
-        col("q").as("qb"), col("norm").as("nb"))
-      val cellPairs = cellsA.join(cellsB, "cell")
-        .filter(col("vec_i") < col("vec_j"))
-        .withColumn("cosine", cosineQ(col("qa"), col("qb"), col("na"), col("nb")))
-        .select("vec_i", "vec_j", "cosine")
-      val pool = lsh.select("vec_i", "vec_j", "cosine").union(cellPairs)
-      val sym = pool.select(col("vec_i").as("src"), col("vec_j").as("dst"), col("cosine"))
-        .union(pool.select(col("vec_j").as("src"), col("vec_i").as("dst"), col("cosine")))
-        .distinct()
-      val wN = Window.partitionBy("src").orderBy(desc("cosine"), asc("dst"))
-      sym.withColumn("nrk", row_number().over(wN))
-        .filter(col("nrk") <= hnswM)
-        .select("src", "dst")
-        .repartition(col("src"))
-        .write.mode("overwrite").parquet(tmp)
+      writeTopMGraph(lsh, cells, tmp)
       ranked.unpersist(); vecs.unpersist()
     }
     s.read.parquet(path)
@@ -802,6 +782,23 @@ object SimilarityPack extends QueryPack {
   /** q430 energy-distance panel size per source (md5-minimal draw). */
   private[graft] val energyPanel = 16
 
+  /** The per-source vector panels of q430 and q433: the [[energyPanel]]
+    * md5-minimal vectors of each source (vec_id ≙ doc_id), warmed.
+    * Returns (vecs, panel); the caller releases both. */
+  private def sourcePanels(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val vecs = persistedVecs(s, d).select(col("vec_id"), col("q"))
+    val src = Tables.documents(s, d)
+      .select(col("doc_id").as("vec_id"), col("source"))
+    val wP = Window.partitionBy("source").orderBy("h", "vec_id")
+    val panel = warmed(vecs.join(src, "vec_id")
+      .withColumn("h",
+        graft.functions.TextFunctions.hex64(md5(col("vec_id").cast("string"))))
+      .withColumn("rn", row_number().over(wP))
+      .filter(col("rn") <= lit(energyPanel))
+      .select(col("source"), col("vec_id"), col("q")))
+    (vecs, panel)
+  }
+
   /** q102 within-cluster duplicate threshold (cosine) — q44/q45's 0.4,
     * so the three embedding-dedup routes are comparable. */
   private[graft] val semDedupTau = 0.4
@@ -834,6 +831,34 @@ object SimilarityPack extends QueryPack {
     val (_, _, _, centx) = baseModelState(s, d)
     centx.agg(collect_list(struct(col("cell"), col("cq"), col("cnorm")))
       .as("cents"))
+  }
+
+  /** The delta-maintenance audit over the stored base model
+    * ([[baseModelState]]'s `vecs`, `cells`, `centx`): the base
+    * membership unioned with the assigned delta (vec_id % 10 = 7) as
+    * `aug` (vec_id, q, norm, cell_old, is_new), and per old cell its
+    * `n_base`, `n_new` and `n_moved` counts after one centroid update
+    * and re-assignment. Called by q423 (the flags) and q429 (the
+    * resplit worklist). */
+  private def ivfDeltaAudit(vecs: DataFrame, cells: DataFrame,
+                            centx: DataFrame): (DataFrame, DataFrame) = {
+    val delta = vecs.filter(pmod(col("vec_id"), lit(10L)) === lit(7L))
+      .select(col("vec_id"), col("q"), col("norm"))
+    val dasg = assignCells(delta, centx)
+    val aug = cells.select(col("vec_id"), col("q"), col("norm"),
+        col("cell").as("cell_old"), lit(0L).as("is_new"))
+      .unionByName(dasg.select(col("vec_id"), col("q"), col("norm"),
+        col("cell").as("cell_old"), lit(1L).as("is_new")))
+    val centy = updateCentroids(
+      aug.select(col("vec_id"), col("q"), col("cell_old").as("cell")))
+    val reasg = assignCells(aug.select("vec_id", "q", "norm"), centy)
+      .select(col("vec_id"), col("cell").as("cell_new"))
+    (aug, aug.join(reasg, "vec_id")
+      .groupBy("cell_old")
+      .agg(sum(lit(1L) - col("is_new")).as("n_base"),
+        sum("is_new").as("n_new"),
+        sum(when(col("cell_new") =!= col("cell_old"), 1L).otherwise(0L))
+          .as("n_moved")))
   }
 
   private def assignCells(vecs: DataFrame, cent: DataFrame): DataFrame =
@@ -1630,23 +1655,8 @@ object SimilarityPack extends QueryPack {
     "q423_ivf_delta_maintain" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
       val (vecs, ranked, cells, centx) = baseModelState(s, d)
-      val delta = vecs.filter(pmod(col("vec_id"), lit(10L)) === lit(7L))
-        .select(col("vec_id"), col("q"), col("norm"))
-      val dasg = assignCells(delta, centx)
-      val aug = cells.select(col("vec_id"), col("q"), col("norm"),
-          col("cell").as("cell_old"), lit(0L).as("is_new"))
-        .unionByName(dasg.select(col("vec_id"), col("q"), col("norm"),
-          col("cell").as("cell_old"), lit(1L).as("is_new")))
-      val centy = updateCentroids(
-        aug.select(col("vec_id"), col("q"), col("cell_old").as("cell")))
-      val reasg = assignCells(aug.select("vec_id", "q", "norm"), centy)
-        .select(col("vec_id"), col("cell").as("cell_new"))
-      val result = aug.join(reasg, "vec_id")
-        .groupBy("cell_old")
-        .agg(sum(lit(1L) - col("is_new")).as("n_base"),
-          sum("is_new").as("n_new"),
-          sum(when(col("cell_new") =!= col("cell_old"), 1L).otherwise(0L))
-            .as("n_moved"))
+      val (aug, counts) = ivfDeltaAudit(vecs, cells, centx)
+      val result = counts
         .withColumn("growth_ppm", expr("n_new * 1000000 div n_base"))
         .withColumn("moved_ppm", expr("n_moved * 1000000 div (n_base + n_new)"))
         .withColumn("needs_resplit",
@@ -1686,23 +1696,8 @@ object SimilarityPack extends QueryPack {
       val memPath = graft.core.Artifacts.materialize(
         s"ivf_resplit_members_v1_${graft.core.Artifacts.corpusKey(d, "embeddings.parquet")}") { tmp =>
         val (vecs, ranked, cells, centx) = baseModelState(s, d)
-        val delta = vecs.filter(pmod(col("vec_id"), lit(10L)) === lit(7L))
-          .select(col("vec_id"), col("q"), col("norm"))
-        val dasg = assignCells(delta, centx)
-        val aug = cells.select(col("vec_id"), col("q"), col("norm"),
-            col("cell").as("cell_old"), lit(0L).as("is_new"))
-          .unionByName(dasg.select(col("vec_id"), col("q"), col("norm"),
-            col("cell").as("cell_old"), lit(1L).as("is_new")))
-        val centy = updateCentroids(
-          aug.select(col("vec_id"), col("q"), col("cell_old").as("cell")))
-        val reasg = assignCells(aug.select("vec_id", "q", "norm"), centy)
-          .select(col("vec_id"), col("cell").as("cell_new"))
-        val flags = aug.join(reasg, "vec_id")
-          .groupBy("cell_old")
-          .agg(sum(lit(1L) - col("is_new")).as("n_base"),
-            sum("is_new").as("n_new"),
-            sum(when(col("cell_new") =!= col("cell_old"), 1L).otherwise(0L))
-              .as("n_moved"))
+        val (aug, counts) = ivfDeltaAudit(vecs, cells, centx)
+        val flags = counts
           .filter(expr("n_new * 1000000 div n_base") > lit(growthResplitPpm) ||
             expr("n_moved * 1000000 div (n_base + n_new)") > lit(driftResplitPpm))
           .select(col("cell_old").as("cell"))
@@ -1747,16 +1742,7 @@ object SimilarityPack extends QueryPack {
     // corpus contract q74/q123 already ride). ----
     "q430_energy_distance" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
-      val vecs = persistedVecs(s, d).select(col("vec_id"), col("q"))
-      val src = Tables.documents(s, d)
-        .select(col("doc_id").as("vec_id"), col("source"))
-      val wP = Window.partitionBy("source").orderBy("h", "vec_id")
-      val panel = warmed(vecs.join(src, "vec_id")
-        .withColumn("h",
-          graft.functions.TextFunctions.hex64(md5(col("vec_id").cast("string"))))
-        .withColumn("rn", row_number().over(wP))
-        .filter(col("rn") <= lit(energyPanel))
-        .select(col("source"), col("vec_id"), col("q")))
+      val (vecs, panel) = sourcePanels(s, d)
       def dm(qa: Column, qb: Column): Column =
         floor(sqrt(l2Q(qa, qb).cast("double"))).cast("long")
       val sizes = panel.groupBy("source").agg(count(lit(1)).as("n"))
@@ -1804,16 +1790,7 @@ object SimilarityPack extends QueryPack {
     // moments. ----
     "q433_mmd_poly" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
-      val vecs = persistedVecs(s, d).select(col("vec_id"), col("q"))
-      val src = Tables.documents(s, d)
-        .select(col("doc_id").as("vec_id"), col("source"))
-      val wP = Window.partitionBy("source").orderBy("h", "vec_id")
-      val panel = warmed(vecs.join(src, "vec_id")
-        .withColumn("h",
-          graft.functions.TextFunctions.hex64(md5(col("vec_id").cast("string"))))
-        .withColumn("rn", row_number().over(wP))
-        .filter(col("rn") <= lit(energyPanel))
-        .select(col("source"), col("vec_id"), col("q")))
+      val (vecs, panel) = sourcePanels(s, d)
       // k(x,y) = (1000 + (raw_dot div 1e9))²: dot_milli ≈ cos·1000 on
       // unit-ish vectors; |dot_milli| ≤ 2.6e5 keeps k ≤ 6.6e10 and the
       // panel² sums ≤ ~2e13 — exact int64 throughout (div truncates
@@ -2367,29 +2344,15 @@ object SimilarityPack extends QueryPack {
       val ranked = warmed(ivfRanked(s, d, vecs, ivfCellsFor(corpusCount(s, d))))
       val cells = ranked.filter(col("arn") === 1)
         .select(col("vec_id"), col("q"), col("norm"), col("cell"))
-      val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), asc("vec_id"))
       val queriesDf = vecs.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("q").as("qq"), col("norm").as("qnorm"))
-      val truth = warmed(queriesDf.join(vecs, col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= topK)
-        .select("q_id", "vec_id"))
+      val truth = warmed(cosineTopK(queriesDf.join(vecs, col("vec_id") =!= col("q_id"))))
       val rows = Seq(1, 2, 4).map { p =>
         val probes = ranked.filter(col("vec_id") < 20 && col("arn") <= p)
           .select(col("vec_id").as("q_id"), col("q").as("qq"),
             col("norm").as("qnorm"), col("cell").as("probe_cell"))
-        val top = probes.join(cells,
-            col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id"))
-          .withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= topK)
-          .select("q_id", "vec_id")
-        top.join(truth, Seq("q_id", "vec_id"), "left_semi")
-          .agg(count(lit(1)).cast("bigint").as("n_hits"))
-          .crossJoin(truth.agg(count(lit(1)).cast("bigint").as("n_truth")))
-          .select(lit(p).cast("int").as("nprobe"), col("n_hits"), col("n_truth"),
-            expr("n_hits * 1000000 div n_truth").cast("bigint").as("recall_ppm"))
+        nprobeArm(p, probes.join(cells,
+          col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id")), truth)
       }
       materialized(rows.reduce(_ unionByName _), ranked, truth).orderBy("nprobe")
     },
@@ -2428,29 +2391,15 @@ object SimilarityPack extends QueryPack {
         .select(col("vec_id").as("q_id"), col("q").as("qq"),
           col("norm").as("qnorm"), col("cell").as("probe_cell"),
           col("arn"), col("label").as("qlabel"))
-      val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), asc("vec_id"))
       val qpanel = vecs.filter(col("vec_id") < 20).join(labels, "vec_id")
         .select(col("vec_id").as("q_id"), col("q").as("qq"),
           col("norm").as("qnorm"), col("label").as("qlabel"))
-      val truth = warmed(qpanel.join(cells,
-          col("label") === col("qlabel") && col("vec_id") =!= col("q_id"))
-        .withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= topK)
-        .select("q_id", "vec_id"))
+      val truth = warmed(cosineTopK(qpanel.join(cells,
+        col("label") === col("qlabel") && col("vec_id") =!= col("q_id"))))
       val rows = Seq(1, 4, 16).map { p =>
-        val top = probesAll.filter(col("arn") <= p)
+        nprobeArm(p, probesAll.filter(col("arn") <= p)
           .join(cells, col("cell") === col("probe_cell") &&
-            col("label") === col("qlabel") && col("vec_id") =!= col("q_id"))
-          .withColumn("cosine", cosineQ(col("qq"), col("q"), col("qnorm"), col("norm")))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= topK)
-          .select("q_id", "vec_id")
-        top.join(truth, Seq("q_id", "vec_id"), "left_semi")
-          .agg(count(lit(1)).cast("bigint").as("n_hits"))
-          .crossJoin(truth.agg(count(lit(1)).cast("bigint").as("n_truth")))
-          .select(lit(p).cast("int").as("nprobe"), col("n_hits"), col("n_truth"),
-            expr("n_hits * 1000000 div n_truth").cast("bigint").as("recall_ppm"))
+            col("label") === col("qlabel") && col("vec_id") =!= col("q_id")), truth)
       }
       // the adaptive arm: cardinality-based planning. The decision
       // input is the per-label cardinality statistic (10 rows — at
@@ -2465,10 +2414,7 @@ object SimilarityPack extends QueryPack {
           s"got ${panelLabelCards.mkString(",")}")
       // exact path = brute top-k over the label subset — which IS the
       // truth frame; recall 1.0 by construction is the point
-      val exactArm = truth.agg(count(lit(1)).cast("bigint").as("n_hits"))
-        .crossJoin(truth.agg(count(lit(1)).cast("bigint").as("n_truth")))
-        .select(lit(0).cast("int").as("nprobe"), col("n_hits"), col("n_truth"),
-          expr("n_hits * 1000000 div n_truth").cast("bigint").as("recall_ppm"))
+      val exactArm = recallRow(0, truth.agg(count(lit(1)).cast("bigint").as("n_hits")), truth)
       // checkpoint FIRST, then REQUIRE off the stored 4-row frame —
       // the q454 discipline: the gate must not re-execute the arms
       val out = materialized((exactArm +: rows).reduce(_ unionByName _),

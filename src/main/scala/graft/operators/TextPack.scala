@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryPack, Tables}
@@ -331,6 +331,51 @@ object TextPack extends QueryPack {
       "cast(sx as double) * cast(sxy as double)) / " +
       "(cast(n as double) * cast(sxx as double) - " +
       "cast(sx as double) * cast(sx as double))) as bigint)"
+
+  /** Exact top-3 tokens per language through the top-k aggregate `topArr`
+    * (an array of "token:count" strings, best first), one row per
+    * (lang, rk). Called by q64 (typed UDAF), q67 (native aggregate) and
+    * q69 (SpaceSaving sketch). */
+  private def topTokensPerLang(s: SparkSession, d: String, topArr: Column): DataFrame =
+    Tables.documents(s, d)
+      .select(col("lang"), explode(tokens(col("text"))).as("w"))
+      .groupBy("lang")
+      .agg(topArr.as("top_arr"))
+      .select(col("lang"), posexplode(col("top_arr")))
+      .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
+        expr("split_part(col, ':', 1)").as("token"),
+        expr("CAST(split_part(col, ':', 2) AS BIGINT)").as("cnt"))
+      .orderBy("lang", "rk")
+
+  /** The bigram-LM scorer of q117 and q254: per doc, `n_bigrams` and the
+    * Laplace-smoothed log P(w2|w1) sum `logprob_q`, quantized per term
+    * as floor(ln(x)·1e6). Returns (docs, dbg, scores); `docs` (the
+    * tokenized corpus) and `dbg` (per-doc bigram counts) are pinned for
+    * the caller to release. The corpus is tokenized once: a lazy persist
+    * materialized by dbg's warmed() count, so c1's later job reads the
+    * cache instead of re-tokenizing (guide §5 cache-when-reused; A/B
+    * grid in OPTIMIZATION_r15.md). */
+  private def bigramLogprob(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    val qln = (x: Column) => floor(log(x.cast("double")) * lit(1e6)).cast("bigint")
+    val docs = persisted(Tables.documents(s, d)
+      .select(col("doc_id"), tokens(col("text")).as("toks")))
+    val dbg = warmed(docs
+      .select(col("doc_id"), explode(wordShinglesOf(col("toks"), 2)).as("bg"))
+      .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")))
+    val c12 = dbg.groupBy("bg").agg(sum("c").as("c12"))
+    val c1 = docs
+      .select(explode(col("toks")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c1"))
+    val v = c1.agg(count(lit(1)).as("v"))
+    (docs, dbg, dbg
+      .join(c12, "bg")
+      .join(c1, expr("w = split_part(bg, ' ', 1)"))
+      .crossJoin(broadcast(v))
+      .groupBy("doc_id")
+      .agg(sum("c").cast("bigint").as("n_bigrams"),
+        sum(col("c") * (qln(col("c12") + 1) - qln(col("c1") + col("v"))))
+          .cast("bigint").as("logprob_q")))
+  }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -839,15 +884,7 @@ object TextPack extends QueryPack {
     // ---- custom typed aggregate: exact top-3 tokens per language ----
     "q64_top_tokens" -> { (s, d) =>
       val topk = udaf(new graft.functions.TopKAggregator(3))
-      Tables.documents(s, d)
-        .select(col("lang"), explode(tokens(col("text"))).as("w"))
-        .groupBy("lang")
-        .agg(topk(col("w")).as("top_arr"))
-        .select(col("lang"), posexplode(col("top_arr")))
-        .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
-          expr("split_part(col, ':', 1)").as("token"),
-          expr("CAST(split_part(col, ':', 2) AS BIGINT)").as("cnt"))
-        .orderBy("lang", "rk")
+      topTokensPerLang(s, d, topk(col("w")))
     },
 
     // ---- the same top-k as a native TypedImperativeAggregate (q64's
@@ -855,15 +892,7 @@ object TextPack extends QueryPack {
     // compact binary partial buffers instead of Kryo) ----
     "q67_top_tokens_native" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
-      Tables.documents(s, d)
-        .select(col("lang"), explode(tokens(col("text"))).as("w"))
-        .groupBy("lang")
-        .agg(graft.functions.GraftExpressions.topKTokens(col("w"), 3).as("top_arr"))
-        .select(col("lang"), posexplode(col("top_arr")))
-        .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
-          expr("split_part(col, ':', 1)").as("token"),
-          expr("CAST(split_part(col, ':', 2) AS BIGINT)").as("cnt"))
-        .orderBy("lang", "rk")
+      topTokensPerLang(s, d, graft.functions.GraftExpressions.topKTokens(col("w"), 3))
     },
 
     // ---- bounded-memory top-k: the SpaceSaving sketch (q67's semantics
@@ -875,15 +904,7 @@ object TextPack extends QueryPack {
     // are exercised by graft.SpaceSavingSpec. ----
     "q69_top_tokens_sketch" -> { (s, d) =>
       graft.functions.GraftExpressions.ensure(s)
-      Tables.documents(s, d)
-        .select(col("lang"), explode(tokens(col("text"))).as("w"))
-        .groupBy("lang")
-        .agg(graft.functions.GraftExpressions.spaceSavingTopK(col("w"), 3, 64).as("top_arr"))
-        .select(col("lang"), posexplode(col("top_arr")))
-        .select(col("lang"), (col("pos") + 1).cast("int").as("rk"),
-          expr("split_part(col, ':', 1)").as("token"),
-          expr("CAST(split_part(col, ':', 2) AS BIGINT)").as("cnt"))
-        .orderBy("lang", "rk")
+      topTokensPerLang(s, d, graft.functions.GraftExpressions.spaceSavingTopK(col("w"), 3, 64))
     },
 
     // ---- Count-Min frequency estimation: the per-key-count twin of
@@ -1210,32 +1231,7 @@ object TextPack extends QueryPack {
     // scan); scoring is two vocab-keyed equi-joins + one 1-row V
     // broadcast. ----
     "q117_bigram_lm" -> { (s, d) =>
-      val qln = (x: org.apache.spark.sql.Column) =>
-        floor(log(x.cast("double")) * lit(1e6)).cast("bigint")
-      // tokenize the corpus ONCE: both the bigram frame (dbg) and the
-      // unigram totals (c1) explode the same token arrays, and the
-      // tokenizer is the scan's dominant expression — a lazy persist
-      // here is materialized by dbg's warmed() count, and c1's later
-      // job reads the cache instead of re-tokenizing the corpus
-      // (guide §5 cache-when-reused; A/B grid in OPTIMIZATION_r15.md)
-      val docs = persisted(Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("toks")))
-      val dbg = warmed(docs
-        .select(col("doc_id"), explode(wordShinglesOf(col("toks"), 2)).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")))
-      val c12 = dbg.groupBy("bg").agg(sum("c").as("c12"))
-      val c1 = docs
-        .select(explode(col("toks")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c1"))
-      val v = c1.agg(count(lit(1)).as("v"))
-      val result = dbg
-        .join(c12, "bg")
-        .join(c1, expr("w = split_part(bg, ' ', 1)"))
-        .crossJoin(broadcast(v))
-        .groupBy("doc_id")
-        .agg(sum("c").cast("bigint").as("n_bigrams"),
-          sum(col("c") * (qln(col("c12") + 1) - qln(col("c1") + col("v"))))
-            .cast("bigint").as("logprob_q"))
+      val (docs, dbg, result) = bigramLogprob(s, d)
       materialized(result, dbg, docs).orderBy("doc_id")
     },
 
@@ -1252,32 +1248,11 @@ object TextPack extends QueryPack {
     // and ties share a bucket by value, so the rule is deterministic
     // in both engines. Per-doc output. ----
     "q254_perplexity_filter" -> { (s, d) =>
-      val qln = (x: org.apache.spark.sql.Column) =>
-        floor(log(x.cast("double")) * lit(1e6)).cast("bigint")
-      // tokenize ONCE (the q117 persist — see its comment): dbg's warmed
-      // count materializes the cache, c1 reads it instead of paying the
-      // tokenizer a second time over the corpus
-      val docs = persisted(Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("toks")))
-      val dbg = warmed(docs
-        .select(col("doc_id"), explode(wordShinglesOf(col("toks"), 2)).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")))
-      val c12 = dbg.groupBy("bg").agg(sum("c").as("c12"))
-      val c1 = docs
-        .select(explode(col("toks")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c1"))
-      val v = c1.agg(count(lit(1)).as("v"))
+      val (docs, dbg, logprob) = bigramLogprob(s, d)
       // warmed: the per-doc score feeds three branches (distinct-value
       // cutoff scan, per-lang totals, final bucket join) — the scoring
       // join must not run three times
-      val scored = warmed(dbg
-        .join(c12, "bg")
-        .join(c1, expr("w = split_part(bg, ' ', 1)"))
-        .crossJoin(broadcast(v))
-        .groupBy("doc_id")
-        .agg(sum("c").cast("bigint").as("n_bigrams"),
-          sum(col("c") * (qln(col("c12") + 1) - qln(col("c1") + col("v"))))
-            .cast("bigint").as("logprob_q"))
+      val scored = warmed(logprob
         .join(Tables.documents(s, d).select("doc_id", "lang"), "doc_id")
         .select(col("doc_id"), col("lang"),
           expr("(0 - logprob_q) div n_bigrams").cast("bigint").as("ppl_q")))

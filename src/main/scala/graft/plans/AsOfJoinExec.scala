@@ -35,6 +35,9 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   * — deduplicate the right side if that matters.
   */
 case class AsOfJoinExec(
+    // dup_check: allow 7 these fields are the operator's explain-visible
+    // arguments; AsOfMergeIterator takes the same values as plain fields
+    // so that the task closure carries no plan tree
     leftKeys: Seq[Expression],
     rightKeys: Seq[Expression],
     leftTime: Expression,
@@ -109,6 +112,7 @@ private final class AsOfMergeIterator(
     rIter: Iterator[InternalRow],
     lOut: Seq[Attribute],
     rOut: Seq[Attribute],
+    // dup_check: allow 7 AsOfJoinExec's fields (see there)
     leftKeys: Seq[Expression],
     rightKeys: Seq[Expression],
     leftTime: Expression,

@@ -496,17 +496,7 @@ class GraftMemTable(tableName: String, tableSchema: StructType,
             case None => GraftMemStore.rowsOf(tableName)
           }))
         override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-              val rows = p.asInstanceOf[GraftMemPartition].rows
-              new PartitionReader[InternalRow] {
-                private var i = -1
-                override def next(): Boolean = { i += 1; i < rows.length }
-                override def get(): InternalRow = rows(i)
-                override def close(): Unit = ()
-              }
-            }
-          }
+          GraftMemPartition.readerFactory
       }
     }
 }
@@ -527,18 +517,6 @@ private[sources] object GraftMemChanges {
           org.apache.spark.unsafe.types.UTF8String.fromString(kind)
         new GenericInternalRow(vals): InternalRow
       }
-
-  val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-      val rows = p.asInstanceOf[GraftMemPartition].rows
-      new PartitionReader[InternalRow] {
-        private var i = -1
-        override def next(): Boolean = { i += 1; i < rows.length }
-        override def get(): InternalRow = rows(i)
-        override def close(): Unit = ()
-      }
-    }
-  }
 }
 
 /** Read-only CDC table over [[GraftMemStore.changesBetween]]: the base
@@ -571,7 +549,7 @@ class GraftMemChangesTable(tableName: String, baseSchema: StructType,
           Array(GraftMemPartition(
             GraftMemChanges.changeRows(tableName, baseSchema, fromV, toV)))
         override def createReaderFactory(): PartitionReaderFactory =
-          GraftMemChanges.readerFactory
+          GraftMemPartition.readerFactory
         override def toMicroBatchStream(checkpointLocation: String)
             : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
           new GraftMemCdcMicroBatchStream(tableName, baseSchema, fromV)
@@ -631,7 +609,7 @@ class GraftMemCdcMicroBatchStream(tableName: String, baseSchema: StructType,
       GraftMemChanges.changeRows(tableName, baseSchema, s, e)))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftMemChanges.readerFactory
+    GraftMemPartition.readerFactory
   override def commit(end: Offset): Unit =
     seed(end.asInstanceOf[GraftMemVersionOffset].v)
   override def stop(): Unit = ()
@@ -642,6 +620,22 @@ case class GraftMemVersionOffset(v: Int) extends Offset {
 }
 
 case class GraftMemPartition(rows: Array[InternalRow]) extends InputPartition
+
+object GraftMemPartition {
+  /** Reads a [[GraftMemPartition]]'s rows as they are: the reader of the
+    * table scan, its time-travel pins and the CDC batch and stream reads. */
+  val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
+    override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+      val rows = p.asInstanceOf[GraftMemPartition].rows
+      new PartitionReader[InternalRow] {
+        private var i = -1
+        override def next(): Boolean = { i += 1; i < rows.length }
+        override def get(): InternalRow = rows(i)
+        override def close(): Unit = ()
+      }
+    }
+  }
+}
 
 case class GraftMemCommit(rows: Array[InternalRow]) extends WriterCommitMessage
 

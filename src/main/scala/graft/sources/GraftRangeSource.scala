@@ -295,13 +295,11 @@ class GraftRangeScanBuilder(n: Long, slices: Int, batchRows: Long,
   * SPJ above stays exchange-free while the readers generate only the
   * runtime-surviving ids — an Iceberg scan dropping files at execution
   * inside a storage-partitioned join, the 100 TB composition. */
-class GraftRangeClusteredScan(val lo: Long, val hi: Long, required: StructType)
-    extends Scan with Batch
+class GraftRangeClusteredScan(val lo: Long, val hi: Long, protected val required: StructType)
+    extends GraftRangeIdFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning => V2KeyGroupedPartitioning, Partitioning}
-  import org.apache.spark.sql.sources.{Filter, In}
   /** Real size/row statistics (a fourth composed capability — every
     * serious connector reports them): without these, every V2 scan
     * weighs in at defaultSizeInBytes and the optimizer can neither
@@ -316,23 +314,6 @@ class GraftRangeClusteredScan(val lo: Long, val hi: Long, required: StructType)
       override def numRows(): java.util.OptionalLong =
         java.util.OptionalLong.of(rows)
     }
-  /** Runtime-narrowed id set (sorted), observable by plan REQUIREs. */
-  @volatile var runtimeSet: Option[Array[Long]] = None
-  /** Only advertised while `id` survives column pruning: Spark resolves
-    * filterAttributes against the PRUNED scan output, so a scan whose
-    * projection dropped `id` (q460's digest sides) must not offer it. */
-  override def filterAttributes(): Array[NamedReference] =
-    if (required.fieldNames.contains("id"))
-      Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
-    else Array.empty
-  override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    case In("id", vs) =>
-      runtimeSet = Some(vs.collect { case l: java.lang.Long => l.longValue() }
-        .filter(v => v >= lo && v < hi).sorted)
-    case _ => () // unrecognized runtime filters are safely ignored
-  }
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String = s"graft-range [$lo, $hi) clustered_by=bucket"
   override def outputPartitioning(): Partitioning =
     new V2KeyGroupedPartitioning(
@@ -405,16 +386,38 @@ class GraftRangeClusteredAggReaderFactory(funcs: Seq[String])
         Iterator.single(java.lang.Integer.valueOf(p.bucket) +:
           GraftRangeAggReaderFactory.apAggs(funcs, first, 16L, c))
       }
-    new PartitionReader[InternalRow] {
-      private var cur: Array[Any] = _
-      override def next(): Boolean = {
-        if (!rows.hasNext) return false
-        cur = rows.next(); true
-      }
-      override def get(): InternalRow = new GenericInternalRow(cur)
-      override def close(): Unit = ()
-    }
+    GraftRangeAggReaderFactory.rowReader(rows)
   }
+}
+
+/** The runtime filter on `id` shared by the graft-range batch scans
+  * ([[GraftRangeScan]], [[GraftRangeClusteredScan]]): Spark's
+  * dynamic-pruning rule hands [[filter]] the build side's distinct join
+  * keys at execution, and the surviving ids in [lo, hi) become
+  * [[runtimeSet]] for the scan's partition planning. */
+trait GraftRangeIdFiltering extends Scan with Batch
+    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+  import org.apache.spark.sql.sources.{Filter, In}
+  def lo: Long
+  def hi: Long
+  protected def required: StructType
+  /** Runtime-narrowed id set (sorted), observable by plan REQUIREs. */
+  @volatile var runtimeSet: Option[Array[Long]] = None
+  /** Only advertised while `id` survives column pruning: Spark resolves
+    * filterAttributes against the PRUNED scan output, so a scan whose
+    * projection dropped `id` (q460's digest sides) must not offer it. */
+  override def filterAttributes(): Array[NamedReference] =
+    if (required.fieldNames.contains("id"))
+      Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
+    else Array.empty
+  override def filter(filters: Array[Filter]): Unit = filters.foreach {
+    case In("id", vs) =>
+      runtimeSet = Some(vs.collect { case l: java.lang.Long => l.longValue() }
+        .filter(v => v >= lo && v < hi).sorted)
+    case _ => () // unrecognized runtime filters are safely ignored
+  }
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
 }
 
 /** Generates ids in [lo, hi) — the post-pushdown interval. Also
@@ -429,13 +432,11 @@ class GraftRangeClusteredAggReaderFactory(funcs: Seq[String])
   * only lose rows if the connector dropped keys INSIDE the pushed set
   * — q454's oracle hash-gates against that. */
 class GraftRangeScan(val lo: Long, val hi: Long, slices: Int,
-                     required: StructType, batchRows: Long,
+                     protected val required: StructType, batchRows: Long,
                      val pushedLimit: Option[Int] = None,
                      val pushedTopNDesc: Option[Boolean] = None)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
+    extends GraftRangeIdFiltering
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
-  import org.apache.spark.sql.sources.{Filter, In}
 
   /** `SupportsReportOrdering`: every partition shape this scan plans —
     * contiguous [start, end) ranges, sorted runtime-filter id chunks,
@@ -453,22 +454,6 @@ class GraftRangeScan(val lo: Long, val hi: Long, slices: Int,
         org.apache.spark.sql.connector.expressions.Expressions.column("id"),
         org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
     else Array.empty
-  /** Runtime-narrowed id set (sorted), observable by plan REQUIREs. */
-  @volatile var runtimeSet: Option[Array[Long]] = None
-  /** Only advertised while `id` survives column pruning (Spark resolves
-    * filterAttributes against the PRUNED scan output). */
-  override def filterAttributes(): Array[NamedReference] =
-    if (required.fieldNames.contains("id"))
-      Array(org.apache.spark.sql.connector.expressions.Expressions.column("id"))
-    else Array.empty
-  override def filter(filters: Array[Filter]): Unit = filters.foreach {
-    case In("id", vs) =>
-      runtimeSet = Some(vs.collect { case l: java.lang.Long => l.longValue() }
-        .filter(v => v >= lo && v < hi).sorted)
-    case _ => () // unrecognized runtime filters are safely ignored
-  }
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String = s"graft-range [$lo, $hi)" +
     pushedLimit.map(k => s" pushed_limit=$k" +
       pushedTopNDesc.map(d => s" order_by_id_${if (d) "desc" else "asc"}")
@@ -611,6 +596,20 @@ object GraftRangeAggReaderFactory {
       case "sum_sq" => java.lang.Long.valueOf(sumSq)
     }.toArray
   }
+
+  /** A reader over precomputed aggregate rows: the sliced
+    * ([[GraftRangeAggReaderFactory]]) and clustered
+    * ([[GraftRangeClusteredAggReaderFactory]]) pushed-agg readers. */
+  def rowReader(rows: Iterator[Array[Any]]): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private var cur: Array[Any] = _
+      override def next(): Boolean = {
+        if (!rows.hasNext) return false
+        cur = rows.next(); true
+      }
+      override def get(): InternalRow = new GenericInternalRow(cur)
+      override def close(): Unit = ()
+    }
 }
 
 class GraftRangeAggReaderFactory(grouped: Boolean, funcs: Seq[String])
@@ -629,15 +628,7 @@ class GraftRangeAggReaderFactory(grouped: Boolean, funcs: Seq[String])
         else Iterator.single(apRow(b, first, 16L, (p.end - 1 - first) / 16 + 1))
       }
       else Iterator.single(apRow(0, p.start, 1L, p.end - p.start))
-    new PartitionReader[InternalRow] {
-      private var cur: Array[Any] = _
-      override def next(): Boolean = {
-        if (!rows.hasNext) return false
-        cur = rows.next(); true
-      }
-      override def get(): InternalRow = new GenericInternalRow(cur)
-      override def close(): Unit = ()
-    }
+    GraftRangeAggReaderFactory.rowReader(rows)
   }
 }
 

@@ -1,13 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.QueryPack
 import graft.core.Pin.{checkpointed, warmed}
 import graft.functions.TextFunctions.hex64Sql
-import graft.operators.CorePack.docDigest
+import graft.operators.CorePack.{docDigest, upsertThenDelete}
 import StreamRunner.{drain, eventStream, fileStream}
 
 /** Structured Streaming surface. The reference is strictly batch, so this
@@ -553,6 +554,26 @@ object StreamingPack extends QueryPack {
       .orderBy("bucket")
   }
 
+  /** Drains graft-range ids [0, n) in 30k-row micro-batches under
+    * `Trigger.AvailableNow` into the sink that `sink` configures, with
+    * checkpoint `ckpt`; returns the non-empty batches' input row counts.
+    * Each restart phase of q465 and q469 is one call. */
+  private def drainRange(sess: SparkSession, n: Long, ckpt: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Seq[Long] = {
+    val src = sess.readStream.format("graft-range")
+      .option("n", n.toString).option("slices", "8")
+      .option("batchRows", "30000")
+      .load()
+    val q = sink(src.writeStream)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try {
+      q.awaitTermination()
+      q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
+    } finally q.stop()
+  }
+
   /** Cross-session streaming restart (q465): the checkpoint-resume
     * contract driven END TO END across a SparkSession boundary. Phase 1
     * drains the first 120k ids of the graft-range stream under
@@ -576,22 +597,8 @@ object StreamingPack extends QueryPack {
       s"stream_restart_${counter.incrementAndGet()}")
     val ckpt = s"$root/ckpt"
     val out = s"$root/out"
-    def drain(sess: SparkSession, n: Long): Seq[Long] = {
-      val src = sess.readStream.format("graft-range")
-        .option("n", n.toString).option("slices", "8")
-        .option("batchRows", "30000")
-        .load()
-      val q = src.writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
-      } finally q.stop()
-    }
+    def drain(sess: SparkSession, n: Long): Seq[Long] =
+      drainRange(sess, n, ckpt)(_.format("parquet").option("path", out))
     val p1 = drain(s, 120000L)
     require(p1.length >= 2 && p1.sum == 120000L,
       s"q465 phase 1: expected a multi-batch 120k drain, got $p1")
@@ -605,14 +612,7 @@ object StreamingPack extends QueryPack {
       s"q465 phase 2: expected a multi-batch 80k resume " +
         s"(NOT a replay from 0), got $p2")
     val back = s.read.parquet(out)
-    back.groupBy("bucket")
-      .agg(count(lit(1)).cast("bigint").as("n"),
-        sum("sq").cast("bigint").as("sum_sq"),
-        min("id").cast("bigint").as("min_id"),
-        max("id").cast("bigint").as("max_id"))
-      .select(col("bucket").cast("int").as("bucket"), col("n"),
-        col("sum_sq"), col("min_id"), col("max_id"))
-      .orderBy("bucket")
+    graft.operators.CorePack.rangeBucketDigest(back)
   }
 
   /** Exactly-once streaming MERGE sink across a restart (q469, r13
@@ -661,12 +661,7 @@ object StreamingPack extends QueryPack {
     val outTbl = s"cdctail_out_${n}_${System.identityHashCode(s)}"
     val docs = graft.core.Tables.documents(s, dir)
     docDigest(docs).write.format("graft-mem").option("table", tbl).mode("append").save()
-    import s.implicits._
-    docDigest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
-      .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
-        .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
-      .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
-    s.sql(s"DELETE FROM graftmem.$tbl WHERE lang = 'de'")
+    upsertThenDelete(s, docs, tbl)
     val feed = s.readStream.format("graft-mem").option("table", tbl)
       .option("changesFrom", "1").load()
     val q = feed.writeStream
@@ -732,12 +727,7 @@ object StreamingPack extends QueryPack {
         s"FROM graftmem.$tbl VERSION AS OF 1 GROUP BY lang")
       .write.format("graft-mem").option("table", mv).mode("append").save()
     // upstream commits 2 (keyed upsert) and 3 (metadata delete)
-    import s.implicits._
-    docDigest(docs.filter(col("lang") === "en").withColumn("text", upper(col("text"))))
-      .unionByName(Seq(("zz", "synthetic", 1L, 42L, 7L))
-        .toDF("lang", "source", "n_docs", "sum_chars", "text_cksum"))
-      .writeTo(s"graftmem.$tbl").overwrite(col("lang").isin("en", "zz"))
-    s.sql(s"DELETE FROM graftmem.$tbl WHERE lang = 'de'")
+    upsertThenDelete(s, docs, tbl)
     // tail the CDC feed from the bootstrap version; each batch MERGEs
     // its signed per-lang deltas into the MV
     val feed = s.readStream.format("graft-mem").option("table", tbl)
@@ -826,21 +816,8 @@ object StreamingPack extends QueryPack {
           .stripMargin)
       finally sess.catalog.dropTempView(src)
     }
-    def drain(sess: SparkSession, n: Long): Seq[Long] = {
-      val src = sess.readStream.format("graft-range")
-        .option("n", n.toString).option("slices", "8")
-        .option("batchRows", "30000")
-        .load()
-      val q = src.writeStream
-        .foreachBatch(mergeBatch _)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
-      } finally q.stop()
-    }
+    def drain(sess: SparkSession, n: Long): Seq[Long] =
+      drainRange(sess, n, ckpt)(_.foreachBatch(mergeBatch _))
     val p1 = drain(s, 120000L)
     require(p1.length >= 2 && p1.sum == 120000L,
       s"q469 phase 1: expected a multi-batch 120k drain, got $p1")
@@ -1099,25 +1076,7 @@ object StreamingPack extends QueryPack {
     // refs on the tot/cumsum branches); pin the drained state — bounded
     // by types × hours — as an RDD-backed frame first
     val hourly = checkpointed(drain(agg, "complete", "cusum")())
-    val tot = hourly.groupBy("event_type")
-      .agg(sum("c").as("total"), count(lit(1)).as("n_hours"))
-    val wc = Window.partitionBy("event_type").orderBy("hr")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wi = Window.partitionBy("event_type").orderBy("hr")
-    hourly.join(tot, "event_type")
-      .withColumn("cumc", sum("c").over(wc))
-      .withColumn("k", row_number().over(wi).cast("bigint"))
-      .withColumn("s_k", col("n_hours") * col("cumc") - col("k") * col("total"))
-      .filter(col("k") < col("n_hours"))
-      .groupBy("event_type")
-      .agg(max(struct(abs(col("s_k")).as("a"), (-col("hr")).as("nh"))).as("m"),
-        max(col("n_hours")).as("n_hours"), max(col("total")).as("total"))
-      .select(col("event_type"),
-        (-col("m.nh")).cast("bigint").as("change_hr"),
-        col("m.a").cast("bigint").as("cusum_abs"),
-        col("n_hours").cast("bigint").as("n_hours"),
-        col("total").cast("bigint").as("total"))
-      .orderBy("event_type")
+    graft.operators.EventsPack.cusumChangepoints(hourly)
   }
 
   /** q386: STREAMING SPRT — q384's sequential sample-ratio monitor with

@@ -3,7 +3,6 @@ package graft.streaming
 import scala.annotation.unused
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core.Pin.checkpointed
@@ -59,15 +58,6 @@ object TransitionStream {
     // resolution failure)
     val tr = checkpointed(drain(trans, "append", "trans")()
       .groupBy(col("cur"), col("nxt")).agg(count(lit(1)).as("cnt")))
-    val tot = tr.groupBy("cur").agg(sum("cnt").as("tot"))
-    tr.join(tot, "cur")
-      .withColumn("p_q", expr("(1000000 * cnt) div tot"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("cur").orderBy(col("cnt").desc, col("nxt"))))
-      .filter(col("rk") <= 3)
-      .select(col("cur"), col("rk").cast("int").as("rk"), col("nxt"),
-        col("cnt").cast("bigint").as("cnt"), col("tot").cast("bigint").as("tot"),
-        col("p_q").cast("bigint").as("p_q"))
-      .orderBy("cur", "rk")
+    graft.operators.EventsPack.topTransitions(tr)
   }
 }

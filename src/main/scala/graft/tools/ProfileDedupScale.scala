@@ -58,12 +58,7 @@ object ProfileDedupScale {
       val t0 = System.nanoTime()
       val bands = graft.core.Pin.warmed(graft.operators.DedupPack.minhashBands(
         graft.operators.DedupPack.minhashDocs(docs)))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          (col("a.band_id") === 0 || col("a.b0") =!= col("b.b0")))
-        .count()
+      val cand = graft.operators.DedupPack.bandCandidates(bands).count()
       val candSec = (System.nanoTime() - t0) / 1e9
       bands.unpersist()
 

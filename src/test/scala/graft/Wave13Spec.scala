@@ -235,4 +235,23 @@ class Wave13Spec extends AnyFunSuite {
     // same floor the flat lane gates on
     assert(SimilarityPack.hnswHierRecallProbe(spark, d) >= 0.92)
   }
+
+  test("q470 representative graph: no SemDeDup duplicate endpoint, degree <= M") {
+    import graft.operators.SimilarityPack
+    val d = SparkTestSession.sfDir
+    val vecs = SimilarityPack.persistedVecs(spark, d)
+    val dups = SimilarityPack.semDedupDups(spark, d, vecs)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    val graph = SimilarityPack.hnswRepsGraph(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    vecs.unpersist()
+    assert(dups.nonEmpty, "the test corpus must hold SemDeDup duplicates")
+    assert(graph.nonEmpty)
+    // the graph is built over representatives only: a deduped vector is
+    // neither a source nor a neighbour
+    val leaked = graph.filter { case (a, b) => dups(a) || dups(b) }
+    assert(leaked.isEmpty, s"duplicate endpoints in the rep graph: ${leaked.take(5).toSeq}")
+    // degree bound: HNSW's M holds per node
+    assert(graph.groupBy(_._1).values.forall(_.length <= SimilarityPack.hnswM))
+  }
 }
