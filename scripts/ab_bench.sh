@@ -22,6 +22,9 @@
 #   unresolved        the parent's IQR / median is wider than the bound
 #   worse than bound  the change's median is worse by more than the bound
 #   within bound      otherwise
+# Then, per op, each side's median of that op's per-run medians (the
+# `<op> median <s>s` lines run.py prints to stderr) with its IQR and the
+# pairs the change won, so an A/B names the op that moved.
 # If a timed run fails, the pairs loop stops, the summary covers the pairs
 # completed before it, and the script names the failed side and seed and
 # exits 1. Nothing under perfbench/ is changed. The temporary directories
@@ -59,13 +62,18 @@ run() {
     tail -n 20 "$work/stderr" >&2
     return 1
   fi
-  printf '%s\t%s\t%s\n' "$1" "$2" "$out" >>"$work/results.jsonl"
-  python3 - "$1" "$2" "$out" <<'EOF'
-import json, sys
-side, seed, line = sys.argv[1:]
+  python3 - "$1" "$2" "$out" "$work/stderr" "$work/results.jsonl" <<'EOF'
+import json, re, sys
+side, seed, line, stderr, results = sys.argv[1:]
 r = json.loads(line)
+# per-op medians, from run.py's "  <op> median <s>s n=<n>" report lines
+ops = {m[1]: float(m[2]) for m in
+       re.finditer(r"^\s+(\S+)\s+median (\d+(?:\.\d+)?)s n=", open(stderr).read(), re.M)}
+with open(results, "a") as f:
+    f.write(f"{side}\t{seed}\t{line}\t{json.dumps(ops)}\n")
 m = " ".join(f"{k}={v['value']:.3f}" for k, v in r["metrics"].items())
-print(f"  {side:6s} seed={seed} correct={r['correct']} failed={r['failed']} {m}", flush=True)
+o = " ".join(f"{k}={v:.3f}" for k, v in ops.items())
+print(f"  {side:6s} seed={seed} correct={r['correct']} failed={r['failed']} {m} | {o}", flush=True)
 EOF
 }
 
@@ -91,13 +99,14 @@ python3 - "$work/results.jsonl" "${dir[change]}/BENCHMARK.json" <<'EOF'
 import json, statistics, sys
 runs, bench = sys.argv[1:]
 metrics = {m["name"]: m for m in json.load(open(bench))["end_to_end"]}
-by = {}
+by, ops = {}, {}
 for line in open(runs):
-    side, seed, out = line.rstrip("\n").split("\t", 2)
+    side, seed, out, op_medians = line.rstrip("\n").split("\t", 3)
     r = json.loads(out)
     if not r["correct"] or r["failed"]:
         print(f"NOTE: {side} seed={seed} correct={r['correct']} failed={r['failed']}")
     by.setdefault(side, {})[seed] = {k: v["value"] for k, v in r["metrics"].items()}
+    ops.setdefault(side, {})[seed] = json.loads(op_medians)
 seeds = sorted(set(by.get("parent", {})) & set(by.get("change", {})), key=int)
 
 def quartiles(xs):
@@ -128,6 +137,20 @@ for k, m in metrics.items():
     v = verdict(wins, pm - cm if lower else cm - pm, p3 - p1, pm, m["bound"])
     print(f"  {k:16s} parent {pm:9.3f} [{p3 - p1:7.3f}]  change {cm:9.3f} [{c3 - c1:7.3f}]"
           f"  {rel:+6.1f}%  wins {wins}/{len(seeds)}  {v}")
+
+print("per op (median of the runs' op medians, s [IQR]; wins = pairs the change was faster)")
+for op in sorted({op for side in ops.values() for s in seeds for op in side[s]}):
+    both = [s for s in seeds if op in ops["parent"][s] and op in ops["change"][s]]
+    if not both:
+        print(f"  {op:34s} timed on one side only")
+        continue
+    p = [ops["parent"][s][op] for s in both]
+    c = [ops["change"][s][op] for s in both]
+    (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
+    wins = sum(y < x for x, y in zip(p, c))
+    rel = (cm - pm) / pm * 100 if pm else float("nan")
+    print(f"  {op:34s} parent {pm:7.3f} [{p3 - p1:6.3f}]  change {cm:7.3f} [{c3 - c1:6.3f}]"
+          f"  {rel:+6.1f}%  wins {wins}/{len(both)}")
 EOF
 
 if [[ -n $failed ]]; then

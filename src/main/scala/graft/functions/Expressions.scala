@@ -792,8 +792,9 @@ object TokenizerKernel {
 
 /** Counts of the reference tokens of many UTF-8 strings in one
   * open-addressing table keyed by the tokens' bytes: the state of
-  * [[TokenCounts]]. A token is hashed and compared where the kernel
-  * compacted it, so only a token new to the table is copied. */
+  * [[TokenCounts]], and, through `add(word, n)`, of [[TokenCountMerge]].
+  * A token is hashed and compared where the kernel compacted it, so only
+  * a token new to the table is copied. */
 private[graft] final class TokenCounter {
   private var buf = new Array[Byte](256) // compacted word bytes of one string
   private var slots = new Array[Int](1024) // entry index + 1; 0 = empty
@@ -811,7 +812,15 @@ private[graft] final class TokenCounter {
     val ends = TokenizerKernel.scan(s.getBytes, buf)
     var from = 0
     var t = 0
-    while (t < ends.length) { count(from, ends(t)); from = ends(t); t += 1 }
+    while (t < ends.length) { count(from, ends(t), 1L); from = ends(t); t += 1 }
+  }
+
+  /** Adds `n` to the count of the one token `word`, which is not scanned. */
+  def add(word: org.apache.spark.unsafe.types.UTF8String, n: Long): Unit = {
+    val len = word.numBytes
+    if (buf.length < len) buf = new Array[Byte](math.max(len, buf.length * 2))
+    word.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+    count(0, len, n)
   }
 
   /** FNV-1a over the bytes, then murmur3's finalizer to spread them. */
@@ -822,7 +831,8 @@ private[graft] final class TokenCounter {
     h ^= h >>> 16; h *= 0x85EBCA6B; h ^= h >>> 13; h *= 0xC2B2AE35; h ^ (h >>> 16)
   }
 
-  private def count(from: Int, to: Int): Unit = {
+  /** Adds `n` to the count of the token `buf(from until to)`. */
+  private def count(from: Int, to: Int, n: Long): Unit = {
     val h = hash(from, to)
     val mask = slots.length - 1
     var i = h & mask
@@ -832,7 +842,7 @@ private[graft] final class TokenCounter {
       i = (i + 1) & mask
       e = slots(i) - 1
     }
-    if (e >= 0) counts(e) += 1
+    if (e >= 0) counts(e) += n
     else {
       if (held == hashes.length) {
         hashes = java.util.Arrays.copyOf(hashes, held * 2)
@@ -841,7 +851,7 @@ private[graft] final class TokenCounter {
       }
       hashes(held) = h
       words(held) = java.util.Arrays.copyOfRange(buf, from, to)
-      counts(held) = 1
+      counts(held) = n
       held += 1
       slots(i) = held
       if (2 * held > slots.length) slots = TokenCounter.slots(hashes, held, slots.length * 2)
@@ -891,7 +901,9 @@ private[graft] object TokenCounter {
   * The counter belongs to the task that evaluates this instance and is
   * emptied by every emit. `CodegenFallback` keeps `GenerateExec` on its
   * interpreted path, the only one that calls `terminate`. It has no SQL
-  * name: `WordCount.over` is its one caller.
+  * name: `WordCount.over` is its one caller, and sums its rows either in
+  * a [[TokenCountMerge]] after one single-partition exchange or, when its
+  * sort is wider, in Spark's aggregate.
   */
 case class TokenCounts(child: Expression, heldKeys: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -899,10 +911,7 @@ case class TokenCounts(child: Expression, heldKeys: Int)
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
   override def inputTypes = Seq(org.apache.spark.sql.types.StringType)
-  override def elementSchema: org.apache.spark.sql.types.StructType =
-    new org.apache.spark.sql.types.StructType()
-      .add("word", org.apache.spark.sql.types.StringType, nullable = false)
-      .add("cnt", LongType, nullable = false)
+  override def elementSchema: org.apache.spark.sql.types.StructType = TokenCounts.schema
   override def stateful: Boolean = true
 
   @transient private lazy val counter = new TokenCounter
@@ -919,6 +928,70 @@ case class TokenCounts(child: Expression, heldKeys: Int)
 
   override protected def withNewChildInternal(c: Expression): TokenCounts =
     copy(child = c)
+}
+
+object TokenCounts {
+  /** `(word: string, cnt: bigint)`, both non-null: the rows of
+    * [[TokenCounts]] and [[TokenCountMerge]]. */
+  val schema: org.apache.spark.sql.types.StructType =
+    new org.apache.spark.sql.types.StructType()
+      .add("word", org.apache.spark.sql.types.StringType, nullable = false)
+      .add("cnt", LongType, nullable = false)
+}
+
+/** Reduce-side word count, as a generator over `(word, cnt)` rows: sums
+  * one partition's [[TokenCounts]] rows by word in a [[TokenCounter]]
+  * and emits one `(word, cnt)` row per distinct word when its input ends.
+  * The counter holds at most `heldKeys` words; each time it fills, its
+  * sums move into Spark's spilling `ExternalAppendOnlyMap`, which merges
+  * them by word in bounded memory and, at the end, takes the last table
+  * too. Either way every word is emitted exactly once.
+  *
+  * Like [[TokenCounts]], it is stateful per task, and `CodegenFallback`
+  * keeps `GenerateExec` on the interpreted path that calls `terminate`.
+  * `WordCount.over` is its one caller.
+  */
+case class TokenCountMerge(word: Expression, cnt: Expression, heldKeys: Int)
+    extends Expression
+    with org.apache.spark.sql.catalyst.expressions.Generator
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  override def children: Seq[Expression] = Seq(word, cnt)
+  override def elementSchema: org.apache.spark.sql.types.StructType = TokenCounts.schema
+  override def stateful: Boolean = true
+
+  @transient private lazy val counter = new TokenCounter
+  // the sums of every full table so far; null until the counter first fills
+  @transient private var spilled: org.apache.spark.util.collection.ExternalAppendOnlyMap[
+    org.apache.spark.unsafe.types.UTF8String, Long, Long] = _
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow)
+      : IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
+    counter.add(word.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      cnt.eval(input).asInstanceOf[Long])
+    if (counter.size >= heldKeys) spill()
+    Nil
+  }
+
+  /** Moves the counter's sums into the spilling map, emptying it. */
+  private def spill(): Unit = {
+    if (spilled == null)
+      spilled = new org.apache.spark.util.collection.ExternalAppendOnlyMap[
+        org.apache.spark.unsafe.types.UTF8String, Long, Long]((n: Long) => n, _ + _, _ + _)
+    spilled.insertAll(counter.drain().iterator.map(r => (r.getUTF8String(0), r.getLong(1))))
+  }
+
+  override def terminate(): IterableOnce[org.apache.spark.sql.catalyst.InternalRow] =
+    if (spilled == null) counter.drain()
+    else {
+      spill()
+      org.apache.spark.sql.graft.GraftSqlBridge.recordSpills(spilled)
+      spilled.iterator.map { case (w, n) =>
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](w, n))
+      }
+    }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TokenCountMerge =
+    copy(word = c(0), cnt = c(1))
 }
 
 /** The reference token stream of a string column, `array<string>` with no

@@ -2,8 +2,8 @@ package graft.operators
 
 import scala.annotation.unused
 import scala.collection.immutable.ArraySeq
-import scala.collection.mutable
 
+import org.apache.spark.{Aggregator, TaskContext}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.functions.TokenizerKernel
@@ -20,9 +20,9 @@ import graft.functions.TokenizerKernel
   * runs inside a `mapPartitions` that gathers each task's values per key
   * into one `(key, values, counts)` row, the one hash repartition on the
   * key column is the `mr-{m}-{r}.txt` exchange (`numPartitions` = the
-  * reference's `reduce_n`), and `mapGroups` on that same column is the
-  * reduce phase — grouped on the partitioning column, so no second
-  * exchange is planned.
+  * reference's `reduce_n`), and a second `mapPartitions` is the reduce
+  * phase: it merges each reduce partition's rows by key in the same table
+  * and calls `reduce` once per key. No sort or second exchange is planned.
   *
   * The reference has no combiner: every `(word,"1")` pair crosses its
   * shuffle (`src/app/wc.rs:11`). The value-run combiner groups values
@@ -30,7 +30,7 @@ import graft.functions.TokenizerKernel
   * per (map task, key) instead of one per pair. Within a row, each run of
   * equal values is stored once with its repeat count, so word count ships
   * one `("1", n)` run per row instead of n copies of `"1"`. The combiner
-  * is one flat open-addressing table per map task ([[Combiner]]) holding
+  * is one flat open-addressing table per task ([[Combiner]]) holding
   * each key's last run inline, so a key whose values never change (word
   * count's `"1"`) costs one table entry and no list.
   *
@@ -41,38 +41,45 @@ import graft.functions.TokenizerKernel
 object MapReduceJob {
 
   /** Most values one map task's combiner holds before it flushes its rows
-    * and starts again; bounds its memory whatever the key skew. The same
-    * bound caps the distinct tokens `WordCount.over`'s map-side counter
-    * holds. */
+    * and starts again, and most runs one reduce task's merge holds before
+    * it moves them into Spark's spilling map; bounds their memory whatever
+    * the key skew. The same bound caps the distinct words
+    * `WordCount.over`'s map-side counter and merge hold. */
   private[graft] val CombinerValues = 1 << 20
 
   /** Faithful general form: arbitrary reduce over the full value list per
     * key. Each map task sends one `(key, values, counts)` row per key (per
     * flush) through one shuffle into `numPartitions` reduce partitions,
-    * where the runs are merged. `reduce` sees every value exactly once, in
-    * unspecified order, like the reference's post-sort grouping, which
-    * ordered keys but not values, through an `IndexedSeq` view of the runs
-    * ([[ValueRuns]]): its `size` costs O(runs), not O(values). `spark` is
-    * kept for the signature's sake; the plan needs no session implicits.
+    * where the runs are merged ([[merge]]). `reduce` sees every value
+    * exactly once, in unspecified order, like the reference's post-sort
+    * grouping, which ordered keys but not values, through an `IndexedSeq`
+    * view of the runs ([[ValueRuns]]): its `size` costs O(runs), not
+    * O(values). Keys come out in no particular order. `spark` is kept for
+    * the signature's sake; the plan needs no session implicits.
     */
-  def run(@unused spark: SparkSession,
+  def run(spark: SparkSession,
           input: Dataset[String],
           map: String => Seq[(String, String)],
           reduce: (String, Seq[String]) => String,
           numPartitions: Int): Dataset[(String, String)] =
+    run(spark, input, map, reduce, numPartitions, CombinerValues)
+
+  /** [[run]] whose reduce-side merge moves its runs into Spark's spilling
+    * map whenever it holds `heldRuns` runs. */
+  private[graft] def run(@unused spark: SparkSession,
+                         input: Dataset[String],
+                         map: String => Seq[(String, String)],
+                         reduce: (String, Seq[String]) => String,
+                         numPartitions: Int,
+                         heldRuns: Int): Dataset[(String, String)] =
     input
       .mapPartitions(lines => combine(lines.flatMap(map)))
       .repartition(numPartitions, col("_1"))
-      .groupBy(col("_1")).as[String, (String, Array[String], Array[Int])]
-      .mapGroups { (k, rows) =>
-        val values = mutable.ArrayBuilder.make[String]
-        val counts = mutable.ArrayBuilder.make[Int]
-        rows.foreach { case (_, vs, ns) => values ++= vs; counts ++= ns }
-        (k, reduce(k, ValueRuns(k, values.result(), counts.result())))
-      }
+      .mapPartitions(rows => merge(rows, heldRuns).map { case (k, vs, ns) =>
+        (k, reduce(k, ValueRuns(k, vs, ns)))
+      })
 
   // built once, not derived through `spark.implicits._` on every call
-  private implicit val keyEncoder: Encoder[String] = Encoders.STRING
   private implicit val runRowEncoder: Encoder[(String, Array[String], Array[Int])] =
     Encoders.product
   private implicit val resultEncoder: Encoder[(String, String)] = Encoders.product
@@ -84,23 +91,56 @@ object MapReduceJob {
                              heldValues: Int = CombinerValues)
       : Iterator[(String, Array[String], Array[Int])] = {
     val table = new Combiner
-    // the flatMap asks for the next batch only once the last batch's rows
-    // are all out, so refilling the one table is safe
-    Iterator.continually {
-      table.clear()
+    batches(table) {
       while (table.values < heldValues && pairs.hasNext) {
         val (k, v) = pairs.next()
-        table.add(k, v)
+        table.add(k, v, 1)
       }
-      table.size
-    }.takeWhile(_ > 0).flatMap(Iterator.tabulate(_)(table.row))
+    }
   }
 
-  /** One map task's values per key, as runs of equal neighbours, in one
-    * open-addressing table keyed by the key string. An entry holds its
-    * key, the key's hash and its last run (value, repeat count) inline;
-    * only a key whose neighbouring values differ keeps its earlier runs,
-    * in an overflow list. */
+  /** The reduce side: one `(key, values, counts)` row per distinct key of
+    * `rows`, holding all of that key's runs. Rows are merged by key in a
+    * [[Combiner]]; if the input holds more than `heldRuns` runs, the table
+    * is emptied in batches of that many into Spark's spilling
+    * `ExternalAppendOnlyMap` (`Aggregator.combineCombinersByKey`), which
+    * joins each key's runs in bounded memory. */
+  private def merge(rows: Iterator[(String, Array[String], Array[Int])], heldRuns: Int)
+      : Iterator[(String, Array[String], Array[Int])] = {
+    val table = new Combiner
+    val merged = batches(table) {
+      while (table.runs < heldRuns && rows.hasNext) table.add(rows.next())
+    }
+    // the first batch is filled on the first hasNext; if it took every
+    // row, it holds every key once
+    if (!merged.hasNext || !rows.hasNext) merged
+    else
+      runsByKey.combineCombinersByKey(merged.map { case (k, vs, ns) => (k, (vs, ns)) },
+        TaskContext.get()).map { case (k, (vs, ns)) => (k, vs, ns) }
+  }
+
+  /** Joins one key's runs from several batches of [[merge]]. */
+  private val runsByKey = {
+    type ValuesCounts = (Array[String], Array[Int])
+    val join: (ValuesCounts, ValuesCounts) => ValuesCounts = (a, b) => (a._1 ++ b._1, a._2 ++ b._2)
+    Aggregator[String, ValuesCounts, ValuesCounts](identity, join, join)
+  }
+
+  /** `table`'s rows, batch after batch: each batch empties the table and
+    * refills it by `fill`. The next batch is filled only once the last
+    * batch's rows are all out, so refilling the one table is safe. Ends at
+    * the first empty batch. */
+  private def batches(table: Combiner)(fill: => Unit)
+      : Iterator[(String, Array[String], Array[Int])] =
+    Iterator.continually { table.clear(); fill; table.size }
+      .takeWhile(_ > 0).flatMap(Iterator.tabulate(_)(table.row))
+
+  /** One task's values per key, as runs of equal neighbours, in one
+    * open-addressing table keyed by the key string: a map task's combiner
+    * and a reduce task's merge. An entry holds its key, the key's hash and
+    * its last run (value, repeat count) inline; only a key whose
+    * neighbouring values differ keeps its earlier runs, in an overflow
+    * list. */
   private final class Combiner {
     private var slots = new Array[Int](1024) // entry index + 1; 0 = empty
     private var keys = new Array[String](512)
@@ -109,15 +149,28 @@ object MapReduceJob {
     private var lastCounts = new Array[Int](512)
     private var earlier = new Array[Runs](512) // null while one run
     private var held = 0
-    private var valuesHeld = 0
+    private var valuesHeld = 0L
+    private var runsHeld = 0
 
     /** Distinct keys held. */
     def size: Int = held
 
     /** Values held, over all keys. */
-    def values: Int = valuesHeld
+    def values: Long = valuesHeld
 
-    def add(k: String, v: String): Unit = {
+    /** Runs held, over all keys. */
+    def runs: Int = runsHeld
+
+    /** Adds every run of one `(key, values, counts)` row. */
+    def add(row: (String, Array[String], Array[Int])): Unit = {
+      val (k, vs, ns) = row
+      var r = 0
+      while (r < vs.length) { add(k, vs(r), ns(r)); r += 1 }
+    }
+
+    /** Adds `n` copies of `v` under `k`, extending `k`'s last run if it
+      * holds `v` and the sum still fits its count. */
+    def add(k: String, v: String, n: Int): Unit = {
       var h = k.hashCode // murmur3's finalizer spreads String's hash
       h ^= h >>> 16; h *= 0x85EBCA6B; h ^= h >>> 13; h *= 0xC2B2AE35; h ^= h >>> 16
       val mask = slots.length - 1
@@ -127,19 +180,21 @@ object MapReduceJob {
         i = (i + 1) & mask
         e = slots(i) - 1
       }
-      valuesHeld += 1
+      valuesHeld += n
       if (e < 0) {
         if (held == keys.length) grow()
-        keys(held) = k; hashes(held) = h; lastValues(held) = v; lastCounts(held) = 1
+        keys(held) = k; hashes(held) = h; lastValues(held) = v; lastCounts(held) = n
         held += 1
+        runsHeld += 1
         slots(i) = held
         if (2 * held > slots.length)
           slots = graft.functions.TokenCounter.slots(hashes, held, slots.length * 2)
-      } else if (lastValues(e) == v) lastCounts(e) += 1
+      } else if (lastValues(e) == v && lastCounts(e) <= Int.MaxValue - n) lastCounts(e) += n
       else {
         if (earlier(e) == null) earlier(e) = new Runs
         earlier(e).add(lastValues(e), lastCounts(e))
-        lastValues(e) = v; lastCounts(e) = 1
+        lastValues(e) = v; lastCounts(e) = n
+        runsHeld += 1
       }
     }
 
@@ -174,6 +229,7 @@ object MapReduceJob {
       }
       held = 0
       valuesHeld = 0
+      runsHeld = 0
     }
   }
 

@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   * Results land in PROFILE_DEDUP_SCALE.json (cited in SURVEY §2's
   * dedup note, next to PROFILE_HNSW_SEEDS.json).
   *
+  * With arguments, the record is only printed.
+  *
   * Usage: runMain graft.tools.ProfileDedupScale [sfDir] [multipliers]
   */
 object ProfileDedupScale {
@@ -79,8 +81,11 @@ object ProfileDedupScale {
         s""""q453_rows":$q453Rows,"q453_sec":$q453Sec}"""
     }
     val json = s"""{"sf":"$sfDir","sweep":[${results.mkString(",")}]}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("PROFILE_DEDUP_SCALE.json"), json + "\n")
+    // the tracked file records the documented sweep only; a run with
+    // arguments just prints its record
+    if (args.isEmpty)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("PROFILE_DEDUP_SCALE.json"), json + "\n")
     println(json)
     spark.stop()
   }

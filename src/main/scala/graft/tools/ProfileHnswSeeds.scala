@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   * PROFILE_HNSW_SEEDS.json next to the repo (cited in SURVEY §2's HNSW
   * note).
   *
+  * With arguments, the record is only printed.
+  *
   * Usage: runMain graft.tools.ProfileHnswSeeds [sfDir] [multipliers]
   */
 object ProfileHnswSeeds {
@@ -86,8 +88,11 @@ object ProfileHnswSeeds {
       s""""m":${graft.operators.SimilarityPack.hnswM},""" +
       s""""rounds":${graft.operators.SimilarityPack.hnswRounds},""" +
       s""""sweep":[${results.mkString(",")}]}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("PROFILE_HNSW_SEEDS.json"), json + "\n")
+    // the tracked file records the documented sweep only; a run with
+    // arguments just prints its record
+    if (args.isEmpty)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("PROFILE_HNSW_SEEDS.json"), json + "\n")
     println(json)
     spark.stop()
   }

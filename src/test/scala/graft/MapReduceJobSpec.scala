@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.{MapGroupsExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,6 +54,9 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         // one exchange, and it is the reduce's: numPartitions wide
         val plan = ds.queryExecution.executedPlan
         assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, s"parts=$parts: $plan")
+        // the reduce merges in a hash table: no sort, no mapGroups
+        assert(collect(plan) { case s: SortExec => s }.isEmpty, s"parts=$parts: $plan")
+        assert(collect(plan) { case g: MapGroupsExec => g }.isEmpty, s"parts=$parts: $plan")
         assert(ds.rdd.getNumPartitions == parts, s"parts=$parts")
       }
     }
@@ -184,6 +188,37 @@ class MapReduceJobSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val got = MapReduceJob.run(spark, spark.sparkContext.parallelize(lines, parts).toDS(),
         MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 2).collect().toMap
       assert(got == expected, s"parts=$parts")
+    }
+  }
+
+  test("the reduce-side merge equals the model past a tiny bound, for any reduce") {
+    import spark.implicits._
+    val tagged: String => Seq[(String, String)] = line =>
+      MapReduceJob.wordCountMap(line).zipWithIndex.map { case ((w, _), i) => (w, s"$line:$i") }
+    val sorted: (String, Seq[String]) => String = (_, vs) => vs.sorted.mkString(",")
+    forAll(linesGen, 2) { lines =>
+      for (parts <- Seq(1, 3, 7); heldRuns <- Seq(1, 3)) {
+        val input = spark.sparkContext.parallelize(lines, parts).toDS()
+        val counted = MapReduceJob.run(spark, input,
+          MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 2, heldRuns).collect()
+        assert(counted.toMap == model(lines), s"parts=$parts heldRuns=$heldRuns")
+        assert(counted.length == counted.map(_._1).distinct.length, "a key was reduced twice")
+        val got = MapReduceJob.run(spark, input, tagged, sorted, 2, heldRuns).collect().toMap
+        assert(got == model(lines, tagged, sorted), s"parts=$parts heldRuns=$heldRuns")
+      }
+    }
+  }
+
+  test("the reduce-side merge keeps String.hashCode colliders apart past a tiny bound") {
+    import spark.implicits._
+    val lines = Seq("Aa BB Aa", "AaAa BBBB AaBB BBAa BBBB", "BB AaAa", "BBAa BBBB Aa")
+    val expected = Map("Aa" -> "3", "BB" -> "2", "AaAa" -> "2", "BBBB" -> "3",
+      "AaBB" -> "1", "BBAa" -> "2")
+    for (parts <- Seq(1, 3, 7); heldRuns <- Seq(1, 2, 3)) {
+      val got = MapReduceJob.run(spark, spark.sparkContext.parallelize(lines, parts).toDS(),
+        MapReduceJob.wordCountMap, MapReduceJob.wordCountReduce, 1, heldRuns).collect()
+      assert(got.toMap == expected && got.length == expected.size,
+        s"parts=$parts heldRuns=$heldRuns")
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.{GenerateExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -13,15 +13,17 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextFunctions.tokens
-import graft.functions.TokenCounts
-import graft.operators.WordCount
+import graft.functions.{TokenCountMerge, TokenCounts}
+import graft.operators.{MapReduceJob, WordCount}
 
 /** `WordCount.over` counts on the map side (the [[TokenCounts]]
   * generator); it must equal the explode-and-count plan it replaced,
   * whatever the input partitioning and however often the counter emits
   * early, with the same schema and no `explode` left in the plan. Its
-  * final sort is as wide as the input's bytes ask: one unsampled
-  * partition for a small input, a range partitioning for a large one.
+  * final sort is as wide as the input's bytes ask: for a small input, one
+  * unsampled partition whose [[TokenCountMerge]] sums the counts (and
+  * spills them to Spark's map past its bound); for a large one, a range
+  * partitioning above Spark's aggregate.
   */
 class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
@@ -92,22 +94,66 @@ class WordCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(df.schema == model(input(3)).schema)
   }
 
+  /** The width-1 shape: exactly one exchange, `SinglePartition`, with
+    * `TokenCounts` below it, `TokenCountMerge` above it and no aggregate
+    * anywhere. */
+  private def assertMergedInOnePartition(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val ex = exchanges(df)
+    assert(ex.size == 1 && ex.head.outputPartitioning == SinglePartition, ex)
+    val below = collect(ex.head.child) { case g: GenerateExec => g.generator }
+    assert(below.size == 1 && below.head.isInstanceOf[TokenCounts], ex.head)
+    val merges = generates(df).filter(_.generator.isInstanceOf[TokenCountMerge])
+    assert(merges.size == 1 && collect(merges.head.child) { case e: ShuffleExchangeExec => e } == ex,
+      plan)
+    assert(collect(plan) { case a: HashAggregateExec => a }.isEmpty, plan)
+  }
+
   test("the physical plan generates TokenCounts and has no explode") {
+    // wide: every generator is TokenCounts, summed by Spark's aggregate
     val df = WordCount.over(input(3), "value")
     df.collect()
     val gens = generates(df)
     assert(gens.nonEmpty && gens.forall(_.generator.isInstanceOf[TokenCounts]))
     assert(!df.queryExecution.executedPlan.toString.toLowerCase.contains("explode"))
+    // one partition: TokenCounts below the exchange, TokenCountMerge above
+    val small = WordCount.over(sized, "value")
+    assert(rowsOf(small) == rowsOf(model(input(1))))
+    assertMergedInOnePartition(small)
+    assert(!small.queryExecution.executedPlan.toString.toLowerCase.contains("explode"))
   }
 
   test("a small input is sorted in one unsampled partition above the aggregate") {
+    // at width 1 the aggregate is TokenCountMerge, above the one exchange
     val df = WordCount.over(sized, "value")
     assert(rowsOf(df) == rowsOf(model(input(1))))
-    val ex = exchanges(df)
-    assert(!ex.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), ex)
-    val single = ex.filter(_.outputPartitioning == SinglePartition)
-    assert(single.size == 1, ex)
-    assert(collect(single.head.child) { case a: HashAggregateExec => a }.nonEmpty, single.head)
+    assertMergedInOnePartition(df)
+    val sorts = collect(df.queryExecution.executedPlan) { case s: SortExec => s }
+    assert(sorts.size == 1, df.queryExecution.executedPlan)
+    assert(collect(sorts.head.child) { case g: GenerateExec => g.generator }
+      .exists(_.isInstanceOf[TokenCountMerge]), sorts.head)
+  }
+
+  test("the one-partition merge equals the model at 1, 3 and 7 map tasks, past a tiny bound") {
+    val expected = rowsOf(model(input(1)))
+    for (parts <- Seq(1, 3, 7); heldKeys <- Seq(1, 3, MapReduceJob.CombinerValues)) {
+      // the sized lines, round-robin into `parts` map tasks
+      val df = WordCount.over(sized.repartition(parts), "value", heldKeys)
+      assert(rowsOf(df) == expected, s"parts=$parts heldKeys=$heldKeys")
+      assert(generates(df).exists(_.generator.isInstanceOf[TokenCountMerge]), s"parts=$parts")
+    }
+  }
+
+  test("the one-partition merge keeps String.hashCode colliders apart past a tiny bound") {
+    import spark.implicits._
+    assert("Aa".hashCode == "BB".hashCode && "AaAa".hashCode == "BBBB".hashCode)
+    val colliding = Seq("Aa BB Aa", "AaAa BBBB AaBB BBAa BBBB", "BB AaAa", "BBAa BBBB Aa")
+    val expected = Seq("Aa" -> 3L, "AaAa" -> 2L, "AaBB" -> 1L, "BB" -> 2L, "BBAa" -> 2L, "BBBB" -> 3L)
+    for (parts <- Seq(1, 2); heldKeys <- Seq(1, 2, 100)) {
+      val df = WordCount.over(colliding.toDF("value").repartition(parts), "value", heldKeys)
+      assert(rowsOf(df) == expected, s"parts=$parts heldKeys=$heldKeys")
+      assert(generates(df).exists(_.generator.isInstanceOf[TokenCountMerge]), s"parts=$parts")
+    }
   }
 
   test("a tiny advisory partition size range-partitions the sort, still in order") {
